@@ -10,7 +10,7 @@ for 100 TB scale.
 
 Layout:
   session.py    SparkSession factory (AQE, shuffle sizing, Arrow)
-  sources/      table catalog (parquet/JDBC), TWSE JSON source, HTTP fan-out
+  sources/      table catalog (parquet/JDBC), the TWSE JSON data source
   pipeline/     the reference ETL re-expressed as one declarative plan
   plans/        query catalog: every operator as (spark_fn, oracle_sql)
   operators/    dedup, similarity, text analysis, as-of join, multimodal

@@ -16,6 +16,9 @@ Usage:
 Exit codes (the Airflow-visible contract):
     0 = loaded (or clean market-closed no-op)
     3 = validation alert (schema drift — reference alert route)
+    4 = a day's fetch failed (transport error or unreadable payload);
+        like any other non-zero exit the Airflow retry policy applies, so
+        a brief TWSE outage loads the day on a later attempt
     other = hard failure (Airflow retry policy applies)
 """
 
@@ -56,29 +59,25 @@ def main(argv: list[str] | None = None, fetcher=None, notify=None) -> int:
     dates = (
         date_range(args.date, args.backfill_to) if args.backfill_to else [args.date]
     )
-    if fetcher is None and args.source == "golden":
-        from ..sources import golden
-
-        by_date = {
-            p["date"]: p
-            for p in (golden.GOLDEN_OK, golden.GOLDEN_CLOSED, golden.GOLDEN_WRONG_ARITY)
-        }
-
-        def fetcher(spark_, ds):  # noqa: ANN001
-            return twse.payloads_to_df(spark_, [by_date[d] for d in ds if d in by_date])
-
     if fetcher is not None:
         payloads = fetcher(spark, dates)
-    elif len(dates) == 1:
-        payloads = twse.fetch_payloads(spark, dates)  # 1 URL: driver fetch
     else:
-        payloads = twse.fetch_payloads_distributed(spark, dates)  # executor fan-out
+        # one planned scan, one partition (one fetch) per day
+        twse.register(spark)
+        payloads = (
+            spark.read.format("twse")
+            .option("dates", ",".join(dates))
+            .option("source", "golden" if args.source == "golden" else twse.TWSE_URL)
+            .load()
+        )
 
     result = run_daily_load(spark, payloads, args.sink, notify=notify)
     print(
         f"route={result.route} days_loaded={result.days_loaded} "
         f"alerts={','.join(result.alerts) or '-'}"
     )
+    if result.fetch_failed:
+        return 4
     return 3 if result.route == "alert" else 0
 
 

@@ -106,7 +106,8 @@ def run_once(
 
     ``job`` receives the rendered date string and returns an exit code
     (jobs/daily_load.py's CLI contract: 0 ok, 3 validation alert,
-    anything else infrastructure failure)."""
+    4 failed fetch, anything else infrastructure failure; every non-zero
+    exit but 3 is retried)."""
     date = render_date(data_interval_end)
     codes: list[int] = []
     for attempt in range(1, retries + 2):  # first try + retries

@@ -30,7 +30,7 @@ and reruns replace exactly that partition.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +38,10 @@ from pyspark.sql import functions as F
 from ..sources.twse import CATEGORIES, TOTAL_ROW_LABEL
 
 EXPECTED_VALUES_PER_DAY = 12  # 4 categories x 3 measures (Final_app.py:53)
+
+# unit_name of the one row run_daily_load makes of a failed fetch
+# (a stat=NULL payload); no TWSE category label looks like it.
+FETCH_FAILED_LABEL = "<fetch failed>"
 
 MONEY = "decimal(38,0)"
 
@@ -89,13 +93,9 @@ def pivot_to_sink_schema(long_df: DataFrame) -> DataFrame:
     return wide.select(*selects)
 
 
-def validate(long_df: DataFrame) -> DataFrame:
-    """Schema-drift gate (reference P7: len(data)==12, Final_app.py:53)
-    plus the dif=buy-sell invariant the source embeds (§1.2).
-
-    Returns one row per dt with boolean verdicts; empty input -> empty
-    output (the market-closed no-op, C2).
-    """
+def _day_checks(long_df: DataFrame) -> DataFrame:
+    """validate's per-dt verdicts plus ``fetch_failed``: the day is the
+    marker row run_daily_load makes of a failed fetch."""
     return (
         long_df.groupBy("dt")
         .agg(
@@ -103,14 +103,26 @@ def validate(long_df: DataFrame) -> DataFrame:
             F.sum(F.when(F.col("dif") != F.col("buy") - F.col("sell"), 1).otherwise(0)).alias(
                 "n_bad_dif"
             ),
+            F.max(F.col("unit_name") == FETCH_FAILED_LABEL).alias("fetch_failed"),
         )
         .select(
             "dt",
             "n_values",
             (F.col("n_values") == EXPECTED_VALUES_PER_DAY).alias("arity_ok"),
             (F.col("n_bad_dif") == 0).alias("dif_ok"),
+            "fetch_failed",
         )
     )
+
+
+def validate(long_df: DataFrame) -> DataFrame:
+    """Schema-drift gate (reference P7: len(data)==12, Final_app.py:53)
+    plus the dif=buy-sell invariant the source embeds (§1.2).
+
+    Returns one row per dt with boolean verdicts; empty input -> empty
+    output (the market-closed no-op, C2).
+    """
+    return _day_checks(long_df).drop("fetch_failed")
 
 
 @dataclass
@@ -121,6 +133,7 @@ class RunResult:
     route: str  # 'loaded' | 'market_closed' | 'alert'
     days_loaded: int
     alerts: list[str]
+    fetch_failed: list[str] = field(default_factory=list)  # alerted days whose fetch failed
 
 
 def run_daily_load(
@@ -134,20 +147,34 @@ def run_daily_load(
     Control flow (reference C1) happens HERE, on action results — not in
     the plan: Catalyst owns the dataflow, the driver owns routing.
     """
-    long_df = clean_long(payloads).cache()  # reused by validate + pivot: fetch once (vs S1 double-fetch)
+    # A stat=NULL day is a failed fetch, not a closed market: it becomes
+    # one marker row, so the same collect, from the same single scan,
+    # alerts on it (arity) and names it (fetch_failed).
+    marker = F.array(F.lit(FETCH_FAILED_LABEL), *[F.lit(None).cast("string")] * 3)
+    marked = payloads.withColumns(  # one projection: both read the input stat
+        {
+            "stat": F.coalesce("stat", F.lit("OK")),
+            "data": F.when(F.col("stat").isNull(), F.array(marker)).otherwise(F.col("data")),
+        }
+    )
+    long_df = clean_long(marked).cache()  # reused by validate + pivot: fetch once (vs S1 double-fetch)
     try:
-        checks = validate(long_df).collect()
+        checks = _day_checks(long_df).collect()
         if not checks:
             # stat != 'OK' everywhere: market closed -> no-op (C2/DummyOperator).
             return RunResult(route="market_closed", days_loaded=0, alerts=[])
 
-        bad = [r.dt for r in checks if not (r.arity_ok and r.dif_ok)]
+        failed = sorted(r.dt for r in checks if r.fetch_failed)
+        bad = sorted(r.dt for r in checks if not (r.arity_ok and r.dif_ok))
+        drift = [dt for dt in bad if dt not in failed]
         good_dts = [r.dt for r in checks if r.arity_ok and r.dif_ok]
-        if bad and notify:
+        if notify and failed:
+            notify(f"資料抓取失敗: dt={failed}")
+        if notify and drift:
             # Reference S8: fixed-text Telegram alert '資料格式有變動...'
-            notify(f"資料格式有變動，請確認資料格式: dt={sorted(bad)}")
+            notify(f"資料格式有變動，請確認資料格式: dt={drift}")
         if not good_dts:
-            return RunResult(route="alert", days_loaded=0, alerts=sorted(bad))
+            return RunResult(route="alert", days_loaded=0, alerts=bad, fetch_failed=failed)
 
         wide = pivot_to_sink_schema(long_df.filter(F.col("dt").isin(good_dts)))
         # Idempotent daily append: partition-overwrite on dt (SURVEY §7
@@ -165,7 +192,8 @@ def run_daily_load(
         return RunResult(
             route="loaded" if not bad else "alert",
             days_loaded=len(good_dts),
-            alerts=sorted(bad),
+            alerts=bad,
+            fetch_failed=failed,
         )
     finally:
         long_df.unpersist()

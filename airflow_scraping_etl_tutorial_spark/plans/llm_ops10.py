@@ -321,13 +321,10 @@ def q250_connected_components_minlabel(spark: SparkSession, sf_dir: str) -> Data
     # round 1 fused: labels start as the identity, so
     # l1(u) = LEAST(u, MIN(neighbors)) is ONE aggregate — no label
     # join, no separate node-list distinct (l1 IS the node list)
-    # r15: lbl1 is NOT checkpointed any more — it is one aggregate off
-    # the sym checkpoint, its subtree appears in both round-2 branches
-    # of the one final plan (ReuseExchange shares the shuffle), and the
-    # degraded mode still stops at sym. The eager barrier cost more
-    # than the aggregate: interleaved A/B clean-rep minimums 1.617 s
-    # (checkpoint) vs 1.437 s (plain) vs 1.682 s (persist) at
-    # sf0.1/32 cores.
+    # lbl1 is NOT checkpointed any more: at sf0.1 the eager
+    # barrier cost more than recomputing the aggregate — interleaved
+    # A/B clean-rep minimums 1.617 s (checkpoint) vs 1.437 s (plain)
+    # vs 1.682 s (persist) at sf0.1/32 cores.
     lbl1 = sym.groupBy(F.col("d").alias("node")).agg(
         F.least(F.min("s"), F.col("d")).alias("lbl")
     )

@@ -257,12 +257,9 @@ def q226_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = e.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("dg"))
     # attach out-degree to each edge ONCE instead of re-joining deg
-    # every iteration (the q250 fusion doctrine, round 9). r15: e_deg is
-    # NOT checkpointed any more — its subtree hangs off the pairs
-    # checkpoint, so both iteration consumers share its shuffles via
-    # ReuseExchange inside the one final plan, and the degraded mode
-    # stays linear (recompute stops at the pairs checkpoint). The eager
-    # barrier cost more than the derivation: interleaved A/B clean-rep
+    # every iteration (the q250 fusion doctrine, round 9). e_deg is
+    # NOT checkpointed any more: at sf0.1 the eager barrier cost more
+    # than recomputing the derivation — interleaved A/B clean-rep
     # minimums 1.494 s (checkpoint) vs 1.342 s (plain) vs 1.563 s
     # (persist) at sf0.1/32 cores.
     e_deg = e.join(deg, e["s"] == deg["node"]).select("s", "d", "dg")

@@ -44,7 +44,6 @@ _SLOW_FILES = frozenset(
         # heavyweight property/integration files (30-70 s each)
         "test_property_dedup.py",
         "test_multimodal.py",
-        "test_notify_datasource.py",
     }
 )
 

@@ -60,6 +60,32 @@ def test_job_backfill_range(spark, tmp_path):
     assert read_sink(spark, sink).count() == 1
 
 
+def test_failed_fetch_alerts_instead_of_market_closed(spark, tmp_path, capsys):
+    """A day whose fetch failed arrives as a stat=NULL row. It is a
+    missed trading day, not a closed market: the job alerts with the
+    day's date and the fetch-failed text, and exits 4 so the DAG's
+    retry policy applies, while a good day in the same range loads."""
+    sink = str(tmp_path / "sink")
+    failed = {"stat": None, "date": "20220822"}
+    notes = []
+    rc = main(
+        ["--date", "20220822", "--sink", sink],
+        fetcher=fetcher_for([failed]),
+        notify=notes.append,
+    )
+    assert rc == 4
+    assert capsys.readouterr().out.strip() == "route=alert days_loaded=0 alerts=20220822"
+    assert notes == ["資料抓取失敗: dt=['20220822']"]
+
+    rc = main(
+        ["--date", "20220819", "--backfill-to", "20220822", "--sink", sink],
+        fetcher=fetcher_for([GOLDEN_OK, GOLDEN_CLOSED, failed]),
+    )
+    assert rc == 4
+    assert "route=alert days_loaded=1 alerts=20220822" in capsys.readouterr().out
+    assert [r.dt for r in read_sink(spark, sink).collect()] == ["20220819"]
+
+
 def test_dag_module_import_gated():
     from airflow_scraping_etl_tutorial_spark.orchestration import daily_dag
 

@@ -1,5 +1,5 @@
 """Property test for the TWSE stream reader's checkpoint contract
-(sources/twse_datasource.py::TwseStreamReader): over hypothesis-driven
+(sources/twse.py::TwseStreamReader): over hypothesis-driven
 consume/restart schedules, the reader must deliver EVERY date EXACTLY
 ONCE when the consumed prefix is preserved (appends allowed at any
 restart), and must raise — never skip or re-read — when the prefix
@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from airflow_scraping_etl_tutorial_spark.sources.twse_datasource import (
+from airflow_scraping_etl_tutorial_spark.sources.twse import (
     TwseStreamReader,
 )
 

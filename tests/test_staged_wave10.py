@@ -184,7 +184,7 @@ def _final_plan(spark, name):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_bm25_plan_is_topk_with_broadcast_stats(spark):
+def test_bm25_plan_is_topk_with_single_scan_one_row_bnlj(spark):
     plan = _final_plan(spark, "q235_bm25_retrieval")
     assert "TakeOrderedAndProject" in plan  # top-20 never global-sorts
     # r15 single-scan shape: the corpus scalars (N, total length, five
@@ -193,6 +193,7 @@ def test_bm25_plan_is_topk_with_broadcast_stats(spark):
     # BroadcastHashJoin of a per-term stats table
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_chunk_audit_plan_is_single_aggregate(spark):

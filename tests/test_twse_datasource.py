@@ -1,4 +1,4 @@
-"""The twse Python data source (sources/twse_datasource.py): schema
+"""The twse Python data source (sources/twse.py): schema
 must equal the typed PAYLOAD_SCHEMA, partitioning must be one task per
 date, golden replay must agree with the payloads_to_df seam, and the
 source must compose with the existing pipeline (clean_long) with zero
@@ -13,9 +13,10 @@ from airflow_scraping_etl_tutorial_spark.pipeline.investment import clean_long
 from airflow_scraping_etl_tutorial_spark.sources.golden import GOLDEN_OK
 from airflow_scraping_etl_tutorial_spark.sources.twse import (
     PAYLOAD_SCHEMA,
+    TwseStreamReader,
     payloads_to_df,
+    register,
 )
-from airflow_scraping_etl_tutorial_spark.sources.twse_datasource import register
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -75,6 +76,9 @@ def test_composes_with_pipeline_clean_long(spark):
 def test_missing_dates_option_fails_loudly(spark):
     with pytest.raises(Exception, match="dates"):
         spark.read.format("twse").load().collect()
+    # the source is 'golden' or an http(s) URL template with {date}
+    with pytest.raises(Exception, match="unknown twse source"):
+        _read(spark, "20220819", source="http").collect()
 
 
 def test_limit_composes_above_the_scan(spark):
@@ -133,10 +137,6 @@ def test_stream_daily_cadence_one_date_per_batch(spark):
 
 
 def _stream_reader(dates, **opts):
-    from airflow_scraping_etl_tutorial_spark.sources.twse_datasource import (
-        TwseStreamReader,
-    )
-
     return TwseStreamReader({"dates": dates, **opts})
 
 
