@@ -3,12 +3,6 @@ candles, behavioral streaks, embedding-truncation audits, graph
 components, session depth, and operational SLA percentiles — the
 seventh ring of curation/analytics machinery around waves 1-10.
 
-Staged during round 6 (driver-budget protocol — see
-plans/llm_ops7.py's docstring); promoted into registry._QUERY_MODULES
-in round 7 alongside waves 8-10 (43 tier-1 entries fit the ~50-entry
-attestation budget). Value-checked by tools/check_correctness.py and
-tests/test_staged_wave11.py.
-
 Output-hardening doctrine (as waves 6-10): BIGINT-cast integer
 aggregates, exact integer-rank selection instead of interpolated
 percentiles, raw stored doubles only (never derived-float

@@ -1,19 +1,8 @@
-"""LLM-ops wave 12 (STAGED for round-8 registration): converged-model
-training, graph core decomposition, memorization-risk coverage,
-temporal split hygiene, vocabulary tail economics, context-window
-truncation, detector cross-validation, dedup mixture bias, and
-burstiness — the eighth ring of curation/analytics machinery around
-waves 1-11.
-
-This module is NOT in registry._QUERY_MODULES: round 7's driver
-budget is fully claimed by the wave-8-11 promotion (43 tier-1 entries
-+ stalest-green re-attestation). It is value-checked exactly like the
-live catalog via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops11 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave12.py; round 8 promotes it with one line.
+"""LLM-ops wave 12: converged-model training, graph core
+decomposition, memorization-risk coverage, temporal split hygiene,
+vocabulary tail economics, context-window truncation, detector
+cross-validation, dedup mixture bias, and burstiness — the eighth ring
+of curation/analytics machinery around waves 1-11.
 
 Output-hardening doctrine (as waves 6-11): BIGINT-cast integer
 aggregates (never HUGEINT outputs), ppm ratios via truncating integer

@@ -1,16 +1,8 @@
-"""LLM-ops wave 13 (STAGED for round-8 registration): sketch-accuracy
-pricing, similarity-join candidates for short strings, incremental
-signature maintenance, curriculum interleaving, distributional source
-valuation, and dedup keep-policy economics — the ninth ring of
-curation/analytics machinery around waves 1-12.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as wave 12 — see plans/llm_ops11.py's docstring): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops12 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave13.py; round 8 promotes it with one line.
+"""LLM-ops wave 13: sketch-accuracy pricing, similarity-join
+candidates for short strings, incremental signature maintenance,
+curriculum interleaving, distributional source valuation, and dedup
+keep-policy economics — the ninth ring of curation/analytics machinery
+around waves 1-12.
 
 Output-hardening doctrine (as waves 6-12): BIGINT-cast integer
 aggregates, exact nearest-rank selection ((n*p+99) div 100, the q252

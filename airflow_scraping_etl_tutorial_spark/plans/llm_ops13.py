@@ -1,17 +1,7 @@
-"""LLM-ops wave 14 (STAGED for round-8 registration): merge-proof
-audits for distributed sketches, entity-resolution blocking quality,
-graph mixing structure, forecast backtesting, and conversion
-attribution — the tenth ring of curation/analytics machinery around
-waves 1-13.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-13 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops13 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave14.py; round 8 promotes it with one line.
+"""LLM-ops wave 14: merge-proof audits for distributed sketches,
+entity-resolution blocking quality, graph mixing structure, forecast
+backtesting, and conversion attribution — the tenth ring of
+curation/analytics machinery around waves 1-13.
 
 Output-hardening doctrine (as waves 6-13): BIGINT-cast integer
 aggregates, sign-factored truncating division for every ppm ratio

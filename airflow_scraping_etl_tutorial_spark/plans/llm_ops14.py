@@ -1,18 +1,9 @@
-"""LLM-ops wave 15 (STAGED for round-8 registration): estimator
-uncertainty without replays (Poisson bootstrap), data-profiling
-(functional dependencies), corpus concentration planning, contrastive
-hard-negative mining, batch-padding economics, and a memorylessness
-test for arrival processes — the eleventh ring of curation/analytics
-machinery around waves 1-14.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-14 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops14 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave15.py; round 8 promotes it with one line.
+"""LLM-ops wave 15: estimator uncertainty without replays (Poisson
+bootstrap), data-profiling (functional dependencies), corpus
+concentration planning, contrastive hard-negative mining,
+batch-padding economics, and a memorylessness test for arrival
+processes — the eleventh ring of curation/analytics machinery around
+waves 1-14.
 
 Output-hardening doctrine (as waves 6-14): BIGINT-cast integer
 aggregates, sign-factored truncating division for every ppm ratio

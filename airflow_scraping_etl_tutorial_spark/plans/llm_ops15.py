@@ -1,17 +1,8 @@
-"""LLM-ops wave 16 (STAGED for round-8 registration): capped budget
-allocation (water-filling), leaderboard stability under resampling,
-mutual-information structure of the event stream, dictionary-encoding
-storage planning, and runtime-filter join pruning — the twelfth ring
-of curation/analytics machinery around waves 1-15.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-15 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops15 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave16.py; round 8 promotes it with one line.
+"""LLM-ops wave 16: capped budget allocation (water-filling),
+leaderboard stability under resampling, mutual-information structure
+of the event stream, dictionary-encoding storage planning, and
+runtime-filter join pruning — the twelfth ring of curation/analytics
+machinery around waves 1-15.
 
 Output-hardening doctrine (as waves 6-15): BIGINT-cast integer
 aggregates, sign-factored truncating division for every ppm ratio

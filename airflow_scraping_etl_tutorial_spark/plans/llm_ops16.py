@@ -1,18 +1,8 @@
-"""LLM-ops wave 17 (STAGED for round-8 registration): estimator
-stability for quantiles, offline changepoint location, and CUSUM
-drift detection — the monitoring ring that closes round 7's
-sketch-and-uncertainty arc (q267/q278 built the histogram, q279/q286
-the bootstrap; this wave composes them and adds the two classic
-control-chart primitives the catalog still lacked).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-16 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops16 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave17.py; round 8 promotes it with one line.
+"""LLM-ops wave 17: estimator stability for quantiles, offline
+changepoint location, and CUSUM drift detection — the monitoring ring
+that closes round 7's sketch-and-uncertainty arc (q267/q278 built the
+histogram, q279/q286 the bootstrap; this wave composes them and adds
+the two classic control-chart primitives the catalog still lacked).
 
 Output-hardening doctrine (as waves 6-16): BIGINT-cast integer
 aggregates, q253-doctrine truncating division on made-nonnegative

@@ -1,17 +1,8 @@
-"""LLM-ops wave 18 (STAGED for round-8 registration): robust and
-nonparametric time-series statistics — Theil-Sen slope, the
-Mann-Kendall trend test, and exact-integer autocorrelation — the
-outlier-resistant companions to the parametric monitoring ring
-(q253 OLS, q276 backtest, q291 changepoint, q292 CUSUM).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-17 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops17 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave18.py; round 8 promotes it with one line.
+"""LLM-ops wave 18: robust and nonparametric time-series statistics —
+Theil-Sen slope, the Mann-Kendall trend test, and exact-integer
+autocorrelation — the outlier-resistant companions to the parametric
+monitoring ring (q253 OLS, q276 backtest, q291 changepoint, q292
+CUSUM).
 
 Output-hardening doctrine (as waves 6-17): BIGINT-cast integer
 aggregates, q253-doctrine sign-factored truncating division, and a

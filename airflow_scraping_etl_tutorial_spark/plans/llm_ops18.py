@@ -1,17 +1,8 @@
-"""LLM-ops wave 19 (STAGED for round-8 registration): estimation and
-inference — an exact-integer chi-square test for A/B conversion,
-empirical-Bayes rate shrinkage, capture-recapture corpus-size
-estimation, and unseen-vocabulary estimators (Chao1, Good-Turing) —
-the inference ring over the counting machinery of waves 1-18.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-18 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops18 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave19.py; round 8 promotes it with one line.
+"""LLM-ops wave 19: estimation and inference — an exact-integer
+chi-square test for A/B conversion, empirical-Bayes rate shrinkage,
+capture-recapture corpus-size estimation, and unseen-vocabulary
+estimators (Chao1, Good-Turing) — the inference ring over the counting
+machinery of waves 1-18.
 
 Output-hardening doctrine (as waves 6-18): BIGINT-cast integer
 aggregates, q253-doctrine truncating division, md5 gates for every

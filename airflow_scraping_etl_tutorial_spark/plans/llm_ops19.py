@@ -1,18 +1,8 @@
-"""LLM-ops wave 20 (STAGED for round-8 registration): experimentation
-methodology — a deterministic permutation test, direct
-standardization (the Simpson's-paradox guard), and
-difference-in-differences — completing the inference ring (q296
-asymptotic test, q279/q286/q290 bootstrap) with the three designs an
-experimentation platform actually runs.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-19 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops19 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave20.py; round 8 promotes it with one line.
+"""LLM-ops wave 20: experimentation methodology — a deterministic
+permutation test, direct standardization (the Simpson's-paradox
+guard), and difference-in-differences — completing the inference ring
+(q296 asymptotic test, q279/q286/q290 bootstrap) with the three
+designs an experimentation platform actually runs.
 
 Output-hardening doctrine (as waves 6-19): md5 gates for every
 deterministic draw (q105/q246/q296 doctrine), per-stratum ppm terms

@@ -1,18 +1,9 @@
-"""LLM-ops wave 21 (STAGED for round-8 registration): survival
-analysis — a Kaplan-Meier time-to-conversion curve kept exact in log
-space, and the log-rank test comparing two md5 cohorts — the
-censoring-aware pair that completes the experimentation ring (q222
-measures conversion lags among CONVERTERS ONLY; these two handle the
-users who never converted, which is where naive lag analyses lie).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-20 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops20 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave21.py; round 8 promotes it with one line.
+"""LLM-ops wave 21: survival analysis — a Kaplan-Meier
+time-to-conversion curve kept exact in log space, and the log-rank
+test comparing two md5 cohorts — the censoring-aware pair that
+completes the experimentation ring (q222 measures conversion lags
+among CONVERTERS ONLY; these two handle the users who never converted,
+which is where naive lag analyses lie).
 
 Output-hardening doctrine (as waves 6-20): the KM product survives as
 a SUM of per-day LN terms quantized to DECIMAL(18,6) (the q128/q271

@@ -1,7 +1,6 @@
-"""LLM-ops wave 22 (STAGED for round-8 registration): serving- and
-training-infrastructure audits the 100 TB pipeline runs before it
-commits to an index layout, a cross-validation split, a source
-contract, or a retention claim —
+"""LLM-ops wave 22: serving- and training-infrastructure audits the
+100 TB pipeline runs before it commits to an index layout, a
+cross-validation split, a source contract, or a retention claim —
 
 - q305 prices the inverted index q235's BM25 would ship: block-restart
   delta + varint coding of posting lists, by document-frequency tier;
@@ -13,15 +12,6 @@ contract, or a retention claim —
 - q308 prices the scale-out itself: the exact fraction of keys that
   migrate when 32 shards become 33, mod-N placement vs a
   consistent-hash virtual-node ring.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-21 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops21 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave22.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-21): every count is an exact
 BIGINT; every rate is an integer truncating division micro-scaled

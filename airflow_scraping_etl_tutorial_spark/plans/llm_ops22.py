@@ -1,5 +1,5 @@
-"""LLM-ops wave 23 (STAGED for round-8 registration): the decision
-layer above the retrieval / experimentation / acquisition machinery —
+"""LLM-ops wave 23: the decision layer above the retrieval /
+experimentation / acquisition machinery —
 
 - q309 adds POSITIONS to the inverted index: phrase queries answered
   by positional adjacency self-join, cross-checked against the
@@ -10,15 +10,6 @@ layer above the retrieval / experimentation / acquisition machinery —
 - q311 is budgeted data acquisition: greedy coverage-maximizing
   source selection (the lazy-submodular loop every "which corpora do
   we license next" decision runs), unrolled to 3 exact picks.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-22 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops22 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave23.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-22): counts are exact BIGINTs;
 q310's z constants are micro-scaled integer literals folded through

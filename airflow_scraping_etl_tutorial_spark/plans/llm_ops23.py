@@ -1,21 +1,12 @@
-"""LLM-ops wave 24 (STAGED for round-8 registration): physical data
-LAYOUT audits — the two storage-design questions q228 (file sizing)
-and q288 (dictionary encoding) do not answer:
+"""LLM-ops wave 24: physical data LAYOUT audits — the two
+storage-design questions q228 (file sizing) and q288 (dictionary
+encoding) do not answer:
 
 - q312: does Z-ORDERING the events table beat a linear sort for
   multi-dimensional data skipping? Exact per-file min/max zone maps
   under three layouts, probed with a fixed workload;
 - q313: what does each sort order do to RUN-LENGTH encoding? Exact
   run counts (segment-local, scale-safe) and the byte impact.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-23 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops23 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave24.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-23): bit interleaving is pure
 integer div/mod arithmetic (no engine-specific bit operators), file

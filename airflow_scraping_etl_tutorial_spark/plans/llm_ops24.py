@@ -1,6 +1,6 @@
-"""LLM-ops wave 25 (STAGED for round-8 registration): the
-cost-estimation layer a query optimizer runs on — each entry prices
-an estimate the planner needs against the exact ground truth:
+"""LLM-ops wave 25: the cost-estimation layer a query optimizer runs
+on — each entry prices an estimate the planner needs against the exact
+ground truth:
 
 - q314: the AMS (Alon-Matias-Szegedy) F2 sketch estimating self-join
   size from ±1 md5 sign hashes, each estimator vs the exact Σf²;
@@ -10,15 +10,6 @@ an estimate the planner needs against the exact ground truth:
 - q316: predicate-correlation audit — how far the independence
   assumption (selectivity product) is from the true conjunctive
   selectivity for concrete predicate pairs.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-24 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops24 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave25.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-24): AMS signs come from md5
 parity (the operators/dedup.py hash doctrine) so both engines build

@@ -1,6 +1,6 @@
-"""LLM-ops wave 26 (STAGED for round-8 registration): sequential-
-decision audits over the event stream — what happens AFTER the
-transition matrix, the tail, and the daily rates are known:
+"""LLM-ops wave 26: sequential-decision audits over the event stream
+— what happens AFTER the transition matrix, the tail, and the daily
+rates are known:
 
 - q317 unrolls the absorbing-chain recursion on q217's Markov matrix:
   the probability of reaching 'purchase' within k steps from each
@@ -13,15 +13,6 @@ transition matrix, the tail, and the daily rates are known:
   reports its exact regret against the best fixed arm in hindsight —
   the online-learning audit of "should routing just pick yesterday's
   winner?".
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-25 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops25 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave26.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-25): the Markov recursion
 truncates ONCE per (state, step) — each step's value is

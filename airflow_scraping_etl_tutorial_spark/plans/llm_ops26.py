@@ -1,5 +1,5 @@
-"""LLM-ops wave 27 (STAGED for round-8 registration): two audits of
-"is the cheap model good enough?" over the event stream —
+"""LLM-ops wave 27: two audits of "is the cheap model good enough?"
+over the event stream —
 
 - q320: 7-day rolling distinct users, EXACT (the day-expansion trick
   that makes a non-decomposable distinct map-reduce-able) side by
@@ -10,15 +10,6 @@
   P(next | last TWO events) against the chain's P(next | last one)
   for the heaviest two-event contexts — the model-order audit q217
   and q317 silently assume away.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-26 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops26 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave27.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-26): counts exact BIGINTs,
 rates integer truncating micro-divisions with integer-typed operands

@@ -1,6 +1,5 @@
-"""LLM-ops wave 28 (STAGED for round-8 registration): three classical
-statistics the experimentation ring still lacked, each re-derived in
-exact integer arithmetic —
+"""LLM-ops wave 28: three classical statistics the experimentation
+ring still lacked, each re-derived in exact integer arithmetic —
 
 - q322: one-way ANOVA across sources on document length — the
   many-group generalization of the two-cohort tests (q296/q300 ask
@@ -11,15 +10,6 @@ exact integer arithmetic —
 - q324: a binned two-sample Kolmogorov-Smirnov distance between the
   md5 cohorts' value distributions — the DISTRIBUTION-level test
   where q296 compares one rate and q234 flags single outliers.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-27 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops27 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave28.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-27): sums of squares are exact
 integer sums with per-group truncating divisions applied in ONE

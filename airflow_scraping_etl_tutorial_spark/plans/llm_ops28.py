@@ -1,5 +1,4 @@
-"""LLM-ops wave 29 (STAGED for round-8 registration): the last two
-members of the exact-inference ring —
+"""LLM-ops wave 29: the last two members of the exact-inference ring —
 
 - q325: a binned Mann-Whitney / AUC comparison of the md5 cohorts'
   value distributions (the RANK test beside q324's ECDF test: where
@@ -9,15 +8,6 @@ members of the exact-inference ring —
   p-values — the multiple-testing discipline every platform needs
   the day it tests five metrics at once (q300 produces ONE honest
   p-value; this is what keeps five of them honest TOGETHER).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-28 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops28 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave29.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-28): the U statistic is carried
 DOUBLED (2·U = Σ 2·c1·cum0< + c1·c0, the midrank tie form with no

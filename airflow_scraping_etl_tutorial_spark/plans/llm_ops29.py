@@ -1,6 +1,5 @@
-"""LLM-ops wave 30 (STAGED for round-8 registration): the two
-variance tools a mature experimentation platform adds after the test
-ring is green —
+"""LLM-ops wave 30: the two variance tools a mature experimentation
+platform adds after the test ring is green —
 
 - q327: CUPED variance reduction — how much post-period metric
   variance the pre-period covariate removes (the single highest-ROI
@@ -9,15 +8,6 @@ ring is green —
   the honest uncertainty of purchases-per-event, which has no
   closed-form variance because both numerator and denominator are
   random.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-29 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops29 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave30.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-29): every moment is the
 integer form n·Σxy − Σx·Σy (no means, no floats); theta and the

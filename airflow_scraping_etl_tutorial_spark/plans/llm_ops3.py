@@ -1,6 +1,5 @@
-"""LLM-ops wave 4 (STAGED for round-4 registration): pipeline
-*auditing* operators — the checks a 100 TB training-data platform runs
-continuously against itself.
+"""LLM-ops wave 4: pipeline *auditing* operators — the checks a 100 TB
+training-data platform runs continuously against itself.
 
 - table checksum reconciliation (replica drift detection without
   moving data);
@@ -8,17 +7,6 @@ continuously against itself.
 - kNN label agreement (embedding-space sanity of a labeled corpus);
 - language-ID confusion matrix (claimed vs predicted metadata drift);
 - distinctive-term report (per-source vocabulary fingerprint).
-
-This module is NOT in registry._QUERY_MODULES yet: the driver attests
-~50 catalog entries per round and round 3's budget is fully allocated
-to clearing attestation debt (see NOTES.md). The wave is value-checked
-the same way as the live catalog via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops3 \
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave4.py; round 4 promotes it by adding the
-module name to _QUERY_MODULES (one line).
 
 Reference parity: the reference repo's validation surface is the
 arity/schema check before insert (dags/Final_app.py:52-56) and the

@@ -1,5 +1,5 @@
-"""LLM-ops wave 31 (STAGED for round-8 registration): the calibration
-ring — is a score's PROBABILITY meaning trustworthy?
+"""LLM-ops wave 31: the calibration ring — is a score's PROBABILITY
+meaning trustworthy?
 
 - q329: isotonic calibration of the activity-decile conversion curve
   via the minimax window form of pool-adjacent-violators, evaluated
@@ -10,15 +10,6 @@ ring — is a score's PROBABILITY meaning trustworthy?
   error: predictions fitted on the FIRST half of the stream, scored
   on the SECOND — the honest form (in-sample reliability diagrams
   flatter every model).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-30 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops30 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave31.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-30): window averages are
 truncating micro-divisions of exact integer (successes, trials)

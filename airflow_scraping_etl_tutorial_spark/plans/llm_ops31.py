@@ -1,7 +1,6 @@
-"""LLM-ops wave 32 (STAGED for round-8 registration): split-conformal
-prediction — the distribution-free uncertainty wrapper modern ML
-serving puts around ANY point predictor, audited end-to-end with
-exact integers:
+"""LLM-ops wave 32: split-conformal prediction — the distribution-free
+uncertainty wrapper modern ML serving puts around ANY point predictor,
+audited end-to-end with exact integers:
 
 - q331: calibrate a conformal interval radius on one md5 half of the
   users (the ceil((n+1)(1-alpha))-th order statistic of the absolute
@@ -9,15 +8,6 @@ exact integers:
   radius actually achieves on the other, disjoint half — the
   marginal-coverage guarantee (>= 1-alpha in expectation) made
   checkable.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-31 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops31 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave32.py; round 8 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-31): the predictor and the
 nonconformity scores are integer event COUNTS (first-half daily-mean

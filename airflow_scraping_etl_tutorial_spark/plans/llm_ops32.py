@@ -1,7 +1,6 @@
-"""LLM-ops wave 33 (STAGED for round-9 registration): retrieval
-EVALUATION and release-governance audits — the measurement layer a
-retrieval/training-data stack runs before trusting its rankers and
-before publishing aggregates:
+"""LLM-ops wave 33: retrieval EVALUATION and release-governance audits
+— the measurement layer a retrieval/training-data stack runs before
+trusting its rankers and before publishing aggregates:
 
 - q332: NDCG@20 of the q235 BM25 ranking against graded term-overlap
   relevance (exact integer micro-DCG with Python-precomputed
@@ -19,15 +18,6 @@ before publishing aggregates:
   epsilon does a Laplace-noised (event_type x day) histogram keep
   per-cell expected error within 5%? (closed-form: E|Lap(b)| = b =
   1/eps; pure integer comparison).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-32 — see plans/llm_ops11.py's docstring): value-checked
-via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops32 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave33.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-32): every ranking consumes only
 RANKS and integer counts; the only float anywhere is the BM25 score

@@ -1,7 +1,6 @@
-"""LLM-ops wave 34 (STAGED for round-9 registration): graph structure,
-language-model scoring, weighted sampling, and storage-maintenance
-planning — four operator families a corpus platform runs between
-ingestion and training:
+"""LLM-ops wave 34: graph structure, language-model scoring, weighted
+sampling, and storage-maintenance planning — four operator families a
+corpus platform runs between ingestion and training:
 
 - q337: triangle count + local clustering coefficient over the q68
   MinHash near-duplicate graph (ordered-edge 3-way join; the
@@ -18,14 +17,6 @@ ingestion and training:
   maxPartitionBytes arithmetic as an auditable plan.
 - q341: per-source TF-IDF top-5 keywords (integer tf x micro-idf),
   the source-profiling summary a curation dashboard prints.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-33): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops33 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave34.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-33): counts/ranks/ratios are
 exact integers with truncating division; every LN is quantized before

@@ -1,6 +1,6 @@
-"""LLM-ops wave 35 (STAGED for round-9 registration): entity
-resolution, incremental-view correctness, survey-grade sampling
-design, and the distributed-merge proof for weighted sampling:
+"""LLM-ops wave 35: entity resolution, incremental-view correctness,
+survey-grade sampling design, and the distributed-merge proof for
+weighted sampling:
 
 - q342: reciprocal best-match entity resolution between the two
   partkey-parity halves of the part catalog — blocked candidate
@@ -20,14 +20,6 @@ design, and the distributed-merge proof for weighted sampling:
   top-k of 4 disjoint parts, merged and re-topped, must equal the
   global top-k EXACTLY (the property that makes the sampler
   distributable and stream-mergeable).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-34): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops34 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave35.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-34): counts and ranks are exact
 integers; the only floats are IEEE sqrt (correctly rounded, so

@@ -1,7 +1,7 @@
-"""LLM-ops wave 36 (STAGED for round-9 registration): classifier and
-behavior-model EVALUATION — closing the loop on two models the
-catalog already ships (the q65 language-ID heuristic and the q217
-Markov transition matrix) with held-out-data report cards:
+"""LLM-ops wave 36: classifier and behavior-model EVALUATION — closing
+the loop on two models the catalog already ships (the q65 language-ID
+heuristic and the q217 Markov transition matrix) with held-out-data
+report cards:
 
 - q346: confusion matrix of the q65 stopword-profile language
   classifier against the labeled `lang` column, with per-cell share
@@ -14,14 +14,6 @@ Markov transition matrix) with held-out-data report cards:
 - q348: per-user session surprisal under the held-out Markov model
   (Laplace-smoothed, centi/micro-nat integers) — the low-likelihood
   outlier ranking behind bot and fraud triage.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-35): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops35 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave36.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-35): predictions are argmaxes
 with explicit lexicographic tiebreaks; accuracies are integer counts

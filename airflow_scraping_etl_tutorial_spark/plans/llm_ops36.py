@@ -1,6 +1,6 @@
-"""LLM-ops wave 37 (STAGED for round-9 registration): a local-DP
-mechanism actually executed end-to-end, another physical-layout
-pricing audit, and time-window funnel semantics:
+"""LLM-ops wave 37: a local-DP mechanism actually executed end-to-end,
+another physical-layout pricing audit, and time-window funnel
+semantics:
 
 - q349: randomized-response frequency estimation — the classic
   local-DP mechanism (report truth with p=1/2, else a uniform type)
@@ -15,14 +15,6 @@ pricing audit, and time-window funnel semantics:
 - q351: conversion-window funnel — q108's strict-order funnel with
   the industry-standard "within N days" constraint per stage
   transition, swept over three window widths in one pass.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-36): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops36 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave37.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-36): the RR mechanism's coins
 are md5-derived integers (no RNG anywhere); debiasing and error are

@@ -1,5 +1,5 @@
-"""LLM-ops wave 38 (STAGED for round-9 registration): survey-sampling
-estimators and evaluation/agreement audits —
+"""LLM-ops wave 38: survey-sampling estimators and
+evaluation/agreement audits —
 
 - q352: Horvitz-Thompson total estimation under dyadic-rate Poisson
   sampling — orders sampled at 1/1, 1/4, 1/16 by price band with
@@ -19,14 +19,6 @@ estimators and evaluation/agreement audits —
 - q356: temperature-reweighted source mixture (alpha = 1/2 and 1/4
   over char mass) — the p^alpha upsampling rule multilingual and
   multi-source training mixes use, with per-source boost factors.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-37): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops37 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave38.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-37): all sampling/assignment
 coins are md5-derived integers compared against integer thresholds;

@@ -1,6 +1,5 @@
-"""LLM-ops wave 39 (STAGED for round-9 registration): the data
-scaling curve, the paired-classifier significance test, and
-embedding-space decontamination —
+"""LLM-ops wave 39: the data scaling curve, the paired-classifier
+significance test, and embedding-space decontamination —
 
 - q357: data scaling curve — the q338 stupid-backoff bigram LM
   trained on CUMULATIVE 25/50/75/100% md5 fractions of the train
@@ -17,14 +16,6 @@ embedding-space decontamination —
   buckets) verified with exact cosine against a 0.30/0.35/0.40
   threshold sweep; the embedding-space contamination audit that
   catches paraphrased eval leakage n-gram overlap (q103) misses.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-38): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops38 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave39.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-38): split gates are md5-byte
 integer thresholds; each -LN is quantized to DECIMAL(18,2)

@@ -1,6 +1,6 @@
-"""LLM-ops wave 40 (STAGED for round-9 registration): the paired and
-k-rater nonparametric tests, and a pure-SQL robust location estimate —
-closing the classical-inference ring opened in waves 28-32:
+"""LLM-ops wave 40: the paired and k-rater nonparametric tests, and a
+pure-SQL robust location estimate — closing the classical-inference
+ring opened in waves 28-32:
 
 - q360: Wilcoxon signed-rank test on week-over-week daily event
   volume (day d vs day d+7 pairs) — the PAIRED magnitude-aware test
@@ -15,14 +15,6 @@ closing the classical-inference ring opened in waves 28-32:
   clamp at the exact nearest-rank P10/P90 per type, report raw vs
   winsorized mean and the clamp counts; the pure-SQL robust-location
   twin of q85's trimmed-mean UDAF and q234's median/MAD.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-39): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops39 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave40.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-39): midranks are kept integer
 by DOUBLING (2m = 2L + t + 1 for L smaller values and t ties);

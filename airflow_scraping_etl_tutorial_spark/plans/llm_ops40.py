@@ -1,6 +1,5 @@
-"""LLM-ops wave 41 (STAGED for round-9 registration): sequential
-testing, stratified causal adjustment, and apportioned eval-set
-construction —
+"""LLM-ops wave 41: sequential testing, stratified causal adjustment,
+and apportioned eval-set construction —
 
 - q363: SPRT early-stopping replay — Wald's sequential probability
   ratio test on the daily purchase share (H0 p=0.20 vs H1 p=0.25,
@@ -18,14 +17,6 @@ construction —
   apportionment and drawn per language by deterministic md5-uniform
   ranks: the balanced-eval-set constructor, with the seat math made
   auditable.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-40): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops40 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave41.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-40): the SPRT's two LLR terms
 are module-import-time Python round(ln(r)*1e6) integer constants

@@ -1,5 +1,5 @@
-"""LLM-ops wave 42 (STAGED for round-9 registration): pooled
-effect estimation, readability profiling, and association strength —
+"""LLM-ops wave 42: pooled effect estimation, readability profiling,
+and association strength —
 
 - q366: Mantel-Haenszel pooled risk ratio across the q364 activity
   strata vs the crude (unstratified) risk ratio — the one-number
@@ -14,14 +14,6 @@ effect estimation, readability profiling, and association strength —
   confusion matrix, INCLUDING the structural-zero cells — the
   single-number "how much signal does this classifier carry"
   summary, with the worst cell called out.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-41): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops41 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave42.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-41): MH terms and readability
 ratios are truncating micro/milli divisions on exact integer counts

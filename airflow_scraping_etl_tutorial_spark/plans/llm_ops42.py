@@ -1,5 +1,5 @@
-"""LLM-ops wave 43 (STAGED for round-9 registration): overlap-span
-localization, forecast decomposition, and order-statistic intervals —
+"""LLM-ops wave 43: overlap-span localization, forecast decomposition,
+and order-statistic intervals —
 
 - q369: shared-span localization on the q68 near-duplicate pairs —
   the longest run of consecutive shared positional 3-shingles per
@@ -16,14 +16,6 @@ localization, forecast decomposition, and order-statistic intervals —
   exact nearest-rank median with order-statistic CI ranks
   (n/2 -+ 1.96*sqrt(n)/2), the distribution-free error bar for the
   q362 robust-location report.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-42): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops42 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave43.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-42): island runs are pure
 integer position arithmetic (pos - row_number within a partitioned

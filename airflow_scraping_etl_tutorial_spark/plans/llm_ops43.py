@@ -1,5 +1,4 @@
-"""LLM-ops wave 44 (STAGED for round-9 registration): coreset
-selection and split-balance auditing —
+"""LLM-ops wave 44: coreset selection and split-balance auditing —
 
 - q372: greedy k-center coreset picks (k = 3, unrolled) over the
   embedding table — the 2-approximation facility-location heuristic
@@ -13,14 +12,6 @@ selection and split-balance auditing —
   each split's doc-length histogram (16 fixed log2-width bins) and
   the corpus's, in exact ppm; the continuous-covariate twin of
   q373 (a split can pass the label chi-square and still skew long).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-43): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops43 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave44.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-43): k-center picks are
 ORDER BY raw-double-with-id-tiebreak LIMIT 1 selections (the

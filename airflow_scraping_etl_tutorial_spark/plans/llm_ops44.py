@@ -1,5 +1,5 @@
-"""LLM-ops wave 45 (STAGED for round-9 registration): graph community
-quality, forensic digit auditing, and time-series encoding pricing —
+"""LLM-ops wave 45: graph community quality, forensic digit auditing,
+and time-series encoding pricing —
 
 - q375: language-modularity of the near-dup graph — Newman modularity
   of the partition-by-lang over q68's verified MinHash pairs, in
@@ -15,14 +15,6 @@ quality, forensic digit auditing, and time-series encoding pricing —
   per (event_type, day) series; the Gorilla-style encoding benefit
   audit that complements the FOR bit-packing (wave 37), dictionary
   (q288), RLE (q313) and z-order (q312) layout pricers.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-44): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops44 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave45.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-44): modularity contributions
 are SIGN-SPLIT (sign INT + abs-micro BIGINT) because Spark's `div`

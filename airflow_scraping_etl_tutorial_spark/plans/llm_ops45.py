@@ -1,6 +1,5 @@
-"""LLM-ops wave 46 (STAGED for round-9 registration): probabilistic
-record linkage, selection-bias auditing, and distributional treatment
-effects —
+"""LLM-ops wave 46: probabilistic record linkage, selection-bias
+auditing, and distributional treatment effects —
 
 - q378: Fellegi-Sunter field weights — per comparison field (lang,
   source, length width-class), the m-probability (agreement among
@@ -16,14 +15,6 @@ effects —
   exact nearest-rank per-user event-count quantile in each md5 arm
   and their difference; the distributional view that a mean-only ATE
   (q364) hides.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-45): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops45 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave46.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-45): every probability is a
 single truncating ppm division of exact integer counts; FS weights

@@ -1,5 +1,5 @@
-"""LLM-ops wave 47 (STAGED for round-9 registration): release-privacy
-grouping audits, cache economics, and graph attack tolerance —
+"""LLM-ops wave 47: release-privacy grouping audits, cache economics,
+and graph attack tolerance —
 
 - q381: l-diversity + t-closeness audit — per quasi-identifier group
   (lang, length width-class) of the documents table, the count of
@@ -17,14 +17,6 @@ grouping audits, cache economics, and graph attack tolerance —
   removal) and report surviving edges/nodes per step; the
   attack-tolerance curve that says whether dedup connectivity hangs
   on a few template hubs.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-46): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops46 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave47.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-46): TV distance is the sum of
 per-cell truncating ppm gaps halved LAST (one documented truncation

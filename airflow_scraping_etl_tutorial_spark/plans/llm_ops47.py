@@ -1,6 +1,5 @@
-"""LLM-ops wave 48 (STAGED for round-9 registration): corpus term
-dynamics, data-contract integrity, and transaction-velocity
-auditing —
+"""LLM-ops wave 48: corpus term dynamics, data-contract integrity, and
+transaction-velocity auditing —
 
 - q384: term adaptation (Church's burstiness) — for the top document-
   frequency terms, P(term occurs again | occurred once) as
@@ -14,14 +13,6 @@ auditing —
   days of each other (velocity signal), the top-20 closest pairs
   with their prices plus the global pair count; the double-charge /
   split-order detector shape over a key-bounded self-join.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-47): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops47 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave48.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-47): adaptation and orphan
 rates are single truncating ppm divisions of exact counts; top-k

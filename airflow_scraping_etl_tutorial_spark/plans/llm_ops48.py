@@ -1,5 +1,5 @@
-"""LLM-ops wave 49 (STAGED for round-9 registration): product
-analytics and monitoring over the event stream —
+"""LLM-ops wave 49: product analytics and monitoring over the event
+stream —
 
 - q387: cohort retention matrix — users grouped by first-seen week,
   retained-share ppm at each week offset; THE product-analytics
@@ -14,14 +14,6 @@ analytics and monitoring over the event stream —
   the daily count from its running peak (peak/trough days, depth in
   ppm of the peak); the time-series collapse detector that a mean-
   based monitor misses.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-48): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops48 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave49.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-48): weeks are the pure integer
 FLOOR(days-since-epoch / 7) (no ISO-week locale surface); retained /

@@ -1,5 +1,5 @@
-"""LLM-ops wave 50 (STAGED for round-9 registration): robust anomaly
-flags, experiment balance hygiene, and operational SLO percentiles —
+"""LLM-ops wave 50: robust anomaly flags, experiment balance hygiene,
+and operational SLO percentiles —
 
 - q390: median/MAD anomaly days — per event type, the robust-z scan
   of the daily count series (median and median-absolute-deviation,
@@ -12,14 +12,6 @@ flags, experiment balance hygiene, and operational SLO percentiles —
 - q392: shipping-lag SLO — exact P50/P95/P99 (nearest-rank,
   value-grain) of order-to-ship lag days per order priority, with
   the >90-day breach share; the fulfillment percentile board.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-49): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops49 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave50.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-49): medians/MADs/percentiles
 are exact nearest-rank selections (rank = the pure integer

@@ -2,12 +2,6 @@
 dedup-topology audits, and sampling/statistical design — the second
 ring of curation machinery around waves 1-5.
 
-Staged behind SPARK_GRAFT_EXTRA_MODULES during round 5 while the
-driver budget cleared, then promoted into registry._QUERY_MODULES in
-round 6 after hardening every oracle output against the HUGEINT
-canonicalization trap (see registry module docstring) and the
-cross-engine integer-division/LN-quantization fixes (q189/q199/q202).
-
 Reference parity: the reference's one daily DAG validates, transforms,
 and alerts (dags/Final_app.py:79-149); these entries keep extending
 that posture — validate the data plane continuously, at corpus scale,

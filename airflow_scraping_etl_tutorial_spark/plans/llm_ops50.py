@@ -1,5 +1,4 @@
-"""LLM-ops wave 51 (STAGED for round-9 registration): business
-decompositions and compliance economics —
+"""LLM-ops wave 51: business decompositions and compliance economics —
 
 - q393: month-over-month growth decomposition — each month's revenue
   change split EXACTLY into volume, price and interaction effects
@@ -15,14 +14,6 @@ decompositions and compliance economics —
   every table, following the real FK cascade (customer -> orders ->
   lineitem, plus the event stream); the compliance cost estimate a
   DPO asks for before approving a retention policy.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-50): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops50 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave51.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-50): money enters the integer
 lanes through the attested DOUBLE -> DECIMAL(18,6) cast (the q01/q04

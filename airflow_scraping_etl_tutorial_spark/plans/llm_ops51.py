@@ -1,6 +1,5 @@
-"""LLM-ops wave 52 (STAGED for round-9 registration): classic
-database operators — skyline, range-partition planning, ABC
-classification —
+"""LLM-ops wave 52: classic database operators — skyline,
+range-partition planning, ABC classification —
 
 - q396: Pareto skyline — the parts no other part beats on BOTH
   price and size (the classic skyline/maximal-vector operator),
@@ -14,14 +13,6 @@ classification —
   classic A (first 80% of revenue), B (to 95%), C (rest) classes by
   exact descending-revenue prefix, via bucket cumulative + boundary-
   bucket-local ranking (the q267/q331 pattern pointed downhill).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-51): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops51 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave52.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-51): prices enter integer lanes
 as ROUND(x*100) cents (integer ± 1 ulp doubles, never .5); all three

@@ -1,5 +1,4 @@
-"""LLM-ops wave 53 (STAGED for round-9 registration): interval
-analytics and data-contract integrity —
+"""LLM-ops wave 53: interval analytics and data-contract integrity —
 
 - q399: open-order concurrency — the sweep-line count of orders
   simultaneously open (orderdate to last shipment) per day,
@@ -15,14 +14,6 @@ analytics and data-contract integrity —
   key (the composite lineitem key included); the other half of the
   q385 data contract (q385 checks children point at parents; this
   checks the parents are actually unique).
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-52): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops52 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave53.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-52): the sweep is pure integer
 endpoint deltas cumulated over a day-grain frame; quantities enter as

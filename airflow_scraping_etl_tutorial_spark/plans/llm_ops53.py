@@ -1,5 +1,5 @@
-"""LLM-ops wave 54 (STAGED for round-9 registration): cross-source
-forensics, lead-lag analysis, and frequent itemsets —
+"""LLM-ops wave 54: cross-source forensics, lead-lag analysis, and
+frequent itemsets —
 
 - q402: cross-source duplication matrix — q68's verified near-dup
   pairs bucketed by (source, source), each cell's observed share
@@ -13,14 +13,6 @@ forensics, lead-lag analysis, and frequent itemsets —
 - q404: frequent brand triples — the a-priori step AFTER q164's
   pairs: 3-itemsets generated only from frequent pairs (candidate
   pruning, the whole point of a-priori), with exact support.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-53): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops53 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave54.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-53): matrix cells and supports
 are exact counts with single truncating ppm divisions; the

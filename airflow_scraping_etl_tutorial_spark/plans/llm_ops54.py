@@ -1,5 +1,5 @@
-"""LLM-ops wave 55 (STAGED for round-9 registration): optimizer
-statistics, string-layout pricing, and customer lifetime value —
+"""LLM-ops wave 55: optimizer statistics, string-layout pricing, and
+customer lifetime value —
 
 - q405: histogram selectivity error — a 32-bucket equi-width
   histogram's range-predicate selectivity estimates (half-bucket
@@ -14,14 +14,6 @@ statistics, string-layout pricing, and customer lifetime value —
   by account-age week (each week's mean divides only by customers
   OLD ENOUGH to be observed at that age); the number a growth team
   multiplies CAC against.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-54): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops54 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave55.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-54): histogram buckets,
 thresholds and the half-bucket estimator are pure integer arithmetic

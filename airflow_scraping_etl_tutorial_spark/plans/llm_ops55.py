@@ -1,5 +1,5 @@
-"""LLM-ops wave 56 (STAGED for round-9 registration): equi-depth
-statistics, feature hashing, and power-law auditing —
+"""LLM-ops wave 56: equi-depth statistics, feature hashing, and
+power-law auditing —
 
 - q408: equi-depth selectivity error — the direct sequel to q405:
   32 equal-frequency boundaries (computed exactly by the q397
@@ -16,14 +16,6 @@ statistics, feature hashing, and power-law auditing —
   power-of-two width classes (LENGTH(BIN(x)) — the q350 trick), and
   the slope of freq-width on rank-width is an exact sign-split
   rational. Zipf's law predicts slope ~ -1.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-55): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops55 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave56.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-55): equi-depth boundaries are
 exact nearest-rank keys ((i*n + 31)//32 over a coarse-bucket

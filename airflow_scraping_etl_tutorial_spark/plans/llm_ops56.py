@@ -1,5 +1,5 @@
-"""LLM-ops wave 57 (STAGED for round-9 registration): interpretable
-ML primitives, shuffle planning, and SRE error budgets —
+"""LLM-ops wave 57: interpretable ML primitives, shuffle planning, and
+SRE error budgets —
 
 - q411: decision stump — the best single width-class threshold on
   document length for predicting English, chosen by exact Gini
@@ -13,14 +13,6 @@ ML primitives, shuffle planning, and SRE error budgets —
 - q413: error-budget burn — the error-event share per rolling 7-day
   window against a 5% budget, with the worst window named; the SRE
   burn-rate table over the event stream.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-56): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops56 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave57.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-56): Gini impurities are exact
 (n^2 - sum c^2)/n^2 rationals compared CROSS-MULTIPLIED (the best

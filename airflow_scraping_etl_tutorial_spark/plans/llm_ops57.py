@@ -1,5 +1,5 @@
-"""LLM-ops wave 58 (STAGED for round-9 registration): join economics,
-count-process diagnostics, and behavioral co-occurrence —
+"""LLM-ops wave 58: join economics, count-process diagnostics, and
+behavioral co-occurrence —
 
 - q414: join fan-out audit — children-per-parent distribution for
   every FK edge (mean/max fan-out, parents with zero children); the
@@ -14,14 +14,6 @@ count-process diagnostics, and behavioral co-occurrence —
   user-day co-occurrence vs independence; which behaviors actually
   travel together within a day, the behavioral twin of q402's
   source matrix.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-57): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops57 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave58.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-57): fan-outs and VMRs are
 exact integer rationals truncated once (n*S2 - S1^2 variance lanes,

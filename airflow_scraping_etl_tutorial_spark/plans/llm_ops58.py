@@ -1,5 +1,5 @@
-"""LLM-ops wave 59 (STAGED for round-9 registration): causal
-direction checks, diversity metrics, and capacity windows —
+"""LLM-ops wave 59: causal direction checks, diversity metrics, and
+capacity windows —
 
 - q417: Simpson reversal detector — per activity stratum, the SIGN
   of the treatment-control conversion gap beside the pooled sign,
@@ -14,14 +14,6 @@ direction checks, diversity metrics, and capacity windows —
 - q419: peak-window concentration — the best 4 consecutive hours
   (circular over the 24-hour clock) per event type and their share
   of traffic; where the batch window does NOT belong.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-58): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops58 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave59.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-58): all signs come from
 integer cross-multiplications (never from subtracting truncated

@@ -1,5 +1,5 @@
-"""LLM-ops wave 60 (STAGED for round-9 registration): operational
-trends, content-defined chunking, and WIP aging —
+"""LLM-ops wave 60: operational trends, content-defined chunking, and
+WIP aging —
 
 - q420: fulfillment trend — monthly mean order-to-ship lag with the
   exact OLS slope over months; "is shipping getting faster"
@@ -12,14 +12,6 @@ trends, content-defined chunking, and WIP aging —
 - q422: backlog aging — open orders at the mid-horizon as-of day,
   bucketed by age (<=30 / <=60 / <=90 / older); the WIP aging
   report every fulfillment review starts with.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-59): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops59 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave60.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-59): slopes are the q273/q394
 sign-split rationals on (month-index, micro-mean) points; CDC

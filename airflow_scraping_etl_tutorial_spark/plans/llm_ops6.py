@@ -3,13 +3,6 @@ membership screening, dedup/LSH parameter tuning audits, corpus budget
 planning, and embedding-space hygiene — the third ring of curation
 machinery around waves 1-6.
 
-Originally staged behind SPARK_GRAFT_EXTRA_MODULES; promoted into
-registry._QUERY_MODULES once all 11 entries passed the strict-float
-oracle gate at sf0.001 AND sf0.01. Tier-1 driver load this round is
-8 re-attesting wave-5 + 20 wave-6 + 11 wave-7 = 39 of the ~50-entry
-budget, leaving ~11 slots for the stalest greens (registry tiering
-handles both automatically from the CORRECTNESS_r*.json files).
-
 Output-hardening doctrine (the round-6 HUGEINT lesson, applied from
 birth): every integer aggregate that DuckDB would return as HUGEINT is
 CAST to BIGINT in the oracle; ratios are ROUND(int/int, 6) doubles (the

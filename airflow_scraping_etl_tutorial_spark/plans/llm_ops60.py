@@ -1,5 +1,5 @@
-"""LLM-ops wave 61 (STAGED for round-9 registration): concentration
-drift, alert run-lengths, and plan-equivalence pedagogy —
+"""LLM-ops wave 61: concentration drift, alert run-lengths, and
+plan-equivalence pedagogy —
 
 - q423: revenue concentration drift — monthly customer-revenue HHI
   (sum of squared shares, exact ppm) with the sign-split trend; a
@@ -15,14 +15,6 @@ drift, alert run-lengths, and plan-equivalence pedagogy —
   both results and the rows-into-join counts side by side; the
   plan-shape lesson (partial aggregation is free row reduction)
   stated as data.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-60): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops60 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave61.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-60): HHI is the exact
 rational sum(c^2)*1e6 // (sum(c))^2 per month in DECIMAL(38,0)

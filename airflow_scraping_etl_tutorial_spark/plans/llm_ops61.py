@@ -1,5 +1,5 @@
-"""LLM-ops wave 62 (STAGED for round-9 registration): keep-policy
-fairness, retention decay, and change attribution —
+"""LLM-ops wave 62: keep-policy fairness, retention decay, and change
+attribution —
 
 - q426: dedup winner bias — among verified near-dup pairs, which
   SOURCE survives the min-doc_id keep policy and at whose expense;
@@ -14,14 +14,6 @@ fairness, retention decay, and change attribution —
   revenue delta between the last two complete months, each with its
   signed share of the total move; the "why did revenue change"
   root-cause table.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-61): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops61 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave62.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-61): winner/loser cells are
 exact counts with truncating ppm shares; decay ratios divide exact

@@ -1,5 +1,5 @@
-"""LLM-ops wave 63 (STAGED for round-9 registration): tokenizer
-coverage, keyspace forensics, and recommender baselines —
+"""LLM-ops wave 63: tokenizer coverage, keyspace forensics, and
+recommender baselines —
 
 - q429: OOV rate — each language's out-of-vocabulary token share
   against the corpus's top-16 vocabulary; the tokenizer-coverage
@@ -14,14 +14,6 @@ coverage, keyspace forensics, and recommender baselines —
   the date range (top-5 brands), test on the second: the share of
   test orders containing any trained top brand; the baseline every
   recommender must beat, computed exactly.
-
-This module is NOT in registry._QUERY_MODULES (same staging protocol
-as waves 12-62): value-checked via
-
-    SPARK_GRAFT_EXTRA_MODULES=airflow_scraping_etl_tutorial_spark.plans.llm_ops62 \\
-        python tools/check_correctness.py /root/testdata/sf0.01
-
-and by tests/test_staged_wave63.py; round 9 promotes it with one line.
 
 Output-hardening doctrine (as waves 6-62): the vocab is a top-16
 (freq DESC, token) selection; OOV/hit shares are single truncating

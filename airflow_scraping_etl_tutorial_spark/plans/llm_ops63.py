@@ -1,5 +1,5 @@
-"""LLM-ops wave 64 (STAGED for round-10 registration): lake profiling,
-tokenizer economics, and conversion effort —
+"""LLM-ops wave 64: lake profiling, tokenizer economics, and
+conversion effort —
 
 - q432: data dictionary — per (table, column) over the three fact
   tables: row count, distinct count, uniqueness ppm and null count;
@@ -13,10 +13,6 @@ tokenizer economics, and conversion effort —
   events BEFORE their first purchase, histogrammed by width class
   with the exact nearest-rank median; the product-analytics
   "how much does a conversion cost in attention" table.
-
-Promoted into registry._QUERY_MODULES in round 10 (staged in
-round 9 under the same protocol as waves 12-63); value-checked by
-tools/check_correctness.py and tests/test_staged_wave64.py.
 
 Output-hardening doctrine (as waves 6-63): profile counts are exact
 (COUNT DISTINCT, not approx) with truncating ppm shares; fertility

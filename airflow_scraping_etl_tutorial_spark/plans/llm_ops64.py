@@ -1,5 +1,5 @@
-"""LLM-ops wave 65 (STAGED for round-10 registration): flow identities,
-sampling-design audits, and temporal data contracts —
+"""LLM-ops wave 65: flow identities, sampling-design audits, and
+temporal data contracts —
 
 - q435: Little's law flow identity — per order priority, the
   time-averaged work-in-progress computed by an endpoint-delta sweep
@@ -20,10 +20,6 @@ sampling-design audits, and temporal data contracts —
   (~47% of lineitems ship strictly before their order date) — like
   q401's composite-key finding, the audit is the contract, not the
   assumption.
-
-Promoted into registry._QUERY_MODULES in round 10 (staged in
-round 9 under the same protocol as waves 12-63); value-checked by
-tools/check_correctness.py and tests/test_staged_wave65.py.
 
 Output-hardening doctrine (as waves 6-64): epoch-day arithmetic via
 DATEDIFF from 1970-01-01 on DATE casts (the q431 lane); money enters

@@ -1,5 +1,5 @@
-"""LLM-ops wave 67 (STAGED for round-12 registration): driver stamps
-for four Spark-4-native SQL engine surfaces no existing entry covers —
+"""LLM-ops wave 67: driver stamps for four Spark-4-native SQL engine
+surfaces no existing entry covers —
 
 - q440: RECURSIVE CTE (SPARK-24497, new in Spark 4) — an exact-decimal
   amortization schedule: the anchor seeds a principal aggregated from
@@ -24,10 +24,6 @@ for four Spark-4-native SQL engine surfaces no existing entry covers —
   the same fixpoint closed-form over a bit-shifted power ladder.
   Control flow executes ENGINE-side per statement — no Python between
   iterations.
-
-Staged through rounds 10-11 under the waves-12-66 protocol
-(strict-oracle-checked at three SFs + tests/test_staged_wave67.py),
-promoted into _QUERY_MODULES round 12.
 
 Output-hardening doctrine (as waves 6-66): money stays in the decimal
 lane end-to-end (DECIMAL(18,2) balances, explicit CAST after every

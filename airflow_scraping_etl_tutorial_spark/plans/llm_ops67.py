@@ -1,6 +1,5 @@
-"""LLM-ops wave 68 (STAGED for round-12+ registration): driver stamps
-for six Spark-4-native engine surfaces a fresh grep shows no existing
-entry covers —
+"""LLM-ops wave 68: driver stamps for six Spark-4-native engine
+surfaces a fresh grep shows no existing entry covers —
 
 - q444: GROUP BY ALL / ORDER BY ALL (SPARK-44120) — the
   infer-grouping-keys-from-SELECT surface, proven against the explicit
@@ -39,10 +38,6 @@ entry covers —
   the de-comma round-trip via try_to_number (the THIRD engine form of
   the reference's P3 scrub, after the inline expression and the SQL
   UDF), and a format-mismatch parse that must be NULL, not an error.
-
-Staged in round 11 under the waves-12-67 protocol
-(strict-oracle-checked at three SFs + tests/test_staged_wave68.py),
-promoted into _QUERY_MODULES round 12.
 
 Output-hardening doctrine (as waves 6-67): money stays in the decimal
 lane (DOUBLE -> DECIMAL(18,2) before any arithmetic; sums cast on both

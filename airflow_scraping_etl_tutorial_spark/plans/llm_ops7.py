@@ -3,11 +3,6 @@ cardinality/frequency sketches, behavioral-sequence analytics, skew
 and drift audits, and incremental-maintenance patterns — the fourth
 ring of curation machinery around waves 1-7.
 
-Staged behind SPARK_GRAFT_EXTRA_MODULES during round 6 while the
-driver's ~50-entry attestation budget drained waves 5-7; promoted into
-registry._QUERY_MODULES in round 7. Value-checked like the rest of the
-live catalog by tools/check_correctness.py and tests/test_staged_wave8.py.
-
 Output-hardening doctrine (applied from birth): integer aggregates
 CAST to BIGINT in the oracle (never HUGEINT output); ratios are single
 deterministic double divisions of exact integers or exact decimals,

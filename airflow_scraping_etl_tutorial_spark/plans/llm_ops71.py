@@ -1,5 +1,5 @@
-"""LLM-ops wave 72 (STAGED round 14 for round-15 promotion): six
-engine surfaces a fresh 0-hit grep of the 462-entry catalog confirmed
+"""LLM-ops wave 72 (staged round 14, promoted round 16): six engine
+surfaces a fresh 0-hit grep of the 462-entry catalog confirmed
 uncovered —
 
 - q463: the map HIGHER-ORDER-FUNCTION family (transform_keys /

@@ -3,11 +3,6 @@ set-similarity joins, integer-arithmetic graph centrality, optimizer
 planning audits, physical-layout planning, and forensic value
 distributions — the fifth ring of curation machinery around waves 1-8.
 
-Staged during round 6 (driver-budget protocol — see
-plans/llm_ops7.py's docstring); promoted into registry._QUERY_MODULES
-in round 7. Value-checked by tools/check_correctness.py and
-tests/test_staged_wave9.py.
-
 Output-hardening doctrine (as waves 6-8): BIGINT-cast integer
 aggregates, single-division rounded ratios, truncating integer
 division (`div` / `//`) on nonnegative operands, shared Python-

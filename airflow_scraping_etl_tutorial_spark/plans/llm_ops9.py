@@ -4,11 +4,6 @@ corpus-level similarity and selection, change-data compaction, and
 behavioral affinity — the sixth ring of curation machinery around
 waves 1-9.
 
-Staged during round 6 (driver-budget protocol — see
-plans/llm_ops7.py's docstring); promoted into registry._QUERY_MODULES
-in round 7. Value-checked by tools/check_correctness.py and
-tests/test_staged_wave10.py.
-
 Output-hardening doctrine (as waves 6-9): BIGINT-cast integer
 aggregates, single-division rounded ratios, truncating integer
 division on nonnegative operands, string-cast double literals for

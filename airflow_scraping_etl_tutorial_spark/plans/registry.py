@@ -103,35 +103,11 @@ _QUERY_MODULES = (
     "airflow_scraping_etl_tutorial_spark.plans.llm_ops65",  # wave 66, promoted r11
     "airflow_scraping_etl_tutorial_spark.plans.llm_ops66",  # wave 67, promoted r12
     "airflow_scraping_etl_tutorial_spark.plans.llm_ops67",  # wave 68, promoted r12
-    # Waves 69-70 entered _QUERY_MODULES directly in round 12 — a
-    # DELIBERATE exception to the stage-one-round-then-promote protocol
-    # every wave 12-68 followed (r12 ADVICE asked this be recorded):
-    # round 12 had attestation budget to spare, both waves were
-    # strict-oracle-green at three SFs before registration, and the
-    # driver attested all nine entries (q448, q450-q456) GREEN that
-    # same round — the staging protocol's purpose (never burn a driver
-    # attestation on an unproven entry) was met by the pre-checks.
-    # Future waves default back to STAGED_MODULES first.
     "airflow_scraping_etl_tutorial_spark.plans.llm_ops68",  # wave 69, added r12
     "airflow_scraping_etl_tutorial_spark.plans.llm_ops69",  # wave 70, added r12
     "airflow_scraping_etl_tutorial_spark.plans.llm_ops70",  # wave 71, promoted r14
+    "airflow_scraping_etl_tutorial_spark.plans.llm_ops71",  # wave 72, promoted r16
 )
-
-# Staged waves: implemented, pytest-covered, strict-oracle-green, but
-# deliberately NOT in the driver contract until their round's
-# attestation budget clears (see all_queries()). Tooling (explain
-# audit, catalog lint, staged sweeps) loads them from here so the
-# list cannot drift between consumers. Promotion = move the module
-# name into _QUERY_MODULES above.
-STAGED_MODULES: tuple[str, ...] = (
-    # wave 72 (staged r14; wave 71/llm_ops70 promoted r14 per the
-    # stage-one-round-then-promote protocol): map HOFs, timestamp
-    # unit arithmetic, convert_timezone NTZ, string surgery, binary
-    # encoding bridges, bround/bit family. Promotion = move into
-    # _QUERY_MODULES r15.
-    "airflow_scraping_etl_tutorial_spark.plans.llm_ops71",
-)
-
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -218,28 +194,9 @@ def _priority(name: str) -> tuple[int, int]:
 
 def all_queries() -> dict[str, QuerySpec]:
     """Import all catalog modules and return the full registry,
-    driver-priority ordered (see _ROUND1_GREEN).
-
-    SPARK_GRAFT_EXTRA_MODULES (comma-separated module paths) lets the
-    local tooling check STAGED catalog modules that are deliberately
-    not yet in _QUERY_MODULES: the driver attests ~50 entries per
-    round, so new waves are held out of the official registry until
-    the round's attestation debt clears, while still being value-
-    checked by tools/check_correctness.py and pytest in the meantime.
-    """
-    allowed = set(_QUERY_MODULES)
+    driver-priority ordered (see _priority)."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    for mod in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_MODULES", "").split(",")):
-        importlib.import_module(mod)
-        allowed.add(mod)
-    # _REGISTRY is process-global: a staged module imported elsewhere in
-    # the same process (e.g. its pytest file) registers its entries for
-    # the process lifetime. The driver contract is only the declared
-    # modules, so filter stray registrations out.
     order = {n: i for i, n in enumerate(_REGISTRY)}
-    names = sorted(
-        (n for n in _REGISTRY if _REGISTRY[n].fn.__module__ in allowed),
-        key=lambda n: (_priority(n), order[n]),
-    )
+    names = sorted(_REGISTRY, key=lambda n: (_priority(n), order[n]))
     return {n: _REGISTRY[n] for n in names}

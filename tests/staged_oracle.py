@@ -1,7 +1,7 @@
-"""Shared oracle-compare helpers for the staged-wave test files — ONE
-normalizer and ONE DuckDB view-setup, so a future change to what
-"equal" means (cf. tools/check_correctness.py's normalize) cannot
-drift across per-wave copies (round-6 review finding)."""
+"""Shared oracle-compare helpers for the catalog tests — ONE normalizer
+and ONE DuckDB view-setup, so a future change to what "equal" means
+(cf. tools/check_correctness.py's normalize) cannot drift across
+copies (round-6 review finding)."""
 
 from __future__ import annotations
 
@@ -41,8 +41,8 @@ def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 def norm(rows, cols):
     """Column-name-sorted, stringified, order-insensitive row set —
-    the driver-comparator-shaped canonical form used by every staged
-    wave's value-level assertion."""
+    the driver-comparator-shaped canonical form used by the catalog's
+    value-level assertion (floats compare exactly)."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
 
     def nv(v):
@@ -59,43 +59,17 @@ def norm(rows, cols):
     return out
 
 
-def assert_live_and_tiered(staged_names, module_token):
-    """Attestation-INVARIANT registration check (the round-6 lesson:
-    hard-coded `names[:50]` membership broke the moment the driver's
-    CORRECTNESS_r06.json landed and correctly demoted the now-green
-    entries). Asserts only properties that survive any driver artifact
-    landing: the wave's module is in the driver contract, every entry
-    is visible in all_queries(), and the catalog order is exactly
-    "tier-1 (never-attested-or-red) before tier-2 (green, stalest
-    first)" — with the expected tiers derived from the SAME
-    CORRECTNESS_r*.json state the registry itself reads."""
-    from airflow_scraping_etl_tutorial_spark.plans.registry import (
-        _QUERY_MODULES,
-        _priority,
-        all_queries,
-    )
-
-    assert module_token in ",".join(_QUERY_MODULES)
-    names = list(all_queries())
-    missing = set(staged_names) - set(names)
-    assert not missing, f"wave entries missing from driver contract: {missing}"
-    prios = [_priority(n) for n in names]
-    assert prios == sorted(prios), (
-        "catalog order must be non-decreasing in (tier, attested-round)"
-    )
-
-
-def assert_matches_oracle(spark, duck, spec, sf_dir):
-    """The per-entry staged gate: non-empty, HUGEINT-free oracle
-    schema (the round-6 driver-comparator lesson), same columns,
-    same canonicalized values."""
+def assert_matches_oracle(spark, duck, spec, sf_dir, may_be_empty=False):
+    """The per-entry catalog gate: non-empty (unless `may_be_empty`),
+    HUGEINT-free oracle schema (the round-6 driver-comparator lesson),
+    same columns, same canonicalized values."""
     sdf = spec.fn(spark, sf_dir)
     srows = sdf.collect()
     rel = duck.sql(spec.oracle)
     ocols = list(rel.columns)
     otypes = [str(t) for t in rel.types]
     orows = rel.fetchall()
-    assert len(srows) > 0, "staged queries must be non-empty at sf0.001"
+    assert may_be_empty or len(srows) > 0, "catalog queries must be non-empty at sf0.001"
     assert not any("HUGEINT" in t for t in otypes), (
         "oracle output contains HUGEINT — the round-6 lesson: "
         f"cast to BIGINT ({dict(zip(ocols, otypes))})"

@@ -4,6 +4,11 @@ decode boundary raises NotImplementedError by design)."""
 
 from __future__ import annotations
 
+import os
+import pathlib
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,3 +83,22 @@ def test_frame_sample_expands_rows(spark, media):
     assert frames.count() > 50  # 1 -> N expansion happened
     first = frames.filter(F.col("frame_no") == 0).first()
     assert isinstance(first.frame, bytearray | bytes)
+
+
+def test_check_correctness_runs_outside_repo_root(tmp_path):
+    """q93's mapInPandas worker imports the plan module by name, so the
+    oracle tool must hand the repo root to the Python workers, not only
+    to its own sys.path, when started from another directory."""
+    tool = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_correctness.py"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, str(tool), SF_DIR, "q93_multimodal_featurize"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+        check=False,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert "1 ok, 0 rows-only, 0 FAIL" in proc.stdout

@@ -1,4 +1,4 @@
-"""Catalog-wide structural lint over live AND staged entries — the
+"""Catalog-wide structural lint over every catalog entry — the
 round-6 mirror/driver lesson (VERDICT item 2) as a permanent gate:
 every cross-engine trap this repo has been burned by becomes a static
 check here, so a new entry cannot reintroduce one and pass CI.
@@ -19,36 +19,16 @@ from __future__ import annotations
 import os
 import re
 
-import duckdb
 import pytest
 
-from airflow_scraping_etl_tutorial_spark.plans.registry import STAGED_MODULES
+from airflow_scraping_etl_tutorial_spark.plans import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def specs():
-    os.environ["SPARK_GRAFT_EXTRA_MODULES"] = ",".join(STAGED_MODULES)
-    try:
-        from airflow_scraping_etl_tutorial_spark.plans import all_queries
-
-        yield all_queries()
-    finally:
-        os.environ.pop("SPARK_GRAFT_EXTRA_MODULES", None)
-
-
-@pytest.fixture(scope="module")
-def duck():
-    from airflow_scraping_etl_tutorial_spark.sources.tables import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield con
-    con.close()
+    return all_queries()
 
 
 # q35 exercises POW deliberately AS the math-function surface; its

@@ -5,8 +5,6 @@ TakeOrderedAndProject, and scans must prune columns."""
 
 from __future__ import annotations
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -176,40 +174,3 @@ def test_count_global_windows_unit():
     assert ea._count_global_windows(p5) == 1
     # non-Window lines never counted
     assert ea._count_global_windows("windowspecdefinition(x#1 ASC NULLS FIRST)") == 0
-
-
-def test_staged_entries_global_windows_justified(spark):
-    """Plan-level mirror of the source lint, run as a pytest gate for
-    STAGED entries (round-8 ADVICE): any staged query whose final plan
-    contains an unpartitioned Window node must carry a justification in
-    tools/explain_audit.py::GLOBAL_WINDOW_JUSTIFIED — so a staged wave
-    cannot reach promotion with an unexplained global window even if
-    its source form evades the textual lint."""
-    import importlib
-
-    from airflow_scraping_etl_tutorial_spark.plans.registry import (
-        _REGISTRY,
-        STAGED_MODULES,
-    )
-
-    ea = _load_explain_audit()
-    staged_specs = []
-    for mod in STAGED_MODULES:
-        importlib.import_module(mod)
-    for name, qspec in _REGISTRY.items():
-        if qspec.fn.__module__ in STAGED_MODULES:
-            staged_specs.append((name, qspec))
-    if not staged_specs:
-        pytest.skip("no staged waves right now — gate re-arms when one lands")
-    offenders = []
-    for name, qspec in staged_specs:
-        df = qspec.fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        n = ea._count_global_windows(plan)
-        if n > 0 and name not in ea.GLOBAL_WINDOW_JUSTIFIED:
-            offenders.append(f"{name} ({n} global windows)")
-    assert not offenders, (
-        "staged entries with unexplained unpartitioned Window nodes "
-        f"(justify in GLOBAL_WINDOW_JUSTIFIED or partition): {offenders}"
-    )

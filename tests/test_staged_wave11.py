@@ -1,59 +1,17 @@
-"""Staged wave-11 catalog entries (plans/llm_ops10.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-candle ordering invariants, streak/user conservation, truncation-
-recall bounds, percentile monotonicity, and session-share closure."""
+"""Wave-11 catalog entries (plans/llm_ops10.py): the wave's structural
+claims — candle ordering invariants, streak/user conservation,
+truncation-recall bounds, percentile monotonicity, and session-share
+closure."""
 
 from __future__ import annotations
 
 import math
 
-import duckdb
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops10  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-from airflow_scraping_etl_tutorial_spark.sources.tables import TABLES, load
-
-from staged_oracle import assert_matches_oracle, duck_views
+from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q247_ohlc_daily_candles",
-    "q248_activity_streaks",
-    "q249_matryoshka_truncation_audit",
-    "q250_connected_components_minlabel",
-    "q251_session_depth_profile",
-    "q252_shipping_sla_percentiles",
-    "q253_volume_trend_slope",
-    "q254_dow_seasonality_strength",
-    "q255_top_event_paths",
-    "q256_k_anonymity_audit",
-    "q257_adamic_adar_brand_links",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave11_registered_in_driver_contract(monkeypatch):
-    """Round 7 promoted wave 11. Membership + tiering only."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops10")
 
 
 def test_ohlc_candle_invariants(spark):

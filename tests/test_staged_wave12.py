@@ -1,55 +1,16 @@
-"""Staged wave-12 catalog entries (plans/llm_ops11.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-converged-model census conservation, k-core monotonicity, decile
-bounds, leakage-count consistency, tail-mass closure, truncation
-monotonicity, detector-agreement set algebra, mixture-shift closure,
-and Fano nonnegativity."""
+"""Wave-12 catalog entries (plans/llm_ops11.py): the wave's structural
+claims — converged-model census conservation, k-core monotonicity,
+decile bounds, leakage-count consistency, tail-mass closure,
+truncation monotonicity, detector-agreement set algebra, mixture-shift
+closure, and Fano nonnegativity."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops11  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q258_kmeans_converged_assignment",
-    "q259_kcore_peel_rounds",
-    "q260_duplicate_shingle_coverage",
-    "q261_time_split_leakage",
-    "q262_token_tail_mass",
-    "q263_truncation_loss",
-    "q264_detector_agreement",
-    "q265_dedup_mixture_shift",
-    "q266_event_type_fano",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave12_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 12 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops11")
 
 
 # ---------------------------------------------------------------------------

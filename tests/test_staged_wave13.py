@@ -1,51 +1,16 @@
-"""Staged wave-13 catalog entries (plans/llm_ops12.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-histogram-estimate error bounds, a brute-force recall proof for the
-deletion-neighborhood join, incremental-maintenance equality, the
-interleave closed form, KL nonnegativity, and keep-policy ordering."""
+"""Wave-13 catalog entries (plans/llm_ops12.py): the wave's structural
+claims — histogram-estimate error bounds, a brute-force recall proof
+for the deletion-neighborhood join, incremental-maintenance equality,
+the interleave closed form, KL nonnegativity, and keep-policy
+ordering."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops12  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q267_histogram_quantile_error",
-    "q268_edit_distance_one_join",
-    "q269_incremental_signature_maintenance",
-    "q270_curriculum_interleave_plan",
-    "q271_source_kl_divergence",
-    "q272_dedup_keep_policy_impact",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave13_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 13 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops12")
 
 
 # ---------------------------------------------------------------------------

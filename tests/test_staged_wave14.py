@@ -1,50 +1,14 @@
-"""Staged wave-14 catalog entries (plans/llm_ops13.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-assortativity bounds, blocking-scheme dominance ordering, both merge
-proofs' zero-mismatch invariants, backtest accounting, and policy
-conservation for touch attribution."""
+"""Wave-14 catalog entries (plans/llm_ops13.py): the wave's structural
+claims — assortativity bounds, blocking-scheme dominance ordering,
+both merge proofs' zero-mismatch invariants, backtest accounting, and
+policy conservation for touch attribution."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops13  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q273_dup_graph_assortativity",
-    "q274_blocking_key_quality",
-    "q275_mergeable_moments_audit",
-    "q276_naive_forecast_backtest",
-    "q277_touch_attribution",
-    "q278_histogram_merge_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave14_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 14 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops13")
 
 
 # ---------------------------------------------------------------------------

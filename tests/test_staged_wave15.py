@@ -1,51 +1,15 @@
-"""Staged wave-15 catalog entries (plans/llm_ops14.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-bootstrap sanity (envelope brackets the point estimate), FD truths on
-key columns, coverage-curve monotonicity, hard-negative accounting,
-padding dominance of length bucketing, and survival-probability
-ordering for the memorylessness test."""
+"""Wave-15 catalog entries (plans/llm_ops14.py): the wave's structural
+claims — bootstrap sanity (envelope brackets the point estimate), FD
+truths on key columns, coverage-curve monotonicity, hard-negative
+accounting, padding dominance of length bucketing, and
+survival-probability ordering for the memorylessness test."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops14  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q279_poisson_bootstrap_mean",
-    "q280_functional_dependency_audit",
-    "q281_source_coverage_curve",
-    "q282_hard_negative_mining",
-    "q283_padding_waste_audit",
-    "q284_memorylessness_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave15_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 15 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops14")
 
 
 # ---------------------------------------------------------------------------

@@ -1,50 +1,15 @@
-"""Staged wave-16 catalog entries (plans/llm_ops15.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-water-filling budget feasibility and cap semantics, leaderboard-
-stability accounting, information-theoretic inequalities for the
-type×hour MI, dictionary-benefit sign structure, and runtime-filter
-pruning bounds."""
+"""Wave-16 catalog entries (plans/llm_ops15.py): the wave's structural
+claims — water-filling budget feasibility and cap semantics,
+leaderboard-stability accounting, information-theoretic inequalities
+for the type×hour MI, dictionary-benefit sign structure, and
+runtime-filter pruning bounds."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops15  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q285_waterfill_token_allocation",
-    "q286_ranking_stability_bootstrap",
-    "q287_type_hour_mutual_information",
-    "q288_dictionary_encoding_benefit",
-    "q289_runtime_filter_benefit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave16_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 16 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops15")
 
 
 # ---------------------------------------------------------------------------

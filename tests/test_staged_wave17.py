@@ -1,48 +1,15 @@
-"""Staged wave-17 catalog entries (plans/llm_ops16.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims — the
-median-stability envelope contains the point estimate, the
-changepoint score is the argmax of a python replay, and the CUSUM
+"""Wave-17 catalog entries (plans/llm_ops16.py): the wave's structural
+claims — the median-stability envelope contains the point estimate,
+the changepoint score is the argmax of a python replay, and the CUSUM
 peak deviation matches a python prefix-sum replay."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops16  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q290_quantile_stability_bootstrap",
-    "q291_step_changepoint",
-    "q292_cusum_drift",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave17_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 17 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops16")
 
 
 # ---------------------------------------------------------------------------

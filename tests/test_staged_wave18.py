@@ -1,47 +1,14 @@
-"""Staged wave-18 catalog entries (plans/llm_ops17.py): value-level
-oracle comparison at sf0.001 plus python replays — Theil-Sen median
-pair, Mann-Kendall S and tie-corrected variance numerator, and the
-exact-integer ACF at every lag."""
+"""Wave-18 catalog entries (plans/llm_ops17.py): python replays —
+Theil-Sen median pair, Mann-Kendall S and tie-corrected variance
+numerator, and the exact-integer ACF at every lag."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops17  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q293_theil_sen_slope",
-    "q294_mann_kendall_trend",
-    "q295_daily_autocorrelation",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave18_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 18 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops17")
 
 
 # ---------------------------------------------------------------------------

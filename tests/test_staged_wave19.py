@@ -1,48 +1,14 @@
-"""Staged wave-19 catalog entries (plans/llm_ops18.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims —
-chi-square consistency with a python rational replay, shrinkage
-direction and bounds, capture-recapture calibration against the known
-truth, and Chao1/Good-Turing sanity."""
+"""Wave-19 catalog entries (plans/llm_ops18.py): the wave's structural
+claims — chi-square consistency with a python rational replay,
+shrinkage direction and bounds, capture-recapture calibration against
+the known truth, and Chao1/Good-Turing sanity."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops18  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q296_ab_chisquare_conversion",
-    "q297_empirical_bayes_rates",
-    "q298_capture_recapture_estimate",
-    "q299_unseen_vocab_estimators",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave19_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 19 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops18")
 
 
 # ---------------------------------------------------------------------------

@@ -1,46 +1,13 @@
-"""Staged wave-20 catalog entries (plans/llm_ops19.py): value-level
-oracle comparison at sf0.001 plus the wave's structural claims — the
-permutation test's null behavior and accounting, standardization
-bounds, and the DiD null control."""
+"""Wave-20 catalog entries (plans/llm_ops19.py): the wave's structural
+claims — the permutation test's null behavior and accounting,
+standardization bounds, and the DiD null control."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops19  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q300_permutation_test_conversion",
-    "q301_standardized_conversion",
-    "q302_difference_in_differences",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave20_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 20 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops19")
 
 
 # ---------------------------------------------------------------------------

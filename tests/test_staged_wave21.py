@@ -1,46 +1,14 @@
-"""Staged wave-21 catalog entries (plans/llm_ops20.py): value-level
-oracle comparison at sf0.001 plus python replays of the KM at-risk/
-event accounting and the log-rank O/E/V sums, and the survival
-curve's monotonicity."""
+"""Wave-21 catalog entries (plans/llm_ops20.py): python replays of the
+KM at-risk/ event accounting and the log-rank O/E/V sums, and the
+survival curve's monotonicity."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops20  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q303_kaplan_meier_conversion",
-    "q304_logrank_test",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave21_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 21 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops20")
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,5 @@
-"""Staged wave-22 catalog entries (plans/llm_ops21.py): value-level
-oracle comparison at sf0.001 plus python replays of the varint
-posting-list pricing, the fold-leakage pair matrix, the source
+"""Wave-22 catalog entries (plans/llm_ops21.py): python replays of the
+varint posting-list pricing, the fold-leakage pair matrix, the source
 ablation's set arithmetic, and the consistent-hash ring successor
 walk."""
 
@@ -8,43 +7,10 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops21  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q305_postings_compression_audit",
-    "q306_fold_dup_leakage",
-    "q307_source_ablation_coverage",
-    "q308_resharding_migration_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave22_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 22 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops21")
 
 
 # ---------------------------------------------------------------------------

@@ -1,48 +1,15 @@
-"""Staged wave-23 catalog entries (plans/llm_ops22.py): value-level
-oracle comparison at sf0.001 plus python replays of the positional
-phrase index (and its must-agree substring cross-check), the exact
-integer power formula, and the greedy set-cover picks."""
+"""Wave-23 catalog entries (plans/llm_ops22.py): python replays of the
+positional phrase index (and its must-agree substring cross-check),
+the exact integer power formula, and the greedy set-cover picks."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops22  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q309_phrase_query_positional",
-    "q310_ab_power_sample_size",
-    "q311_greedy_source_selection",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave23_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 23 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops22")
 
 
 # ---------------------------------------------------------------------------

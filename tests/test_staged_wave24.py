@@ -1,46 +1,14 @@
-"""Staged wave-24 catalog entries (plans/llm_ops23.py): value-level
-oracle comparison at sf0.001 plus python replays of the Morton
-interleave + zone-map skipping and the segment-local run counting,
-and the layout-story invariants (z-order skips on BOTH dimensions;
-sorting collapses runs to the distinct count)."""
+"""Wave-24 catalog entries (plans/llm_ops23.py): python replays of the
+Morton interleave + zone-map skipping and the segment-local run
+counting, and the layout-story invariants (z-order skips on BOTH
+dimensions; sorting collapses runs to the distinct count)."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops23  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q312_zorder_skipping_benefit",
-    "q313_rle_sortorder_benefit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave24_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 24 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops23")
 
 
 # ---------------------------------------------------------------------------

@@ -1,48 +1,15 @@
-"""Staged wave-25 catalog entries (plans/llm_ops24.py): value-level
-oracle comparison at sf0.001 plus python replays of the AMS sign
-sums, the exact join-order intermediate counts, and the
+"""Wave-25 catalog entries (plans/llm_ops24.py): python replays of the
+AMS sign sums, the exact join-order intermediate counts, and the
 predicate-correlation arithmetic."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops24  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q314_ams_selfjoin_estimate",
-    "q315_join_order_cost_audit",
-    "q316_predicate_correlation_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave25_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 25 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops24")
 
 
 # ---------------------------------------------------------------------------

@@ -1,49 +1,16 @@
-"""Staged wave-26 catalog entries (plans/llm_ops25.py): value-level
-oracle comparison at sf0.001 plus python replays of the integer
-value-iteration, the Hill sum, and the follow-the-leader policy walk,
-and the structural invariants (reach monotone in k; FTL regret equals
-best-minus-policy everywhere)."""
+"""Wave-26 catalog entries (plans/llm_ops25.py): python replays of the
+integer value-iteration, the Hill sum, and the follow-the-leader
+policy walk, and the structural invariants (reach monotone in k; FTL
+regret equals best-minus-policy everywhere)."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops25  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q317_markov_absorption_reach",
-    "q318_hill_tail_index",
-    "q319_follow_leader_regret",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave26_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 26 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops25")
 
 
 # ---------------------------------------------------------------------------

@@ -1,45 +1,13 @@
-"""Staged wave-27 catalog entries (plans/llm_ops26.py): value-level
-oracle comparison at sf0.001 plus python replays of the day-expansion
-rolling distinct (and its HLL companion's sanity envelope) and the
-second-order-vs-chain conditional arithmetic."""
+"""Wave-27 catalog entries (plans/llm_ops26.py): python replays of the
+day-expansion rolling distinct (and its HLL companion's sanity
+envelope) and the second-order-vs-chain conditional arithmetic."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops26  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q320_rolling_distinct_audit",
-    "q321_markov_order_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave27_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 27 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops26")
 
 
 # ---------------------------------------------------------------------------

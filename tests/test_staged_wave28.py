@@ -1,47 +1,16 @@
-"""Staged wave-28 catalog entries (plans/llm_ops27.py): value-level
-oracle comparison at sf0.001 plus python replays of the ANOVA sum-of-
-squares decomposition, the gains-curve decile accounting, and the
-cross-multiplied KS maximum, with their structural invariants."""
+"""Wave-28 catalog entries (plans/llm_ops27.py): python replays of the
+ANOVA sum-of-squares decomposition, the gains-curve decile
+accounting, and the cross-multiplied KS maximum, with their structural
+invariants."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops27  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q322_anova_source_lengths",
-    "q323_gains_curve",
-    "q324_ks_two_sample",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave28_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 28 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops27")
 
 
 # ---------------------------------------------------------------------------

@@ -1,46 +1,16 @@
-"""Staged wave-29 catalog entries (plans/llm_ops28.py): value-level
-oracle comparison at sf0.001 plus python replays of the doubled-U
-accounting and the BH step-up, and their null-control envelopes."""
+"""Wave-29 catalog entries (plans/llm_ops28.py): python replays of the
+doubled-U accounting and the BH step-up, and their null-control
+envelopes."""
 
 from __future__ import annotations
 
 import hashlib
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops28  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q325_mann_whitney_binned",
-    "q326_bh_fdr_control",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave29_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 29 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops28")
 
 
 # ---------------------------------------------------------------------------

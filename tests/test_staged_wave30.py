@@ -1,45 +1,14 @@
-"""Staged wave-30 catalog entries (plans/llm_ops29.py): value-level
-oracle comparison at sf0.001 plus python replays of the CUPED moment
-arithmetic and the leave-one-day-out jackknife, with the structural
-invariants (0 <= rho^2 <= 1; leave-out range brackets the full
-ratio)."""
+"""Wave-30 catalog entries (plans/llm_ops29.py): python replays of the
+CUPED moment arithmetic and the leave-one-day-out jackknife, with the
+structural invariants (0 <= rho^2 <= 1; leave-out range brackets the
+full ratio)."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops29  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q327_cuped_variance_reduction",
-    "q328_jackknife_ratio_dispersion",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave30_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 30 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops29")
 
 
 # ---------------------------------------------------------------------------

@@ -1,45 +1,15 @@
-"""Staged wave-31 catalog entries (plans/llm_ops30.py): value-level
-oracle comparison at sf0.001 plus python replays of the minimax PAV
-and the reliability/ECE arithmetic, and the calibration invariants
-(isotonic fit is monotone non-increasing and is the identity on an
-already-monotone segment; ECE is the weighted mean of the gaps)."""
+"""Wave-31 catalog entries (plans/llm_ops30.py): python replays of the
+minimax PAV and the reliability/ECE arithmetic, and the calibration
+invariants (isotonic fit is monotone non-increasing and is the
+identity on an already-monotone segment; ECE is the weighted mean of
+the gaps)."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops30  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q329_isotonic_calibration",
-    "q330_reliability_ece",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave31_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 31 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops30")
 
 
 # ---------------------------------------------------------------------------

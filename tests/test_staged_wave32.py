@@ -1,43 +1,15 @@
-"""Staged wave-32 catalog entry (plans/llm_ops31.py): value-level
-oracle comparison at sf0.001 plus a python replay of the conformal
-order statistic and coverage count, and the marginal-coverage
-envelope."""
+"""Wave-32 catalog entry (plans/llm_ops31.py): a python replay of the
+conformal order statistic and coverage count, and the
+marginal-coverage envelope."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops31  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = ["q331_conformal_coverage"]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave32_registered_in_driver_contract(monkeypatch):
-    """Round 8 promoted wave 32 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops31")
 
 
 def test_conformal_replay_and_coverage_envelope(spark, duck):

@@ -1,50 +1,16 @@
-"""Staged wave-33 catalog entries (plans/llm_ops32.py): value-level
-oracle comparison at sf0.001 plus python replays of the NDCG discount
-arithmetic, the Kendall/Spearman pair counting, and the t-closeness
-EMD, and the metric invariants (recall monotone in k, DP utility
-monotone in epsilon, correlation coefficients bounded)."""
+"""Wave-33 catalog entries (plans/llm_ops32.py): python replays of the
+NDCG discount arithmetic, the Kendall/Spearman pair counting, and the
+t-closeness EMD, and the metric invariants (recall monotone in k, DP
+utility monotone in epsilon, correlation coefficients bounded)."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops32  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q332_retrieval_ndcg_audit",
-    "q333_retrieval_precision_recall",
-    "q334_rank_correlation_kendall",
-    "q335_t_closeness_audit",
-    "q336_dp_histogram_utility",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave33_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 33 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops32")
 
 
 # ---------------------------------------------------------------------------

@@ -1,49 +1,15 @@
-"""Staged wave-34 catalog entries (plans/llm_ops33.py): value-level
-oracle comparison at sf0.001 plus python replays of the triangle
-census and fluid-packing arithmetic, and the structural invariants
-(clustering coefficient bounds, backoff tiers actually firing on the
-held-out half, weighted-sample keys favoring heavy docs, TF-IDF ranks
-dense per source)."""
+"""Wave-34 catalog entries (plans/llm_ops33.py): python replays of the
+triangle census and fluid-packing arithmetic, and the structural
+invariants (clustering coefficient bounds, backoff tiers actually
+firing on the held-out half, weighted-sample keys favoring heavy docs,
+TF-IDF ranks dense per source)."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops33  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q337_dup_graph_triangles",
-    "q338_stupid_backoff_scoring",
-    "q339_weighted_sample_aes",
-    "q340_compaction_plan_audit",
-    "q341_tfidf_source_keywords",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave34_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 34 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops33")
 
 
 # ---------------------------------------------------------------------------

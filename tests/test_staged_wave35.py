@@ -1,50 +1,17 @@
-"""Staged wave-35 catalog entries (plans/llm_ops34.py): value-level
-oracle comparison at sf0.001 plus python replays of the reciprocal
-best-match scoring and the Neyman weight arithmetic, and the
-structural invariants (the IVM identity holding BY CONSTRUCTION only
-if the four terms really tile the join, merge-exactness of the
+"""Wave-35 catalog entries (plans/llm_ops34.py): python replays of the
+reciprocal best-match scoring and the Neyman weight arithmetic, and
+the structural invariants (the IVM identity holding BY CONSTRUCTION
+only if the four terms really tile the join, merge-exactness of the
 distributed sample, reciprocity of the reported links)."""
 
 from __future__ import annotations
 
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops34  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q342_reciprocal_best_match",
-    "q343_join_ivm_delta_audit",
-    "q344_allocation_design_effect",
-    "q345_weighted_sample_merge_proof",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave35_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 35 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops34")
 
 
 # ---------------------------------------------------------------------------

@@ -1,46 +1,15 @@
-"""Staged wave-36 catalog entries (plans/llm_ops35.py): value-level
-oracle comparison at sf0.001 plus python replays of the Markov
-argmax/accuracy arithmetic, and the structural invariants (confusion
-rows sum to the per-language doc counts, the model beats or ties the
-baseline it reports, smoothed surprisal is finite and positive)."""
+"""Wave-36 catalog entries (plans/llm_ops35.py): python replays of the
+Markov argmax/accuracy arithmetic, and the structural invariants
+(confusion rows sum to the per-language doc counts, the model beats or
+ties the baseline it reports, smoothed surprisal is finite and
+positive)."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops35  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q346_langid_confusion_audit",
-    "q347_markov_next_event_accuracy",
-    "q348_session_likelihood_outliers",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave36_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 36 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops35")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,4 @@
-"""Staged wave-37 catalog entries (plans/llm_ops36.py): value-level
-oracle comparison at sf0.001 plus python replays of the
+"""Wave-37 catalog entries (plans/llm_ops36.py): python replays of the
 randomized-response simulation and the bit-width arithmetic, and the
 structural invariants (debiasing is exactly 2*obs - n/k, RR noise
 actually fires, funnel counts are monotone in the window width, and
@@ -7,41 +6,10 @@ packed always beats raw on wide blocks)."""
 
 from __future__ import annotations
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops36  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q349_randomized_response_debias",
-    "q350_bitpacking_benefit",
-    "q351_windowed_funnel_sweep",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave37_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 37 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops36")
 
 
 # ---------------------------------------------------------------------------

@@ -1,50 +1,16 @@
-"""Staged wave-38 catalog entries (plans/llm_ops37.py): value-level
-oracle comparison at sf0.001 plus python replays of the HT sampling
-mechanism, the kappa identity, the runs count, the novel-n-gram
-recompute, and the sqrt-temperature weights."""
+"""Wave-38 catalog entries (plans/llm_ops37.py): python replays of the
+HT sampling mechanism, the kappa identity, the runs count, the
+novel-n-gram recompute, and the sqrt-temperature weights."""
 
 from __future__ import annotations
 
 import hashlib
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops37  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q352_horvitz_thompson_total",
-    "q353_rater_agreement_kappa",
-    "q354_runs_test_assignment",
-    "q355_novel_ngram_rate",
-    "q356_temperature_source_mixture",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave38_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 38 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops37")
 
 
 # ---------------------------------------------------------------------------

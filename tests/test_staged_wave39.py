@@ -1,7 +1,6 @@
-"""Staged wave-39 catalog entries (plans/llm_ops38.py): value-level
-oracle comparison at sf0.001 plus a full python replay of the
-scaling-curve LM, the McNemar identities, and a python replay of the
-SRP-bucketed cross-split decontamination sweep."""
+"""Wave-39 catalog entries (plans/llm_ops38.py): a full python replay
+of the scaling-curve LM, the McNemar identities, and a python replay
+of the SRP-bucketed cross-split decontamination sweep."""
 
 from __future__ import annotations
 
@@ -9,41 +8,10 @@ import hashlib
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops38  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q357_data_scaling_curve",
-    "q358_mcnemar_classifier_test",
-    "q359_embedding_decontamination",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave39_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 39 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops38")
 
 
 # ---------------------------------------------------------------------------

@@ -1,44 +1,13 @@
-"""Staged wave-40 catalog entries (plans/llm_ops39.py): value-level
-oracle comparison at sf0.001 plus python replays of the signed-rank
-statistic, the Cochran-Q identity, and the winsorized means."""
+"""Wave-40 catalog entries (plans/llm_ops39.py): python replays of the
+signed-rank statistic, the Cochran-Q identity, and the winsorized
+means."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops39  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q360_wilcoxon_signed_rank",
-    "q361_cochran_q_raters",
-    "q362_winsorized_daily_mean",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave40_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 40 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops39")
 
 
 # ---------------------------------------------------------------------------

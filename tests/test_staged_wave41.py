@@ -1,13 +1,10 @@
-"""Staged wave-41 catalog entries (plans/llm_ops40.py): value-level
-oracle comparison at sf0.001 plus python replays of the SPRT
-trajectory, the stratified-ATE identities, and the Hamilton
+"""Wave-41 catalog entries (plans/llm_ops40.py): python replays of the
+SPRT trajectory, the stratified-ATE identities, and the Hamilton
 apportionment draw."""
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops40  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops40 import (
@@ -17,36 +14,7 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops40 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q363_sprt_early_stopping",
-    "q364_stratified_ate",
-    "q365_apportioned_eval_sample",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave41_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 41 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops40")
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
-"""Staged wave-42 catalog entries (plans/llm_ops41.py): value-level
-oracle comparison at sf0.001 plus python replays of the MH pooling,
-the readability formula, and the chi-square/Cramer's-V lanes."""
+"""Wave-42 catalog entries (plans/llm_ops41.py): python replays of the
+MH pooling, the readability formula, and the chi-square/Cramer's-V
+lanes."""
 
 from __future__ import annotations
 
@@ -8,41 +8,10 @@ import hashlib
 import math
 import re
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops41  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q366_mantel_haenszel_rr",
-    "q367_readability_by_source",
-    "q368_confusion_cramers_v",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave42_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 42 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops41")
 
 
 # ---------------------------------------------------------------------------

@@ -1,48 +1,15 @@
-"""Staged wave-43 catalog entries (plans/llm_ops42.py): value-level
-oracle comparison at sf0.001 plus python replays of the span islands,
-the Brier decomposition identity, and the CI rank arithmetic."""
+"""Wave-43 catalog entries (plans/llm_ops42.py): python replays of the
+span islands, the Brier decomposition identity, and the CI rank
+arithmetic."""
 
 from __future__ import annotations
 
-import datetime
-import hashlib
 import math
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops42  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q369_shared_span_localization",
-    "q370_brier_decomposition",
-    "q371_median_confidence_interval",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave43_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 43 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops42")
 
 
 # ---------------------------------------------------------------------------

@@ -1,48 +1,16 @@
-"""Staged wave-44 catalog entries (plans/llm_ops43.py): value-level
-oracle comparison at sf0.001 plus python replays of the greedy
-k-center selection, the chi-square contingency arithmetic, and the
-cumulative-boundary EMD identity."""
+"""Wave-44 catalog entries (plans/llm_ops43.py): python replays of the
+greedy k-center selection, the chi-square contingency arithmetic, and
+the cumulative-boundary EMD identity."""
 
 from __future__ import annotations
 
 import hashlib
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops43  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q372_kcenter_coreset_picks",
-    "q373_split_balance_chisquare",
-    "q374_split_length_emd",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave44_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 44 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops43")
 
 
 # ---------------------------------------------------------------------------

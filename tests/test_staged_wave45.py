@@ -1,48 +1,17 @@
-"""Staged wave-45 catalog entries (plans/llm_ops44.py): value-level
-oracle comparison at sf0.001 plus python replays of the modularity
-rationals, the Benford chi-square, and the varint byte pricing."""
+"""Wave-45 catalog entries (plans/llm_ops44.py): python replays of the
+modularity rationals, the Benford chi-square, and the varint byte
+pricing."""
 
 from __future__ import annotations
 
 from fractions import Fraction
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops44  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops import _sql_minhash_pairs
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops44 import BENFORD_PPM
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q375_dup_graph_lang_modularity",
-    "q376_benford_first_digit",
-    "q377_timestamp_delta_encoding",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave45_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 45 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops44")
 
 
 # ---------------------------------------------------------------------------

@@ -1,49 +1,17 @@
-"""Staged wave-46 catalog entries (plans/llm_ops45.py): value-level
-oracle comparison at sf0.001 plus python replays of the FS weight
-arithmetic, the winner's-curse cohort split, and the nearest-rank
-decile quantiles."""
+"""Wave-46 catalog entries (plans/llm_ops45.py): python replays of the
+FS weight arithmetic, the winner's-curse cohort split, and the
+nearest-rank decile quantiles."""
 
 from __future__ import annotations
 
 import datetime
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops45  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops import _sql_minhash_pairs
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q378_fellegi_sunter_weights",
-    "q379_selection_regression_to_mean",
-    "q380_decile_qte",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave46_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 46 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops45")
 
 
 # ---------------------------------------------------------------------------

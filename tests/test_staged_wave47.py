@@ -1,46 +1,14 @@
-"""Staged wave-47 catalog entries (plans/llm_ops46.py): value-level
-oracle comparison at sf0.001 plus python replays of the TV distance,
-the TTL hit arithmetic, and the greedy hub attack."""
+"""Wave-47 catalog entries (plans/llm_ops46.py): python replays of the
+TV distance, the TTL hit arithmetic, and the greedy hub attack."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops46  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops import _sql_minhash_pairs
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops46 import TTLS_US
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q381_ldiversity_tcloseness",
-    "q382_ttl_cache_hit_curve",
-    "q383_hub_removal_robustness",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave47_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 47 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops46")
 
 
 # ---------------------------------------------------------------------------

@@ -1,45 +1,14 @@
-"""Staged wave-48 catalog entries (plans/llm_ops47.py): value-level
-oracle comparison at sf0.001 plus python replays of the adaptation
-counts, the FK orphan arithmetic, and the repeat-pair window."""
+"""Wave-48 catalog entries (plans/llm_ops47.py): python replays of the
+adaptation counts, the FK orphan arithmetic, and the repeat-pair
+window."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops47  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops47 import FK_EDGES
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q384_term_adaptation",
-    "q385_referential_integrity",
-    "q386_rapid_repeat_orders",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave48_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 48 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops47")
 
 
 # ---------------------------------------------------------------------------

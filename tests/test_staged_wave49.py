@@ -1,44 +1,13 @@
-"""Staged wave-49 catalog entries (plans/llm_ops48.py): value-level
-oracle comparison at sf0.001 plus python replays of the retention
-matrix, the leaderboard churn summary, and the drawdown scan."""
+"""Wave-49 catalog entries (plans/llm_ops48.py): python replays of the
+retention matrix, the leaderboard churn summary, and the drawdown
+scan."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops48  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q387_cohort_retention",
-    "q388_topk_leaderboard_churn",
-    "q389_activity_max_drawdown",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave49_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 49 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops48")
 
 
 # ---------------------------------------------------------------------------

@@ -1,47 +1,15 @@
-"""Staged wave-50 catalog entries (plans/llm_ops49.py): value-level
-oracle comparison at sf0.001 plus python replays of the MAD scan,
-the SMD arithmetic, and the nearest-rank lag percentiles."""
+"""Wave-50 catalog entries (plans/llm_ops49.py): python replays of the
+MAD scan, the SMD arithmetic, and the nearest-rank lag percentiles."""
 
 from __future__ import annotations
 
 import hashlib
 import math
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops49  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q390_median_mad_anomaly_days",
-    "q391_covariate_balance_smd",
-    "q392_shipping_lag_slo",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave50_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 50 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops49")
 
 
 # ---------------------------------------------------------------------------

@@ -1,46 +1,15 @@
-"""Staged wave-51 catalog entries (plans/llm_ops50.py): value-level
-oracle comparison at sf0.001 plus python replays of the growth
-identity, the OLS slope rationals, and the cascade set arithmetic."""
+"""Wave-51 catalog entries (plans/llm_ops50.py): python replays of the
+growth identity, the OLS slope rationals, and the cascade set
+arithmetic."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops50  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q393_growth_decomposition",
-    "q394_discount_quantity_elasticity",
-    "q395_deletion_cascade_impact",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave51_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 51 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops50")
 
 
 # ---------------------------------------------------------------------------

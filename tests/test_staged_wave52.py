@@ -1,47 +1,15 @@
-"""Staged wave-52 catalog entries (plans/llm_ops51.py): value-level
-oracle comparison at sf0.001 plus python replays — the skyline is
-checked against the BRUTE-FORCE all-pairs domination the operator
-must never run, the split points against an exact sorted replay, the
-ABC classes against the prefix rule."""
+"""Wave-52 catalog entries (plans/llm_ops51.py): python replays — the
+skyline is checked against the BRUTE-FORCE all-pairs domination the
+operator must never run, the split points against an exact sorted
+replay, the ABC classes against the prefix rule."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops51  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops51 import _N_PARTS
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q396_pareto_skyline",
-    "q397_range_split_points",
-    "q398_abc_classification",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave52_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 52 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops51")
 
 
 # ---------------------------------------------------------------------------

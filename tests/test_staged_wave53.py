@@ -1,45 +1,13 @@
-"""Staged wave-53 catalog entries (plans/llm_ops52.py): value-level
-oracle comparison at sf0.001 plus python replays of the sweep line,
-the running balance, and the uniqueness arithmetic."""
+"""Wave-53 catalog entries (plans/llm_ops52.py): python replays of the
+sweep line, the running balance, and the uniqueness arithmetic."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops52  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops52 import PK_SPECS
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q399_open_order_concurrency",
-    "q400_stockout_running_balance",
-    "q401_primary_key_uniqueness",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave53_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 53 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops52")
 
 
 # ---------------------------------------------------------------------------

@@ -1,46 +1,15 @@
-"""Staged wave-54 catalog entries (plans/llm_ops53.py): value-level
-oracle comparison at sf0.001 plus python replays of the matrix
-expectations, the lagged slopes, and a brute-force itemset count."""
+"""Wave-54 catalog entries (plans/llm_ops53.py): python replays of the
+matrix expectations, the lagged slopes, and a brute-force itemset
+count."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops53  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops import _sql_minhash_pairs
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops53 import _LAGS, _MIN_SUPPORT
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q402_cross_source_dup_matrix",
-    "q403_daily_lead_lag",
-    "q404_frequent_brand_triples",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave54_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 54 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops53")
 
 
 # ---------------------------------------------------------------------------

@@ -1,45 +1,14 @@
-"""Staged wave-55 catalog entries (plans/llm_ops54.py): value-level
-oracle comparison at sf0.001 plus python replays of the histogram
-estimator, the front-coded byte count, and the censored LTV curve."""
+"""Wave-55 catalog entries (plans/llm_ops54.py): python replays of the
+histogram estimator, the front-coded byte count, and the censored LTV
+curve."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops54  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops54 import _FC_BLOCK, _N_BUCKETS
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q405_histogram_selectivity_error",
-    "q406_front_coding_benefit",
-    "q407_ltv_curve",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave55_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 55 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops54")
 
 
 # ---------------------------------------------------------------------------

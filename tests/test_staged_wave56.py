@@ -1,12 +1,10 @@
-"""Staged wave-56 catalog entries (plans/llm_ops55.py): value-level
-oracle comparison at sf0.001 plus python replays of the equi-depth
-boundaries, the collision arithmetic, and the width-class slope."""
+"""Wave-56 catalog entries (plans/llm_ops55.py): python replays of the
+equi-depth boundaries, the collision arithmetic, and the width-class
+slope."""
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops54  # noqa: F401  (q405 for the comparison test)
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops55  # noqa: F401  (registers)
@@ -16,36 +14,7 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops55 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q408_equidepth_selectivity_error",
-    "q409_feature_hash_collisions",
-    "q410_zipf_tail_fit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave56_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 56 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops55")
 
 
 # ---------------------------------------------------------------------------

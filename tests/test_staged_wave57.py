@@ -1,12 +1,9 @@
-"""Staged wave-57 catalog entries (plans/llm_ops56.py): value-level
-oracle comparison at sf0.001 plus python replays of the stump search,
-the partition loads, and the rolling burn windows."""
+"""Wave-57 catalog entries (plans/llm_ops56.py): python replays of the
+stump search, the partition loads, and the rolling burn windows."""
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops56  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops56 import (
@@ -16,36 +13,7 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops56 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q411_decision_stump",
-    "q412_hash_partition_balance",
-    "q413_error_budget_burn",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave57_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 57 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops56")
 
 
 # ---------------------------------------------------------------------------

@@ -1,45 +1,14 @@
-"""Staged wave-58 catalog entries (plans/llm_ops57.py): value-level
-oracle comparison at sf0.001 plus python replays of the fan-out
-distribution, the moment arithmetic, and the basket lift matrix."""
+"""Wave-58 catalog entries (plans/llm_ops57.py): python replays of the
+fan-out distribution, the moment arithmetic, and the basket lift
+matrix."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops57  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops57 import FANOUT_EDGES
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q414_join_fanout_audit",
-    "q415_overdispersion_audit",
-    "q416_event_cooccurrence_lift",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave58_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 58 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops57")
 
 
 # ---------------------------------------------------------------------------

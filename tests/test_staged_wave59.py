@@ -1,47 +1,15 @@
-"""Staged wave-59 catalog entries (plans/llm_ops58.py): value-level
-oracle comparison at sf0.001 plus python replays of the sign
-arithmetic, the inverse-Simpson index, and the circular windows."""
+"""Wave-59 catalog entries (plans/llm_ops58.py): python replays of the
+sign arithmetic, the inverse-Simpson index, and the circular windows."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops58  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops58 import _PEAK_HOURS
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q417_simpson_reversal",
-    "q418_user_effective_variety",
-    "q419_peak_window_share",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave59_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 59 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops58")
 
 
 # ---------------------------------------------------------------------------

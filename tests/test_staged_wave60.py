@@ -1,47 +1,15 @@
-"""Staged wave-60 catalog entries (plans/llm_ops59.py): value-level
-oracle comparison at sf0.001 plus python replays of the trend slope,
-the CDC segmentation, and the aging buckets."""
+"""Wave-60 catalog entries (plans/llm_ops59.py): python replays of the
+trend slope, the CDC segmentation, and the aging buckets."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops59  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops59 import _CDC_MOD
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q420_fulfillment_trend",
-    "q421_cdc_chunk_dedup",
-    "q422_backlog_aging",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave60_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 60 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops59")
 
 
 # ---------------------------------------------------------------------------

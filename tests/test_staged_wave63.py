@@ -1,10 +1,7 @@
-"""Staged wave-63 catalog entries (plans/llm_ops62.py): value-level
-oracle comparison at sf0.001 plus python replays of the OOV join,
-the stitched max gap, and the baseline hit rate."""
+"""Wave-63 catalog entries (plans/llm_ops62.py): python replays of the
+OOV join, the stitched max gap, and the baseline hit rate."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops62  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops62 import (
@@ -13,36 +10,7 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops62 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q429_oov_rate",
-    "q430_keyspace_holes",
-    "q431_popularity_baseline_hitrate",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave63_registered_in_driver_contract(monkeypatch):
-    """Round 9 promoted wave 63 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops62")
 
 
 # ---------------------------------------------------------------------------

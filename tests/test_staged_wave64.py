@@ -1,45 +1,14 @@
-"""Staged wave-64 catalog entries (plans/llm_ops63.py): value-level
-oracle comparison at sf0.001 plus python replays of the profile
-counts, the fertility divisions, and the conversion-effort median."""
+"""Wave-64 catalog entries (plans/llm_ops63.py): python replays of the
+profile counts, the fertility divisions, and the conversion-effort
+median."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops63  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops63 import PROFILE_COLS
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q432_data_dictionary",
-    "q433_tokenizer_fertility",
-    "q434_effort_to_convert",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave64_registered_in_driver_contract(monkeypatch):
-    """Round 10 promoted wave 64 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops63")
 
 
 # ---------------------------------------------------------------------------

@@ -1,45 +1,14 @@
-"""Staged wave-65 catalog entries (plans/llm_ops64.py): value-level
-oracle comparison at sf0.001 plus python replays of the Little's-law
-identity, the systematic-sample bias, and the temporal contract."""
+"""Wave-65 catalog entries (plans/llm_ops64.py): python replays of the
+Little's-law identity, the systematic-sample bias, and the temporal
+contract."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops64  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops64 import _SYS_K
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q435_littles_law_flow_identity",
-    "q436_systematic_sample_bias",
-    "q437_temporal_integrity_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_staged_wave65_registered_in_driver_contract(monkeypatch):
-    """Round 10 promoted wave 65 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops64")
 
 
 # ---------------------------------------------------------------------------

@@ -1,49 +1,18 @@
-"""Staged wave-66 catalog entries (plans/llm_ops65.py): value-level
-oracle comparison at sf0.001 plus full python replays — the variant
-extraction replayed with the stdlib json module, the SQL-UDF de-comma
-totals replayed with int arithmetic over the comma-formatting
-round-trip."""
+"""Wave-66 catalog entries (plans/llm_ops65.py): full python replays —
+the variant extraction replayed with the stdlib json module, the
+SQL-UDF de-comma totals replayed with int arithmetic over the
+comma-formatting round-trip."""
 
 from __future__ import annotations
 
 import json
 from decimal import Decimal
 
-import duckdb
-import pytest
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops65  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops65 import _KEY_CAP
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q438_variant_json_extraction",
-    "q439_sql_udf_decomma_totals",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave66_live_and_tiered():
-    """Wave 66 promoted round 11: live in the driver contract, tiered
-    like every other entry (attestation-invariant form)."""
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops65")
 
 
 # ---------------------------------------------------------------------------

@@ -1,15 +1,12 @@
-"""Staged wave-67 catalog entries (plans/llm_ops66.py — the four
-Spark-4 SQL engine surfaces: recursive CTE, pipe syntax, listagg
-WITHIN GROUP, SQL scripting): value-level oracle comparison at
-sf0.001 plus full pure-Python replays — the amortization schedule
+"""Wave-67 catalog entries (plans/llm_ops66.py — the four Spark-4 SQL
+engine surfaces: recursive CTE, pipe syntax, listagg WITHIN GROUP, SQL
+scripting): full pure-Python replays — the amortization schedule
 replayed with decimal.Decimal, the threshold search replayed with a
 python while-loop over the fetched price list."""
 
 from __future__ import annotations
 
 from decimal import Decimal
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops66  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops66 import (
@@ -19,42 +16,12 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops66 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q440_recursive_cte_amortization",
-    "q441_pipe_syntax_pricing",
-    "q442_listagg_ordered_csv",
-    "q443_sql_scripting_threshold_search",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave67_live_and_tiered():
-    """Wave 67 promoted round 12: live in the driver contract, tiered
-    like every other entry (attestation-invariant form)."""
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops66")
 
 
 # ---------------------------------------------------------------------------
 # Replays and invariants
 # ---------------------------------------------------------------------------
-
 
 
 def test_recursive_amortization_python_replay(spark, duck):

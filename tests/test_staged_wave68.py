@@ -1,16 +1,13 @@
-"""Staged wave-68 catalog entries (plans/llm_ops67.py — six Spark-4
-engine surfaces: GROUP BY ALL, IDENTIFIER() parameterized identifiers,
+"""Wave-68 catalog entries (plans/llm_ops67.py — six Spark-4 engine
+surfaces: GROUP BY ALL, IDENTIFIER() parameterized identifiers,
 TABLESAMPLE REPEATABLE, df.observe() single-pass metrics, native
 Datasketches HLL, and the try_* error-safe arithmetic lane):
-value-level oracle comparison at sf0.001 plus pure-Python replays for
-the value-exact entries and invariant probes for the audited
-(RNG-backed) ones."""
+pure-Python replays for the value-exact entries and invariant probes
+for the audited (RNG-backed) ones."""
 
 from __future__ import annotations
 
 from decimal import Decimal
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops67  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops67 import (
@@ -18,8 +15,6 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops67 import (
     _TRY_KEY_CAP,
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-
-from staged_oracle import assert_matches_oracle, duck_views
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,26 +26,6 @@ STAGED = [
     "q448_hll_sketch_native_agg",
     "q449_try_arithmetic_safe_lane",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave68_live_and_tiered():
-    """Wave 68 promoted round 12: live in the driver contract, tiered
-    like every other entry (attestation-invariant form)."""
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops67")
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,8 @@
-"""Wave-69 catalog entries (plans/llm_ops68.py): value-level oracle
-comparison at sf0.001 plus full python replays — the double-applied
-merge replayed with a dict (last-writer-wins), the SCD2 history
-replayed with itertools.groupby change-detection."""
+"""Wave-69 catalog entries (plans/llm_ops68.py): full python replays —
+the double-applied merge replayed with a dict (last-writer-wins), the
+SCD2 history replayed with itertools.groupby change-detection."""
 
 from __future__ import annotations
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops68  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops68 import (
@@ -15,32 +12,7 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops68 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q450_merge_upsert_idempotent",
-    "q451_scd2_validity_intervals",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave69_live_and_tiered():
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops68")
 
 
 # ---------------------------------------------------------------------------

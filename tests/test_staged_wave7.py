@@ -1,66 +1,15 @@
-"""Staged wave-7 catalog entries (plans/llm_ops6.py): value-level
-oracle comparison at sf0.001 — the same gate tools/check_correctness.py
-applies to the live catalog, run in pytest because the module is not in
-registry._QUERY_MODULES until round 7 (driver-budget staging; see the
-module docstring) — plus unit properties of the Bloom membership
-operator the wave introduces (operators/membership.py)."""
+"""Wave-7 catalog entries (plans/llm_ops6.py): unit properties of the
+Bloom membership operator the wave introduces
+(operators/membership.py)."""
 
 from __future__ import annotations
 
-import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from airflow_scraping_etl_tutorial_spark.operators.membership import (
     bloom_bitmap,
     bloom_probe,
 )
-from airflow_scraping_etl_tutorial_spark.plans import llm_ops6  # noqa: F401  (registers)
-from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-from airflow_scraping_etl_tutorial_spark.sources.tables import TABLES
-
-from staged_oracle import assert_matches_oracle, duck_views
-
-SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q204_lsh_threshold_sweep",
-    "q205_novelty_decay",
-    "q206_quality_gate_funnel",
-    "q207_fingerprint_collision_audit",
-    "q208_bloom_incremental_screen",
-    "q209_minhash_param_sensitivity",
-    "q210_embedding_norm_profile",
-    "q211_cluster_source_purity",
-    "q212_mixture_epoch_plan",
-    "q213_dedup_priority",
-    "q214_token_budget_cut",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave7_registered_in_driver_contract(monkeypatch):
-    """Round 6 promoted wave 7 mid-round. Membership + tiering only —
-    position assertions broke when CORRECTNESS_r06 landed."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops6")
-
 
 # ---------------------------------------------------------------------------
 # Bloom membership operator unit properties

@@ -1,8 +1,7 @@
-"""Wave-70 catalog entries (plans/llm_ops69.py): value-level oracle
-comparison at sf0.001 plus python replays — the bitmap distinct vs a
-set(), the percentiles vs statistics/sorted indexing, the Luhn
-checksum vs a hand-rolled python implementation, width_bucket vs
-integer division, parse_url vs urllib."""
+"""Wave-70 catalog entries (plans/llm_ops69.py): python replays — the
+bitmap distinct vs a set(), the percentiles vs statistics/sorted
+indexing, the Luhn checksum vs a hand-rolled python implementation,
+width_bucket vs integer division, parse_url vs urllib."""
 
 from __future__ import annotations
 
@@ -17,24 +16,7 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops69 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q452_bitmap_exact_distinct",
-    "q453_inverse_distribution_percentiles",
-    "q454_luhn_checksum_validation",
-    "q455_width_bucket_histogram",
-    "q456_parse_url_components",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
 
 
 @pytest.fixture(scope="module")
@@ -44,17 +26,6 @@ def orders_rows(duck):
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) "
         "FROM orders ORDER BY 1"
     ).fetchall()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave70_live_and_tiered():
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops69")
 
 
 # ---------------------------------------------------------------------------

@@ -1,16 +1,13 @@
-"""Staged wave-71 entries (plans/llm_ops70.py — regr_* audit,
-str_to_map, interval arithmetic, array mutations, try_cast, collated
-grouping): value-level oracle comparison at sf0.001 plus pure-Python
-replays — least-squares from exact integer sums, month-add with
-manual end-of-month clamping, list edits with python lists, and the
-case-insensitive regroup with str.lower()."""
+"""Wave-71 entries (plans/llm_ops70.py — regr_* audit, str_to_map,
+interval arithmetic, array mutations, try_cast, collated grouping):
+pure-Python replays — least-squares from exact integer sums, month-add
+with manual end-of-month clamping, list edits with python lists, and
+the case-insensitive regroup with str.lower()."""
 
 from __future__ import annotations
 
 import calendar
 import datetime as dt
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops70  # noqa: F401
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops70 import (
@@ -19,8 +16,6 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops70 import (
     _REGR_KEY_CAP,
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-
-from staged_oracle import assert_matches_oracle, duck_views
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -32,29 +27,6 @@ STAGED = [
     "q461_try_cast_quarantine",
     "q462_collated_case_insensitive_grouping",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave71_registered_in_driver_contract(monkeypatch):
-    """Round 14 promoted wave 71 (staged r13 under the default
-    protocol): the driver must see the wave without any
-    SPARK_GRAFT_EXTRA_MODULES assistance. Membership + tiering only —
-    position assertions break when a CORRECTNESS_rN lands."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops70")
 
 
 def test_audited_rows_present_for_wave71():

@@ -1,18 +1,15 @@
-"""Staged wave-72 entries (plans/llm_ops71.py — map HOFs, timestamp
-unit arithmetic, convert_timezone NTZ, string surgery, binary encoding
-bridges, bround/bit family): value-level oracle comparison at sf0.001
-plus pure-Python replays — map lambdas from base columns, the
-full-months-elapsed rule in datetime arithmetic, +08:00 wall-clock
-shifts, str-slicing surgery, hashlib/base64 digests, and banker's
-rounding via integer parity."""
+"""Wave-72 entries (plans/llm_ops71.py — map HOFs, timestamp unit
+arithmetic, convert_timezone NTZ, string surgery, binary encoding
+bridges, bround/bit family): pure-Python replays — map lambdas from
+base columns, the full-months-elapsed rule in datetime arithmetic,
++08:00 wall-clock shifts, str-slicing surgery, hashlib/base64 digests,
+and banker's rounding via integer parity."""
 
 from __future__ import annotations
 
 import base64 as b64mod
 import datetime as dt
 import hashlib
-
-import pytest
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops71  # noqa: F401
 from airflow_scraping_etl_tutorial_spark.plans.llm_ops71 import (
@@ -25,8 +22,6 @@ from airflow_scraping_etl_tutorial_spark.plans.llm_ops71 import (
 )
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
 
-from staged_oracle import assert_matches_oracle, duck_views
-
 SF_DIR = "/root/testdata/sf0.001"
 
 STAGED = [
@@ -37,37 +32,6 @@ STAGED = [
     "q467_binary_encoding_bridges",
     "q468_bround_bit_family",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave72_is_staged_not_live():
-    """The staging protocol: the module is in STAGED_MODULES, NOT in
-    the driver contract, and its entries are invisible to
-    all_queries() without SPARK_GRAFT_EXTRA_MODULES."""
-    import os
-
-    from airflow_scraping_etl_tutorial_spark.plans.registry import (
-        _QUERY_MODULES,
-        STAGED_MODULES,
-        all_queries,
-    )
-
-    assert any("llm_ops71" in m for m in STAGED_MODULES)
-    assert not any("llm_ops71" in m for m in _QUERY_MODULES)
-    assert os.environ.get("SPARK_GRAFT_EXTRA_MODULES") in (None, "")
-    live = set(all_queries())
-    assert not (set(STAGED) & live), "staged entries leaked into the contract"
 
 
 def test_audited_rows_present_for_wave72():

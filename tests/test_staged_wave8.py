@@ -1,62 +1,18 @@
-"""Staged wave-8 catalog entries (plans/llm_ops7.py): value-level
-oracle comparison at sf0.001 — the same gate tools/check_correctness.py
-applies to the live catalog, run in pytest because the module is not in
-registry._QUERY_MODULES until round 7 (driver-budget staging; see the
-module docstring) — plus structural invariants of the sketches and
-the cross-engine levenshtein-parity property q218 relies on."""
+"""Wave-8 catalog entries (plans/llm_ops7.py): structural invariants
+of the sketches and the cross-engine levenshtein-parity property q218
+relies on."""
 
 from __future__ import annotations
 
 import math
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops7  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-from airflow_scraping_etl_tutorial_spark.sources.tables import TABLES
-
-from staged_oracle import assert_matches_oracle, duck_views
 
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q215_hll_distinct_audit",
-    "q216_countmin_heavy_hitters",
-    "q217_event_markov_transitions",
-    "q218_edit_distance_verify",
-    "q219_join_key_skew_audit",
-    "q220_embedding_cohort_drift",
-    "q221_incremental_snapshot_delta",
-    "q222_time_to_conversion",
-    "q223_assoc_rule_lift",
-    "q224_token_rank_drift",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave8_registered_in_driver_contract(monkeypatch):
-    """Round 7 promoted wave 8 into the driver contract. Membership +
-    tiering only (attestation-invariant — the round-6 lesson)."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops7")
 
 
 # ---------------------------------------------------------------------------

@@ -1,60 +1,16 @@
-"""Staged wave-9 catalog entries (plans/llm_ops8.py): value-level
-oracle comparison at sf0.001 plus the algorithmic guarantees the wave
-claims — prefix filtering's EXACT recall vs a brute-force ground
-truth, the cardinality audit's actual-rows identity vs a real join,
-and PageRank/layout/Benford structural invariants."""
+"""Wave-9 catalog entries (plans/llm_ops8.py): the algorithmic
+guarantees the wave claims — prefix filtering's EXACT recall vs a
+brute-force ground truth, the cardinality audit's actual-rows identity
+vs a real join, and PageRank/layout/Benford structural invariants."""
 
 from __future__ import annotations
 
 import math
 
-import duckdb
-import pytest
-from pyspark.sql import functions as F
-
 from airflow_scraping_etl_tutorial_spark.plans import llm_ops8  # noqa: F401  (registers)
 from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-from airflow_scraping_etl_tutorial_spark.sources.tables import TABLES
-
-from staged_oracle import assert_matches_oracle, duck_views
 
 SF_DIR = "/root/testdata/sf0.001"
-
-STAGED = [
-    "q225_prefix_filter_setjoin",
-    "q226_dup_graph_pagerank",
-    "q227_join_cardinality_audit",
-    "q228_partition_layout_plan",
-    "q229_benford_first_digit",
-    "q230_frame_hash_neardup",
-    "q231_vocab_overlap_hll",
-    "q232_session_gap_sweep",
-    "q233_order_reconciliation",
-    "q234_mad_outlier_audit",
-]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    con = duck_views(SF_DIR)
-    yield con
-    con.close()  # free DuckDB memory: 20+ live module connections
-    # degrade the process allocator (the sharded-sweep lesson)
-
-
-
-
-@pytest.mark.parametrize("name", STAGED)
-def test_staged_query_matches_oracle(spark, duck, name):
-    assert_matches_oracle(spark, duck, _REGISTRY[name], SF_DIR)
-
-
-def test_wave9_registered_in_driver_contract(monkeypatch):
-    """Round 7 promoted wave 9. Membership + tiering only."""
-    monkeypatch.delenv("SPARK_GRAFT_EXTRA_MODULES", raising=False)
-    from staged_oracle import assert_live_and_tiered
-
-    assert_live_and_tiered(STAGED, "llm_ops8")
 
 
 # ---------------------------------------------------------------------------

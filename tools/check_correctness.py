@@ -18,7 +18,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from airflow_scraping_etl_tutorial_spark.functions.caching import (  # noqa: E402
     release_session_checkpoints,
@@ -153,6 +154,12 @@ def main() -> int:
         specs = {
             nm: specs[nm] for i, nm in enumerate(names) if i % n == k - 1
         }
+    # Python workers import plan modules by name (UDFs pickle by
+    # reference) and see the PYTHONPATH the JVM inherits from this
+    # process at session start, not this process's sys.path.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (REPO_ROOT, os.environ.get("PYTHONPATH")))
+    )
     spark = get_spark("check_correctness")
 
     # The oracle connection is RECYCLED every few dozen queries: a full

@@ -109,7 +109,7 @@ AUDITED = (
     "q253_volume_trend_slope",
     "q255_top_event_paths",
     "q256_k_anonymity_audit",
-    # staged wave 12 (plans/llm_ops11.py; auto-loaded via EXTRA_MODULES)
+    # staged wave 12 (plans/llm_ops11.py)
     "q258_kmeans_converged_assignment",
     "q259_kcore_peel_rounds",
     "q260_duplicate_shingle_coverage",
@@ -373,7 +373,7 @@ AUDITED = (
     "q460_array_mutation_functions",
     "q461_try_cast_quarantine",
     "q462_collated_case_insensitive_grouping",
-    # wave 72 (plans/llm_ops71.py, STAGED r14)
+    # wave 72 (plans/llm_ops71.py, staged r14, promoted r16)
     "q463_map_hof_family",
     "q464_timestamp_unit_arithmetic",
     "q465_convert_timezone_ntz",
@@ -593,24 +593,6 @@ def audit_plan(plan: str) -> dict:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("explain_audit")
-    # Audit staged waves too, regardless of whether the caller exported
-    # SPARK_GRAFT_EXTRA_MODULES (the driver contract is unaffected —
-    # this tool only reads plans).
-    import os
-
-    from airflow_scraping_etl_tutorial_spark.plans.registry import STAGED_MODULES
-
-    # UNION the staged waves into whatever the caller exported — a
-    # plain setdefault would keep a caller's partial list and the
-    # audit would KeyError on the missing waves' entries.
-    preset = [
-        m
-        for m in os.environ.get("SPARK_GRAFT_EXTRA_MODULES", "").split(",")
-        if m
-    ]
-    os.environ["SPARK_GRAFT_EXTRA_MODULES"] = ",".join(
-        dict.fromkeys(preset + list(STAGED_MODULES))
-    )
     specs = all_queries()
 
     unexplained: list[str] = []
