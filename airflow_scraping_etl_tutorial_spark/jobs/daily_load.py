@@ -13,6 +13,11 @@ Usage:
     python -m airflow_scraping_etl_tutorial_spark.jobs.daily_load \
         --date 20220819 --sink /tmp/investment [--backfill-to 20220831]
 
+Notifications: when TELEGRAM_TOKEN and TELEGRAM_CHAT_ID are both set
+(the deployment's bot credentials, like the reference's Telegram
+connection), the success and alert texts go to that chat through
+sources/notify.py::TelegramNotifier; otherwise the job sends none.
+
 Exit codes (the Airflow-visible contract):
     0 = loaded (or clean market-closed no-op)
     3 = validation alert (schema drift — reference alert route)
@@ -25,6 +30,7 @@ Exit codes (the Airflow-visible contract):
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 from datetime import datetime, timedelta
 
@@ -50,6 +56,11 @@ def main(argv: list[str] | None = None, fetcher=None, notify=None) -> int:
         "(demo/smoke mode; 'twse' hits the live endpoint)",
     )
     args = parser.parse_args(argv)
+    token, chat_id = os.environ.get("TELEGRAM_TOKEN"), os.environ.get("TELEGRAM_CHAT_ID")
+    if notify is None and token and chat_id:
+        from ..sources.notify import TelegramNotifier
+
+        notify = TelegramNotifier(token, chat_id)
 
     from ..pipeline.investment import run_daily_load
     from ..session import get_spark

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.sinks import overwrite_day_partitions
+
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
     """The rollup definition: hour-bucketed per-type counts/sums, plus
@@ -51,12 +53,7 @@ def refresh_rollup(
     """
     rolled = hourly_rollup(new_events)
     dirty = [r.bucket_date for r in rolled.select("bucket_date").distinct().collect()]
-    (
-        rolled.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket_date")
-        .parquet(rollup_path)
-    )
+    overwrite_day_partitions(rolled, rollup_path, "bucket_date")
     return sorted(dirty)
 
 

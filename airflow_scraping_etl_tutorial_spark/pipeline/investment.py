@@ -1,17 +1,22 @@
 """The reference ETL (scrape -> branch -> clean -> validate -> load ->
-notify) re-expressed as ONE declarative Spark plan.
+notify) re-expressed as ONE declarative Spark plan and one write.
 
 Reference lifecycle (dags/Final_app.py:79-149): five Airflow tasks with
 XCom handoffs and Jinja-templated INSERTs. Engine lifecycle (SURVEY.md
 §3.4): a single DataFrame flows
 
     payload -> filter(stat='OK') -> explode(data) -> drop 合計
-            -> de-comma/cast Decimal(38,0) -> pivot to 13 columns
-            -> validate -> idempotent write -> notify
+            -> de-comma/cast Decimal(38,0)
+            -> per-day aggregate (12 sink columns + verdicts) -> collect
+            -> route -> idempotent write of the good days -> notify
+
+One collect of the per-day aggregate is the only scan of the payload:
+the driver routes on its verdicts and writes the good days' rows from
+it, so nothing is cached or scanned twice.
 
 Differences from the reference, by design:
 - fetch once, not twice (Final_app.py:26 + :45 double-fetch);
-- pivot keys on the 單位名稱 category VALUES, not row position
+- the sink columns key on the 單位名稱 category VALUES, not row position
   (Final_app.py:50-66 breaks if TWSE reorders rows; we don't);
 - money is DecimalType(38,0) not TEXT (exact arithmetic beyond float
   range — the reason the reference chose TEXT, README.md:292);
@@ -22,9 +27,10 @@ Differences from the reference, by design:
   flow on action results (C1), notification is a callback (S7/S8).
 
 Scale: a single day is one tiny document, but the same plan handles a
-20-year backfill unchanged — explode/pivot/write are set-oriented and
-the sink is partitioned by dt, so each day lands in its own partition
-and reruns replace exactly that partition.
+20-year backfill unchanged — explode/aggregate are set-oriented, the
+driver holds one aggregate row per day (~5k for 20 years) and the sink
+is partitioned by dt, so each day lands in its own partition and reruns
+replace exactly that partition.
 """
 
 from __future__ import annotations
@@ -34,7 +40,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..sources.sinks import overwrite_day_partitions
 from ..sources.twse import CATEGORIES, TOTAL_ROW_LABEL
 
 EXPECTED_VALUES_PER_DAY = 12  # 4 categories x 3 measures (Final_app.py:53)
@@ -44,10 +52,15 @@ EXPECTED_VALUES_PER_DAY = 12  # 4 categories x 3 measures (Final_app.py:53)
 FETCH_FAILED_LABEL = "<fetch failed>"
 
 MONEY = "decimal(38,0)"
+MEASURES = ("buy", "sell", "dif")
 
 # Sink schema = reference create_table.sql:2-16, strongly typed.
 SINK_COLUMNS = ("dt",) + tuple(
-    f"{prefix}_{measure}" for _, prefix in CATEGORIES for measure in ("buy", "sell", "dif")
+    f"{prefix}_{measure}" for _, prefix in CATEGORIES for measure in MEASURES
+)
+SINK_SCHEMA = T.StructType(
+    [T.StructField("dt", T.StringType())]
+    + [T.StructField(c, T.DecimalType(38, 0)) for c in SINK_COLUMNS[1:]]
 )
 
 
@@ -74,45 +87,35 @@ def clean_long(payloads: DataFrame) -> DataFrame:
     )
 
 
-def pivot_to_sink_schema(long_df: DataFrame) -> DataFrame:
-    """Long (4 rows/day) -> wide (1 row/day, 13 columns): reference P5.
+def day_aggregate(long_df: DataFrame) -> DataFrame:
+    """Long (4 rows/day) -> one row per dt: the 12 sink money columns
+    (reference P5) plus validate's verdicts and ``fetch_failed`` (the day
+    is the marker row run_daily_load makes of a failed fetch).
 
-    Keys on the category value (robust to payload reordering). Explicit
-    pivot value list: no distinct-scan job, stable column order.
+    Each money column is the first non-null value of its measure among
+    the day's rows with that category label, so it keys on the category
+    VALUE (robust to payload reordering) and needs no distinct-scan job.
     """
-    labels = [label for label, _ in CATEGORIES]
-    wide = (
-        long_df.groupBy("dt")
-        .pivot("unit_name", labels)
-        .agg(F.first("buy").alias("buy"), F.first("sell").alias("sell"), F.first("dif").alias("dif"))
+    unit = F.col("unit_name")
+    money = [
+        F.first(F.when(unit == label, F.col(measure)), ignorenulls=True).alias(f"{prefix}_{measure}")
+        for label, prefix in CATEGORIES
+        for measure in MEASURES
+    ]
+    n_values = F.count(F.lit(1)) * 3
+    n_bad_dif = F.sum(F.when(F.col("dif") != F.col("buy") - F.col("sell"), 1).otherwise(0))
+    return long_df.groupBy("dt").agg(
+        *money,
+        n_values.alias("n_values"),
+        (n_values == EXPECTED_VALUES_PER_DAY).alias("arity_ok"),
+        (n_bad_dif == 0).alias("dif_ok"),
+        F.max(unit == FETCH_FAILED_LABEL).alias("fetch_failed"),
     )
-    selects = [F.col("dt")]
-    for label, prefix in CATEGORIES:
-        for measure in ("buy", "sell", "dif"):
-            selects.append(F.col(f"`{label}_{measure}`").alias(f"{prefix}_{measure}"))
-    return wide.select(*selects)
 
 
-def _day_checks(long_df: DataFrame) -> DataFrame:
-    """validate's per-dt verdicts plus ``fetch_failed``: the day is the
-    marker row run_daily_load makes of a failed fetch."""
-    return (
-        long_df.groupBy("dt")
-        .agg(
-            (F.count(F.lit(1)) * 3).alias("n_values"),
-            F.sum(F.when(F.col("dif") != F.col("buy") - F.col("sell"), 1).otherwise(0)).alias(
-                "n_bad_dif"
-            ),
-            F.max(F.col("unit_name") == FETCH_FAILED_LABEL).alias("fetch_failed"),
-        )
-        .select(
-            "dt",
-            "n_values",
-            (F.col("n_values") == EXPECTED_VALUES_PER_DAY).alias("arity_ok"),
-            (F.col("n_bad_dif") == 0).alias("dif_ok"),
-            "fetch_failed",
-        )
-    )
+def pivot_to_sink_schema(long_df: DataFrame) -> DataFrame:
+    """Long (4 rows/day) -> wide (1 row/day, 13 columns): reference P5."""
+    return day_aggregate(long_df).select(*SINK_COLUMNS)
 
 
 def validate(long_df: DataFrame) -> DataFrame:
@@ -122,7 +125,7 @@ def validate(long_df: DataFrame) -> DataFrame:
     Returns one row per dt with boolean verdicts; empty input -> empty
     output (the market-closed no-op, C2).
     """
-    return _day_checks(long_df).drop("fetch_failed")
+    return day_aggregate(long_df).select("dt", "n_values", "arity_ok", "dif_ok")
 
 
 @dataclass
@@ -157,46 +160,41 @@ def run_daily_load(
             "data": F.when(F.col("stat").isNull(), F.array(marker)).otherwise(F.col("data")),
         }
     )
-    long_df = clean_long(marked).cache()  # reused by validate + pivot: fetch once (vs S1 double-fetch)
-    try:
-        checks = _day_checks(long_df).collect()
-        if not checks:
-            # stat != 'OK' everywhere: market closed -> no-op (C2/DummyOperator).
-            return RunResult(route="market_closed", days_loaded=0, alerts=[])
+    # The one scan of the payload: every route and every sink row comes
+    # from this collect (vs the reference's S1 double-fetch).
+    days = day_aggregate(clean_long(marked)).collect()
+    if not days:
+        # stat != 'OK' everywhere: market closed -> no-op (C2/DummyOperator).
+        return RunResult(route="market_closed", days_loaded=0, alerts=[])
 
-        failed = sorted(r.dt for r in checks if r.fetch_failed)
-        bad = sorted(r.dt for r in checks if not (r.arity_ok and r.dif_ok))
-        drift = [dt for dt in bad if dt not in failed]
-        good_dts = [r.dt for r in checks if r.arity_ok and r.dif_ok]
-        if notify and failed:
-            notify(f"資料抓取失敗: dt={failed}")
-        if notify and drift:
-            # Reference S8: fixed-text Telegram alert '資料格式有變動...'
-            notify(f"資料格式有變動，請確認資料格式: dt={drift}")
-        if not good_dts:
-            return RunResult(route="alert", days_loaded=0, alerts=bad, fetch_failed=failed)
+    failed = sorted(r.dt for r in days if r.fetch_failed)
+    bad = sorted(r.dt for r in days if not (r.arity_ok and r.dif_ok))
+    drift = [dt for dt in bad if dt not in failed]
+    good = [[r[c] for c in SINK_COLUMNS] for r in days if r.arity_ok and r.dif_ok]
+    if notify and failed:
+        notify(f"資料抓取失敗: dt={failed}")
+    if notify and drift:
+        # Reference S8: fixed-text Telegram alert '資料格式有變動...'
+        notify(f"資料格式有變動，請確認資料格式: dt={drift}")
+    if not good:
+        return RunResult(route="alert", days_loaded=0, alerts=bad, fetch_failed=failed)
 
-        wide = pivot_to_sink_schema(long_df.filter(F.col("dt").isin(good_dts)))
-        # Idempotent daily append: partition-overwrite on dt (SURVEY §7
-        # hard-part 1 — Delta MERGE without Delta). Rerunning a day
-        # replaces exactly that day's partition; other days untouched.
-        (
-            wide.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("dt")
-            .parquet(sink_path)
-        )
-        if notify:
-            # Reference S7: success notification with the loaded date(s).
-            notify(f"每日盤後資訊已完成更新: dt={sorted(good_dts)}")
-        return RunResult(
-            route="loaded" if not bad else "alert",
-            days_loaded=len(good_dts),
-            alerts=bad,
-            fetch_failed=failed,
-        )
-    finally:
-        long_df.unpersist()
+    # The good days' rows go back as one local Arrow batch (a Python
+    # list would be pickled into one slice per core). Rerunning a day
+    # replaces exactly that day's partition; other days are untouched.
+    import pandas as pd  # deferred: importing the plan catalog must not load pandas
+
+    wide = spark.createDataFrame(pd.DataFrame(good, columns=SINK_COLUMNS), SINK_SCHEMA)
+    overwrite_day_partitions(wide, sink_path)
+    if notify:
+        # Reference S7: success notification with the loaded date(s).
+        notify(f"每日盤後資訊已完成更新: dt={sorted(row[0] for row in good)}")
+    return RunResult(
+        route="loaded" if not bad else "alert",
+        days_loaded=len(good),
+        alerts=bad,
+        fetch_failed=failed,
+    )
 
 
 def read_sink(spark: SparkSession, sink_path: str, dt: str | None = None) -> DataFrame:

@@ -715,7 +715,7 @@ def q87_data_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema: referential integrity (anti-joins), PK uniqueness, null and
     range gates — the engine-wide form of the reference's single arity
     check (P7). One report DataFrame; the driver routes on it the way
-    run_daily_load routes on validate()."""
+    run_daily_load routes on its per-day aggregate's verdicts."""
     from ..functions.validation import (
         check_not_null,
         check_range,

@@ -6,8 +6,9 @@ Engine forms, all set-oriented:
 
 - parquet partitioned append/overwrite (the default analytical sink);
 - idempotent daily load = dynamic partition overwrite on the date key
-  (pipeline/investment.py uses this; equivalent in effect to a Delta
-  MERGE keyed on dt for this append-only daily pattern);
+  (``overwrite_day_partitions``, the one writer of it: the TWSE daily
+  load and the rollup refresh both call it; equivalent in effect to a
+  Delta MERGE keyed on dt for this append-only daily pattern);
 - CSV append sink (S6);
 - JDBC read/write (S3/S5): implemented against Spark's built-in jdbc
   format and EXECUTED in tests against Derby (the embedded JDBC engine

@@ -7,11 +7,12 @@ payload with driver-side dict access. Here the feed is one Spark data
 source (Python Data Source API): ``spark.read.format("twse")`` is a
 planned scan with one input partition per trading day, so a 20-year
 backfill (~5k days) is ~5k scan tasks scheduled and retried like any
-other, and ``spark.readStream.format("twse")`` is the same feed as a
-Structured Streaming source. Rows are typed by PAYLOAD_SCHEMA (shape
-captured in dags/scrapy_develop.ipynb cell-2), so the pipeline composes
-with no glue: ``clean_long(spark.read.format("twse")...load())`` is the
-reference's crawl->clean hop.
+other. It is a batch source only: the reference runs once a day, and
+the deployed job (jobs/daily_load.py) reads one day per run. Rows are
+typed by PAYLOAD_SCHEMA (shape captured in dags/scrapy_develop.ipynb
+cell-2), so the pipeline composes with no glue:
+``clean_long(spark.read.format("twse")...load())`` is the reference's
+crawl->clean hop.
 
 Options:
 - ``dates`` (required): comma-separated yyyyMMdd trading days.
@@ -21,9 +22,6 @@ Options:
   one request per date. An unreachable or malformed day becomes a
   stat=NULL row for that date instead of failing the scan;
   pipeline/investment.py::run_daily_load routes it to the alert path.
-- ``batch_days`` (streaming only): max dates per micro-batch; default
-  all available, so trigger(availableNow) drains in one batch; 1 is the
-  strict daily cadence.
 
 ``payloads_to_df`` is the in-memory seam: payload dicts already in hand
 (tests, generated benchmark days, an injected fetcher) become the same
@@ -37,12 +35,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 TWSE_URL = "https://www.twse.com.tw/fund/BFI82U?response=json&dayDate={date}"
 
@@ -73,7 +66,7 @@ TOTAL_ROW_LABEL = "合計"
 
 def _payload_row(p: dict) -> tuple:
     """The one payload-dict -> PAYLOAD_SCHEMA-row mapping, shared by the
-    seam and both readers so the tuple cannot drift from the schema."""
+    seam and the reader so the tuple cannot drift from the schema."""
     return tuple(p.get(f.name) for f in PAYLOAD_SCHEMA.fields)
 
 
@@ -149,9 +142,6 @@ class TwseDataSource(DataSource):
     def reader(self, schema) -> "TwseReader":
         return TwseReader(self.options)
 
-    def simpleStreamReader(self, schema) -> "TwseStreamReader":
-        return TwseStreamReader(self.options)
-
 
 class TwseReader(DataSourceReader):
     def __init__(self, options):
@@ -164,139 +154,6 @@ class TwseReader(DataSourceReader):
 
     def read(self, partition: _DatePartition):
         yield _payload_row(_payload_for(partition.date, self._source))
-
-
-class TwseStreamReader(SimpleDataSourceStreamReader):
-    """STREAMING form of the feed (SimpleDataSourceStreamReader): the
-    reference's once-a-day cadence as a Structured Streaming source.
-    The offset is CONTENT-based AND POSITION-VALIDATED —
-    ``{"last_date": d, "n_consumed": k}``, the last consumed trading
-    day plus how many days were consumed to reach it (``None``/0
-    before the first batch) — so progress is exactly-once and
-    replayable ACROSS restarts exactly when the consumed PREFIX of the
-    ``dates`` option is unchanged (appending future days is the normal
-    calendar evolution and always compatible). Every other mutation
-    fails LOUDLY instead of silently skipping or re-reading days: a
-    list missing the committed date (removal/rename), a date
-    backfilled/inserted/reordered BEFORE the committed one (the
-    committed date's position no longer equals ``n_consumed``; a bare
-    ``last_date`` cursor would silently skip a backfilled day and
-    replay a DIFFERENT row set for a committed range), and the older
-    positional ``next_idx`` form (unvalidatable against a reordered
-    list). ``read`` advances
-    by ``batch_days`` dates (default: all available, so availableNow
-    drains in one batch; set 1 for the strict
-    one-day-per-micro-batch cadence) and ``readBetweenOffsets``
-    re-yields any committed range deterministically after a restart —
-    both ends position-validated first, so an insertion inside the
-    range refuses rather than replaying rows that were never in the
-    committed batch.
-    In production the date list is the trading calendar up to today;
-    offline it is the test's golden dates — same doctrine as the batch
-    reader.
-
-    The simple (driver-side) reader variant is the honest choice for a
-    1-document-per-day feed: per-batch volume is tiny, so the
-    partition-planning machinery of the full DataSourceStreamReader
-    would buy nothing.
-    """
-
-    def __init__(self, options):
-        self._dates, self._source = _parse_options(options)
-        # The position check below resolves a committed date with
-        # list.index (FIRST occurrence) — that is only a sound cursor
-        # when dates are unique, so make uniqueness an explicit
-        # contract here rather than let a duplicated day surface later
-        # as a misdiagnosed 'mutated before the cursor' refusal.
-        dupes = sorted({d for d in self._dates if self._dates.count(d) > 1})
-        if dupes:
-            raise ValueError(
-                f"twse stream: 'dates' option contains duplicate trading "
-                f"days {dupes} — each day is one micro-batch and must "
-                "appear exactly once"
-            )
-        raw = options.get("batch_days")
-        self._batch_days = max(1, int(raw)) if raw else None  # None = all
-
-    def initialOffset(self) -> dict:
-        return {"last_date": None, "n_consumed": 0}
-
-    def _idx_after(self, offset: dict) -> int:
-        """Index of the first UNCONSUMED date under `offset`. Fails
-        loudly when the offset shape is not the content+position form
-        this reader writes (e.g. a positional next_idx checkpoint from
-        an older build, or a bare last_date from an earlier
-        form — neither can be validated against a mutated list), when
-        a committed date no longer exists in the current list
-        (removal/rename), or when it exists at a DIFFERENT position
-        than when it was committed (a date backfilled / inserted /
-        reordered before the cursor — resuming 'after' the date would
-        silently skip the inserted days)."""
-        if "last_date" not in offset or "n_consumed" not in offset:
-            raise ValueError(
-                f"twse stream: unrecognized checkpoint offset {offset!r} — "
-                "this reader commits {'last_date': <yyyyMMdd>, "
-                "'n_consumed': <int>}; start a fresh checkpoint"
-            )
-        last = offset["last_date"]
-        n_consumed = offset["n_consumed"]
-        if last is None:
-            if n_consumed != 0:
-                raise ValueError(
-                    f"twse stream: inconsistent checkpoint offset "
-                    f"{offset!r} (no last_date but n_consumed != 0)"
-                )
-            return 0
-        try:
-            idx = self._dates.index(last)
-        except ValueError:
-            raise ValueError(
-                f"twse stream restart: committed offset date {last!r} is "
-                "not in the current 'dates' option — the list changed "
-                "incompatibly (day removed/renamed); restore the committed "
-                "date or start a fresh checkpoint"
-            ) from None
-        if idx + 1 != n_consumed:
-            raise ValueError(
-                f"twse stream restart: committed offset date {last!r} was "
-                f"consumed at position {n_consumed} but now sits at "
-                f"position {idx + 1} — the 'dates' option mutated before "
-                "the cursor (day backfilled/inserted/reordered); only "
-                "APPENDING future days is checkpoint-compatible. Restore "
-                "the committed prefix or start a fresh checkpoint"
-            )
-        return idx + 1
-
-    def read(self, start: dict):
-        lo = self._idx_after(start)
-        step = self._batch_days or len(self._dates)
-        hi = min(lo + step, len(self._dates))
-        end = (
-            {"last_date": self._dates[hi - 1], "n_consumed": hi}
-            if hi > 0
-            else {"last_date": None, "n_consumed": 0}
-        )
-        return self._rows(lo, hi), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return self._rows(self._idx_after(start), self._idx_after(end))
-
-    def commit(self, end: dict) -> None:
-        pass  # nothing upstream to acknowledge; the cursor IS the state
-
-    def _rows(self, lo: int, hi: int):
-        # a LIST ITERATOR, not a generator and not a bare list: the
-        # engine's prefetch cache (datasource_internal) both
-        # copy.copy()s the returned value AND calls next() on it —
-        # generators aren't copyable, lists aren't iterators; a
-        # list_iterator is both. At one document per day
-        # materializing is free anyway.
-        return iter(
-            [
-                _payload_row(_payload_for(date, self._source))
-                for date in self._dates[lo:hi]
-            ]
-        )
 
 
 def register(spark: SparkSession) -> None:

@@ -87,3 +87,22 @@ def test_pipeline_wiring_with_notifier(spark, http_server, tmp_path):
     )
     assert res.route == "loaded"
     assert any("每日盤後資訊已完成更新" in b["text"] for _, b in rec.requests)
+
+
+def test_deployed_job_notifies_from_env_credentials(spark, http_server, tmp_path, monkeypatch):
+    """The spark-submit job builds its notifier from TELEGRAM_TOKEN and
+    TELEGRAM_CHAT_ID: a golden load sends exactly one success text."""
+    base, rec = http_server
+    from functools import partial
+
+    from airflow_scraping_etl_tutorial_spark.jobs.daily_load import main
+    from airflow_scraping_etl_tutorial_spark.sources import notify
+
+    monkeypatch.setenv("TELEGRAM_TOKEN", "T")
+    monkeypatch.setenv("TELEGRAM_CHAT_ID", "c")
+    monkeypatch.setattr(notify, "TelegramNotifier", partial(TelegramNotifier, api_base=base))
+    rc = main(["--date", "20220819", "--sink", str(tmp_path / "sink"), "--source", "golden"])
+    assert rc == 0
+    assert rec.requests == [
+        ("/botT/sendMessage", {"chat_id": "c", "text": "每日盤後資訊已完成更新: dt=['20220819']"})
+    ]

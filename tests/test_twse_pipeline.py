@@ -76,6 +76,26 @@ def test_wrong_arity_routes_to_alert(spark, tmp_path):
     assert any("資料格式有變動" in m for m in msgs)  # reference S8 alert text
 
 
+def test_mixed_run_routes_every_day(spark, tmp_path):
+    """One run holding a good day, a drifted day, a failed fetch and a
+    closed day: alert route naming both bad days, the three texts in
+    order, and only the good day in the sink."""
+    msgs = []
+    sink = str(tmp_path / "sink")
+    failed = {"stat": None, "date": "20220104"}
+    payloads = payloads_to_df(spark, [GOLDEN_OK, GOLDEN_WRONG_ARITY, failed, GOLDEN_CLOSED])
+    res = run_daily_load(spark, payloads, sink, notify=msgs.append)
+    assert (res.route, res.days_loaded) == ("alert", 1)
+    assert res.alerts == ["20100106", "20220104"]
+    assert res.fetch_failed == ["20220104"]
+    assert msgs == [
+        "資料抓取失敗: dt=['20220104']",
+        "資料格式有變動，請確認資料格式: dt=['20100106']",
+        "每日盤後資訊已完成更新: dt=['20220819']",
+    ]
+    assert [r.asDict() for r in read_sink(spark, sink).collect()] == [GOLDEN_OK_EXPECTED]
+
+
 def test_idempotent_daily_load(spark, tmp_path):
     """SURVEY §7 hard-part 1: rerunning a day must not duplicate it
     (the reference's retry double-inserts; we partition-overwrite)."""
