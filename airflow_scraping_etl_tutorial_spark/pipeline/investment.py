@@ -29,15 +29,17 @@ Differences from the reference, by design:
 Scale: a single day is one tiny document, but the same plan handles a
 20-year backfill unchanged — explode/aggregate are set-oriented, the
 driver holds one aggregate row per day (~5k for 20 years) and the sink
-is partitioned by dt, so each day lands in its own partition and reruns
-replace exactly that partition.
+is partitioned by dt, so each day lands in its own partition, reruns
+replace exactly that partition and a one-day lookup reads only it.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -198,12 +200,25 @@ def run_daily_load(
 
 
 def read_sink(spark: SparkSession, sink_path: str, dt: str | None = None) -> DataFrame:
-    """Read back the sink (reference S3/S4). A dt filter prunes to one
-    partition — the engine form of `SELECT * WHERE dt='20220819'`.
+    """Read back the sink (reference S3/S4) with the declared
+    SINK_SCHEMA, columns in SINK_COLUMNS order.
 
-    dt is re-cast to string: Spark's partition-column type inference
-    reads dt=20220819 directories back as int, which would silently
-    change the sink schema between write and read.
+    With dt, the engine form of `SELECT * WHERE dt='20220819'`: only
+    that day's directory is listed and scanned, so a lookup costs one
+    partition however long the history is (no listing job, no footer
+    job for schema inference). A day with no partition is an empty
+    frame; a dt that is not yyyyMMdd raises ValueError, as it names a
+    path. Without dt, every partition is listed.
     """
-    df = spark.read.parquet(sink_path).withColumn("dt", F.col("dt").cast("string"))
-    return df.filter(F.col("dt") == dt) if dt else df
+    reader = spark.read.schema(SINK_SCHEMA)
+    if dt is None:
+        return reader.parquet(sink_path).select(*SINK_COLUMNS)
+    if not re.fullmatch(r"\d{8}", dt):
+        raise ValueError(f"dt must be yyyyMMdd, got {dt!r}")
+    try:
+        day = reader.option("basePath", sink_path).parquet(f"{sink_path}/dt={dt}")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], SINK_SCHEMA)
+    return day.select(*SINK_COLUMNS)

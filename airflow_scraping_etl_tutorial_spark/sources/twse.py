@@ -25,7 +25,8 @@ Options:
 
 ``payloads_to_df`` is the in-memory seam: payload dicts already in hand
 (tests, generated benchmark days, an injected fetcher) become the same
-typed frame.
+typed frame, built from one local Arrow batch, so a one-day load pays
+for one task, not one per core.
 """
 
 from __future__ import annotations
@@ -71,8 +72,14 @@ def _payload_row(p: dict) -> tuple:
 
 
 def payloads_to_df(spark: SparkSession, payloads: Iterable[dict]) -> DataFrame:
-    """Materialize raw payload dicts as a typed DataFrame (test seam)."""
-    return spark.createDataFrame([_payload_row(p) for p in payloads], PAYLOAD_SCHEMA)
+    """Payload dicts in hand -> a PAYLOAD_SCHEMA frame, sent to the JVM
+    as one local Arrow batch. A Python list would be pickled into one
+    slice per core, so a one-day load would run on every core; from
+    the batch it runs on one task per row, up to the core count."""
+    import pandas as pd  # deferred: importing the plan catalog must not load pandas
+
+    rows = [_payload_row(p) for p in payloads]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=PAYLOAD_SCHEMA.fieldNames()), PAYLOAD_SCHEMA)
 
 
 def _http_get_json(url: str, timeout: float = 30.0) -> dict:

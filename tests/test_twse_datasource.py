@@ -6,13 +6,18 @@ glue — the crawl->clean hop of the reference as a planned scan."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
 from airflow_scraping_etl_tutorial_spark.pipeline.investment import clean_long
-from airflow_scraping_etl_tutorial_spark.sources.golden import GOLDEN_OK
+from airflow_scraping_etl_tutorial_spark.sources.golden import GOLDEN_CLOSED, GOLDEN_OK
 from airflow_scraping_etl_tutorial_spark.sources.twse import (
     PAYLOAD_SCHEMA,
+    _payload_row,
     payloads_to_df,
     register,
 )
@@ -45,6 +50,24 @@ def test_golden_replay_agrees_with_payloads_to_df(spark):
     via_source = _read(spark, "20220819").collect()
     via_seam = payloads_to_df(spark, [GOLDEN_OK]).collect()
     assert via_source == via_seam
+
+
+def test_payloads_to_df_is_one_local_arrow_batch(spark):
+    """The seam gives the same typed rows as a pickled list, nulls of a
+    failed fetch included, from one batch: a one-day frame is one
+    partition. pandas loads only when the seam runs, not with the
+    plan catalog that imports it."""
+    for payloads in ([], [{"stat": None, "date": "20220104"}], [GOLDEN_CLOSED], [GOLDEN_OK]):
+        df = payloads_to_df(spark, payloads)
+        assert df.schema == PAYLOAD_SCHEMA
+        pickled = spark.createDataFrame([_payload_row(p) for p in payloads], PAYLOAD_SCHEMA)
+        assert df.collect() == pickled.collect()
+        if payloads:
+            assert df.rdd.getNumPartitions() == 1
+    probe = "import sys; from airflow_scraping_etl_tutorial_spark.plans import all_queries; all_queries(); print('pandas' in sys.modules)"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", probe], cwd=root, capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "False"
 
 
 def test_unknown_date_yields_closed_shape_for_that_date(spark):

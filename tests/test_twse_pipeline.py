@@ -5,14 +5,18 @@ tests), plus the property checks the blueprint commits to."""
 from __future__ import annotations
 
 import random
+from datetime import date, timedelta
+from decimal import Decimal
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from airflow_scraping_etl_tutorial_spark.pipeline.investment import (
     SINK_COLUMNS,
+    SINK_SCHEMA,
     clean_long,
     pivot_to_sink_schema,
     read_sink,
@@ -25,6 +29,7 @@ from airflow_scraping_etl_tutorial_spark.sources.golden import (
     GOLDEN_OK_EXPECTED,
     GOLDEN_WRONG_ARITY,
 )
+from airflow_scraping_etl_tutorial_spark.sources.sinks import overwrite_day_partitions
 from airflow_scraping_etl_tutorial_spark.sources.twse import payloads_to_df
 
 
@@ -106,6 +111,48 @@ def test_idempotent_daily_load(spark, tmp_path):
     assert read_sink(spark, sink).count() == 1
     assert read_sink(spark, sink, dt="20220819").count() == 1
     assert dict(read_sink(spark, sink).dtypes)["dt"] == "string"
+
+
+def test_day_lookup_runs_one_job_with_one_task(spark, tmp_path):
+    """The S4 lookup reads only its day's directory: over 40 days (more
+    than Spark's 32-path threshold for a parallel listing job) it is one
+    job of one task, with no listing or schema-inference job before it."""
+    sink = str(tmp_path / "sink")
+    days = [(date(2022, 1, 3) + timedelta(n)).strftime("%Y%m%d") for n in range(40)]
+    rows = [(dt, *(Decimal(n * 12 + i) for i in range(12))) for n, dt in enumerate(days)]
+    overwrite_day_partitions(spark.createDataFrame(rows, SINK_SCHEMA), sink)
+    sc = spark.sparkContext
+    group = "test-day-lookup"
+    sc.setJobGroup(group, "one-day lookup")
+    try:
+        got = read_sink(spark, sink, days[7]).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds)
+    assert (len(jobs), tasks) == (1, 1)
+    assert [tuple(r) for r in got] == [rows[7]]
+
+
+def test_degenerate_lookups(spark, tmp_path):
+    """A day with no partition, in a sink or with no sink at all, is an
+    empty frame of the sink schema; a dt that is not yyyyMMdd is refused
+    before it becomes a path; the full read of a missing sink fails."""
+    sink, never = str(tmp_path / "sink"), str(tmp_path / "never")
+    run_daily_load(spark, payloads_to_df(spark, [GOLDEN_OK]), sink)
+    full = read_sink(spark, sink)
+    assert full.dtypes == [("dt", "string")] + [(c, "decimal(38,0)") for c in SINK_COLUMNS[1:]]
+    for missing in (read_sink(spark, sink, "20220820"), read_sink(spark, never, "20220819")):
+        assert missing.collect() == []
+        assert missing.dtypes == full.dtypes
+    for bad in ("2022-08-19", "../x"):
+        with pytest.raises(ValueError):
+            read_sink(spark, sink, bad)
+    with pytest.raises(AnalysisException) as err:
+        read_sink(spark, never)
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
 
 
 def test_validate_flags_bad_dif(spark):
