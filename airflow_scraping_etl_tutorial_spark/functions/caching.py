@@ -1,100 +1,57 @@
-"""Persisted-intermediate bookkeeping for multi-consumer operators.
+"""Release of persisted intermediates, read from Spark's own state.
 
 Operators like minhash_near_duplicates persist() an intermediate that
 several branches of the returned plan re-read (signatures feed the LSH
 self-join AND both verify lookups). The persist is correct — without it
 the shingle/hash map work runs 3x — but the cached blocks outlive the
-operator call, and a long-lived session that never calls
-spark.catalog.clearCache() leaks them.
+operator call, and a long-lived session that never releases them keeps
+them pinned.
 
-Two release paths, because DataFrame transformations don't propagate
-Python attributes (an `.orderBy`/`.select` on an operator's return value
-yields a NEW DataFrame without the tag):
+Spark already tracks every such block: each materialized persist is an
+entry of the SparkContext's persistent-RDD table, and each DataFrame
+persist is an entry of the cache manager. So there is no Python-side
+registry; a run-a-query-then-clean loop calls:
 
-- `release_intermediates(df)` — exact-handle form; only works on the
-  very DataFrame an operator returned, BEFORE any further
-  transformation.
-- `release_session_intermediates(spark)` — session-scoped registry
-  form; every `tag_intermediates` call also records its handles in a
-  per-session registry, so callers that chained transformations (or
-  lost the original handle entirely) can still drain every persisted
-  intermediate their session accumulated. This is what bench.py-style
-  run-a-query-then-clean loops should call; it is the targeted
-  equivalent of `spark.catalog.clearCache()` that touches only
-  operator-tagged blocks.
+- `release_session_intermediates(spark)` — unpersists every persistent
+  RDD that is not a local checkpoint, then clears the cache manager;
+- `release_session_checkpoints(spark)` — unpersists the RDD blocks behind
+  every localCheckpoint(), which clearCache never frees; scope it with
+  `snapshot_checkpoints` when live checkpointed DataFrames must survive.
 """
 
 from __future__ import annotations
 
-import weakref
-
-from pyspark.sql import DataFrame, SparkSession
-
-_ATTR = "_sg_persisted_intermediates"
-
-# session-id -> list of persisted handles still outstanding. Keyed by
-# id() with a weakref kill-switch so a torn-down session's entry dies
-# with it rather than pinning JVM-side DataFrames forever.
-_SESSION_HANDLES: dict[int, list[DataFrame]] = {}
+from pyspark.sql import SparkSession
 
 
-def _session_bucket(spark: SparkSession) -> list[DataFrame]:
-    key = id(spark)
-    if key not in _SESSION_HANDLES:
-        _SESSION_HANDLES[key] = []
-        weakref.finalize(spark, _SESSION_HANDLES.pop, key, None)
-    return _SESSION_HANDLES[key]
-
-
-def tag_intermediates(result: DataFrame, *persisted: DataFrame) -> DataFrame:
-    """Record persisted upstream DataFrames on the result (merging with
-    any handles already tagged by an upstream operator) AND in the
-    session-scoped registry (so the handles survive callers' chained
-    transformations dropping the attribute)."""
-    existing = list(getattr(result, _ATTR, ()))
-    setattr(result, _ATTR, existing + list(persisted))
-    _session_bucket(result.sparkSession).extend(persisted)
-    return result
-
-
-def release_intermediates(result: DataFrame, blocking: bool = False) -> int:
-    """Unpersist every intermediate tagged on `result`. Only the EXACT
-    DataFrame an operator returned carries the tag — after any further
-    transformation, use `release_session_intermediates` instead. Call
-    AFTER the result has been materialized. Returns the number
-    released."""
-    handles = getattr(result, _ATTR, ())
-    for df in handles:
-        df.unpersist(blocking=blocking)
-    n = len(handles)
-    if handles:
-        bucket = _SESSION_HANDLES.get(id(result.sparkSession), [])
-        for df in handles:
-            if df in bucket:
-                bucket.remove(df)
-        setattr(result, _ATTR, [])
-    return n
+def _persistent_rdds(spark: SparkSession):
+    # Walk the Scala iterator by hasNext/next: iterating a py4j-converted
+    # Java map ends on a JVM exception, which costs milliseconds per call
+    # even on an empty table — paid before every query of a
+    # run-a-query-then-clean loop.
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().valuesIterator()
+    rdds = []
+    while it.hasNext():
+        rdds.append(it.next())
+    return rdds
 
 
 def release_session_intermediates(spark: SparkSession, blocking: bool = False) -> int:
-    """Unpersist EVERY operator-tagged intermediate this session has
-    accumulated (whether or not the caller still holds the tagged
-    result). Safe whenever no tagged plan is mid-materialization —
-    an unpersisted plan re-executes rather than erroring. Returns the
-    number released."""
-    bucket = _SESSION_HANDLES.get(id(spark), [])
-    n = len(bucket)
-    while bucket:
-        bucket.pop().unpersist(blocking=blocking)
+    """Unpersist every persistent RDD of the session that is not a local
+    checkpoint, then `spark.catalog.clearCache()`. Safe whenever no plan
+    is mid-materialization — an unpersisted plan re-executes rather than
+    erroring. Returns the number of RDDs unpersisted."""
+    n = 0
+    for rdd in _persistent_rdds(spark):
+        if not rdd.isLocallyCheckpointed():
+            rdd.unpersist(blocking)
+            n += 1
+    spark.catalog.clearCache()
     return n
 
 
 def _checkpointed_rdds(spark: SparkSession):
-    sc = spark.sparkContext._jsc.sc()
-    jmap = spark._jvm.scala.collection.JavaConverters.mapAsJavaMap(
-        sc.getPersistentRDDs()
-    )
-    return [rdd for rdd in jmap.values() if rdd.isLocallyCheckpointed()]
+    return [rdd for rdd in _persistent_rdds(spark) if rdd.isLocallyCheckpointed()]
 
 
 def snapshot_checkpoints(spark: SparkSession) -> frozenset[int]:
@@ -115,17 +72,16 @@ def release_session_checkpoints(
 ) -> int:
     """Unpersist the RDD blocks behind every localCheckpoint() this
     session still holds (minus `protect`, see `snapshot_checkpoints`).
-    localCheckpoint truncates lineage by PERSISTING
-    the RDD outside the DataFrame-cache registry, so neither
-    `release_session_intermediates` nor `spark.catalog.clearCache()`
-    frees those blocks — absent this call they are reclaimed only when
+    localCheckpoint truncates lineage by PERSISTING the RDD outside the
+    DataFrame-cache registry, so `spark.catalog.clearCache()` does not
+    free those blocks — absent this call they are reclaimed only when
     the ContextCleaner GCs the reference, i.e. nondeterministically
     across a long single-session sweep (r12 ADVICE). Walks
     `sc.getPersistentRDDs` and unpersists exactly the locally
-    checkpointed entries, leaving DataFrame-cached blocks to
-    clearCache. Safe between queries: a released checkpoint's
-    DataFrame must not be re-read afterwards (its lineage is gone),
-    which holds for run-a-query-then-clean loops that rebuild each
+    checkpointed entries, leaving the others to
+    `release_session_intermediates`. Safe between queries: a released
+    checkpoint's DataFrame must not be re-read afterwards (its lineage
+    is gone), which holds for run-a-query-then-clean loops that rebuild each
     plan from its spec. Callers that DO hold live checkpointed
     DataFrames across the sweep must scope it:
     ``snap = snapshot_checkpoints(spark)`` before the scoped work,

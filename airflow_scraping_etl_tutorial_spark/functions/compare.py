@@ -77,15 +77,6 @@ def det_round(col: Column, scale: int) -> Column:
     ) / F.lit(p)
 
 
-def oracle_det_round(expr: str, scale: int) -> str:
-    """DuckDB twin of det_round — identical IEEE association."""
-    p = 10**scale
-    return (
-        f"(CAST(FLOOR(({expr}) * CAST({p} AS DOUBLE) + 0.5) AS BIGINT)"
-        f" / CAST({p} AS DOUBLE))"
-    )
-
-
 def det_half_up(col: Column) -> Column:
     """Sign-aware deterministic half-up to the nearest INTEGER:
     FLOOR(x+0.5) for x >= 0, -FLOOR(-x+0.5) otherwise — pure IEEE
@@ -93,14 +84,6 @@ def det_half_up(col: Column) -> Column:
     det_round; q98's int8 quantizer is the canonical user)."""
     return F.when(col >= 0, F.floor(col + F.lit(0.5))).otherwise(
         -F.floor(-col + F.lit(0.5))
-    )
-
-
-def oracle_det_half_up(expr: str) -> str:
-    """DuckDB twin of det_half_up — identical CASE/FLOOR association."""
-    return (
-        f"CASE WHEN ({expr}) >= 0 THEN FLOOR(({expr}) + 0.5)"
-        f" ELSE -FLOOR(-({expr}) + 0.5) END"
     )
 
 

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..functions.partitioning import fan_out
 from .text import tokens
 
@@ -156,7 +155,8 @@ def minhash_signature_table(
     (parameter sweeps, tiered thresholds) without re-running the
     shingle+hash pass — at 100 TB the signature pass dominates, so a
     b x r sweep must not pay it per setting. The caller owns the
-    persist/release lifecycle."""
+    persist/unpersist lifecycle: unpersist once every consumer has run
+    or has been localCheckpointed."""
     pre = shingle_words(df, shingle_size, id_col)
     return pre.select(
         F.col(id_col),
@@ -204,15 +204,16 @@ def minhash_near_duplicates(
     # Two-step projection (see shingle_words) + persist: the LSH
     # self-join and the two shingle-set lookups would otherwise recompute
     # shingling+hashing three times. The exact-Jaccard verify runs on the
-    # hashed shingle sets, so raw text never shuffles. The persisted
-    # handle is tagged on the result — callers release it with
-    # functions.caching.release_intermediates once materialized.
+    # hashed shingle sets, so raw text never shuffles. Spark tracks the
+    # persisted blocks; a run-a-query-then-clean loop frees them with
+    # functions.caching.release_session_intermediates once materialized.
     # With ``signatures=`` (a minhash_signature_table result) the
-    # build is skipped entirely and the CALLER owns persist/release.
-    owns_sig = signatures is None
+    # build is skipped entirely and the CALLER owns persist/unpersist —
+    # the form for plans that must free the table at a point of their
+    # own (after an eager localCheckpoint of the pairs, say).
     sig = (
         minhash_signature_table(df, n_hashes, shingle_size, id_col).persist()
-        if owns_sig
+        if signatures is None
         else signatures
     )
 
@@ -264,7 +265,7 @@ def minhash_near_duplicates(
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
-    return tag_intermediates(out, sig) if owns_sig else out
+    return out
 
 
 def simhash(df: DataFrame, n_bits: int = 60, id_col: str = "doc_id") -> DataFrame:
@@ -367,8 +368,8 @@ def ngram_jaccard_pairs(
     map-side-combined (shingle, df) aggregation.
     """
     # persist: BOTH sides of the inverted-index self-join read the
-    # shingle sets — without it the shingling map runs twice. Tagged on
-    # the result for caller release (functions/caching.py).
+    # shingle sets — without it the shingling map runs twice. Freed by
+    # the session release path (functions/caching.py).
     # r14 (guide §2.4 "remove shuffles outright"): the per-doc set SIZE
     # rides along the index rows (one extra long per posting) and is
     # recovered per pair with MIN (constant within the pair group), so
@@ -458,7 +459,7 @@ def ngram_jaccard_pairs(
             6,
         ).alias("jaccard"),
     )
-    return tag_intermediates(out, sh)
+    return out
 
 
 def decontaminate(

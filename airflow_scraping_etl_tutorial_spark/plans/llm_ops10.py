@@ -293,8 +293,7 @@ def q250_connected_components_minlabel(spark: SparkSession, sf_dir: str) -> Data
     rounds are O(diameter), and dup-graph diameters are tiny because
     near-dup clusters are cliques-ish."""
     docs = load(spark, sf_dir, "documents")
-    from ..functions.caching import release_intermediates
-    from ..operators.dedup import minhash_near_duplicates
+    from ..operators.dedup import minhash_near_duplicates, minhash_signature_table
 
     # sym is localCheckpointed (disk-backed, lineage-TRUNCATED) rather
     # than persist()ed: it is read by two downstream consumers, and
@@ -303,15 +302,15 @@ def q250_connected_components_minlabel(spark: SparkSession, sf_dir: str) -> Data
     # driver-box signature). Checkpointed, the degraded mode is a
     # local-disk re-read — linear, not multiplicative
     # (operators/cluster.py doctrine).
-    pairs = minhash_near_duplicates(docs, jaccard_threshold=0.5)
+    sig = minhash_signature_table(docs).persist()
+    pairs = minhash_near_duplicates(docs, jaccard_threshold=0.5, signatures=sig)
     sym = pairs.select(
         F.col("doc_id_a").alias("s"), F.col("doc_id_b").alias("d")
     ).unionAll(
         pairs.select(F.col("doc_id_b").alias("s"), F.col("doc_id_a").alias("d"))
     ).localCheckpoint(eager=True)
-    # lineage is truncated: the operator's internal signature cache can
-    # be dropped immediately
-    release_intermediates(pairs)
+    # lineage is truncated: the signature cache can be dropped now
+    sig.unpersist()
     # round 1 fused: labels start as the identity, so
     # l1(u) = LEAST(u, MIN(neighbors)) is ONE aggregate — no label
     # join, no separate node-list distinct (l1 IS the node list)
@@ -896,7 +895,6 @@ def q257_adamic_adar_brand_links(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("wt").cast("decimal(28,6)").alias("aa_dec"),
         )
     )
-    from ..functions.caching import tag_intermediates
 
     out = (
         pr.select(
@@ -908,4 +906,4 @@ def q257_adamic_adar_brand_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("adamic_adar"), "brand_a", "brand_b")
         .limit(20)
     )
-    return tag_intermediates(out, ob)
+    return out

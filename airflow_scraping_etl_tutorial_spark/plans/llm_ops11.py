@@ -267,8 +267,6 @@ def q260_duplicate_shingle_coverage(spark: SparkSession, sf_dir: str) -> DataFra
     both the df aggregate and the join, so it is persisted once (the
     minhash_near_duplicates pattern) — without it the text scan and
     shingle hashing run twice."""
-    from ..functions.caching import tag_intermediates
-
     docs = load(spark, sf_dir, "documents")
     sh = (
         shingle_words(docs, 3).select("doc_id", F.explode("xs").alias("x")).persist()
@@ -292,7 +290,7 @@ def q260_duplicate_shingle_coverage(spark: SparkSession, sf_dir: str) -> DataFra
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         .orderBy("dup_decile")
     )
-    return tag_intermediates(out, sh)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -418,8 +416,6 @@ def q262_token_tail_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream feeds the totals AND the final aggregate — both are
     persisted once so the text scan and tokenization run once, not
     four times."""
-    from ..functions.caching import tag_intermediates
-
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(tokens(F.col("text"))).alias("tok")
@@ -450,7 +446,7 @@ def q262_token_tail_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source", "freq_band")
     )
-    return tag_intermediates(out, tok, b)
+    return out
 
 
 # ---------------------------------------------------------------------------

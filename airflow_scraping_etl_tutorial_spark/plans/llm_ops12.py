@@ -106,8 +106,6 @@ def q267_histogram_quantile_error(spark: SparkSession, sf_dir: str) -> DataFrame
     each feeds 3-4 consumers, and without the persist every textual
     repetition of their lineage is a REAL extra aggregation pass over
     the fact table."""
-    from ..functions.caching import tag_intermediates
-
     o = load(spark, sf_dir, "orders")
     s = o.agg(
         F.min("o_totalprice").alias("lo"),
@@ -178,7 +176,7 @@ def q267_histogram_quantile_error(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("pct")
     )
-    return tag_intermediates(out, s, c)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -334,8 +332,6 @@ def q269_incremental_signature_maintenance(
     per doc), never text-keyed. At 100 TB the rebuild side of the
     audit runs sampled (q143 doctrine) — here it runs in full so the
     oracle can value-check the zero."""
-    from ..functions.caching import tag_intermediates
-
     docs = load(spark, sf_dir, "documents")
     changed_ids = docs.select("doc_id").filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1).isin("0", "1")
@@ -370,7 +366,7 @@ def q269_incremental_signature_maintenance(
             F.col("n_mismatch").cast("bigint").alias("n_mismatch"),
         )
     )
-    return tag_intermediates(out, full_sigs)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -533,9 +529,8 @@ def q271_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(out, st)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_near_duplicates
+from ..operators.dedup import minhash_near_duplicates, minhash_signature_table
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .registry import query
@@ -102,16 +102,14 @@ def q273_dup_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage truncation — round-12 eviction-hardening, the
     q226/q250/q331 doctrine: with full lineage an eviction multiplies
     minhash recomputes across the three consumers)."""
-    from ..functions.caching import release_intermediates
-
     docs = load(spark, sf_dir, "documents")
-    raw = minhash_near_duplicates(docs, jaccard_threshold=0.5)
+    sig = minhash_signature_table(docs).persist()
     e = (
-        raw
+        minhash_near_duplicates(docs, jaccard_threshold=0.5, signatures=sig)
         .select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
         .localCheckpoint(eager=True)
     )
-    release_intermediates(raw)
+    sig.unpersist()
     deg = (
         e.select(F.col("a").alias("doc_id"))
         .unionAll(e.select(F.col("b").alias("doc_id")))

@@ -293,8 +293,6 @@ def q287_type_hour_mutual_information(spark: SparkSession, sf_dir: str) -> DataF
     one map-side-combined pass regardless of stream size. The
     contingency table is persisted: its four consumers would
     otherwise re-run the events scan."""
-    from ..functions.caching import tag_intermediates
-
     ev = load(spark, sf_dir, "events")
     th = (
         ev.select("event_type", F.hour("ts").alias("hr"))
@@ -352,7 +350,7 @@ def q287_type_hour_mutual_information(spark: SparkSession, sf_dir: str) -> DataF
             ),
         )
     )
-    return tag_intermediates(out, th)
+    return out
 
 
 # ---------------------------------------------------------------------------

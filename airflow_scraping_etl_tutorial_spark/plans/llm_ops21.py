@@ -35,7 +35,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.dedup import _hex60, word_shingles
 from ..sources.tables import load
 from .llm_ops import _sql_hex60
@@ -284,7 +283,7 @@ def q306_fold_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("fold_a", "fold_b")
     )
-    return tag_intermediates(out, sh)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.dedup import word_shingles
 from ..operators.text import tokens
 from ..sources.tables import load
@@ -149,7 +148,7 @@ def q309_phrase_query_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("phrase", "n_docs_phrase", "n_docs_substring", "n_occurrences")
         .orderBy("phrase")
     )
-    return tag_intermediates(out, big)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -382,4 +381,4 @@ def q311_greedy_source_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("gain").cast("bigint").alias("marginal_shingles"),
         F.sum("gain").over(wr).cast("bigint").alias("cumulative_shingles"),
     ).orderBy("rank")
-    return tag_intermediates(out, sh)
+    return out

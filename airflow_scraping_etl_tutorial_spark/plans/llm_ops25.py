@@ -167,9 +167,8 @@ def q317_markov_absorption_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = outs[0]
     for o in outs[1:]:
         res = res.unionByName(o)
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(res.orderBy("from_state", "k"), p, states)
+    return res.orderBy("from_state", "k")
 
 
 # ---------------------------------------------------------------------------
@@ -267,9 +266,8 @@ def q318_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("k").cast("int"), "sum_ln_centinats", "alpha_micro"
     ).orderBy("k")
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(out, ranked)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -425,6 +423,5 @@ def q319_follow_leader_regret(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day")
     )
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(out, scored)
+    return out

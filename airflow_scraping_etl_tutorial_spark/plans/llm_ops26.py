@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.sketches import (
     HLL_M,
     SQL_HLL_EST,
@@ -158,7 +157,7 @@ def q320_rolling_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("window_end")
     )
-    return tag_intermediates(out, expanded)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -259,4 +258,4 @@ def q321_markov_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("a", "b", "c")
     )
-    return tag_intermediates(out, tri)
+    return out

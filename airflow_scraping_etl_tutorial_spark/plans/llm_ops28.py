@@ -329,6 +329,5 @@ def q326_bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rk").cast("int").alias("p_rank"),
         (F.col("rk") <= F.col("k_star")).alias("rejected"),
     ).orderBy("p_rank", "event_type")
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(out, u)
+    return out

@@ -173,9 +173,8 @@ def q329_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("decile")
     )
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(out, bins)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -308,6 +307,5 @@ def q330_reliability_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bin")
     )
-    from ..functions.caching import tag_intermediates
 
-    return tag_intermediates(out, folds)
+    return out

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops9 import _SQL_BM25_CTES, _bm25_doc_scores
 from .registry import query
@@ -158,7 +157,7 @@ def q332_retrieval_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return tag_intermediates(out, bm)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +253,7 @@ def q333_retrieval_precision_recall(
         )
         .orderBy("k")
     )
-    return tag_intermediates(out, ranked)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -365,7 +364,7 @@ def q334_rank_correlation_kendall(
             "CAST(1000000 - (6 * sum_d2 * 1000000) div 7980 AS BIGINT)"
         ).alias("spearman_ppm"),
     )
-    return tag_intermediates(out, both_)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -527,7 +526,7 @@ def q335_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("emd_ppm"), "nationkey", "mktsegment")
         .limit(20)
     )
-    return tag_intermediates(out, gl)
+    return out
 
 
 # ---------------------------------------------------------------------------

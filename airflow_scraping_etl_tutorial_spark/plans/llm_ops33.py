@@ -38,8 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
-from ..operators.dedup import minhash_near_duplicates
+from ..operators.dedup import minhash_near_duplicates, minhash_signature_table
 from ..operators.text import tokens
 from ..sources.tables import load
 from .llm_ops import _sql_hex60, _sql_minhash_pairs
@@ -104,16 +103,16 @@ def q337_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction; the q68 max_bucket_size cap bounds any hot
     vertex). Nodes with degree < 2 are excluded (a triangle needs
     two incident edges)."""
-    from ..functions.caching import release_intermediates
-
     docs = load(spark, sf_dir, "documents")
     # localCheckpoint (disk-backed lineage truncation) instead of
     # persist: the edge set feeds FOUR consumers (three triangle-join
     # aliases + the degree count) — round-12 eviction-hardening
     # (q226/q250/q331 doctrine).
-    raw = minhash_near_duplicates(docs, jaccard_threshold=0.5)
-    pairs = raw.localCheckpoint(eager=True)
-    release_intermediates(raw)
+    sig = minhash_signature_table(docs).persist()
+    pairs = minhash_near_duplicates(
+        docs, jaccard_threshold=0.5, signatures=sig
+    ).localCheckpoint(eager=True)
+    sig.unpersist()
     p1, p2, p3 = pairs.alias("p1"), pairs.alias("p2"), pairs.alias("p3")
     tri = (
         p1.join(p2, F.col("p2.doc_id_a") == F.col("p1.doc_id_b"))
@@ -354,7 +353,7 @@ def q338_stupid_backoff_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    return tag_intermediates(out, d, c1)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -670,4 +669,4 @@ def q341_tfidf_source_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score",
         F.col("rnk").cast("int").alias("rnk"),
     ).orderBy("source", "rnk")
-    return tag_intermediates(out, tok)
+    return out

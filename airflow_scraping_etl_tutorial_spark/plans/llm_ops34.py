@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops19 import _spark_gate, _sql_gate
 from .llm_ops33 import _SQL_WRS_KEYED, _WRS_K, _wrs_keyed
@@ -197,7 +196,7 @@ def q342_reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("jac_ppm"), "part_a")
         .limit(20)
     )
-    return tag_intermediates(out, tok, jac)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -531,4 +530,4 @@ def q345_weighted_sample_merge_proof(
             .alias("merge_exact"),
         )
     )
-    return tag_intermediates(out, gk)
+    return out

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.text import STOPWORDS, language_id
 from ..sources.tables import load
 from .llm_ops import _sql_stop_ratio
@@ -267,7 +266,7 @@ def q347_markov_next_event_accuracy(
             ).alias("lift_ppm"),
         )
     )
-    return tag_intermediates(out, nxt)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -356,4 +355,4 @@ def q348_session_likelihood_outliers(
         .orderBy(F.desc("mean_surprisal_micro"), "user_id")
         .limit(20)
     )
-    return tag_intermediates(out, nxt)
+    return out

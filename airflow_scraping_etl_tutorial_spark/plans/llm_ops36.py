@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -184,7 +183,7 @@ def q349_randomized_response_debias(
         )
         .orderBy("event_type")
     )
-    return tag_intermediates(out, types, coined)
+    return out
 
 
 # ---------------------------------------------------------------------------

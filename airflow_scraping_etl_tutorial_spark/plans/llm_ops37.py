@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.text import STOPWORDS, language_id, tokens
 from ..sources.tables import load
 from .llm_ops import _sql_stop_ratio
@@ -557,7 +556,7 @@ def q355_novel_ngram_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         branches.append(branch)
     out = branches[0].union(branches[1]).union(branches[2]).orderBy("gram_n")
-    return tag_intermediates(out, src)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.similarity import as_double, bucket_keys, dot
 from ..operators.text import STOPWORDS, language_id, tokens
 from ..sources.tables import load
@@ -271,7 +270,7 @@ def q357_data_scaling_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("train_pct")
     )
-    return tag_intermediates(out, lab, c1k, curve)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -562,4 +561,4 @@ def q359_embedding_decontamination(
         )
         .orderBy("tau_ppm")
     )
-    return tag_intermediates(out, base)
+    return out

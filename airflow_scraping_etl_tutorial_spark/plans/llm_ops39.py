@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.text import STOPWORDS, language_id, tokens
 from ..sources.tables import load
 from .llm_ops import _sql_stop_ratio

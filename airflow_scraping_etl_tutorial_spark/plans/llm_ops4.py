@@ -133,7 +133,7 @@ def q154_semdedup_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.select("vec_id", as_double(F.col("embedding")).alias("_e"))
     )
     # cells feeds both sides of the within-cell self-join AND the final
-    # report join — persist (operator-tag protocol) or the k-means +
+    # report join — persist it or the k-means +
     # assignment pipeline runs three times. Assignment is the map-side
     # argmax fold (assign_argmax_cosine) — no (n x 8) shuffle.
     # r14 (guide §1.2 per-task work): the L2 norm is materialized ONCE
@@ -170,7 +170,6 @@ def q154_semdedup_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_dropped", F.lit(1))
     )
-    from ..functions.caching import tag_intermediates
 
     out = (
         cells.join(dropped, "vec_id", "left")
@@ -184,7 +183,7 @@ def q154_semdedup_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("centroid_id")
     )
-    return tag_intermediates(out, cells)
+    return out
 
 
 # ---------------------------------------------------------------------------

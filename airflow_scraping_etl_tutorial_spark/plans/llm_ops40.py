@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops19 import _spark_gate, _sql_gate
 from .registry import query
@@ -147,7 +146,7 @@ def q363_sprt_early_stopping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("accept_h0")
         .alias("decision"),
     )
-    return tag_intermediates(out, cum)
+    return out
 
 
 # ---------------------------------------------------------------------------

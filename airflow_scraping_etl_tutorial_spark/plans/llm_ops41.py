@@ -380,7 +380,6 @@ def q368_confusion_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = rows_.agg(F.count(F.lit(1)).cast("bigint").alias("n_rows")).crossJoin(
         cols_.agg(F.count(F.lit(1)).cast("bigint").alias("n_cols"))
     )
-    from ..functions.caching import tag_intermediates
 
     contrib = contrib.persist()
     stats = contrib.agg(
@@ -422,4 +421,4 @@ def q368_confusion_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             "worst_contrib_micro",
         )
     )
-    return tag_intermediates(out, contrib)
+    return out

@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.dedup import minhash_near_duplicates
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
@@ -192,7 +191,7 @@ def q369_shared_span_localization(
         )
         .limit(20)
     )
-    return tag_intermediates(out, pairs)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -499,4 +498,4 @@ def q371_median_confidence_interval(
         )
         .orderBy("event_type")
     )
-    return tag_intermediates(out, ranked)
+    return out

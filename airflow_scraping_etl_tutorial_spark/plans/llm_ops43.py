@@ -32,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..operators.similarity import as_double, dot
 from ..sources.tables import load
 from .llm_ops import _sql_cosine
@@ -182,7 +181,7 @@ def q372_kcenter_coreset_picks(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     out = rows[0].union(rows[1]).union(rows[2]).orderBy("k")
-    return tag_intermediates(out, d1, d2)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +359,7 @@ def q373_split_balance_chisquare(
         )
         .orderBy("split")
     )
-    return tag_intermediates(out, scored)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -37,7 +37,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .registry import query
@@ -118,10 +117,10 @@ def q375_dup_graph_lang_modularity(
     everything after is two id-keyed joins to a 2-column lang map and
     |langs|-row arithmetic."""
     docs = load(spark, sf_dir, "documents")
-    from ..functions.caching import release_intermediates
-    from ..operators.dedup import minhash_near_duplicates
+    from ..operators.dedup import minhash_near_duplicates, minhash_signature_table
 
-    pairs = minhash_near_duplicates(docs, jaccard_threshold=0.5)
+    sig = minhash_signature_table(docs).persist()
+    pairs = minhash_near_duplicates(docs, jaccard_threshold=0.5, signatures=sig)
     # lp and scored are localCheckpointed (disk-backed, lineage-
     # TRUNCATED) rather than persist()ed — round-12 eviction-hardening
     # (the q226/q250/q331 doctrine): lp feeds 3 consumers and with
@@ -143,7 +142,7 @@ def q375_dup_graph_lang_modularity(
         )
         .localCheckpoint(eager=True)
     )
-    release_intermediates(pairs)
+    sig.unpersist()
     m1 = lp.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     ends = lp.select(
         F.col("doc_id_a").alias("node"), F.col("lang_a").alias("lang")
@@ -207,7 +206,7 @@ def q375_dup_graph_lang_modularity(
         )
         .orderBy("lang")
     )
-    return tag_intermediates(out, scored)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -336,7 +335,7 @@ def q376_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("digit")
     )
-    return tag_intermediates(out, scored)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .llm_ops19 import _spark_gate, _sql_gate
@@ -233,7 +232,7 @@ def q378_fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("field")
     )
-    return tag_intermediates(out, f)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -351,7 +350,7 @@ def q379_selection_regression_to_mean(
         )
         .orderBy("cohort")
     )
-    return tag_intermediates(out, tagged)
+    return out
 
 
 # ---------------------------------------------------------------------------

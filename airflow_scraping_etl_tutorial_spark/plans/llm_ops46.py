@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .registry import query
@@ -161,7 +160,7 @@ def q381_ldiversity_tcloseness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(CASE WHEN l_diversity < 3 THEN 1 ELSE 0 END AS INT)"
         ).alias("violates_l3"),
     ).orderBy("lang", "wclass")
-    return tag_intermediates(out, d)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -267,7 +266,7 @@ def q382_ttl_cache_hit_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("ttl_us")
     )
-    return tag_intermediates(out, gaps)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -390,7 +389,6 @@ def q383_hub_removal_robustness(
 
     cur = e
     steps = [stat(cur, 0, None)]
-    kept = [cur]
     for k in (1, 2, 3):
         nodes = cur.select(F.col("a").alias("node")).unionAll(
             cur.select(F.col("b").alias("node"))
@@ -416,7 +414,6 @@ def q383_hub_removal_robustness(
             # string before this checkpoint
             .localCheckpoint()
         )
-        kept.append(nxt)
         steps.append(stat(nxt, k, hub))
         cur = nxt
     m0 = e.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
@@ -437,4 +434,4 @@ def q383_hub_removal_robustness(
         )
         .orderBy("k")
     )
-    return tag_intermediates(out, *kept)
+    return out

@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -290,4 +289,4 @@ def q386_rapid_repeat_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("days_apart", "key_a", "key_b")
         .limit(20)
     )
-    return tag_intermediates(out, orders, pairs)
+    return out

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -117,7 +116,7 @@ def q387_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cohort_week", "offset_weeks")
     )
-    return tag_intermediates(out, uw)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +253,7 @@ def q388_topk_leaderboard_churn(
             .alias("max_rank_shift"),
         )
     )
-    return tag_intermediates(out, ev, ta, tb)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -374,4 +373,4 @@ def q389_activity_max_drawdown(
         )
         .orderBy("event_type")
     )
-    return tag_intermediates(out, dd)
+    return out

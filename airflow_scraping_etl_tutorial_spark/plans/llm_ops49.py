@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops19 import _spark_gate, _sql_gate
 from .registry import query
@@ -182,7 +181,7 @@ def q390_median_mad_anomaly_days(
         )
         .orderBy("event_type")
     )
-    return tag_intermediates(out, daily, dev, flagged)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -449,4 +448,4 @@ def q392_shipping_lag_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("priority")
     )
-    return tag_intermediates(out, lag_)
+    return out

@@ -231,8 +231,6 @@ def q186_greedy_vs_transitive_dedup(spark: SparkSession, sf_dir: str) -> DataFra
     is how a pipeline decides whether that price is acceptable. Both
     verdicts join the same digest-keyed pair evidence; Spark runs the
     real label propagation for the transitive side."""
-    from ..functions.caching import tag_intermediates
-
     docs = load(spark, sf_dir, "documents")
     # pairs feeds the greedy verdict AND seeds the label propagation —
     # persist so the candidate-join + verify pass runs once.
@@ -261,7 +259,7 @@ def q186_greedy_vs_transitive_dedup(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .orderBy("lang")
     )
-    return tag_intermediates(out, pairs)
+    return out
 
 
 # ---------------------------------------------------------------------------

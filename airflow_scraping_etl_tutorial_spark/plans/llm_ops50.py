@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -364,4 +363,4 @@ def q395_deletion_cascade_impact(
             "deleted_ppm"
         ),
     ).orderBy("tbl")
-    return tag_intermediates(out, victims, vorders)
+    return out

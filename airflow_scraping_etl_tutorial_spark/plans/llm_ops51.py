@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -148,7 +147,7 @@ def q396_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey", "price_c", "size")
         .orderBy("price_c", "size", "p_partkey")
     )
-    return tag_intermediates(out, pts)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -319,7 +318,7 @@ def q397_range_split_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("partition_id")
     )
-    return tag_intermediates(out, keyed, cumb, keyrank)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -427,4 +426,4 @@ def q398_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cls")
     )
-    return tag_intermediates(out, cust)
+    return out

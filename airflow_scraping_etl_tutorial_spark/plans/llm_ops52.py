@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -205,7 +204,7 @@ def q399_open_order_concurrency(
         )
         .orderBy("year")
     )
-    return tag_intermediates(out, span, running, filled)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -313,7 +312,7 @@ def q400_stockout_running_balance(
         .orderBy("min_balance", "part")
         .limit(20)
     )
-    return tag_intermediates(out, run)
+    return out
 
 
 # ---------------------------------------------------------------------------

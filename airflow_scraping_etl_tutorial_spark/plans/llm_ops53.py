@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .registry import query
@@ -181,7 +180,7 @@ def q402_cross_source_dup_matrix(
         )
         .orderBy("source_a", "source_b")
     )
-    return tag_intermediates(out, sp)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -289,7 +288,7 @@ def q403_daily_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             " - CAST(sx AS DECIMAL(38,0)) * sx) END AS BIGINT)"
         ).alias("beta_abs_ppm"),
     ).orderBy("lag")
-    return tag_intermediates(out, daily)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -417,4 +416,4 @@ def q404_frequent_brand_triples(
         .orderBy(F.desc("support"), "b1", "b2", "b3")
         .limit(20)
     )
-    return tag_intermediates(out, ob, pair_support)
+    return out

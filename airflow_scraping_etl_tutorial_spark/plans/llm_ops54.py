@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -173,7 +172,7 @@ def q405_histogram_selectivity_error(
         )
         .orderBy("k")
     )
-    return tag_intermediates(out, v)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -372,4 +371,4 @@ def q407_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inc_ltv_u",
         F.sum("inc_ltv_u").over(ww).cast("bigint").alias("cum_ltv_u"),
     ).orderBy("age_weeks")
-    return tag_intermediates(out, o, first_o)
+    return out

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -246,7 +245,7 @@ def q408_equidepth_selectivity_error(
         )
         .orderBy("k")
     )
-    return tag_intermediates(out, v, coarse, ccum, bounds)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -368,7 +367,7 @@ def q409_feature_hash_collisions(
             f" div (2 * {_FH_BUCKETS})) END AS BIGINT)"
         ).alias("obs_over_exp_ppm"),
     )
-    return tag_intermediates(out, vocab)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -504,4 +503,4 @@ def q410_zipf_tail_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("rank_w")
     )
-    return tag_intermediates(out, cells)
+    return out

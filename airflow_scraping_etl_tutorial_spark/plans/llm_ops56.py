@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -189,7 +188,7 @@ def q411_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
             " * 1000000 div n AS BIGINT)"
         ).alias("accuracy_ppm"),
     )
-    return tag_intermediates(out, scored)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -284,7 +283,7 @@ def q412_hash_partition_balance(
         )
         .orderBy("n_partitions")
     )
-    return tag_intermediates(out, keyed)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -418,4 +417,4 @@ def q413_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return tag_intermediates(out, full_)
+    return out

@@ -32,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -367,4 +366,4 @@ def q416_event_cooccurrence_lift(
         )
         .orderBy("type_a", "type_b")
     )
-    return tag_intermediates(out, ud)
+    return out

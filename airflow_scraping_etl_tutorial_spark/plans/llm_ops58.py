@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops19 import _spark_gate, _sql_gate
 from .registry import query
@@ -153,7 +152,7 @@ def q417_simpson_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("stratum")
     )
-    return tag_intermediates(out, per)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -360,4 +359,4 @@ def q419_peak_window_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return tag_intermediates(out, hourly, windows)
+    return out

@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -139,7 +138,7 @@ def q420_fulfillment_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("month")
     )
-    return tag_intermediates(out, pts)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -322,7 +321,7 @@ def q421_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean_chunk_toks_milli"
         ),
     )
-    return tag_intermediates(out, chunks)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -440,4 +439,4 @@ def q422_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("age_bucket")
     )
-    return tag_intermediates(out, span, open_)
+    return out

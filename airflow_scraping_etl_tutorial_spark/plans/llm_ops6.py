@@ -415,7 +415,6 @@ def q209_minhash_param_sensitivity(spark: SparkSession, sf_dir: str) -> DataFram
     bucket joins, not two signature builds (at 100 TB the signature
     pass dominates). Null signatures (zero-shingle docs) drop on both
     sides as in q68."""
-    from ..functions.caching import tag_intermediates
     from ..operators.dedup import minhash_signature_table
 
     docs = load(spark, sf_dir, "documents")
@@ -438,7 +437,7 @@ def q209_minhash_param_sensitivity(spark: SparkSession, sf_dir: str) -> DataFram
             "n_verified_2band"
         ),
     )
-    return tag_intermediates(a4.crossJoin(a2), sig)
+    return a4.crossJoin(a2)
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -154,7 +153,7 @@ def q423_concentration_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("month")
     )
-    return tag_intermediates(out, pts)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -314,7 +313,7 @@ def q424_alert_run_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    return tag_intermediates(out, daily, dev, runs)
+    return out
 
 
 # ---------------------------------------------------------------------------

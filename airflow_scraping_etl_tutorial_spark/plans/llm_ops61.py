@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .registry import query
@@ -158,7 +157,7 @@ def q426_dedup_winner_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("winner_source", "loser_source")
     )
-    return tag_intermediates(out, wl)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -276,7 +275,7 @@ def q427_retention_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("offset_weeks")
     )
-    return tag_intermediates(out, ratios)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -403,4 +402,4 @@ def q428_change_contributors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.abs(F.col("delta_u")).desc(), "custkey")
         .limit(10)
     )
-    return tag_intermediates(out, mc, deltas)
+    return out

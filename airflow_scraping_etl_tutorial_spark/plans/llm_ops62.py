@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -109,7 +108,7 @@ def q429_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
-    return tag_intermediates(out, toks)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -230,7 +229,7 @@ def q430_keyspace_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_after_key",
         )
     )
-    return tag_intermediates(out, ks, all_gaps)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -343,4 +342,4 @@ def q431_popularity_baseline_hitrate(
             ).alias("hit_ppm"),
         )
     )
-    return tag_intermediates(out, ob)
+    return out

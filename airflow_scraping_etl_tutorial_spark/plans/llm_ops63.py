@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..sources.tables import load
 from .registry import query
 
@@ -295,4 +294,4 @@ def q434_effort_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("wclass")
     )
-    return tag_intermediates(out, firstp, effort)
+    return out

@@ -169,7 +169,6 @@ def q435_littles_law_flow_identity(spark: SparkSession, sf_dir: str) -> DataFram
         .alias("sum_duration_days"),
         (F.max("e_day") - F.min("s_day")).cast("bigint").alias("horizon_days"),
     )
-    from ..functions.caching import tag_intermediates
 
     out = (
         stats.join(sweep, "pri")
@@ -195,7 +194,7 @@ def q435_littles_law_flow_identity(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .orderBy("priority")
     )
-    return tag_intermediates(out, iv)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -285,7 +284,6 @@ def q436_systematic_sample_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_sample").cast("bigint").alias("n_pop"),
         F.sum("sum_cents").cast("bigint").alias("pop_sum"),
     )
-    from ..functions.caching import tag_intermediates
 
     out = (
         per.crossJoin(F.broadcast(pop))
@@ -317,7 +315,7 @@ def q436_systematic_sample_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("sample_offset")
     )
-    return tag_intermediates(out, per)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -177,13 +177,11 @@ def q216_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     real error. Everything is integer arithmetic; both engines agree
     bit-for-bit.
 
-    Scale: ONE token-count aggregate (map-side combined, persisted and
-    operator-tagged) feeds the 4 counter rows (64-row aggregates) and
+    Scale: ONE token-count aggregate (map-side combined, persisted)
+    feeds the 4 counter rows (64-row aggregates) and
     the exact top-20 (TakeOrdered) — without the persist the text scan
     and token shuffle run 5x; the counter tables broadcast to the
     probe join."""
-    from ..functions.caching import tag_intermediates
-
     docs = load(spark, sf_dir, "documents")
     cnts = (
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
@@ -215,7 +213,7 @@ def q216_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         est.alias("cm_estimate"),
         (est - F.col("c").cast("bigint")).alias("overestimate"),
     ).orderBy(F.col("exact_count").desc(), "token")
-    return tag_intermediates(out, cm)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -406,14 +404,11 @@ def q219_join_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each edge is ONE per-key count aggregate (map-side
     combined, the same shuffle the downstream join would perform at
-    audit size), persisted and operator-tagged so the totals rollup
+    audit size), persisted so the totals rollup
     and the TakeOrdered(1) top key both read it without re-scanning
     the fact table (AQE does not exchange-reuse across these two
     consumers — measured)."""
-    from ..functions.caching import tag_intermediates
-
     frames = []
-    cached = []
     for edge, table, col in _SKEW_EDGES:
         t = load(spark, sf_dir, table)
         counts = (
@@ -421,7 +416,6 @@ def q219_join_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("top_cnt"))
             .persist()
         )
-        cached.append(counts)
         tot = counts.agg(
             F.sum("top_cnt").cast("bigint").alias("total"),
             F.count(F.lit(1)).cast("bigint").alias("n_keys"),
@@ -447,7 +441,7 @@ def q219_join_key_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    return tag_intermediates(out.orderBy("edge"), *cached)
+    return out.orderBy("edge")
 
 
 # ---------------------------------------------------------------------------

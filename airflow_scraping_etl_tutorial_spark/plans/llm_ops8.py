@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_near_duplicates
+from ..operators.dedup import minhash_near_duplicates, minhash_signature_table
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
 from .registry import query
@@ -103,11 +103,9 @@ def q225_prefix_filter_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens, hot tokens (stopwords) never enter the index, the same
     economics `max_shingle_df` buys q70 but guarantee-preserving.
     Verification touches candidates only."""
-    from ..functions.caching import tag_intermediates
-
     docs = load(spark, sf_dir, "documents")
     # tp feeds the df table, the rank join, and the verify sets; pref
-    # self-joins — persist both (persist-and-tag doctrine, cf. q216).
+    # self-joins — persist both (cf. q216).
     tp = (
         docs.select(F.col("doc_id"), F.explode(F.split("text", " ")).alias("tok"))
         .distinct()
@@ -159,7 +157,7 @@ def q225_prefix_filter_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= _PF_T)
         .orderBy("doc_id_a", "doc_id_b")
     )
-    return tag_intermediates(out, tp, pref)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -237,14 +235,12 @@ def q226_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan changes). With the checkpoint, a re-read is at worst a
     # local-disk read and the degraded mode is linear, not
     # multiplicative (operators/cluster.py doctrine).
-    from ..functions.caching import release_intermediates
-
-    raw_pairs = minhash_near_duplicates(docs, jaccard_threshold=0.5)
-    pairs = raw_pairs.localCheckpoint(eager=True)
-    # lineage is truncated: the operator's internal signature cache
-    # can be dropped immediately instead of riding along to the
-    # caller's release path
-    release_intermediates(raw_pairs)
+    sig = minhash_signature_table(docs).persist()
+    pairs = minhash_near_duplicates(
+        docs, jaccard_threshold=0.5, signatures=sig
+    ).localCheckpoint(eager=True)
+    # lineage is truncated: the signature cache can be dropped now
+    sig.unpersist()
     e = pairs.select(
         F.col("doc_id_a").alias("s"), F.col("doc_id_b").alias("d")
     ).unionByName(
@@ -577,7 +573,6 @@ def q230_frame_hash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle replays the byte-slice frames on hex strings and the
     digest Jaccard exactly (q94 proved the frame-slice parity)."""
-    from ..functions.caching import tag_intermediates
     from ..operators.multimodal import documents_as_media, frame_sample_stub
 
     docs = load(spark, sf_dir, "documents")
@@ -616,7 +611,7 @@ def q230_frame_hash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("media_id_a", "media_id_b")
     )
-    return tag_intermediates(out, fr)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -714,7 +709,6 @@ def q231_vocab_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer harmonic denominator, quantized-LN small-range
     correction); the register table is built ONCE per language and
     persisted for the per-language and per-pair-union estimates."""
-    from ..functions.caching import tag_intermediates
     from .llm_ops7 import hll_estimate_agg, hll_registers_by
 
     docs = load(spark, sf_dir, "documents")
@@ -775,7 +769,7 @@ def q231_vocab_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang_a", "lang_b")
     )
-    return tag_intermediates(out, tl, regs)
+    return out
 
 
 # ---------------------------------------------------------------------------

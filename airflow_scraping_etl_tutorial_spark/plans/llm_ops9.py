@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.caching import tag_intermediates
 from ..functions.compare import det_round
 from ..operators.dedup import shingle_hashes
 from ..operators.text import tokens
@@ -414,7 +413,7 @@ def q237_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("containment") >= _CONT_T)
         .orderBy("doc_id_a", "doc_id_b")
     )
-    return tag_intermediates(out, ex)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -500,7 +499,7 @@ def q238_source_term_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source_a", "source_b")
     )
-    return tag_intermediates(out, tf)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -840,7 +839,7 @@ def q242_item_cooccurrence_affinity(spark: SparkSession, sf_dir: str) -> DataFra
         .orderBy(F.desc("jaccard"), "item_a", "item_b")
         .limit(20)
     )
-    return tag_intermediates(out, ui, u2)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1029,7 +1028,7 @@ def q244_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    return tag_intermediates(out, bi)
+    return out
 
 
 # ---------------------------------------------------------------------------

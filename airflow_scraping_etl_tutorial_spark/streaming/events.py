@@ -211,64 +211,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The SAME running per-user accumulator as stateful_user_totals,
-    on Spark 4's transformWithStateInPandas — the successor API to
-    applyInPandasWithState (SPARK-46815): state is named and typed per
-    variable (getValueState) instead of one positional tuple, the
-    processor is an object with an explicit lifecycle (init/close),
-    and timers/TTL come from the handle rather than a timeoutConf
-    enum. Requires the RocksDB state store provider (the only backend
-    transformWithState supports) — the test sets
-    ``spark.sql.streaming.stateStore.providerClass`` for its query.
-
-    ENVIRONMENT-GATED like Avro/Kafka: the transformWithState state
-    server speaks protobuf, so the PYTHON ``protobuf`` package must be
-    importable in the driver env (its absence crashes the planning-
-    time driver worker with "cannot import name 'descriptor' from
-    'google.protobuf'" inside STREAMING_PYTHON_RUNNER_INITIALIZATION_
-    FAILURE — probed in this sandbox, package absent). The test skips
-    unless ``google.protobuf`` imports and asserts the full
-    stream==batch contract when it does.
-
-    Kept alongside the applyInPandasWithState form deliberately: both
-    APIs ship in Spark 4.1 and a user migrating real pipelines needs
-    the operator proven on each. Output contract is identical, so the
-    stream==batch equivalence test runs the same assertions against
-    both.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, v double")
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            n, v = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._totals.update((n, v))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [v]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_ttl_hits(
     events: DataFrame,
     ttls_us: tuple[tuple[str, int], ...],

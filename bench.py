@@ -173,26 +173,7 @@ def _gate_violations(
     ]
 
 
-def _steal_probe() -> float:
-    """Single-thread pure-Python probe: wall seconds for a fixed
-    CPU-bound loop. On a healthy box this is a stable constant; under
-    hypervisor CPU-steal it degrades 2-4x with near-zero process load
-    (measured r14 batch 5: 0.37 s quiet -> 1.3 s during steal bursts
-    that also held an unchanged binary tree at 2.4 s <-> 42.5 s). A
-    probe reading taken next to a flagged re-measure makes
-    rc-1-from-contention distinguishable from rc-1-from-code in the
-    artifact itself (r14 VERDICT item 7). Diagnostic only — it feeds
-    no gate decision (threshold and retry cap unchanged)."""
-    t0 = time.perf_counter()
-    s = 0
-    for i in range(2_000_000):
-        s += i * i
-    return time.perf_counter() - t0
-
-
-def _timed_with_retry(
-    run_once, ref: float | None, settle, probe=None
-) -> tuple[float, int]:
+def _timed_with_retry(run_once, ref: float | None, settle) -> tuple[float, int]:
     """Best-of-two timed runs, plus self-healing re-measures: while the
     running best lands where the gate would flag it (>2x its committed
     reference AND >0.5 s over — the _gate_violations predicate), settle
@@ -217,59 +198,32 @@ def _timed_with_retry(
     count is CAPPED at two and frozen at that cap by
     tests/test_bench_gate.py: this is the second loosening of the gate
     in two rounds (5x band -> gate threshold, 1 retry -> 2); if the
-    gate still flags, investigate the box — do not add a third retry.
-
-    `probe` (optional, r15): a zero-arg callable invoked immediately
-    BEFORE the settle and AFTER the re-measure of every retry — the
-    bench passes a recorder around `_steal_probe` so each retried
-    query's artifact entry carries contemporaneous host-health
-    readings. Never called on a clean pass; never affects timing or
-    the gate decision (additions-only per r14 VERDICT item 7)."""
+    gate still flags, investigate the box — do not add a third retry."""
     t = min(run_once(), run_once())
     retries = 0
     for _ in range(2):
         if not (ref is not None and _gate_violations({"q": t}, {"q": ref})):
             break
-        if probe is not None:
-            probe()
         settle()
         t = min(t, run_once())
-        if probe is not None:
-            probe()
         retries += 1
     return t, retries
 
 
 def _retry_audit(
-    name: str,
-    t: float,
-    retries: int,
-    refs: dict[str, float],
-    probe_sec: list[float] | None = None,
-    probe_ref_sec: float | None = None,
+    name: str, t: float, retries: int, refs: dict[str, float]
 ) -> dict | None:
     """The per-query "gate_retries" artifact entry. None for a clean
     pass (no retries). rescued=False means the capped re-measures did
     NOT bring the timing under the gate — the run is about to exit 1,
     and the field must not claim a heal that didn't happen (r13
-    ADVICE, renamed from the int-valued "self_healed").
-
-    probe_sec / probe_ref_sec (r15, additions-only): the single-thread
-    steal-probe readings taken around each re-measure and the run-start
-    reference reading — a retried entry whose probe ratio is >> 1 is
-    contention, not code (r14 VERDICT item 7). Omitted when no probe
-    ran (keeps the r13/r14 entry shape for probe-less callers)."""
+    ADVICE, renamed from the int-valued "self_healed")."""
     if not retries:
         return None
-    entry: dict = {
+    return {
         "retries": retries,
         "rescued": not _gate_violations({name: t}, {name: refs[name]}),
     }
-    if probe_sec:
-        entry["probe_sec"] = [round(p, 3) for p in probe_sec]
-        if probe_ref_sec is not None:
-            entry["probe_ref_sec"] = round(probe_ref_sec, 3)
-    return entry
 
 
 def main() -> None:
@@ -280,18 +234,16 @@ def main() -> None:
     specs = all_queries()
 
     def run(name: str) -> float:
-        # isolate queries: drain operator-tagged persisted intermediates
-        # (q68's signature cache etc. — the documented release path for
-        # run-a-query-then-clean loops), the RDD blocks behind any
-        # localCheckpoint (which neither of the other two paths frees —
-        # r12 ADVICE), plus a catalog-wide clearCache, so one query's
-        # cache/GC pressure can't skew the next
+        # isolate queries: unpersist every persisted intermediate Spark
+        # tracks (q68's signature cache etc.) and clear the cache manager,
+        # then free the RDD blocks behind any localCheckpoint (which
+        # clearCache does not — r12 ADVICE), so one query's cache/GC
+        # pressure can't skew the next
         release_session_intermediates(spark, blocking=True)
         # blocking=True: async removal work must not bleed into the
         # timed region that follows (A/B-checked r13: interleaved
         # mins are mode-identical, so the determinism is free).
         release_session_checkpoints(spark, blocking=True)
-        spark.catalog.clearCache()
         t0 = time.perf_counter()
         specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
@@ -304,7 +256,7 @@ def main() -> None:
     # before their timed runs — the most codegen-heavy plan (the
     # minhash substrate) intermittently re-paid ~10 s of JIT inside a
     # timed run, a 5x phantom regression. Data-cache isolation is
-    # unchanged: release+clearCache still precedes EVERY run, so a
+    # unchanged: the release still precedes EVERY run, so a
     # timed run never reads another run's cached data.
     gate_active = (
         sf == "0.1" and os.environ.get("SPARK_GRAFT_BENCH_GATE", "1") != "0"
@@ -316,23 +268,13 @@ def main() -> None:
     )
     timings = {}
     gate_retries: dict[str, dict] = {}
-    # Run-start host-health reference for the retry probes (r14 VERDICT
-    # item 7). Taken once, before any query: if the whole run starts
-    # inside a steal burst the reference is itself elevated — the
-    # per-retry readings still show whether the box DEGRADED further at
-    # the flagged re-measures, which is the signal that matters.
-    probe_ref = _steal_probe() if gate_active else None
     for name in HEADLINE:
         run(name)
-        probe_readings: list[float] = []
         t, retries = _timed_with_retry(
-            lambda: run(name),
-            refs.get(name),
-            lambda: time.sleep(10),
-            probe=lambda: probe_readings.append(_steal_probe()),
+            lambda: run(name), refs.get(name), lambda: time.sleep(10)
         )
         timings[name] = round(t, 3)
-        entry = _retry_audit(name, t, retries, refs, probe_readings, probe_ref)
+        entry = _retry_audit(name, t, retries, refs)
         if entry is not None:
             gate_retries[name] = entry
 

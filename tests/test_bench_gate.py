@@ -137,61 +137,6 @@ def test_timed_with_retry_transient_self_heals_but_regression_fails():
     assert (t, n) == (50.0, 0)
 
 
-def test_retry_probe_runs_around_each_flagged_remeasure_only():
-    """r14 VERDICT item 7: the steal probe runs immediately before the
-    settle and after the re-measure of every retry — two readings per
-    retry — and NEVER on a clean pass. It must not add a retry or
-    change the timing/gate decision (additions-only)."""
-    ref = 2.0
-    probes: list[int] = []
-
-    # clean pass: zero probe calls
-    seq = iter([2.2, 2.0])
-    t, n = _timed_with_retry(
-        lambda: next(seq), ref, lambda: None, probe=lambda: probes.append(1)
-    )
-    assert (t, n) == (2.0, 0) and probes == []
-
-    # one rescue: exactly two probe readings (before settle, after run)
-    seq1 = iter([18.0, 18.5, 2.1])
-    t, n = _timed_with_retry(
-        lambda: next(seq1), ref, lambda: None, probe=lambda: probes.append(1)
-    )
-    assert (t, n) == (2.1, 1) and len(probes) == 2
-
-    # capped failure: two retries -> four readings, still only 4 runs
-    probes.clear()
-    calls: list[int] = []
-    t, n = _timed_with_retry(
-        lambda: calls.append(1) or 10.0,
-        ref,
-        lambda: None,
-        probe=lambda: probes.append(1),
-    )
-    assert (t, n) == (10.0, 2)
-    assert len(calls) == 4 and len(probes) == 4
-
-
-def test_retry_audit_probe_fields_are_optional_additions():
-    """Probe readings appear in a gate_retries entry only when a probe
-    actually ran; the r13/r14 entry shape is unchanged otherwise."""
-    refs = {"q": 2.0}
-    # no probe readings: exact legacy shape
-    assert _retry_audit("q", 10.0, 2, refs) == {"retries": 2, "rescued": False}
-    assert _retry_audit("q", 10.0, 2, refs, [], 0.4) == {
-        "retries": 2,
-        "rescued": False,
-    }
-    # with readings: additive fields, rounded
-    entry = _retry_audit("q", 10.0, 2, refs, [1.23456, 0.4], 0.411111)
-    assert entry == {
-        "retries": 2,
-        "rescued": False,
-        "probe_sec": [1.235, 0.4],
-        "probe_ref_sec": 0.411,
-    }
-
-
 def test_retry_audit_distinguishes_rescue_from_failed_rescue():
     """r13 ADVICE: the artifact field (renamed self_healed ->
     gate_retries) must not label a FAILED rescue as healed. A clean

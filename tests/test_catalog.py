@@ -90,8 +90,9 @@ def test_query_matches_oracle(spark, plan_duck, name):
             may_be_empty=name in MAY_BE_EMPTY,
         )
     finally:
-        # Drain what the entry persisted, as tools/check_correctness.py
-        # does: 468 entries' pinned blocks would otherwise stay in the
-        # session's JVM for the rest of the run.
+        # Drain the session's persisted intermediates and the entry's
+        # own checkpoints, as tools/check_correctness.py does: 468
+        # entries' pinned blocks would otherwise stay in the session's
+        # JVM for the rest of the run.
         release_session_intermediates(spark)
         release_session_checkpoints(spark, protect=kept)

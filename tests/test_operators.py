@@ -526,51 +526,53 @@ def test_salted_join_rejects_dim_preserving_how(spark):
         salted_join(fact, dim, "k", "k2", how="right")
 
 
-def test_release_intermediates_unpersists(spark, docs):
-    """Operators that persist() intermediates tag them on the result;
-    release_intermediates frees the cached blocks after materialization."""
-    from airflow_scraping_etl_tutorial_spark.functions.caching import (
-        release_intermediates,
-    )
-
-    spark.catalog.clearCache()
-    pairs = minhash_near_duplicates(docs, jaccard_threshold=0.5)
-    pairs.count()  # materialize (populates the persisted signature cache)
-    handles = list(getattr(pairs, "_sg_persisted_intermediates"))
-    assert handles and all(h.storageLevel.useMemory for h in handles)
-    released = release_intermediates(pairs, blocking=True)
-    assert released == len(handles)
-    assert all(not h.storageLevel.useMemory for h in handles)
-    assert release_intermediates(pairs) == 0  # idempotent: tags cleared
-
-
 def test_release_session_intermediates_survives_chaining(spark, docs):
     """The realistic caller chains .orderBy/.select on the operator's
-    return value, which drops the tag attribute — the session-scoped
-    registry still drains the persisted blocks (ADVICE r2)."""
+    return value and never holds the persisted signature table — the
+    session release still drains its blocks (ADVICE r2)."""
     from airflow_scraping_etl_tutorial_spark.functions.caching import (
         release_session_intermediates,
     )
 
-    spark.catalog.clearCache()
     release_session_intermediates(spark)  # drain leftovers from other tests
     chained = minhash_near_duplicates(docs, jaccard_threshold=0.5).orderBy(
         "doc_id_a", "doc_id_b"
     )
     chained.count()
-    assert not hasattr(chained, "_sg_persisted_intermediates")  # tag lost
     released = release_session_intermediates(spark, blocking=True)
     assert released >= 1
     assert release_session_intermediates(spark) == 0  # idempotent
 
 
+def test_release_session_intermediates_reads_spark_state(spark):
+    """The release walks Spark's persistent-RDD table, so a plain
+    persist() that no operator registered anywhere is freed, while a
+    live local checkpoint keeps its blocks (its lineage is gone)."""
+    from airflow_scraping_etl_tutorial_spark.functions.caching import (
+        release_session_intermediates,
+    )
+
+    release_session_intermediates(spark, blocking=True)  # drain leftovers
+    cached = spark.range(1_000).selectExpr("id", "id * 5 AS v").persist()
+    assert cached.count() == 1_000
+    live = spark.range(500).selectExpr("id * 7 AS w").localCheckpoint(
+        eager=True
+    )
+    assert release_session_intermediates(spark, blocking=True) >= 1
+    level = cached.storageLevel
+    assert not level.useMemory and not level.useDisk
+    assert live.count() == 500
+    assert live.agg(F.sum("w")).first()[0] == 7 * sum(range(500))
+    assert release_session_intermediates(spark) == 0  # idempotent
+
+
 def test_release_session_checkpoints_frees_rdd_blocks(spark):
-    """localCheckpoint RDD blocks are invisible to BOTH the
-    intermediates registry and spark.catalog.clearCache() — without
-    the targeted release they linger until the ContextCleaner GCs the
-    reference, i.e. nondeterministically across a long sweep (r12
-    ADVICE). The release must free exactly the locally checkpointed
-    entries and be idempotent."""
+    """localCheckpoint RDD blocks are invisible to
+    spark.catalog.clearCache() — without the targeted release they
+    linger until the ContextCleaner GCs the reference, i.e.
+    nondeterministically across a long sweep (r12 ADVICE). The release
+    must free exactly the locally checkpointed entries and be
+    idempotent."""
     from airflow_scraping_etl_tutorial_spark.functions.caching import (
         release_session_checkpoints,
     )

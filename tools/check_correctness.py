@@ -334,10 +334,10 @@ def main() -> int:
             note = " [oracle retried]" if retried else ""
             print(f"ok   {name}: {len(srows)} rows ({time.time() - t0:.1f}s){note}")
             n_pass += 1
-        # Drain operator-tagged persisted intermediates (minhash
+        # Drain every persisted intermediate Spark tracks (minhash
         # signatures, sketch counters, frame digests, ...) AND the RDD
-        # blocks behind any localCheckpoint (invisible to both the
-        # registry and clearCache — r12 ADVICE): a full catalog sweep
+        # blocks behind any localCheckpoint (invisible to clearCache —
+        # r12 ADVICE): a full catalog sweep
         # shares one 48g JVM with the DuckDB oracle, and without the
         # per-query drain every persist-heavy entry's blocks stay
         # pinned for the rest of the run.
