@@ -8,10 +8,11 @@ dynamic-partition-overwrites exactly those buckets, so a late-arriving
 hour triggers one bucket's recompute, never a full-table rebuild.
 
 Scale: the rollup table is partitioned by bucket date; refresh cost is
-O(dirty buckets x rows in them). This is the batch twin of the
-watermarked streaming aggregate (streaming/events.py::hourly_counts) —
-same groupBy, different maintenance contract (reprocessable partitions
-vs streaming state).
+O(dirty buckets x rows in them). The stream form of an hourly
+aggregate is streaming/events.py::hourly_counts (q80's operator): the
+same hour buckets kept as watermarked streaming state instead of
+reprocessable partitions. The rollup also counts distinct users, an
+aggregate a streaming state cannot maintain.
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """Mergeable HyperLogLog machinery, shared by the batch catalog
-(plans/llm_ops7.py q215, plans/llm_ops8.py q231), the streaming
-register maintainer (streaming/sketches.py), and tests.
+(plans/llm_ops7.py q215, plans/llm_ops8.py q231, plans/llm_ops26.py
+q320) and tests; every map-side and MAX/COUNT/SUM reduction below is
+stream-legal, so a stream calls the same functions.
 
 Everything is cross-engine deterministic by construction: 60-bit
 md5-derived hashes, exact-integer harmonic denominators (each register
@@ -68,13 +69,15 @@ def hll_registers(tok_df: DataFrame) -> DataFrame:
     )
 
 
-def hll_registers_by(tok_df: DataFrame, key: str) -> DataFrame:
-    """(key, tok) -> (key, bucket, reg): one register vector per key
-    group — the per-source/per-language sketch table whose vectors
-    combine by elementwise MAX across any group subset (set-union
-    algebra; q231 uses it for vocabulary overlap)."""
-    r = hll_bucket_rho(tok_df.distinct(), key)
-    return r.groupBy(key, "bucket").agg(F.max("rho").alias("reg"))
+def hll_register_max(tok_df: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., tok) -> (keys..., bucket, reg): one register vector
+    per key group, whose vectors combine by elementwise MAX across any
+    group subset (set-union algebra; q231 uses it for vocabulary
+    overlap, q320 per sliding window). MAX over duplicate tokens is
+    idempotent, so no distinct is needed: on a stream in complete
+    mode the aggregate's state IS the sketch."""
+    r = hll_bucket_rho(tok_df, *keys)
+    return r.groupBy(*keys, "bucket").agg(F.max("rho").alias("reg"))
 
 
 def hll_estimate_agg() -> Column:
@@ -113,7 +116,7 @@ SQL_HLL_EST = (
 
 
 # ---------------------------------------------------------------------------
-# Count-min sketch machinery (q216 + streaming/sketches.py)
+# Count-min sketch machinery (q216)
 # ---------------------------------------------------------------------------
 
 CM_D = 4  # hash rows
@@ -151,6 +154,14 @@ def cm_cells(tok_df: DataFrame) -> DataFrame:
     ).select("c.row", "c.k")
 
 
+def cm_counters(tok_df: DataFrame) -> DataFrame:
+    """(tok) -> (row, k, v): the CM_D x CM_W counter matrix, each cell
+    a COUNT of its hits — linear state that merges by + and needs no
+    watermark, so a stream in complete mode holds a live matrix that
+    upper-bounds every token's frequency seen so far."""
+    return cm_cells(tok_df).groupBy("row", "k").agg(F.count(F.lit(1)).alias("v"))
+
+
 # ---------------------------------------------------------------------------
 # Fixed-edge histogram — the fourth mergeable-state shape
 # ---------------------------------------------------------------------------
@@ -174,10 +185,11 @@ def fixed_bin(value: Column, lo: float, hi: float, n_bins: int) -> Column:
 def histogram_fixed(
     df: DataFrame, value_col: str, lo: float, hi: float, n_bins: int = 256
 ) -> DataFrame:
-    """(bin, cnt) equi-width histogram with FIXED edges — the batch
-    twin of streaming.sketches.streaming_histogram and the
+    """(bin, cnt) equi-width histogram with FIXED edges — the
     executor-local structure q278 proves partition-mergeable (counts
-    merge by +). NULL values are excluded on both batch and stream."""
+    merge by +). Stream-legal as written: on a stream in complete mode
+    the state is <= n_bins rows, and a snapshot is the exact histogram
+    of everything ingested so far. NULL values are excluded."""
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(fixed_bin(F.col(value_col), lo, hi, n_bins).alias("bin"))
@@ -195,9 +207,9 @@ AMS_N_EST = 8
 
 def ams_sign(key: Column, j: int) -> Column:
     """±1 sign hash for AMS estimator j: md5-parity of the key — the
-    q314 catalog audit and streaming.sketches.streaming_ams_sums share
-    this exact expression, and its DuckDB twin is llm_ops24._sql_sign,
-    so batch, stream, and oracle build the identical sketch."""
+    q314 catalog audit and `ams_sums` (batch or stream) share this
+    exact expression, and its DuckDB twin is llm_ops24._sql_sign, so
+    batch, stream, and oracle build the identical sketch."""
     return F.when(
         F.conv(
             F.substring(

@@ -141,27 +141,6 @@ def sigmoid_scalar_udf(v: pd.Series) -> pd.Series:
     return pd.Series(1.0 / (1.0 + np.exp(-v.to_numpy() / 100000.0)))
 
 
-def zscore_per_group(df: DataFrame, key: str, value: str) -> DataFrame:
-    """Grouped-map applyInPandas: z-score normalization within each
-    group (each group arrives as ONE pandas DataFrame).
-
-    The built-in form (avg/stddev window or groupBy+join) is preferred
-    and produces the same result with no Python; this exists to
-    demonstrate the grouped-map contract — and its scale caveat: a
-    whole group must fit in one task's memory, so key cardinality and
-    skew decide whether this shape is usable at all.
-    """
-    out_schema = f"{key} string, {value} double, zscore double"
-
-    def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        mu = pdf[value].mean()
-        sd = pdf[value].std(ddof=1)
-        z = (pdf[value] - mu) / sd if sd and sd > 0 else pdf[value] * 0.0
-        return pd.DataFrame({key: pdf[key], value: pdf[value], "zscore": z})
-
-    return df.select(key, value).groupBy(key).applyInPandas(normalize, out_schema)
-
-
 def zscore_per_group_exact(
     df: DataFrame, key: str, id_col: str, value: str
 ) -> DataFrame:

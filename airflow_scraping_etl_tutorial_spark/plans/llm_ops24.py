@@ -48,8 +48,8 @@ def _sql_sign(j: int) -> str:
 
 
 # Spark-side sign comes from the shared sketch operator so the batch
-# catalog, the streaming state (streaming/sketches.streaming_ams_sums),
-# and this oracle SQL cannot drift apart.
+# catalog, a stream's state (operators/sketches.ams_sums run on the
+# stream), and this oracle SQL cannot drift apart.
 
 
 @query(

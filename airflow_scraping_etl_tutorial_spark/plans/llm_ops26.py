@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from ..operators.sketches import (
     HLL_M,
     SQL_HLL_EST,
-    hll_bucket_rho,
     hll_estimate_agg,
+    hll_register_max,
 )
 from ..sources.tables import load
 from .registry import query
@@ -138,13 +138,10 @@ def q320_rolling_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = expanded.select(
         "window_end", F.col("user_id").cast("string").alias("tok")
     )
-    # expanded is already distinct on (user, window_end), so skip
-    # hll_registers_by's internal .distinct() (a second shuffle of the
-    # query's largest intermediate); MAX over any residual duplicate
-    # would be idempotent anyway (hll_bucket_rho doctrine).
-    regs = hll_bucket_rho(toks, "window_end").groupBy(
-        "window_end", "bucket"
-    ).agg(F.max("rho").alias("reg"))
+    # expanded is already distinct on (user, window_end), so no second
+    # distinct (a shuffle of the query's largest intermediate) precedes
+    # the register MAX
+    regs = hll_register_max(toks, "window_end")
     est = regs.groupBy("window_end").agg(
         F.round(hll_estimate_agg(), 4).alias("hll_estimate")
     )

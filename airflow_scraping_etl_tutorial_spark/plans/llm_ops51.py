@@ -292,13 +292,14 @@ def q397_range_split_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect is PARTITIONER METADATA — exactly what RangePartitioner
     # ships to every task — not a data-plane pull (the q76 centroid
     # precedent for model-sized collects).
-    bl = bounds.collect()
-    bl.sort(key=lambda r: r.i)
-    case = "CASE "
-    for r in bl:
-        case += f"WHEN k <= {r.split_key} THEN {r.i} "
-    case += f"ELSE {_N_PARTS} END"
-    parts = keyed.select(F.expr(case).alias("pid")).groupBy("pid").agg(
+    # A when-chain, not SQL text built from the rows: with no split
+    # rows (empty orders) the partition id is the constant _N_PARTS.
+    pid = None
+    for r in sorted(bounds.collect(), key=lambda r: r.i):
+        hit = F.col("k") <= r.split_key
+        pid = F.when(hit, r.i) if pid is None else pid.when(hit, r.i)
+    pid = F.lit(_N_PARTS) if pid is None else pid.otherwise(_N_PARTS)
+    parts = keyed.select(pid.alias("pid")).groupBy("pid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows")
     )
     out = (

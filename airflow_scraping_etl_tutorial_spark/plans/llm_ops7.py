@@ -38,16 +38,15 @@ from .registry import query
 # denominator stays in exact integer arithmetic (see below). A shared
 # Python-computed literal: both engines parse the same decimal literal
 # to the same IEEE double.
-# The HLL machinery lives in operators/sketches.py (shared with the
-# streaming register maintainer); re-exported here under the names the
-# catalog entries and tests use.
+# The HLL machinery lives in operators/sketches.py; re-exported here
+# under the names the catalog entries and tests use.
 from ..operators.sketches import (  # noqa: E402
     HLL_M as _HLL_M,
     HLL_NUM as _HLL_NUM,
     SQL_HLL_EST as _SQL_HLL_EST,
     hll_estimate_agg,
     hll_registers,
-    hll_registers_by,
+    hll_register_max,
 )
 
 

@@ -709,12 +709,12 @@ def q231_vocab_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer harmonic denominator, quantized-LN small-range
     correction); the register table is built ONCE per language and
     persisted for the per-language and per-pair-union estimates."""
-    from .llm_ops7 import hll_estimate_agg, hll_registers_by
+    from .llm_ops7 import hll_estimate_agg, hll_register_max
 
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     tl = toks.distinct().persist()
-    regs = hll_registers_by(tl, "lang").persist()
+    regs = hll_register_max(tl.distinct(), "lang").persist()
     langs = regs.select("lang").distinct()
     pl = (
         langs.select(F.col("lang").alias("lang_a"))

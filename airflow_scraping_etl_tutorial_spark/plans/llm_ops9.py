@@ -36,6 +36,7 @@ from ..functions.compare import det_round
 from ..operators.dedup import shingle_hashes
 from ..operators.text import tokens
 from ..sources.tables import load
+from ..streaming.events import daily_counts
 from .llm_ops import _SQL_SHINGLES3, _sql_cosine, _sql_hex60, _sql_minhash_pairs
 from .registry import query
 
@@ -597,10 +598,10 @@ def q239_quality_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dyadic_burst_frame(d: DataFrame) -> DataFrame:
-    """The q240 detector over any (event_type, day, cnt) frame — shared
-    with the streaming path (streaming/events.py::daily_counts feeds
-    micro-batch-accumulated daily counts through this identical logic,
-    test-asserted equal to the batch plan)."""
+    """The q240 detector over any (event_type, day, cnt) frame: q240
+    runs it over streaming/events.py::daily_counts of the batch events,
+    and a stream runs it over the same operator's drained state
+    (test-asserted equal to q240's rows)."""
     w = W.partitionBy("event_type").orderBy("day")
     decay = (
         F.lit(64) * F.lag("cnt", 1, 0).over(w)
@@ -679,13 +680,7 @@ def q240_ewma_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows before the per-type LAG window — the window never sees raw
     events. Decay over OBSERVED days: a gap simply ages the baseline
     by rank, which is the desired behavior for sparse feeds."""
-    ev = load(spark, sf_dir, "events")
-    d = (
-        ev.select("event_type", F.to_date("ts").alias("day"))
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return dyadic_burst_frame(d)
+    return dyadic_burst_frame(daily_counts(load(spark, sf_dir, "events")))
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,13 @@
 """Event-stream operator coverage (SURVEY.md §2.9) in oracle-checkable
 batch form over the events fixture.
 
-The same logical operations run as true Structured Streaming plans in
-``streaming/events.py`` (watermarks, session windows, stateful dedup,
-foreachBatch sinks) — verified by pytest with the memory sink. Here each
-operator is declared in its batch form so the DuckDB oracle can hash it:
-window(ts, ...) and groupBy produce identical results in batch and
-streaming-complete modes for this bounded input.
+q80 and q81 call the window aggregates of ``streaming/events.py``
+(``hourly_counts``, ``sliding_counts``) on the batch frame, so the
+DuckDB oracle checks the very operator a stream runs; Spark drops their
+watermark on batch input, and tests drain the same aggregates as
+streams to these queries' rows. q82-q84 are batch forms of operators
+the stream expresses its own way (session windows, stateful dedup, a
+bounded-state interval join).
 
 Timestamps are projected as epoch microseconds or formatted strings —
 never raw timestamps — because Spark's TIMESTAMP is a session-TZ instant
@@ -21,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..sources.tables import load
+from ..streaming.events import hourly_counts, sliding_counts
 from .registry import query
 
 
@@ -36,20 +38,16 @@ from .registry import query
     tags=("streaming", "window", "agg"),
 )
 def q80_events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windowed aggregation — the batch twin of the
-    watermarked streaming agg (streaming/events.py::hourly_counts).
-    window() is epoch-aligned, so window.start == date_trunc('hour')."""
-    e = load(spark, sf_dir, "events")
+    """Tumbling 1-hour windowed aggregation: the watermarked stream
+    operator (streaming/events.py::hourly_counts) run on the batch
+    frame. window() is epoch-aligned, so window.start ==
+    date_trunc('hour')."""
     return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
+        hourly_counts(load(spark, sf_dir, "events"))
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
             "event_type",
             "n_events",
             "total_value",
@@ -78,20 +76,16 @@ def q80_events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "window", "sliding"),
 )
 def q81_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding window (1 h length, 30 min slide): every event lands in
+    """Sliding window (1 h length, 30 min slide) through the stream
+    operator streaming/events.py::sliding_counts: every event lands in
     two overlapping windows. The oracle reconstructs the same window-set
     by explicit start enumeration."""
-    e = load(spark, sf_dir, "events")
     return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
+        sliding_counts(load(spark, sf_dir, "events"))
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
             "n_events",
             "total_value",
         )
@@ -135,7 +129,7 @@ def q81_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q82_events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization with a 30-minute inactivity gap: lag -> gap flag ->
     running-sum session ids (the batch form of session_window; the
-    streaming form lives in streaming/events.py).
+    streaming form is streaming/events.py::session_counts).
 
     Scale: one shuffle on user_id; windows are per-user partitions, so
     skewed users are the thing to watch — AQE skew handling or salting

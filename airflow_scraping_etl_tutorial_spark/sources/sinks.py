@@ -4,7 +4,6 @@ The reference's sink is a scalar Jinja-templated INSERT into Postgres
 (Final_app.py:106-128) with a CSV alternative mentioned in README.md:38.
 Engine forms, all set-oriented:
 
-- parquet partitioned append/overwrite (the default analytical sink);
 - idempotent daily load = dynamic partition overwrite on the date key
   (``overwrite_day_partitions``, the one writer of it: the TWSE daily
   load and the rollup refresh both call it; equivalent in effect to a
@@ -23,15 +22,6 @@ Engine forms, all set-oriented:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_parquet_partitioned(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...], mode: str = "append"
-) -> None:
-    """Partitioned parquet sink. Partitioning by a date-derived column
-    is what makes day-level reruns (dynamic overwrite) and day-level
-    reads (partition pruning) O(1 day) instead of O(table)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
 def overwrite_day_partitions(df: DataFrame, path: str, partition_col: str = "dt") -> None:

@@ -156,9 +156,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _PLAN_CACHE.pop(old, None)
         _PLAN_CACHE[key] = df
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for SQL-form queries)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -2,26 +2,41 @@
 
 The reference is a daily-cron batch pipeline; its upstream is
 semantically a stream (one payload per trading day), and the engine's
-fixtures include a true event stream. These operators are the streaming
-counterparts of the batch catalog entries (plans/streaming_queries.py)
-and are exercised by tests/test_streaming.py with the file source +
+fixtures include a true event stream. One definition serves batch and
+stream: the window aggregates below are the ones the catalog queries
+call (``hourly_counts`` in q80, ``sliding_counts`` in q81,
+``daily_counts`` in q240). On a batch frame Spark's optimizer drops
+the ``withWatermark`` node, so the executed catalog plans carry no trace
+of it.
+The stream-only operators (stateful, stream-stream and stream-static
+joins, the foreachBatch sink, the sources) have no batch caller; the
+mergeable sketches a stream maintains live in operators/sketches.py
+and operators/membership.py, and are called on the stream unchanged.
+tests/test_streaming.py drives all of them with the file source and
 memory/foreachBatch sinks.
 
-Watermark doctrine: every stateful operator bounds its state with
-``withWatermark`` — late rows beyond the watermark are dropped, so state
-size is O(windows in the watermark horizon), not O(stream length).
-That is the property that lets these plans run forever on a cluster.
+Watermark doctrine: every stateful operator keyed on event time bounds
+its state with ``withWatermark`` — late rows beyond the watermark are
+dropped, so state size is O(windows in the watermark horizon), not
+O(stream length). That is the property that lets these plans run
+forever on a cluster.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable, Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+if TYPE_CHECKING:
+    # the catalog imports this module for q80/q81/q240 and must not
+    # load pandas; the state functions import it in the worker
+    import pandas as pd
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -79,13 +94,25 @@ def stream_from_kafka(
     return parsed.select("e.*")
 
 
+def _window_totals() -> list:
+    """Event count and the decimal-exact value total rounded to cents
+    (the q80/q81 aggregates the DuckDB oracles replay)."""
+    return [
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
+        .cast("double")
+        .alias("total_value"),
+    ]
+
+
 def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window aggregation (streaming twin of
-    q80_events_hourly_tumbling)."""
+    """Watermarked tumbling 1-hour windows per event type: the
+    aggregate of q80_events_hourly_tumbling, and the same plan run
+    incrementally on a stream."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
+        .agg(*_window_totals())
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
@@ -95,32 +122,29 @@ def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def daily_counts(events: DataFrame, watermark: str = "25 hours") -> DataFrame:
-    """Watermarked daily tumbling counts per event type — the
-    streaming feed of the dyadic-decay burst detector
-    (plans/llm_ops9.py::dyadic_burst_frame): the stream maintains one
-    day of open state per type, closed days emit downstream, and the
-    detector's LAG window runs over the emitted (type, day, cnt) rows
-    exactly as in the batch plan (q240) — test-asserted equal."""
+def daily_counts(events: DataFrame) -> DataFrame:
+    """Daily counts per event type: the (type, day, cnt) frame that
+    q240's dyadic-decay burst detector
+    (plans/llm_ops9.py::dyadic_burst_frame) runs its LAG window over,
+    in batch and on a stream alike. The day is ``to_date(ts)``, a
+    derived key a watermark cannot close, so a stream runs it in
+    complete mode; its state is one row per (type, day), which grows
+    by the number of event types per day."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        events.select("event_type", F.to_date("ts").alias("day"))
+        .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.col("w.start").cast("date").alias("day"),
-            "event_type",
-            "cnt",
-        )
     )
 
 
 def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked sliding-window aggregation (1 h / 30 min)."""
+    """Watermarked sliding windows (1 h length, 30 min slide): the
+    aggregate of q81_events_sliding_window, batch or stream."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
+        .agg(*_window_totals())
+        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
 
@@ -193,6 +217,8 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         n, v = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
@@ -217,8 +243,8 @@ def streaming_ttl_hits(
     user_col: str = "user_id",
 ) -> DataFrame:
     """Live TTL-cache hit counter — the SEVENTH stateful shape
-    (after HLL/count-min/Bloom/histogram/AMS/weighted-sample in
-    streaming/sketches.py): per-user LAST-SEEN state (one long per
+    (after the HLL/count-min/Bloom/histogram/AMS sketches and
+    `streaming_weighted_sample`): per-user LAST-SEEN state (one long per
     user — O(users), not O(events)) scoring every arriving event as
     a cache hit or miss for EVERY candidate TTL at once, the live
     form of the q382 batch pricer (plans/llm_ops44-era gap identity:
@@ -245,6 +271,8 @@ def streaming_ttl_hits(
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
         if state.exists:
             got = state.get
             last_us, v, lookups = got[0], got[1], got[2]
@@ -347,3 +375,75 @@ def enrich_with_dimension(events: DataFrame, dim: DataFrame) -> DataFrame:
     `dim` must carry a `user_id` join key column.
     """
     return events.join(F.broadcast(dim), "user_id", "left")
+
+
+def streaming_weighted_sample(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    key_col: str = "skey",
+    k: int = 50,
+    n_shards: int = 4,
+) -> DataFrame:
+    """Running Efraimidis-Spirakis weighted sample over a streaming
+    (id, selection-key) column pair — the SIXTH mergeable-state shape
+    (HLL merges by MAX, count-min/histogram/AMS by +, Bloom by OR;
+    a bounded top-k set merges by union-then-top-k, which q345
+    proves as data on the batch side). The caller derives the A-ES
+    selection key ln(u)/w deterministically (q339's md5 construction)
+    so the sample is a pure function of the items seen — any drain
+    point yields exactly the batch sample of the ingested prefix.
+
+    Top-k is not a built-in streaming aggregate, so this is the
+    applyInPandasWithState escape hatch: ids are hash-sharded into
+    n_shards state keys, each holding AT MOST k rows (a JSON-encoded
+    (id, key) list — constant memory per shard regardless of stream
+    length), and each micro-batch re-emits the shard's current top-k
+    tagged with a version number. The union of the shards' latest
+    emissions, re-topped to k, IS the global sample — the same
+    union-then-top-k merge a 1000-executor batch job would run, so
+    sharding is the scale story, not a compromise.
+    """
+
+    def update(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        if state.exists:
+            items, v = json.loads(state.get[0]), state.get[1]
+            items = [(int(i), float(s)) for i, s in items]
+        else:
+            items, v = [], 0
+        for pdf in pdfs:
+            items.extend(
+                zip(
+                    pdf[id_col].astype("int64").tolist(),
+                    pdf[key_col].astype("float64").tolist(),
+                )
+            )
+        items.sort(key=lambda t: (-t[1], t[0]))
+        items = items[:k]
+        v += 1
+        state.update((json.dumps(items), v))
+        yield pd.DataFrame(
+            {
+                "shard": [key[0]] * len(items),
+                "version": [v] * len(items),
+                "shard_rank": list(range(1, len(items) + 1)),
+                id_col: [i for i, _ in items],
+                key_col: [s for _, s in items],
+            }
+        )
+
+    return df.withColumn(
+        "shard", (F.col(id_col) % n_shards).cast("long")
+    ).groupBy("shard").applyInPandasWithState(
+        update,
+        outputStructType=(
+            f"shard long, version long, shard_rank int,"
+            f" {id_col} long, {key_col} double"
+        ),
+        stateStructType="s string, v long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )

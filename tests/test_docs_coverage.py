@@ -3,10 +3,13 @@ must appear in COVERAGE.md by number — either spelled out (q96 or its
 full q96_ivf_kmeans_trained name) or inside a dash range (q80-q84).
 Keeps the judge-facing inventory honest: a new wave cannot promote
 into the driver contract without its COVERAGE.md row.
+The library packages have the same gate: every public function or
+class has a caller outside the tests or a COVERAGE.md mention.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -33,3 +36,58 @@ def test_every_catalog_entry_documented_in_coverage_md():
         if m is None or m.group(1) not in bare:
             missing.append(n)
     assert not missing, f"catalog entries absent from COVERAGE.md: {missing}"
+
+
+LIBRARY = ("operators", "functions", "sources", "streaming")
+
+
+def _non_test_sources():
+    """Every .py file of the repository outside tests/ directories."""
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [
+            d for d in dirs if not d.startswith((".", "__")) and d != "tests"
+        ]
+        for fname in files:
+            if fname.endswith(".py"):
+                yield os.path.join(root, fname)
+
+
+def test_every_library_name_is_called_or_documented():
+    """Each public module-level function or class of the library
+    packages is referenced by non-test code (a Name, an attribute or
+    an import anywhere outside tests/) or named in COVERAGE.md — so a
+    second copy of an operator that nothing calls cannot accumulate
+    unnoticed."""
+    reached: set[str] = set()
+    for path in _non_test_sources():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                reached.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                reached.add(node.attr)
+            elif isinstance(node, ast.alias):
+                reached.add(node.name.rsplit(".", 1)[-1])
+    assert "all_queries" in reached, "the scan must see the repository modules"
+    with open(os.path.join(REPO, "COVERAGE.md")) as f:
+        reached |= set(re.findall(r"\w+", f.read()))
+    pkg = os.path.join(REPO, "airflow_scraping_etl_tutorial_spark")
+    unreached = []
+    for sub in LIBRARY:
+        for fname in sorted(os.listdir(os.path.join(pkg, sub))):
+            if not fname.endswith(".py"):
+                continue
+            with open(os.path.join(pkg, sub, fname)) as f:
+                tree = ast.parse(f.read())
+            unreached += [
+                f"{sub}/{fname}::{node.name}"
+                for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")
+                and node.name not in reached
+            ]
+    assert not unreached, (
+        "library names with no caller outside tests/ and no COVERAGE.md "
+        f"mention (call, document or delete them): {unreached}"
+    )

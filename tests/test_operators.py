@@ -496,20 +496,24 @@ def test_dedup_keep_canonical_end_to_end(spark, docs):
 def test_scalar_pandas_udf_and_grouped_map(spark):
     from airflow_scraping_etl_tutorial_spark.operators.udx import (
         sigmoid_scalar_udf,
-        zscore_per_group,
+        zscore_per_group_exact,
     )
 
     df = spark.createDataFrame(
-        [Row(k="a", v=10.0), Row(k="a", v=20.0), Row(k="a", v=30.0),
-         Row(k="b", v=5.0), Row(k="b", v=5.0)]
+        [Row(k="a", id=1, v=10.0), Row(k="a", id=2, v=20.0),
+         Row(k="a", id=3, v=30.0), Row(k="b", id=4, v=5.0),
+         Row(k="b", id=5, v=5.0)]
     )
     s = df.select(sigmoid_scalar_udf("v").alias("s")).collect()
     assert all(0.5 < r.s < 0.51 for r in s)  # sigmoid near 0.5 for small v
 
-    z = {(r.k, r.v): r.zscore for r in zscore_per_group(df, "k", "v").collect()}
-    assert abs(z[("a", 20.0)]) < 1e-12  # the mean maps to 0
-    assert abs(z[("a", 30.0)] - 1.0) < 1e-12  # one stddev above
-    assert z[("b", 5.0)] == 0.0  # zero-variance group -> 0, not NaN
+    z = {
+        r.id: r.zscore
+        for r in zscore_per_group_exact(df, "k", "id", "v").collect()
+    }
+    assert z[2] == 0.0  # the mean maps to 0
+    assert z[3] == 1.0  # one stddev above
+    assert z[4] == z[5] == 0.0  # zero-variance group -> 0, not NaN
 
 
 def test_salted_join_rejects_dim_preserving_how(spark):
@@ -896,3 +900,41 @@ def test_kmeans_converged_recovers_planted_clusters(spark):
     for r in top:
         by_cluster.setdefault(r["centroid_id"], set()).add(r["vec_id"] < 100)
     assert all(len(v) == 1 for v in by_cluster.values())
+
+
+def test_hourly_counts_stream_equals_q80(spark, sf_dir, tmp_path):
+    """One definition for batch and stream: the events fixture drained
+    through `hourly_counts` as a file-source stream (complete mode),
+    formatted as q80 formats it, is q80's result row for row."""
+    from airflow_scraping_etl_tutorial_spark.plans.streaming_queries import (
+        q80_events_hourly_tumbling,
+    )
+    from airflow_scraping_etl_tutorial_spark.sources.tables import load
+    from airflow_scraping_etl_tutorial_spark.streaming.events import (
+        hourly_counts,
+        stream_from_dir,
+    )
+
+    # the fixture's TIMESTAMP(NANOS) is unreadable by a streaming scan;
+    # load() yields microseconds
+    src = str(tmp_path / "events")
+    load(spark, sf_dir, "events").write.parquet(src)
+    q = (
+        hourly_counts(stream_from_dir(spark, src))
+        .writeStream.format("memory")
+        .queryName("hourly_q80")
+        .outputMode("complete")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = spark.sql(
+        "SELECT date_format(window_start, 'yyyy-MM-dd HH:mm:ss') AS window_start,"
+        " event_type, n_events, total_value FROM hourly_q80"
+        " ORDER BY window_start, event_type"
+    ).collect()
+    want = q80_events_hourly_tumbling(spark, sf_dir).collect()
+    assert len(want) > 0
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]

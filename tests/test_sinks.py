@@ -11,7 +11,6 @@ from airflow_scraping_etl_tutorial_spark.sources.sinks import (
     overwrite_day_partitions,
     read_jdbc,
     write_csv,
-    write_parquet_partitioned,
 )
 from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
@@ -35,7 +34,7 @@ def test_partitioned_parquet_and_day_overwrite(spark, tmp_path):
     )
     two_months = orders.filter(F.col("dt").isin("199506", "199507"))
     assert two_months.count() > 4
-    write_parquet_partitioned(two_months, path, ("dt",), mode="overwrite")
+    overwrite_day_partitions(two_months, path)
     n_before = spark.read.parquet(path).count()
 
     # rerun month 1 with HALF its rows: dynamic overwrite must replace

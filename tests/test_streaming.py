@@ -1,6 +1,8 @@
 """Structured Streaming tests: the events fixture replayed through the
-file source, driven to completion with availableNow/processAllAvailable,
-checked against the equivalent batch computation (SURVEY §5 item 5)."""
+file source, driven to completion with availableNow/processAllAvailable.
+An operator that a catalog query also calls is drained as a stream and
+checked against that query's rows (SURVEY §5 item 5); a stream-only
+operator is checked against the batch computation it maintains."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ from airflow_scraping_etl_tutorial_spark.streaming.events import (
     dedup_within_watermark,
     hourly_counts,
     session_counts,
+    sliding_counts,
     stream_from_dir,
     write_with_notify,
 )
@@ -29,7 +32,9 @@ def events_dir(spark, tmp_path_factory):
     return path
 
 
-def _run_to_memory(spark, df, name, mode):
+def _drain(spark, df, name, mode):
+    """Run a streaming frame into a memory sink until its input is
+    drained; returns the sink table and the micro-batch count."""
     q = (
         df.writeStream.format("memory")
         .queryName(name)
@@ -37,21 +42,20 @@ def _run_to_memory(spark, df, name, mode):
         .start()
     )
     q.processAllAvailable()
+    n_batches = len(q.recentProgress)
     q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
+    return spark.sql(f"SELECT * FROM {name}"), n_batches
 
 
-def test_hourly_counts_match_batch(spark, events_dir):
-    stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(spark, hourly_counts(stream), "hourly", "complete")
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+def _file_stream(spark, df, path, n_files):
+    """Land `df` as n_files parquet files and read them back as a
+    stream of one file per micro-batch."""
+    df.repartition(n_files).write.mode("overwrite").parquet(path)
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
-    got_map = {(str(r.window_start), r.event_type): r.n_events for r in got.collect()}
-    batch_map = {(str(r.w.start), r.event_type): r.n_events for r in batch.collect()}
-    assert got_map == batch_map
 
 
 def test_streaming_daily_counts_feed_burst_detector(spark, events_dir):
@@ -66,7 +70,7 @@ def test_streaming_daily_counts_feed_burst_detector(spark, events_dir):
     )
 
     stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(spark, daily_counts(stream), "daily_burst", "complete")
+    got, _ = _drain(spark, daily_counts(stream), "daily_burst", "complete")
     streamed = [tuple(r) for r in dyadic_burst_frame(got).collect()]
     batch = [tuple(r) for r in q240_ewma_burst_detection(spark, SF_DIR).collect()]
     assert streamed == batch
@@ -76,7 +80,7 @@ def test_streaming_daily_counts_feed_burst_detector(spark, events_dir):
 
 def test_session_counts_stream_runs(spark, events_dir):
     stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(spark, session_counts(stream), "sessions", "complete")
+    got, _ = _drain(spark, session_counts(stream), "sessions", "complete")
     rows = got.collect()
     assert len(rows) > 0
     assert all(r.session_end > r.session_start for r in rows)
@@ -84,7 +88,7 @@ def test_session_counts_stream_runs(spark, events_dir):
 
 def test_dedup_within_watermark_drops_dupes(spark, tmp_path, events_dir):
     stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(spark, dedup_within_watermark(stream), "dedup", "append")
+    got, _ = _drain(spark, dedup_within_watermark(stream), "dedup", "append")
     n_unique_batch = (
         spark.read.parquet(events_dir)
         .select("user_id", "event_type", F.date_trunc("minute", "ts").alias("m"))
@@ -163,7 +167,7 @@ def test_stateful_user_totals_matches_batch(spark, events_dir):
     )
 
     stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(spark, stateful_user_totals(stream), "totals", "update")
+    got, _ = _drain(spark, stateful_user_totals(stream), "totals", "update")
     # update mode: keep the LAST emitted row per user (the final state)
     final = {}
     for r in got.collect():
@@ -179,20 +183,21 @@ def test_stateful_user_totals_matches_batch(spark, events_dir):
     }
 
 
-def test_sliding_counts_stream_runs(spark, events_dir):
-    from airflow_scraping_etl_tutorial_spark.streaming.events import sliding_counts
+def test_sliding_counts_stream_equals_q81(spark, events_dir):
+    from airflow_scraping_etl_tutorial_spark.plans.streaming_queries import (
+        q81_events_sliding_window,
+    )
 
-    got = _run_to_memory(
+    got, _ = _drain(
         spark, sliding_counts(stream_from_dir(spark, events_dir)), "sliding", "complete"
     )
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    got_map = {str(r.window_start): r.n_events for r in got.collect()}
-    batch_map = {str(r.w.start): r.n_events for r in batch.collect()}
-    assert got_map == batch_map
+    streamed = got.select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        "n_events",
+        "total_value",
+    ).orderBy("window_start")
+    want = q81_events_sliding_window(spark, SF_DIR).collect()
+    assert [tuple(r) for r in streamed.collect()] == [tuple(r) for r in want]
 
 
 def test_stream_stream_interval_join(spark, events_dir):
@@ -201,7 +206,7 @@ def test_stream_stream_interval_join(spark, events_dir):
     )
 
     stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(
+    got, _ = _drain(
         spark, purchases_within_hour_of_signup(stream), "ssjoin", "append"
     )
     # batch equivalent over the same files
@@ -232,7 +237,11 @@ def test_rocksdb_state_store_hourly_counts(spark, events_dir):
     off-heap + spillable — at 10^9 keys the HDFS-backed in-memory map
     OOMs, RocksDB doesn't). Provider is per-query via
     spark.sql.streaming.stateStore.providerClass; results must match
-    the default-provider/batch answer exactly."""
+    q80's rows exactly."""
+    from airflow_scraping_etl_tutorial_spark.plans.streaming_queries import (
+        q80_events_hourly_tumbling,
+    )
+
     provider = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
@@ -240,19 +249,17 @@ def test_rocksdb_state_store_hourly_counts(spark, events_dir):
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     try:
         stream = stream_from_dir(spark, events_dir)
-        got = _run_to_memory(spark, hourly_counts(stream), "hourly_rocks", "complete")
-        batch = (
-            spark.read.parquet(events_dir)
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        got_map = {
-            (str(r.window_start), r.event_type): r.n_events for r in got.collect()
-        }
-        batch_map = {
-            (str(r.w.start), r.event_type): r.n_events for r in batch.collect()
-        }
-        assert got_map == batch_map
+        got, _ = _drain(spark, hourly_counts(stream), "hourly_rocks", "complete")
+        streamed = got.select(
+            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "event_type",
+            "n_events",
+            "total_value",
+        ).orderBy("window_start", "event_type")
+        want = q80_events_hourly_tumbling(spark, SF_DIR).collect()
+        assert [tuple(r) for r in streamed.collect()] == [tuple(r) for r in want]
     finally:
         if old is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
@@ -285,7 +292,7 @@ def test_stream_static_enrichment_matches_batch(spark, events_dir):
         F.col("c_custkey").alias("user_id"), "c_nationkey", "c_mktsegment"
     )
     stream = stream_from_dir(spark, events_dir)
-    got = _run_to_memory(
+    got, _ = _drain(
         spark,
         enrich_with_dimension(stream, dim).select(
             "event_id", "user_id", "c_nationkey", "c_mktsegment"
@@ -305,125 +312,107 @@ def test_stream_static_enrichment_matches_batch(spark, events_dir):
     assert all(r[2] is not None for r in got_rows)
 
 
-def test_streaming_hll_registers_match_batch(spark, tmp_path):
-    """The streaming register state equals the batch sketch: documents
-    replayed one file per micro-batch (4 incremental state updates)
-    end at exactly the register vector operators/sketches.hll_registers
-    computes in batch — the mergeable-sketch contract, live."""
-    from airflow_scraping_etl_tutorial_spark.operators.sketches import hll_registers
-    from airflow_scraping_etl_tutorial_spark.streaming.sketches import (
-        streaming_hll_registers,
+def test_streaming_hll_registers_match_q231_and_q215(spark, tmp_path):
+    """The register MAX a stream maintains is the one q231 and q215
+    run in batch: documents replayed one file per micro-batch (4
+    incremental state updates) end at per-language registers whose
+    estimates are q231's, and whose bucket-wise MAX (the set-union
+    merge) gives q215's audit of the whole vocabulary."""
+    from airflow_scraping_etl_tutorial_spark.operators.sketches import (
+        hll_estimate_agg,
+        hll_register_max,
+        hll_registers,
+    )
+    from airflow_scraping_etl_tutorial_spark.plans.llm_ops7 import (
+        q215_hll_distinct_audit,
+    )
+    from airflow_scraping_etl_tutorial_spark.plans.llm_ops8 import (
+        q231_vocab_overlap_hll,
     )
 
-    docs_dir = str(tmp_path / "docs_stream")
-    batch_docs = load(spark, SF_DIR, "documents")
-    batch_docs.repartition(4).write.mode("overwrite").parquet(docs_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(docs_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
+    docs = load(spark, SF_DIR, "documents")
+    stream = _file_stream(spark, docs, str(tmp_path / "docs_hll"), 4)
+    toks = stream.select("lang", F.explode(F.split("text", " ")).alias("tok"))
+    regs, n_batches = _drain(
+        spark, hll_register_max(toks, "lang"), "hll_regs", "complete"
     )
-    q = (
-        streaming_hll_registers(stream)
-        .writeStream.format("memory")
-        .queryName("hll_regs")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    n_batches = len(q.recentProgress)
-    q.stop()
-    got = {
-        r.bucket: r.reg for r in spark.sql("SELECT * FROM hll_regs").collect()
-    }
-    want = {
-        r.bucket: r.reg
-        for r in hll_registers(
-            batch_docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        ).collect()
-    }
-    assert got == want
     assert n_batches >= 4  # the state really was built incrementally
 
-
-def test_streaming_countmin_matches_batch(spark, tmp_path):
-    """The streaming count-min counter matrix equals the batch one
-    after the stream drains — linear state, merges by +, and at every
-    prefix of the stream each counter is a lower bound of its final
-    value (monotone), so the live matrix always upper-bounds the
-    frequencies seen so far."""
-    from airflow_scraping_etl_tutorial_spark.operators.sketches import cm_cells
-    from airflow_scraping_etl_tutorial_spark.streaming.sketches import (
-        streaming_countmin_counters,
-    )
-
-    docs_dir = str(tmp_path / "docs_cm_stream")
-    batch_docs = load(spark, SF_DIR, "documents")
-    batch_docs.repartition(3).write.mode("overwrite").parquet(docs_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(docs_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    q = (
-        streaming_countmin_counters(stream)
-        .writeStream.format("memory")
-        .queryName("cm_counters")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r.row, r.k): r.v
-        for r in spark.sql("SELECT * FROM cm_counters").collect()
-    }
-    want = {
-        (r.row, r.k): r.v
-        for r in cm_cells(
-            batch_docs.select(F.explode(F.split("text", " ")).alias("tok"))
+    est = regs.groupBy("lang").agg(F.round(hll_estimate_agg(), 4).alias("est"))
+    per_lang = {r.lang: r.est for r in est.collect()}
+    pairs = q231_vocab_overlap_hll(spark, SF_DIR).collect()
+    assert pairs
+    for r in pairs:
+        assert (per_lang[r.lang_a], per_lang[r.lang_b]) == (
+            r.hll_est_a,
+            r.hll_est_b,
         )
-        .groupBy("row", "k")
-        .agg(F.count(F.lit(1)).alias("v"))
-        .collect()
+
+    merged = regs.groupBy("bucket").agg(F.max("reg").alias("reg"))
+    batch = hll_registers(docs.select(F.explode(F.split("text", " ")).alias("tok")))
+    assert {r.bucket: r.reg for r in merged.collect()} == {
+        r.bucket: r.reg for r in batch.collect()
+    }
+    got = merged.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max("reg").alias("m"),
+        F.round(hll_estimate_agg(), 4).alias("e"),
+    ).first()
+    want = q215_hll_distinct_audit(spark, SF_DIR).first()
+    assert (got.n, got.m, got.e) == (
+        want.n_buckets_used,
+        want.max_register,
+        want.hll_estimate,
+    )
+
+
+def test_streaming_countmin_counters_give_q216_estimates(spark, tmp_path):
+    """The count-min counter matrix a stream maintains (linear state,
+    merges by +) is the batch matrix after the drain, and answers
+    q216's point queries: the min over the 4 hash rows of each heavy
+    hitter's cells is q216's cm_estimate."""
+    from airflow_scraping_etl_tutorial_spark.operators.sketches import (
+        CM_D,
+        cm_counters,
+        cm_hash,
+    )
+    from airflow_scraping_etl_tutorial_spark.plans.llm_ops7 import (
+        q216_countmin_heavy_hitters,
+    )
+
+    docs = load(spark, SF_DIR, "documents")
+    stream = _file_stream(spark, docs, str(tmp_path / "docs_cm"), 3)
+    toks = stream.select(F.explode(F.split("text", " ")).alias("tok"))
+    cells, _ = _drain(spark, cm_counters(toks), "cm_counters", "complete")
+    counters = {(r.row, r.k): r.v for r in cells.collect()}
+    batch = cm_counters(docs.select(F.explode(F.split("text", " ")).alias("tok")))
+    assert counters == {(r.row, r.k): r.v for r in batch.collect()}
+
+    q216 = q216_countmin_heavy_hitters(spark, SF_DIR).collect()
+    want = {r.token: r.cm_estimate for r in q216}
+    hashed = spark.createDataFrame([(t,) for t in want], "tok string").select(
+        "tok", *[cm_hash(d).alias(f"h{d}") for d in range(CM_D)]
+    )
+    got = {
+        r.tok: min(counters[(d, r[f"h{d}"])] for d in range(CM_D))
+        for r in hashed.collect()
     }
     assert got == want
 
 
 def test_streaming_bloom_bitmap_matches_batch_and_screens(spark, tmp_path):
-    """The drained streaming Bloom bitmap equals the batch one (OR is
-    the merge), and probing the corpus's own keys against the streamed
-    bitmap yields zero false negatives — a snapshot mid-ingest is a
-    valid membership screen."""
+    """bloom_bitmap run on the stream drains to the batch bitmap (OR
+    is the merge), and probing the corpus's own keys against the
+    streamed bitmap yields zero false negatives — a snapshot
+    mid-ingest is a valid membership screen."""
     from airflow_scraping_etl_tutorial_spark.operators.membership import (
         bloom_bitmap,
         bloom_probe,
     )
-    from airflow_scraping_etl_tutorial_spark.streaming.sketches import (
-        streaming_bloom_bitmap,
-    )
 
-    docs_dir = str(tmp_path / "docs_bloom_stream")
     batch_docs = load(spark, SF_DIR, "documents")
-    batch_docs.repartition(3).write.mode("overwrite").parquet(docs_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(docs_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
-    q = (
-        streaming_bloom_bitmap(stream)
-        .writeStream.format("memory")
-        .queryName("bloom_bits")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    streamed = spark.sql("SELECT * FROM bloom_bits")
+    stream = _file_stream(spark, batch_docs, str(tmp_path / "docs_bloom"), 3)
+    streamed, _ = _drain(spark, bloom_bitmap(stream), "bloom_bits", "complete")
     got = {(r.word_idx, r.bits) for r in streamed.collect()}
     want = {(r.word_idx, r.bits) for r in bloom_bitmap(batch_docs).collect()}
     assert got == want
@@ -433,39 +422,19 @@ def test_streaming_bloom_bitmap_matches_batch_and_screens(spark, tmp_path):
 
 
 def test_streaming_histogram_matches_batch_and_feeds_quantiles(spark, tmp_path):
-    """The drained streaming histogram equals the batch fixed-edge
+    """histogram_fixed run on the stream drains to the batch
     histogram (per-bin COUNT merges by + — the property q278 proves
     as data), every event is binned (clamped edges drop nothing), and
     the snapshot supports the q267-style quantile read."""
     from airflow_scraping_etl_tutorial_spark.operators.sketches import (
         histogram_fixed,
     )
-    from airflow_scraping_etl_tutorial_spark.streaming.sketches import (
-        streaming_histogram,
-    )
 
-    ev_dir = str(tmp_path / "events_hist_stream")
     batch_ev = load(spark, SF_DIR, "events")
-    batch_ev.repartition(4).write.mode("overwrite").parquet(ev_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(ev_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    q = (
-        streaming_histogram(stream, "value", lo=0.0, hi=1000.0, n_bins=64)
-        .writeStream.format("memory")
-        .queryName("hist_bins")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    n_batches = len(q.recentProgress)
-    q.stop()
-    got = {
-        r.bin: r.cnt for r in spark.sql("SELECT * FROM hist_bins").collect()
-    }
+    stream = _file_stream(spark, batch_ev, str(tmp_path / "events_hist"), 4)
+    hist = histogram_fixed(stream, "value", 0.0, 1000.0, 64)
+    hist, n_batches = _drain(spark, hist, "hist_bins", "complete")
+    got = {r.bin: r.cnt for r in hist.collect()}
     want = {
         r.bin: r.cnt
         for r in histogram_fixed(batch_ev, "value", 0.0, 1000.0, 64).collect()
@@ -509,40 +478,20 @@ def test_fixed_bin_clamps_and_bins_exactly(spark):
 
 
 def test_streaming_ams_matches_batch_and_q314(spark, tmp_path):
-    """The streaming AMS counter state equals the batch twin after the
-    drain (fifth mergeable shape: signed counters merge by +), and its
-    squared counters are exactly the q314 catalog estimates — the
-    sketch is LINEAR in events, so replaying the events table one
-    file per micro-batch must land on the identical 8 integers."""
+    """ams_sums run on the stream drains to the batch counters (fifth
+    mergeable shape: signed counters merge by +), and its squared
+    counters are exactly the q314 catalog estimates — the sketch is
+    LINEAR in events, so replaying the events table one file per
+    micro-batch must land on the identical 8 integers."""
     from airflow_scraping_etl_tutorial_spark.operators.sketches import ams_sums
     from airflow_scraping_etl_tutorial_spark.plans import llm_ops24  # noqa: F401
     from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-    from airflow_scraping_etl_tutorial_spark.streaming.sketches import (
-        streaming_ams_sums,
-    )
 
-    ev_dir = str(tmp_path / "ev_stream")
     batch_ev = load(spark, SF_DIR, "events").select("user_id")
-    batch_ev.repartition(4).write.mode("overwrite").parquet(ev_dir)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(ev_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    q = (
-        streaming_ams_sums(stream, "user_id")
-        .writeStream.format("memory")
-        .queryName("ams_sums")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    n_batches = len(q.recentProgress)
-    q.stop()
-    got = {
-        r.est: r.s for r in spark.sql("SELECT * FROM ams_sums").collect()
-    }
+    stream = _file_stream(spark, batch_ev, str(tmp_path / "ev_ams"), 4)
+    sums = ams_sums(stream, "user_id")
+    sums, n_batches = _drain(spark, sums, "ams_sums", "complete")
+    got = {r.est: r.s for r in sums.collect()}
     want = {r.est: r.s for r in ams_sums(batch_ev, "user_id").collect()}
     assert got == want
     assert n_batches >= 4  # state built incrementally
@@ -564,7 +513,7 @@ def test_streaming_weighted_sample_matches_batch_q339(spark, tmp_path):
     from airflow_scraping_etl_tutorial_spark.plans import llm_ops33  # noqa: F401
     from airflow_scraping_etl_tutorial_spark.plans.llm_ops33 import _wrs_keyed
     from airflow_scraping_etl_tutorial_spark.plans.registry import _REGISTRY
-    from airflow_scraping_etl_tutorial_spark.streaming.sketches import (
+    from airflow_scraping_etl_tutorial_spark.streaming.events import (
         streaming_weighted_sample,
     )
 
@@ -574,24 +523,11 @@ def test_streaming_weighted_sample_matches_batch_q339(spark, tmp_path):
             "skey"
         ),
     )
-    d = str(tmp_path / "wrs_stream")
-    keyed.repartition(4).write.mode("overwrite").parquet(d)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    stream = _file_stream(spark, keyed, str(tmp_path / "wrs_stream"), 4)
+    sample, n_batches = _drain(
+        spark, streaming_weighted_sample(stream), "wrs_sample", "update"
     )
-    q = (
-        streaming_weighted_sample(stream)
-        .writeStream.format("memory")
-        .queryName("wrs_sample")
-        .outputMode("update")
-        .start()
-    )
-    q.processAllAvailable()
-    n_batches = len(q.recentProgress)
-    q.stop()
-    rows = spark.sql("SELECT * FROM wrs_sample").collect()
+    rows = sample.collect()
     assert n_batches >= 4  # state built incrementally, one file per batch
     latest = {}
     for r in rows:

@@ -9,10 +9,12 @@ broadcast, and no operator added an accidental shuffle.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from airflow_scraping_etl_tutorial_spark.plans import all_queries  # noqa: E402
 from airflow_scraping_etl_tutorial_spark.session import get_spark  # noqa: E402
@@ -652,7 +654,7 @@ def main() -> None:
                 f"- unpartitioned windows: **{a['global_windows']}** — {reason}"
             )
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO_ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(f"PLANS.md written ({len(AUDITED)} queries audited)")
     if unexplained:
