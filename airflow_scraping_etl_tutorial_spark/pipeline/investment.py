@@ -5,14 +5,20 @@ Reference lifecycle (dags/Final_app.py:79-149): five Airflow tasks with
 XCom handoffs and Jinja-templated INSERTs. Engine lifecycle (SURVEY.md
 §3.4): a single DataFrame flows
 
-    payload -> filter(stat='OK') -> explode(data) -> drop 合計
-            -> de-comma/cast Decimal(38,0)
-            -> per-day aggregate (12 sink columns + verdicts) -> collect
+    payload -> per payload row, in place on its data array:
+               keep stat='OK' (a failed fetch is one marker row)
+            -> drop 合計 -> de-comma/cast Decimal(38,0)
+            -> 12 sink columns + verdicts -> collect
             -> route -> idempotent write of the good days -> notify
 
-One collect of the per-day aggregate is the only scan of the payload:
+One collect of the per-day projection is the only scan of the payload:
 the driver routes on its verdicts and writes the good days' rows from
-it, so nothing is cached or scanned twice.
+it, so nothing is cached or scanned twice. Each TWSE payload row holds
+exactly one day, so the projection reads its nested rows where they
+are (as Dremel evaluates a repeated field inside its record) instead of
+exploding and regrouping them: no shuffle, and over an in-memory
+payload frame Catalyst folds it away, so a loaded day runs one Spark
+job, the write.
 
 Differences from the reference, by design:
 - fetch once, not twice (Final_app.py:26 + :45 double-fetch);
@@ -27,21 +33,21 @@ Differences from the reference, by design:
   flow on action results (C1), notification is a callback (S7/S8).
 
 Scale: a single day is one tiny document, but the same plan handles a
-20-year backfill unchanged — explode/aggregate are set-oriented, the
-driver holds one aggregate row per day (~5k for 20 years) and the sink
-is partitioned by dt, so each day lands in its own partition, reruns
-replace exactly that partition and a one-day lookup reads only it.
+20-year backfill unchanged: the projection is one narrow pass over the
+payload rows, the collect returns one row per day (~5k for 20 years) and
+the sink is partitioned by dt, so each day lands in its own partition,
+reruns replace exactly that partition and a one-day lookup reads only it.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.sinks import overwrite_day_partitions
@@ -49,8 +55,8 @@ from ..sources.twse import CATEGORIES, TOTAL_ROW_LABEL
 
 EXPECTED_VALUES_PER_DAY = 12  # 4 categories x 3 measures (Final_app.py:53)
 
-# unit_name of the one row run_daily_load makes of a failed fetch
-# (a stat=NULL payload); no TWSE category label looks like it.
+# unit_name of the one row day_rows makes of a failed fetch (a
+# stat=NULL payload); no TWSE category label looks like it.
 FETCH_FAILED_LABEL = "<fetch failed>"
 
 MONEY = "decimal(38,0)"
@@ -66,68 +72,90 @@ SINK_SCHEMA = T.StructType(
 )
 
 
+# One payload row as SQL text, composed once at import and shared by
+# clean_long and day_rows. A kept row is a typed (unit_name, buy, sell,
+# dif) struct whose amounts lose their thousands separators (P3) and are
+# cast exact; the 合計 row is dropped by VALUE not position (P1), and so
+# is a row with a null label. `get` reads a short row's missing cells as
+# NULL.
+_TYPED_ROW = "r -> named_struct('unit_name', get(r, 0), {})".format(
+    ", ".join(f"'{m}', CAST(regexp_replace(get(r, {i}), ',', '') AS {MONEY})" for i, m in enumerate(MEASURES, 1))
+)
+_KEEP_ROW = f"r -> get(r, 0) != '{TOTAL_ROW_LABEL}'"
+# A failed fetch (stat NULL) is one marker row, so the same expressions
+# alert on it (arity) and name it (fetch_failed). Any stat other than
+# 'OK' (a closed market, P8) keeps no rows.
+_DAY_ROWS = (
+    f"transform(filter(CASE WHEN stat IS NULL"
+    f" THEN array(array('{FETCH_FAILED_LABEL}', NULL, NULL, NULL))"
+    f" WHEN stat = 'OK' THEN data END, {_KEEP_ROW}), {_TYPED_ROW})"
+)
+# Each money column is the first non-null value of its measure among the
+# day's rows with that category label: it keys on the category VALUE, so
+# it survives payload reordering (unlike Final_app.py:54-66).
+_DAY_COLUMNS = (
+    "dt",
+    *(
+        f"get(filter(transform(filter(rows, r -> r.unit_name = '{label}'), r -> r.{measure}),"
+        f" v -> v IS NOT NULL), 0) AS {prefix}_{measure}"
+        for label, prefix in CATEGORIES
+        for measure in MEASURES
+    ),
+    "CAST(size(rows) * 3 AS BIGINT) AS n_values",
+    f"size(rows) * 3 = {EXPECTED_VALUES_PER_DAY} AS arity_ok",
+    "NOT exists(rows, r -> coalesce(r.dif != r.buy - r.sell, false)) AS dif_ok",
+    f"exists(rows, r -> r.unit_name = '{FETCH_FAILED_LABEL}') AS fetch_failed",
+)
+
+
 def clean_long(payloads: DataFrame) -> DataFrame:
     """Payload documents -> long-form (dt, unit_name, buy, sell, dif).
 
-    Columnar re-expression of Final_app.py:48-51: explode the nested
-    array (P4), drop the pre-aggregated 合計 row by VALUE not position
-    (P1), strip thousands separators (P3), cast to exact decimals.
-    Market-closed days (stat != 'OK', P8) simply produce no rows.
+    Columnar re-expression of Final_app.py:48-51: flatten the nested
+    array (P4, ``inline`` of the typed rows), drop the pre-aggregated
+    合計 row by VALUE not position (P1), strip thousands separators
+    (P3), cast to exact decimals; the same row expressions as
+    ``day_rows``. Market-closed days (stat != 'OK', P8) simply produce
+    no rows.
     """
-    de_comma = lambda c: F.regexp_replace(c, ",", "").cast(MONEY)  # noqa: E731
+    return payloads.where("stat = 'OK'").selectExpr(
+        "date AS dt", f"inline(transform(filter(data, {_KEEP_ROW}), {_TYPED_ROW}))"
+    )
+
+
+def day_rows(payloads: DataFrame) -> DataFrame:
+    """Payload documents -> one row per payload day: the 12 sink money
+    columns (reference P5) plus validate's verdicts and ``fetch_failed``
+    (the payload is a failed fetch, stat NULL).
+
+    One projection of each payload row: its ``data`` array is typed and
+    read in place by array functions, with no explode and no regroup,
+    so nothing is shuffled. Over an in-memory payload frame Catalyst
+    folds the whole projection, and its collect runs no Spark job. A
+    day with no kept rows (closed market, empty ``data``, only 合計)
+    yields no row. Two payload rows of one date yield two rows;
+    run_daily_load alerts on such a date.
+    """
     return (
-        payloads.filter(F.col("stat") == "OK")
-        .select(F.col("date").alias("dt"), F.explode("data").alias("row"))
-        .select(
-            "dt",
-            F.col("row")[0].alias("unit_name"),
-            de_comma(F.col("row")[1]).alias("buy"),
-            de_comma(F.col("row")[2]).alias("sell"),
-            de_comma(F.col("row")[3]).alias("dif"),
-        )
-        .filter(F.col("unit_name") != TOTAL_ROW_LABEL)
+        payloads.selectExpr("date AS dt", f"{_DAY_ROWS} AS rows")
+        .where("size(rows) > 0")
+        .selectExpr(*_DAY_COLUMNS)
     )
 
 
-def day_aggregate(long_df: DataFrame) -> DataFrame:
-    """Long (4 rows/day) -> one row per dt: the 12 sink money columns
-    (reference P5) plus validate's verdicts and ``fetch_failed`` (the day
-    is the marker row run_daily_load makes of a failed fetch).
-
-    Each money column is the first non-null value of its measure among
-    the day's rows with that category label, so it keys on the category
-    VALUE (robust to payload reordering) and needs no distinct-scan job.
-    """
-    unit = F.col("unit_name")
-    money = [
-        F.first(F.when(unit == label, F.col(measure)), ignorenulls=True).alias(f"{prefix}_{measure}")
-        for label, prefix in CATEGORIES
-        for measure in MEASURES
-    ]
-    n_values = F.count(F.lit(1)) * 3
-    n_bad_dif = F.sum(F.when(F.col("dif") != F.col("buy") - F.col("sell"), 1).otherwise(0))
-    return long_df.groupBy("dt").agg(
-        *money,
-        n_values.alias("n_values"),
-        (n_values == EXPECTED_VALUES_PER_DAY).alias("arity_ok"),
-        (n_bad_dif == 0).alias("dif_ok"),
-        F.max(unit == FETCH_FAILED_LABEL).alias("fetch_failed"),
-    )
+def pivot_to_sink_schema(payloads: DataFrame) -> DataFrame:
+    """Payload documents -> wide (1 row/day, 13 columns): reference P5."""
+    return day_rows(payloads).select(*SINK_COLUMNS)
 
 
-def pivot_to_sink_schema(long_df: DataFrame) -> DataFrame:
-    """Long (4 rows/day) -> wide (1 row/day, 13 columns): reference P5."""
-    return day_aggregate(long_df).select(*SINK_COLUMNS)
-
-
-def validate(long_df: DataFrame) -> DataFrame:
+def validate(payloads: DataFrame) -> DataFrame:
     """Schema-drift gate (reference P7: len(data)==12, Final_app.py:53)
     plus the dif=buy-sell invariant the source embeds (§1.2).
 
-    Returns one row per dt with boolean verdicts; empty input -> empty
-    output (the market-closed no-op, C2).
+    Returns one row per payload day with boolean verdicts; no open day
+    -> empty output (the market-closed no-op, C2).
     """
-    return day_aggregate(long_df).select("dt", "n_values", "arity_ok", "dif_ok")
+    return day_rows(payloads).select("dt", "n_values", "arity_ok", "dif_ok")
 
 
 @dataclass
@@ -152,27 +180,21 @@ def run_daily_load(
     Control flow (reference C1) happens HERE, on action results — not in
     the plan: Catalyst owns the dataflow, the driver owns routing.
     """
-    # A stat=NULL day is a failed fetch, not a closed market: it becomes
-    # one marker row, so the same collect, from the same single scan,
-    # alerts on it (arity) and names it (fetch_failed).
-    marker = F.array(F.lit(FETCH_FAILED_LABEL), *[F.lit(None).cast("string")] * 3)
-    marked = payloads.withColumns(  # one projection: both read the input stat
-        {
-            "stat": F.coalesce("stat", F.lit("OK")),
-            "data": F.when(F.col("stat").isNull(), F.array(marker)).otherwise(F.col("data")),
-        }
-    )
     # The one scan of the payload: every route and every sink row comes
     # from this collect (vs the reference's S1 double-fetch).
-    days = day_aggregate(clean_long(marked)).collect()
+    days = day_rows(payloads).collect()
     if not days:
         # stat != 'OK' everywhere: market closed -> no-op (C2/DummyOperator).
         return RunResult(route="market_closed", days_loaded=0, alerts=[])
 
-    failed = sorted(r.dt for r in days if r.fetch_failed)
-    bad = sorted(r.dt for r in days if not (r.arity_ok and r.dif_ok))
+    # A date held by two payload rows is never loaded: which row is right
+    # is unknown, so it alerts like any other drift.
+    seen = Counter(r.dt for r in days)
+    ok = [r.arity_ok and r.dif_ok and seen[r.dt] == 1 for r in days]
+    failed = sorted({r.dt for r in days if r.fetch_failed})
+    bad = sorted({r.dt for r, o in zip(days, ok) if not o})
     drift = [dt for dt in bad if dt not in failed]
-    good = [[r[c] for c in SINK_COLUMNS] for r in days if r.arity_ok and r.dif_ok]
+    good = [[r[c] for c in SINK_COLUMNS] for r, o in zip(days, ok) if o]
     if notify and failed:
         notify(f"資料抓取失敗: dt={failed}")
     if notify and drift:
@@ -208,7 +230,8 @@ def read_sink(spark: SparkSession, sink_path: str, dt: str | None = None) -> Dat
     partition however long the history is (no listing job, no footer
     job for schema inference). A day with no partition is an empty
     frame; a dt that is not yyyyMMdd raises ValueError, as it names a
-    path. Without dt, every partition is listed.
+    path. Without dt, every partition is listed in-process (session.py
+    sets the listing threshold), so no listing job runs.
     """
     reader = spark.read.schema(SINK_SCHEMA)
     if dt is None:

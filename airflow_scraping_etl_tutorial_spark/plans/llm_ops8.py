@@ -714,7 +714,7 @@ def q231_vocab_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("lang", F.explode(F.split("text", " ")).alias("tok"))
     tl = toks.distinct().persist()
-    regs = hll_register_max(tl.distinct(), "lang").persist()
+    regs = hll_register_max(tl, "lang").persist()
     langs = regs.select("lang").distinct()
     pl = (
         langs.select(F.col("lang").alias("lang_a"))

@@ -82,7 +82,7 @@ def q51_twse_pivot_daily_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference P5: long->wide pivot into the 13-column investment_data
     sink row, keyed on category VALUES (not position — survives payload
     reordering, unlike Final_app.py:54-66)."""
-    wide = pivot_to_sink_schema(clean_long(payloads_to_df(spark, [GOLDEN_OK])))
+    wide = pivot_to_sink_schema(payloads_to_df(spark, [GOLDEN_OK]))
     return wide.select(
         "dt", *[F.col(c).cast("bigint").alias(c) for c in wide.columns if c != "dt"]
     )
@@ -103,7 +103,7 @@ def q51_twse_pivot_daily_row(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q52_twse_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference P7 (len(data)==12 gate) plus the dif=buy-sell invariant
     as set-oriented predicates."""
-    checks = validate(clean_long(payloads_to_df(spark, [GOLDEN_OK])))
+    checks = validate(payloads_to_df(spark, [GOLDEN_OK]))
     return checks.select(
         "dt", F.col("n_values").cast("bigint").alias("n_values"), "arity_ok", "dif_ok"
     )

@@ -54,6 +54,13 @@ def get_spark(
         # the knob that bounds scan-task count (default 128MB is kept on
         # clusters; local override keeps task count sane for tiny SFs).
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # List up to 10k partition directories in-process; by default
+        # more than 32 are listed in a Spark job. A full read of the
+        # day-partitioned TWSE sink (~5k days in 20 years) then plans
+        # with no listing job: on a 4-core box with local disk, a full
+        # read of 5,000 partitions took 0.98 s in 1 job, against 6.9 s
+        # in 2 jobs of 5,157 tasks.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # Parquet TIMESTAMP(NANOS) (the events fixture) is otherwise
         # unreadable by Spark; read as long and convert in the loader.

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from airflow_scraping_etl_tutorial_spark.jobs import daily_load
 from airflow_scraping_etl_tutorial_spark.orchestration import minirunner
 from airflow_scraping_etl_tutorial_spark.pipeline.investment import (
-    clean_long,
     pivot_to_sink_schema,
     read_sink,
     run_daily_load,
@@ -205,7 +204,7 @@ def test_real_http_client_against_recorded_cassette(spark):
     ones (dags/Final_app.py:26-28) — only the host differs."""
     with cassette({"20220819": GOLDEN_OK}) as (source, requested):
         df = read_twse(spark, ["20220819"], source)
-        row = pivot_to_sink_schema(clean_long(df)).first().asDict()
+        row = pivot_to_sink_schema(df).first().asDict()
     # the client sent the reference's exact query string, once
     assert requested == ["/fund/BFI82U?response=json&dayDate=20220819"]
     assert row == GOLDEN_OK_EXPECTED
