@@ -77,7 +77,7 @@ SINK_SCHEMA = T.StructType(
 # dif) struct whose amounts lose their thousands separators (P3) and are
 # cast exact; the 合計 row is dropped by VALUE not position (P1), and so
 # is a row with a null label. `get` reads a short row's missing cells as
-# NULL.
+# NULL; day_rows counts the cells, so such a row fails the arity gate.
 _TYPED_ROW = "r -> named_struct('unit_name', get(r, 0), {})".format(
     ", ".join(f"'{m}', CAST(regexp_replace(get(r, {i}), ',', '') AS {MONEY})" for i, m in enumerate(MEASURES, 1))
 )
@@ -85,10 +85,20 @@ _KEEP_ROW = f"r -> get(r, 0) != '{TOTAL_ROW_LABEL}'"
 # A failed fetch (stat NULL) is one marker row, so the same expressions
 # alert on it (arity) and name it (fetch_failed). Any stat other than
 # 'OK' (a closed market, P8) keeps no rows.
-_DAY_ROWS = (
-    f"transform(filter(CASE WHEN stat IS NULL"
+_KEPT_ROWS = (
+    f"filter(CASE WHEN stat IS NULL"
     f" THEN array(array('{FETCH_FAILED_LABEL}', NULL, NULL, NULL))"
-    f" WHEN stat = 'OK' THEN data END, {_KEEP_ROW}), {_TYPED_ROW})"
+    f" WHEN stat = 'OK' THEN data END, {_KEEP_ROW})"
+)
+# The schema-drift gate (P7, Final_app.py:53) counts value CELLS, not
+# rows: 4 category rows of exactly 1 label + 3 amounts each. A row that
+# lost or gained a column alerts instead of loading NULL or misread
+# amounts.
+_TYPED_COLUMNS = (
+    "dt",
+    f"transform(kept, {_TYPED_ROW}) AS rows",
+    "aggregate(kept, CAST(0 AS BIGINT), (n, r) -> n + size(r) - 1) AS n_values",
+    f"size(kept) * 3 = {EXPECTED_VALUES_PER_DAY} AND forall(kept, r -> size(r) = 4) AS arity_ok",
 )
 # Each money column is the first non-null value of its measure among the
 # day's rows with that category label: it keys on the category VALUE, so
@@ -101,8 +111,8 @@ _DAY_COLUMNS = (
         for label, prefix in CATEGORIES
         for measure in MEASURES
     ),
-    "CAST(size(rows) * 3 AS BIGINT) AS n_values",
-    f"size(rows) * 3 = {EXPECTED_VALUES_PER_DAY} AS arity_ok",
+    "n_values",
+    "arity_ok",
     "NOT exists(rows, r -> coalesce(r.dif != r.buy - r.sell, false)) AS dif_ok",
     f"exists(rows, r -> r.unit_name = '{FETCH_FAILED_LABEL}') AS fetch_failed",
 )
@@ -133,12 +143,14 @@ def day_rows(payloads: DataFrame) -> DataFrame:
     so nothing is shuffled. Over an in-memory payload frame Catalyst
     folds the whole projection, and its collect runs no Spark job. A
     day with no kept rows (closed market, empty ``data``, only 合計)
-    yields no row. Two payload rows of one date yield two rows;
+    yields no row. A kept row that is not 1 label + 3 amounts fails
+    ``arity_ok``. Two payload rows of one date yield two rows;
     run_daily_load alerts on such a date.
     """
     return (
-        payloads.selectExpr("date AS dt", f"{_DAY_ROWS} AS rows")
-        .where("size(rows) > 0")
+        payloads.selectExpr("date AS dt", f"{_KEPT_ROWS} AS kept")
+        .where("size(kept) > 0")
+        .selectExpr(*_TYPED_COLUMNS)
         .selectExpr(*_DAY_COLUMNS)
     )
 

@@ -145,13 +145,20 @@ def test_idempotent_daily_load(spark, tmp_path):
 
 
 def test_day_lookup_runs_one_job_with_one_task(spark, tmp_path):
-    """The S4 lookup reads only its day's directory: over 40 days (more
-    than Spark's default 32-path threshold for a parallel listing job)
-    it is one job of one task, with no listing or schema-inference job
-    before it."""
+    """The S4 lookup reads only its day's directory: over 40 days, with
+    the listing threshold at Spark's default of 32 paths (the session
+    raises it), it is one job of one task, with no listing or
+    schema-inference job before it. A lookup that lists the whole sink
+    would add a parallel listing job."""
     sink = str(tmp_path / "sink")
     days, rows = _day_sink(spark, sink, 40)
-    got, jobs = _jobs(spark, "test-day-lookup", lambda: read_sink(spark, sink, days[7]).collect())
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        got, jobs = _jobs(spark, "test-day-lookup", lambda: read_sink(spark, sink, days[7]).collect())
+    finally:
+        spark.conf.set(key, saved)
     assert jobs == [[1]]
     assert [tuple(r) for r in got] == [rows[7]]
 
@@ -256,6 +263,25 @@ def test_degenerate_days_route(spark, tmp_path):
     assert msgs == ["資料抓取失敗: dt=['20220104']"]
 
 
+def test_short_or_long_row_alerts_and_writes_nothing(spark, tmp_path):
+    """A category row that lost or gained a column is schema drift: the
+    day alerts and nothing is written, rather than loading NULL or
+    misread amounts. So does a day whose every row lost its last
+    column."""
+    sink = str(tmp_path / "sink")
+    rows = GOLDEN_OK["data"]
+    for name, data in (
+        ("short", [rows[0][:3], *rows[1:]]),
+        ("long", [[*rows[0], "0"], *rows[1:]]),
+        ("all_short", [r[:3] for r in rows]),
+    ):
+        msgs = []
+        res = run_daily_load(spark, payloads_to_df(spark, [{**GOLDEN_OK, "data": data}]), sink, notify=msgs.append)
+        assert (res.route, res.days_loaded, res.alerts, res.fetch_failed) == ("alert", 0, ["20220819"], []), name
+        assert msgs == ["資料格式有變動，請確認資料格式: dt=['20220819']"], name
+    assert not (tmp_path / "sink").exists()
+
+
 def test_duplicate_date_alerts_and_writes_none_of_its_rows(spark, tmp_path):
     """A date held by two payload rows alerts and none of its rows is
     written, whether the duplicate comes from the seam or the reader;
@@ -296,9 +322,10 @@ def test_daily_load_job_counts(spark, tmp_path):
 
 
 def _aggregate_oracle(payloads):
-    """The day rows as a ``groupBy(dt)`` over ``clean_long``, with a
-    failed fetch made one marker row first: the aggregate the pipeline
-    ran before its per-payload projection, kept here as the oracle."""
+    """The day rows as explode + ``groupBy(dt)``, with a failed fetch
+    made one marker row first: the aggregate the pipeline ran before its
+    per-payload projection, plus the cell count of each row for the
+    arity gate, kept here as the oracle."""
     marker = F.array(F.lit(FETCH_FAILED_LABEL), *[F.lit(None).cast("string")] * 3)
     marked = payloads.withColumns(
         {
@@ -306,17 +333,27 @@ def _aggregate_oracle(payloads):
             "data": F.when(F.col("stat").isNull(), F.array(marker)).otherwise(F.col("data")),
         }
     )
-    unit = F.col("unit_name")
-    n_values = F.count(F.lit(1)) * 3
+    unit, row = F.col("unit_name"), F.col("row")
+    long_df = (
+        marked.filter(F.col("stat") == "OK")
+        .select(F.col("date").alias("dt"), F.explode("data").alias("row"))
+        .select(
+            "dt",
+            F.get(row, 0).alias("unit_name"),
+            *[F.regexp_replace(F.get(row, i), ",", "").cast("decimal(38,0)").alias(m) for i, m in enumerate(MEASURES, 1)],
+            F.size(row).alias("cells"),
+        )
+        .filter(unit != TOTAL_ROW_LABEL)
+    )
     n_bad_dif = F.sum(F.when(F.col("dif") != F.col("buy") - F.col("sell"), 1).otherwise(0))
-    return clean_long(marked).groupBy("dt").agg(
+    return long_df.groupBy("dt").agg(
         *[
             F.first(F.when(unit == label, F.col(m)), ignorenulls=True).alias(f"{prefix}_{m}")
             for label, prefix in CATEGORIES
             for m in MEASURES
         ],
-        n_values.alias("n_values"),
-        (n_values == 12).alias("arity_ok"),
+        F.sum(F.col("cells") - 1).alias("n_values"),
+        ((F.count(F.lit(1)) * 3 == 12) & F.bool_and(F.col("cells") == 4)).alias("arity_ok"),
         (n_bad_dif == 0).alias("dif_ok"),
         F.max(unit == FETCH_FAILED_LABEL).alias("fetch_failed"),
     )
@@ -324,7 +361,7 @@ def _aggregate_oracle(payloads):
 
 MUTATIONS = (
     "reorder", "extra_dealer", "only_total", "empty", "null_data", "null_label",
-    "null_amount", "null_twin", "bad_dif", "failed", "closed",
+    "null_amount", "null_twin", "bad_dif", "short_row", "long_row", "failed", "closed",
 )  # fmt: skip
 
 
@@ -355,6 +392,10 @@ def _mutated_day(dt, amounts, mutations, rng):
             k = rng.randrange(len(data))
             j, value = (rng.randrange(1, 4), None) if m == "null_amount" else (3, "1")
             payload["data"] = [*data[:k], [*data[k][:j], value, *data[k][j + 1 :]], *data[k + 1 :]]
+        elif m in ("short_row", "long_row") and data:  # a row lost or gained a column
+            k = rng.randrange(len(data))
+            row = data[k][:-1] if m == "short_row" else [*data[k], "0"]
+            payload["data"] = [*data[:k], row, *data[k + 1 :]]
         elif m == "failed":
             payload = {"stat": None, "date": dt}
         elif m == "closed":
