@@ -8,6 +8,8 @@ no shuffle, no UDF, no driver involvement.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -26,6 +28,18 @@ STOPWORDS = {
 def tokens(text: Column) -> Column:
     """Whitespace tokenization (array<string>), codegen'd."""
     return F.split(text, " ")
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Spark runs higher-order-function lambdas interpreted and evaluates
+    every expression inside a lambda body once per array element: a
+    shingling lambda over ``tokens(text)`` re-splits the whole text per
+    shingle, O(n^2) per document. Bound here as the element of a
+    one-element array, the value reaches ``body`` as a lambda variable,
+    which nested lambdas read in O(1)."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def token_count(text: Column) -> Column:
@@ -164,28 +178,28 @@ def repetition_stats(text: Column) -> dict[str, Column]:
     100 TB this is map-only scan work with no shuffle."""
     words = tokens(text)
     n_words = F.size(words)
-    bigrams = F.when(
-        n_words >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n_words - 1),
+
+    def dup_bigram_frac(words: Column) -> Column:
+        n_bigrams = F.size(words) - 1
+        bigrams = F.transform(
+            F.sequence(F.lit(1), n_bigrams),
             lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    n_bigrams = F.size(bigrams)
+        )
+        return F.when(
+            n_bigrams > 0,
+            F.round(
+                F.lit(1.0) - F.size(F.array_distinct(bigrams)).cast("double") / n_bigrams,
+                6,
+            ),
+        ).otherwise(F.lit(0.0))
+
     dup_word_frac = F.round(
         F.lit(1.0) - F.size(F.array_distinct(words)).cast("double") / n_words, 6
     )
-    dup_bigram_frac = F.when(
-        n_bigrams > 0,
-        F.round(
-            F.lit(1.0) - F.size(F.array_distinct(bigrams)).cast("double") / n_bigrams,
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
     return {
         "n_words": n_words.cast("int"),
         "dup_word_frac": dup_word_frac,
-        "dup_bigram_frac": dup_bigram_frac,
+        "dup_bigram_frac": let(words, dup_bigram_frac),
     }
 
 
@@ -202,16 +216,18 @@ def adjacent_pair_counts(
     pairs, not corpus rows) and a top_n truncation plans as
     TakeOrderedAndProject — per-partition partial top-k, no global
     sort."""
-    words = F.split(F.col(text_col), " ")
-    pairs = F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(words, i), F.element_at(words, i + 1)
+    pairs = let(
+        tokens(F.col(text_col)),
+        lambda words: F.when(
+            F.size(words) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(words) - 1),
+                lambda i: F.concat_ws(
+                    " ", F.element_at(words, i), F.element_at(words, i + 1)
+                ),
             ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+        ).otherwise(F.array().cast("array<string>")),
+    )
     out = (
         df.select(F.explode(pairs).alias("pair"))
         .groupBy("pair")

@@ -48,6 +48,12 @@ def ensure_session_defaults(spark: SparkSession) -> None:
       UTC-naive DuckDB oracle;
     - AQE on (default since 3.2, pinned anyway — plans are designed
       around runtime coalescing/skew handling).
+
+    Static confs cannot be set here. A caller-built session keeps
+    Spark's 100-entry compiled-class cache
+    (``spark.sql.codegen.cache.maxEntries``, sized by session.py's
+    builder): its results are the same, but a long-lived caller session
+    recompiles most of a headline pass's ~510 classes on every pass.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
