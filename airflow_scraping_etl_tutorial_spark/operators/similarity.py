@@ -1,21 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as the scale doctrine demands:
-- brute-force cosine top-k: the exact baseline. Queries broadcast
-  against the corpus (the corpus — the big side — never shuffles);
-  per-query top-k via window. O(|queries| * n) — right when the query
-  batch is small.
-- sign-random-projection LSH: deterministic hyperplanes -> bucket key;
-  same-bucket vectors are candidates. Turns n-vs-n search into
+What the module holds, one of each:
+- exact cosine top-k (`brute_force_topk_cosine`): queries broadcast
+  against the corpus (the corpus — the big side — never shuffles).
+  O(|queries| * n) — right when the query batch is small.
+- sign-random-projection LSH (`bucket_keys`, `lsh_topk_cosine`,
+  `embedding_near_dup_pairs`): deterministic hyperplanes -> bucket
+  key; same-bucket vectors are candidates. Turns n-vs-n search into
   O(sum(bucket^2)) — the 100 TB path.
+- IVF search (`ivf_topk_cosine`): Voronoi cells around k-means
+  centroids, queries probe their n_probe nearest cells.
+- deterministic k-means: one Lloyd loop (`_lloyd_models`) behind
+  `kmeans_centroids`, `kmeans_training_trajectory` and
+  `kmeans_centroids_converged`.
+- one per-query top-k tail (`_top_k`) for every search, and one exact
+  re-rank of ANN candidates (`_rerank`) for LSH and IVF.
 
 Vector math defaults to higher-order functions (zip_with/aggregate) on
-array columns — JVM-side, no UDFs. r14 adds ONE Arrow-vectorized NumPy
-kernel for the quadratic within-cell pair stage (guide §4.2: hand whole
-batches to vectorized native code), with accumulation performed in the
-SAME left-fold order as the HOF dot so every emitted double is
-bit-identical — see `within_cell_near_pairs`. Everything that is not
-a measured hot loop stays on the HOF path.
+array columns — JVM-side, no UDFs. Three measured hot loops run in
+Arrow-vectorized NumPy kernels instead (guide §4.2: hand whole batches
+to vectorized native code): the LSH plane scoring (`bucket_keys`), the
+within-cell pair stage (`within_cell_near_pairs`) and the argmax
+assignment (`assign_argmax_cosine`). All three read vectors through one
+row reader, `_dense_rows`, so they share one rule for which rows are
+valid, and each accumulates in the SAME left-fold order as the HOF dot,
+so every emitted double is bit-identical to the fold form.
 """
 
 from __future__ import annotations
@@ -23,6 +32,8 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
+from functools import reduce
+from itertools import islice, pairwise
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,6 +56,48 @@ def dot(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
+
+
+def _dense_rows(list_array, dim: int | None = None):
+    """The vector rows of an Arrow list array that a HOF fold can score.
+
+    Returns ``(ok, V)``: ``ok`` is a bool mask over the rows, True where
+    the vector is non-NULL, has length ``dim`` and has no NULL element;
+    ``V`` is the float64 (ok.sum() x dim) matrix of those rows, in row
+    order. ``dim=None`` takes the length of the first non-NULL vector
+    (0 when there is none). These are exactly the rows whose fold dot
+    is not NULL: under zip_with a NULL vector, a NULL element or a
+    ragged length pads/poisons the fold to NULL. A NaN element is a
+    valid Arrow value and stays in ``V`` — Arrow validity, not the
+    value, tells a NULL element from a NaN. float32 elements widen to
+    float64 exactly, as the JVM cast in ``as_double`` does.
+
+    The list array may be a slice: ``offsets`` index the whole child
+    array, which ``values`` returns unsliced."""
+    import numpy as np
+
+    n = len(list_array)
+    offsets = list_array.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens = np.diff(offsets)
+    ok = (
+        ~list_array.is_null().to_numpy(zero_copy_only=False)
+        if list_array.null_count
+        else np.ones(n, dtype=bool)
+    )
+    if dim is None:
+        first = np.flatnonzero(ok)
+        dim = int(lens[first[0]]) if len(first) else 0
+    ok &= lens == dim
+    child = list_array.values
+    if child.null_count:
+        valid = child.is_valid().to_numpy(zero_copy_only=False)
+        seen = np.concatenate(([0], np.cumsum(valid, dtype=np.int64)))
+        ok &= (seen[offsets[1:]] - seen[offsets[:-1]]) == lens
+    starts = offsets[:-1][ok]
+    if not len(starts):
+        return ok, np.zeros((0, dim), dtype=np.float64)
+    flat = child.to_numpy(zero_copy_only=False).astype(np.float64)
+    return ok, flat[starts[:, None] + np.arange(dim)[None, :]]
 
 
 def assign_argmax_cosine(
@@ -229,8 +282,8 @@ def _assign_argmax_cosine_arrow(
       lands on the smallest cid exactly as the fold does;
     - a NULL vector, NULL element, or ragged length nulls every dot
       in the fold (zip_with pads with NULL, the sum poisons), which
-      falls back to the smallest cid — the kernel assigns those rows
-      the smallest cid directly.
+      falls back to the smallest cid — `_dense_rows` leaves those
+      rows out and the kernel assigns them the smallest cid directly.
 
     The input batch's own arrays are yielded back untouched (no
     pandas coercion anywhere), so pass-through columns — including
@@ -256,34 +309,10 @@ def _assign_argmax_cosine_arrow(
 
     def assign_batches(batches):
         for batch in batches:
-            n = batch.num_rows
-            va = batch.column(vec_idx)
-            if va.offset != 0:
-                # defensive: Spark hands offset-0 batches; a sliced
-                # list array's offsets buffer would not align
-                va = va.take(pa.array(np.arange(n, dtype=np.int64)))
-            offsets = va.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            lens = np.diff(offsets)
-            row_null = (
-                va.is_null().to_numpy(zero_copy_only=False)
-                if va.null_count
-                else np.zeros(n, dtype=bool)
-            )
-            ok = (~row_null) & (lens == dim)
-            child = va.values
-            if child.null_count:
-                cvalid = child.is_valid().to_numpy(zero_copy_only=False)
-                ccum = np.concatenate(
-                    ([0], np.cumsum(cvalid.astype(np.int64)))
-                )
-                ok &= (ccum[offsets[1:]] - ccum[offsets[:-1]]) == lens
-            out = np.full(n, smallest, dtype=np.int64)
-            nv = int(ok.sum())
+            ok, V = _dense_rows(batch.column(vec_idx), dim)
+            out = np.full(batch.num_rows, smallest, dtype=np.int64)
+            nv = len(V)
             if nv:
-                # float32 -> float64 is the exact widening as_double does
-                flat = child.to_numpy(zero_copy_only=False).astype(np.float64)
-                starts = offsets[:-1][ok]
-                V = flat[starts[:, None] + np.arange(dim)[None, :]]
                 S = np.zeros((nv, m), dtype=np.float64)
                 for k in range(dim):
                     S = S + V[:, k : k + 1] * C[None, :, k]
@@ -320,15 +349,47 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(da, db) / (l2_norm(da) * l2_norm(db))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored (query_id, neighbor_id, cos_raw) pairs.
+    Ranking happens on the UNROUNDED cosine with the unique neighbor id
+    as tiebreak, so the selected set is deterministic; the output
+    cosine is rounded for comparability."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
+    )
+
+
+def _rerank(
+    cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int, id_col: str
+) -> DataFrame:
+    """Exact cosine re-rank of ANN candidate pairs (query_id,
+    neighbor_id): self-pairs and repeats dropped, then each pair scored
+    against the broadcast query vectors and the corpus vectors."""
+    pairs = (
+        cand.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+        .distinct()
+    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb"))
+    scored = (
+        pairs.join(F.broadcast(q), "query_id")
+        .join(c, "neighbor_id")
+        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"))
+    )
+    return _top_k(scored, k)
+
+
 def brute_force_topk_cosine(
     queries: DataFrame, corpus: DataFrame, k: int = 5, id_col: str = "vec_id"
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The query side is broadcast (small by construction); the corpus
-    streams through map tasks. Ranking happens on the UNROUNDED cosine
-    with a unique id tiebreak, so the selected set is deterministic; the
-    output column is rounded for comparability.
+    streams through map tasks, and `_top_k` ranks each query's scores.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb")
@@ -351,17 +412,7 @@ def brute_force_topk_cosine(
             cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_raw", 6).alias("cosine"),
-            "rnk",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def _deterministic_planes(n_planes: int, dim: int) -> list[list[float]]:
@@ -386,66 +437,51 @@ def bucket_keys(
     Map-only — no shuffle; the joins downstream are where data moves.
 
     r14 (guide §4.2): the per-plane dots run in an Arrow-vectorized
-    NumPy kernel — the plane loop accumulates ``acc = acc + E[:, i] *
-    plane[i]`` in the SAME IEEE mul-then-add left-fold order as the HOF
-    ``dot()``, and float32 embeddings widen to float64 exactly as the
-    JVM cast does, so every bucket value is bit-identical to the
-    previous zip_with/aggregate form (tests/test_vectorized_pairs.py
-    asserts equality against the fold on fixture + edge rows).
+    NumPy kernel (mapInArrow over (id, embedding)) — the plane loop
+    accumulates ``acc = acc + E[:, i] * plane[i]`` in the SAME IEEE
+    mul-then-add left-fold order as the HOF ``dot()``, and float32
+    embeddings widen to float64 exactly as the JVM cast does, so every
+    bucket value is bit-identical to the zip_with/aggregate form
+    (tests/test_vectorized_pairs.py asserts equality against the fold
+    on fixture + edge rows).
 
     Degenerate rows keep the fold's semantics exactly (pytest-pinned):
     under zip_with a NULL vector, a NULL element, or a length != dim
     yields a NULL dot (NULL dominates the fold), so every plane bit is
-    0 and the bucket is 0 — Arrow erases the null-element/NaN-element
-    distinction (both arrive as NaN), so a JVM-side ``exists(isnull)``
-    flag rides along to keep those rows on the NULL path. A NaN
+    0 and the bucket is 0 — `_dense_rows` leaves those rows out. A NaN
     ELEMENT, by contrast, makes every dot NaN, and Spark's comparison
     semantics order NaN above every value, so the fold sets every bit:
     the kernel mirrors that with ``(acc > 0) | isnan(acc)``."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     planes = np.array(_deterministic_planes(n_planes, dim), dtype=np.float64)
-    id_field = emb.schema[id_col].dataType
 
-    def score(iters):
-        for pdf in iters:
-            vecs = pdf["embedding"].to_list()
-            n = len(vecs)
-            has_null = pdf["_has_null"].to_numpy()
-            lens = np.fromiter(
-                (len(v) if v is not None else -1 for v in vecs),
-                dtype=np.int64,
-                count=n,
+    def score(batches):
+        for batch in batches:
+            ok, E = _dense_rows(batch.column(1), dim)
+            vb = np.zeros(len(E), dtype=np.int64)
+            for p in range(n_planes):
+                acc = np.zeros(len(E), dtype=np.float64)
+                for i in range(dim):
+                    # left fold: mul then add, the dot() IEEE order
+                    acc = acc + E[:, i] * planes[p, i]
+                # Spark orders NaN above every double: NaN dot -> bit 1
+                vb |= ((acc > 0) | np.isnan(acc)).astype(np.int64) << p
+            buckets = np.zeros(batch.num_rows, dtype=np.int64)
+            buckets[ok] = vb
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.array(buckets, type=pa.int64())],
+                names=[id_col, "bucket"],
             )
-            valid = (lens == dim) & ~has_null
-            buckets = np.zeros(n, dtype=np.int64)
-            if valid.any():
-                E = np.asarray(
-                    [v for v, ok in zip(vecs, valid) if ok], dtype=np.float64
-                )
-                vb = np.zeros(E.shape[0], dtype=np.int64)
-                for p in range(n_planes):
-                    acc = np.zeros(E.shape[0], dtype=np.float64)
-                    for i in range(dim):
-                        # left fold: mul then add, the dot() IEEE order
-                        acc = acc + E[:, i] * planes[p, i]
-                    # Spark orders NaN above every double: NaN dot -> bit 1
-                    vb |= ((acc > 0) | np.isnan(acc)).astype(np.int64) << p
-                buckets[valid] = vb
-            yield pd.DataFrame({id_col: pdf[id_col], "bucket": buckets})
 
     schema = T.StructType(
-        [T.StructField(id_col, id_field), T.StructField("bucket", T.LongType())]
+        [
+            T.StructField(id_col, emb.schema[id_col].dataType),
+            T.StructField("bucket", T.LongType()),
+        ]
     )
-    has_null_elem = F.coalesce(
-        F.exists("embedding", lambda x: x.isNull()), F.lit(False)
-    )
-    return (
-        fan_out(emb)
-        .select(F.col(id_col), F.col("embedding"), has_null_elem.alias("_has_null"))
-        .mapInPandas(score, schema)
-    )
+    return fan_out(emb).select(id_col, "embedding").mapInArrow(score, schema)
 
 
 def lsh_bucket_candidates(
@@ -492,25 +528,7 @@ def lsh_topk_cosine(
     cb = bucket_keys(corpus, n_planes, dim, id_col).select(
         F.col(id_col).alias("neighbor_id"), "bucket"
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb"))
-    cand = (
-        qb.join(cb, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
+    return _rerank(qb.join(cb, "bucket"), queries, corpus, k, id_col)
 
 
 def embedding_near_dup_pairs(
@@ -548,8 +566,6 @@ def embedding_near_dup_pairs(
     — impossible for real embeddings — would yield +Infinity here
     where ANSI mode raised DIVIDE_BY_ZERO in the join form.
     """
-    import math
-
     # The L2 norm is precomputed ONCE PER VECTOR — computing cosine()
     # per pair would redo both norms for every candidate pair (a vector
     # in a k-vector bucket pays its norm k-1 times).
@@ -592,81 +608,93 @@ def ivf_topk_cosine(
     n_centroids: int = 16,
     n_probe: int = 4,
     id_col: str = "vec_id",
+    n_iterations: int = 0,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into Voronoi cells
     around centroids; queries search only their n_probe nearest cells.
 
-    Centroids here are a deterministic pseudo-random corpus sample (the
-    n_centroids vectors with the smallest md5(id) — a hash-ordered
-    top-k, so md5 shuffles the ids uniformly and TakeOrderedAndProject
-    picks the sample with per-partition partial top-k: no global sort,
-    no count(), no driver action) rather than trained k-means — the
-    partition/probe machinery is identical and fully reproducible
-    (md5 is cross-engine, so the oracle selects the same centroids);
-    swapping in trained centroids changes recall, not the plan.
+    The centroids are `kmeans_centroids(corpus, n_centroids,
+    n_iterations)`. With the default n_iterations=0 they are its
+    deterministic init sample (the n_centroids vectors with the
+    smallest md5(id) — a hash-ordered top-k, so md5 shuffles the ids
+    uniformly and TakeOrderedAndProject picks the sample with
+    per-partition partial top-k: no global sort, no count(), no driver
+    action; md5 is cross-engine, so the oracle selects the same
+    centroids). With n_iterations >= 1 they are Lloyd-trained: on
+    clustered corpora training is what makes IVF competitive (cells
+    track the data's modes); on near-uniform data it reshapes cells
+    without a guaranteed recall win. Either way the partition/probe/
+    re-rank machinery is the same; a trained model arrives
+    localCheckpointed, so its two consumers below ship the model
+    instead of re-running the Lloyd lineage.
     Scale: corpus assignment is a broadcast-centroid map stage; the
     search join touches n_probe/n_centroids of the corpus per query.
     """
-    centroids = (
+    centroids = kmeans_centroids(corpus, n_centroids, n_iterations, id_col)
+    # corpus side: map-side argmax, no (n x m) shuffle. The float32
+    # embeddings are pre-cast to double ONCE per row (r14, guide §1.2),
+    # so the per-centroid dots skip the m identity casts — same ops
+    # applied once, bit-identical scores
+    corpus_cells = assign_argmax_cosine(
+        fan_out(corpus).select(id_col, as_double(F.col("embedding")).alias("_ed")),
+        "_ed",
+        centroids,
+    ).select(F.col(id_col).alias("neighbor_id"), "centroid_id")
+    scored = (
+        queries.select(id_col, "embedding")
+        .crossJoin(F.broadcast(centroids))
+        .select(
+            F.col(id_col).alias("query_id"),
+            F.col("centroid_id"),
+            cosine(F.col("embedding"), F.col("c_emb")).alias("c_cos"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("centroid_id"))
+    q_cells = (
+        scored.withColumn("_cr", F.row_number().over(w))
+        .filter(F.col("_cr") <= n_probe)
+        .select("query_id", "centroid_id")
+    )
+    return _rerank(q_cells.join(corpus_cells, "centroid_id"), queries, corpus, k, id_col)
+
+
+def _lloyd_models(corpus: DataFrame, n_centroids: int, id_col: str):
+    """The one Lloyd loop: yields the init model, then the model after
+    each Lloyd iteration, without end.
+
+    - the init model is the md5-hash-ordered top-k sample (no RNG
+      state, reproducible anywhere), left lazy: it is a limit-m plan,
+      cheap to re-run, and an unused generator costs nothing;
+    - each later model is `_lloyd_step` of the one before, after an
+      eager localCheckpoint: it is m tiny rows, and iteration i+1
+      broadcasts iteration i's result — without the checkpoint that
+      broadcast would re-execute the whole prior Lloyd lineage, so
+      each step is trained once and the model is shipped.
+
+    Models are (centroid_id, c_emb: array<double>)."""
+    model = (
         corpus.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), F.col("embedding").alias("c_emb"))
+        .select(F.col(id_col).alias("centroid_id"), as_double(F.col("embedding")).alias("c_emb"))
     )
+    yield model
+    vecs = fan_out(corpus).select(as_double(F.col("embedding")).alias("_e"))
+    while True:
+        model = _lloyd_step(vecs, model).localCheckpoint(eager=True)
+        yield model
 
-    def assign(df: DataFrame, vid: str, emb_alias: str, keep: int) -> DataFrame:
-        if keep == 1:
-            # corpus side: map-side argmax, no (n x m) shuffle
-            return assign_argmax_cosine(df, emb_alias, centroids).select(
-                vid, "centroid_id"
-            )
-        scored = df.crossJoin(F.broadcast(centroids)).select(
-            F.col(vid),
-            F.col("centroid_id"),
-            cosine(F.col(emb_alias), F.col("c_emb")).alias("c_cos"),
-        )
-        w = W.partitionBy(vid).orderBy(F.desc("c_cos"), F.asc("centroid_id"))
-        return (
-            scored.withColumn("_cr", F.row_number().over(w))
-            .filter(F.col("_cr") <= keep)
-            .select(vid, "centroid_id")
-        )
 
-    # corpus side: pre-cast the float32 embeddings to double ONCE per
-    # row (r14, guide §1.2) — assign_argmax_cosine's per-centroid dots
-    # then skip the m identity casts (the cast is applied once here
-    # instead of once per centroid; same ops, bit-identical scores)
-    corpus_cells = assign(
-        fan_out(corpus).select(
-            id_col, as_double(F.col("embedding")).alias("_ed")
-        ),
-        id_col,
-        "_ed",
-        1,
-    ).withColumnRenamed(id_col, "neighbor_id")
-    q_cells = assign(
-        queries.select(id_col, "embedding"), id_col, "embedding", n_probe
-    ).withColumnRenamed(id_col, "query_id")
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb2"))
-    cand = (
-        q_cells.join(corpus_cells, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb2")).alias("cos_raw")
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
+def _moves(new: DataFrame, old: DataFrame) -> DataFrame:
+    """Per-centroid largest component movement (`_move`) between two
+    models, over the centroids live in both."""
     return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
+        new.alias("n")
+        .join(old.alias("o"), "centroid_id")
+        .select(
+            F.array_max(
+                F.zip_with("n.c_emb", "o.c_emb", lambda a, b: F.abs(a - b))
+            ).alias("_move")
+        )
     )
 
 
@@ -674,13 +702,12 @@ def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     n_iterations: int = 2,
-    dim: int = 64,
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Spherical-k-means-style centroid training, fully deterministic:
 
-    - init = the md5-hash-ordered top-k sample (same as ivf_topk_cosine
-      — no RNG state, reproducible anywhere);
+    - init = the md5-hash-ordered top-k sample (`_lloyd_models`; what
+      ivf_topk_cosine uses at n_iterations=0);
     - each Lloyd iteration assigns every vector to its argmax-cosine
       centroid (broadcast map stage) and recomputes per-cluster
       component means with the DECIMAL-exact sum pattern
@@ -696,25 +723,10 @@ def kmeans_centroids(
     vectors drop out (standard Lloyd behavior, mirrored by the oracle).
     Returns (centroid_id, c_emb: array<double>).
     """
-    cents = (
-        corpus.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), as_double(F.col("embedding")).alias("c_emb"))
-    )
-    vecs = fan_out(corpus).select(
-        F.col(id_col), as_double(F.col("embedding")).alias("_e")
-    )
-    # Each iteration materializes its m tiny centroid rows
-    # (localCheckpoint, the kmeans_centroids_converged pattern):
-    # iteration i+1 broadcasts iteration i's result, and without the
-    # checkpoint that broadcast re-executes the whole prior Lloyd
-    # lineage — train each step once, then ship the model.
-    for _ in range(n_iterations):
-        cents = _lloyd_step(vecs, cents, id_col).localCheckpoint(eager=True)
-    return cents
+    return next(islice(_lloyd_models(corpus, n_centroids, id_col), n_iterations, None))
 
 
-def _lloyd_step(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+def _lloyd_step(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """One Lloyd iteration: argmax-cosine assignment (broadcast map
     stage) + per-cluster component means.
 
@@ -725,13 +737,10 @@ def _lloyd_step(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     Decimal-exact sums keep the means order-independent; the array is
     rebuilt position-sorted, so the result is bit-identical to the
     wide form. Assignment is the map-side argmax fold
-    (assign_argmax_cosine) — no (n x m) shuffle per iteration."""
-    # only _e enters the assignment: the kernel is an opaque boundary
-    # (no column pruning through mapInArrow — guide §4.1), so the id
-    # column is dropped BEFORE it instead of after
-    assigned = assign_argmax_cosine(vecs.select("_e"), "_e", cents).select(
-        "centroid_id", "_e"
-    )
+    (assign_argmax_cosine) — no (n x m) shuffle per iteration. `vecs`
+    carries only the `_e` column: the kernel is an opaque boundary (no
+    column pruning through mapInArrow — guide §4.1)."""
+    assigned = assign_argmax_cosine(vecs, "_e", cents).select("centroid_id", "_e")
     comp = assigned.select("centroid_id", F.posexplode("_e").alias("_pos", "_val"))
     means = comp.groupBy("centroid_id", "_pos").agg(
         (
@@ -761,47 +770,25 @@ def kmeans_training_trajectory(
     This is the training-run health check a 100-TB pipeline logs every
     round: movement trending to zero says the model rested; a live-count
     drop says cells collapsed. Built entirely from bounded model-sized
-    DataFrames (m rows per iteration, localCheckpoint'ed like
+    DataFrames (m rows per model, from the same `_lloyd_models` loop as
     kmeans_centroids), so the audit itself is a union of m-row
     aggregates — no data-sized collect anywhere. The movement doubles
     come from the same decimal-exact means the oracle replays, so the
     whole trajectory sits under the value-hash gate.
 
     Returns (iteration int, n_live bigint, max_move double round 6)."""
-    prev = (
-        corpus.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            as_double(F.col("embedding")).alias("c_emb"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    vecs = fan_out(corpus).select(
-        F.col(id_col), as_double(F.col("embedding")).alias("_e")
-    )
-    audits = []
-    for it in range(1, n_iterations + 1):
-        cur = _lloyd_step(vecs, prev, id_col).localCheckpoint(eager=True)
-        audits.append(
-            cur.alias("n")
-            .join(prev.alias("o"), "centroid_id")
-            .select(
-                F.array_max(
-                    F.zip_with("n.c_emb", "o.c_emb", lambda a, b: F.abs(a - b))
-                ).alias("_move")
-            )
-            .agg(
+    models = islice(_lloyd_models(corpus, n_centroids, id_col), n_iterations + 1)
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _moves(cur, prev).agg(
                 F.lit(it).cast("int").alias("iteration"),
                 F.count(F.lit(1)).cast("bigint").alias("n_live"),
                 F.round(F.max("_move"), 6).alias("max_move"),
             )
-        )
-        prev = cur
-    out = audits[0]
-    for a in audits[1:]:
-        out = out.unionByName(a)
-    return out
+            for it, (prev, cur) in enumerate(pairwise(models), 1)
+        ],
+    )
 
 
 def kmeans_centroids_converged(
@@ -811,10 +798,10 @@ def kmeans_centroids_converged(
     max_iterations: int = 20,
     id_col: str = "vec_id",
 ) -> tuple[DataFrame, int]:
-    """Lloyd training run to CONVERGENCE: iterate `_lloyd_step` until
-    the largest per-component centroid movement drops below `tol` (or
-    `max_iterations` caps the loop). The convergence test is one
-    driver-side SCALAR per iteration — the same bounded-collect
+    """Lloyd training run to CONVERGENCE: iterate the `_lloyd_models`
+    loop until the largest per-component centroid movement drops below
+    `tol` (or `max_iterations` caps the loop). The convergence test is
+    one driver-side SCALAR per iteration — the same bounded-collect
     pattern as the connected-components fixpoint (cluster.py): an
     aggregate of m centroids, never data. Each iteration's centroids
     are localCheckpoint'ed (they are m tiny rows) so the loop's
@@ -826,111 +813,14 @@ def kmeans_centroids_converged(
     and accept a driver round-trip per iteration.
 
     Returns (centroids DataFrame, iterations actually run)."""
-    cents = (
-        corpus.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            as_double(F.col("embedding")).alias("c_emb"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    vecs = fan_out(corpus).select(
-        F.col(id_col), as_double(F.col("embedding")).alias("_e")
-    )
+    models = _lloyd_models(corpus, n_centroids, id_col)
+    cents = next(models)
     for it in range(1, max_iterations + 1):
-        new_cents = _lloyd_step(vecs, cents, id_col).localCheckpoint(eager=True)
-        movement = (
-            new_cents.alias("n")
-            .join(cents.alias("o"), "centroid_id")
-            .select(
-                F.array_max(
-                    F.zip_with("n.c_emb", "o.c_emb", lambda a, b: F.abs(a - b))
-                ).alias("_move")
-            )
-            .agg(F.max("_move"))
-            .collect()[0][0]
-        )
-        cents = new_cents
+        prev, cents = cents, next(models)
+        movement = _moves(cents, prev).agg(F.max("_move")).collect()[0][0]
         if movement is not None and movement < tol:
             return cents, it
     return cents, max_iterations
-
-
-def ivf_topk_cosine_trained(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_iterations: int = 2,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """IVF ANN with TRAINED centroids (kmeans_centroids) instead of the
-    raw hash sample. On clustered corpora training is what makes IVF
-    competitive (cells track the data's modes); on near-uniform data it
-    reshapes cells without a guaranteed recall win — tests assert the
-    recall band vs the exact baseline. The partition/probe/re-rank
-    machinery matches ivf_topk_cosine; only centroid quality changes.
-
-    The trained model arrives materialized (kmeans_centroids
-    localCheckpoints each iteration's m tiny rows): both assign() calls
-    crossJoin it, and without materialization each broadcast would
-    re-execute the full multi-shuffle Lloyd lineage — train once, then
-    ship the model, exactly as at scale."""
-    cents = kmeans_centroids(corpus, n_centroids, n_iterations, id_col=id_col)
-
-    def assign(df: DataFrame, vid: str, keep: int) -> DataFrame:
-        if keep == 1:
-            # corpus side: map-side argmax, no (n x m) shuffle; the
-            # float32 embeddings are pre-cast to double ONCE per row
-            # (r14, guide §1.2) so the per-centroid dots skip the m
-            # identity casts — same ops applied once, bit-identical
-            return assign_argmax_cosine(
-                df.select(vid, as_double(F.col("embedding")).alias("_ed")),
-                "_ed",
-                cents,
-            ).select(vid, "centroid_id")
-        scored = df.crossJoin(F.broadcast(cents)).select(
-            F.col(vid),
-            F.col("centroid_id"),
-            cosine(F.col("embedding"), F.col("c_emb")).alias("c_cos"),
-        )
-        w = W.partitionBy(vid).orderBy(F.desc("c_cos"), F.asc("centroid_id"))
-        return (
-            scored.withColumn("_cr", F.row_number().over(w))
-            .filter(F.col("_cr") <= keep)
-            .select(vid, "centroid_id")
-        )
-
-    corpus_cells = assign(
-        fan_out(corpus).select(id_col, "embedding"), id_col, 1
-    ).withColumnRenamed(id_col, "neighbor_id")
-    q_cells = assign(
-        queries.select(id_col, "embedding"), id_col, n_probe
-    ).withColumnRenamed(id_col, "query_id")
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb2"))
-    cand = (
-        q_cells.join(corpus_cells, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb2")).alias("cos_raw")
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", F.round("cos_raw", 6).alias("cosine"), "rnk")
-    )
 
 
 def within_cell_near_pairs(
@@ -966,25 +856,23 @@ def within_cell_near_pairs(
     Degenerate rows behave as the HOF join form does (pytest-pinned):
     a NULL vector, a vector with NULL elements, or a ragged length
     gives a NULL cosine in the join form — NULL never passes a
-    threshold — so such rows are excluded here (a JVM-side
-    ``exists(isnull)`` flag distinguishes NULL elements from NaN, which
-    Arrow would otherwise conflate). NaN cosines (NaN elements,
-    zero-norm 0/0) are EMITTED **as +Infinity**: Spark's comparison
-    semantics order NaN above every double, so a NaN pair passes any
-    threshold filter — but NaN itself cannot cross the pandas->Arrow
-    boundary (it becomes NULL), so the kernel substitutes +Infinity,
-    which passes every ``round(cos_raw, 6) >= tau`` exactly as NaN
-    does (Spark's round is the identity on NaN/Infinity; the DuckDB
-    oracle's NaN likewise orders above every threshold). Callers that
-    copy cos_raw into OUTPUT columns therefore must not rely on NaN
-    pairs — q154 consumes only the ids. Two divergences from the join
-    form, both out of contract: vectors sharing the same NON-standard
-    length would dot normally there but are excluded here (cells are
+    threshold — so `_dense_rows` excludes such rows (a cell's dim is
+    the length of its first non-NULL vector). NaN cosines (NaN
+    elements, zero-norm 0/0) are EMITTED **as +Infinity**: Spark's
+    comparison semantics order NaN above every double, so a NaN pair
+    passes any threshold filter, and +Infinity passes every
+    ``round(cos_raw, 6) >= tau`` exactly as NaN does (Spark's round is
+    the identity on NaN/Infinity; the DuckDB oracle's NaN likewise
+    orders above every threshold). Callers that copy cos_raw into
+    OUTPUT columns therefore must not rely on NaN pairs — q154
+    consumes only the ids. Two divergences from the join form, both
+    out of contract: vectors sharing the same NON-standard length
+    would dot normally there but are excluded here (cells are
     fixed-dim by construction), and a zero-norm 0/0 pair RAISES
     DIVIDE_BY_ZERO there under ANSI mode while this kernel keeps the
     oracle's NaN-passes behavior.
 
-    Scale: cells arrive via a groupBy(cell) applyInPandas — the
+    Scale: cells arrive via a groupBy(cell) applyInArrow — the
     quadratic term stays bounded per cell exactly as in the self-join
     form, and the Gram matrix is computed in `block_rows`-row stripes
     so memory is O(block_rows x cell), never O(cell^2). One cell must
@@ -993,45 +881,19 @@ def within_cell_near_pairs(
     this kernel and the self-join form alike.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     guard = float(cos_guard)
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_all = pdf[id_col].to_numpy()
-        vecs = pdf[vec_col].to_list()
-        norms_all = pdf[norm_col].to_numpy(dtype=np.float64)
-        has_null = pdf["_has_null"].to_numpy()
-        # exclude rows the HOF form could never pair (NULL vector, NULL
-        # element, ragged length — all give a NULL cosine in the join
-        # form; contract + semantics documented above)
-        dim = None
-        for v in vecs:
-            if v is not None:
-                dim = len(v)
-                break
-        keep = []
-        for i, v in enumerate(vecs):
-            if v is None or len(v) != dim or has_null[i]:
-                continue
-            keep.append(i)
-        if len(keep) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos_raw": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cos_raw": "float64"}
-            )
-        keep = np.asarray(keep)
-        E = np.asarray([vecs[i] for i in keep], dtype=np.float64)
-        ids = ids_all[keep]
-        norms = norms_all[keep]
+    def score(table):
+        ok, E = _dense_rows(table.column(vec_col).combine_chunks())
+        ids = table.column(id_col).to_numpy()[ok]
+        norms = table.column(norm_col).to_numpy().astype(np.float64)[ok]
         # id-sorted so i < j in matrix order <=> id_a < id_b
         order = np.argsort(ids, kind="stable")
-        E = E[order]
-        ids = ids[order]
-        norms = norms[order]
+        E, ids, norms = E[order], ids[order], norms[order]
         n = len(ids)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_c: list[np.ndarray] = []
+        out_a, out_b, out_c = [], [], []
         for lo in range(0, n, block_rows):
             hi = min(lo + block_rows, n)
             acc = np.zeros((hi - lo, n), dtype=np.float64)
@@ -1040,24 +902,21 @@ def within_cell_near_pairs(
                 acc = acc + E[lo:hi, k:k + 1] * E[None, :, k]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = acc / (norms[lo:hi, None] * norms[None, :])
-            # NaN cosines are emitted as +Infinity: NaN orders above
-            # every double in Spark (so such pairs pass any threshold)
-            # but would become NULL at the pandas->Arrow boundary —
-            # +Infinity passes the same filters and survives the
-            # conversion (docstring)
+            # NaN cosines pass every threshold in Spark; they are
+            # emitted as +Infinity, which passes the same filters
+            # (docstring)
             ii, jj = np.nonzero((cos > guard) | np.isnan(cos))
             upper = (lo + ii) < jj  # strict upper triangle: id_a < id_b
             ii, jj = ii[upper], jj[upper]
             vals = cos[ii, jj]
-            vals = np.where(np.isnan(vals), np.inf, vals)
             out_a.append(ids[lo + ii])
             out_b.append(ids[jj])
-            out_c.append(vals)
-        return pd.DataFrame(
+            out_c.append(np.where(np.isnan(vals), np.inf, vals))
+        return pa.table(
             {
-                "id_a": np.concatenate(out_a) if out_a else np.array([], dtype=np.int64),
-                "id_b": np.concatenate(out_b) if out_b else np.array([], dtype=np.int64),
-                "cos_raw": np.concatenate(out_c) if out_c else np.array([], dtype=np.float64),
+                "id_a": pa.array(np.concatenate(out_a) if out_a else [], pa.int64()),
+                "id_b": pa.array(np.concatenate(out_b) if out_b else [], pa.int64()),
+                "cos_raw": pa.array(np.concatenate(out_c) if out_c else [], pa.float64()),
             }
         )
 
@@ -1068,13 +927,8 @@ def within_cell_near_pairs(
             T.StructField("cos_raw", T.DoubleType()),
         ]
     )
-    has_null_elem = F.coalesce(
-        F.exists(vec_col, lambda x: x.isNull()), F.lit(False)
-    )
     return (
-        cells.select(
-            cell_col, id_col, vec_col, norm_col, has_null_elem.alias("_has_null")
-        )
+        cells.select(cell_col, id_col, vec_col, norm_col)
         .groupBy(cell_col)
-        .applyInPandas(score, schema)
+        .applyInArrow(score, schema)
     )

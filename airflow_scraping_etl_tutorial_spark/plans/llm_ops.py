@@ -1305,7 +1305,7 @@ def _sql_kmeans_ivf_oracle(
     n_iterations: int = 2,
 ) -> str:
     """Unrolled n-iteration Lloyd + IVF search, DuckDB-side twin of
-    operators.similarity.kmeans_centroids / ivf_topk_cosine_trained.
+    operators.similarity.kmeans_centroids / ivf_topk_cosine(n_iterations=N).
     Component means use the decimal-exact pattern, assignments the same
     left-associated cosine chains — every intermediate double matches
     Spark bit-for-bit, so even the TRAINED centroids are replayed."""
@@ -1401,17 +1401,16 @@ def q96_ivf_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k init) reshapes the Voronoi cells vs q76's raw sample (recall
     vs the exact baseline is asserted in tests; on real clustered
     corpora training is what makes IVF competitive). The Spark side is
-    the engine's iterative-training pattern (driver loop of
+    q76's search, `ivf_topk_cosine`, with `n_iterations=1`: the
+    engine's iterative-training pattern (driver loop of
     broadcast-assign + aggregate; `kmeans_centroids(n_iterations=N)` for
     deeper training, `kmeans_centroids_converged` for train-to-rest);
     the oracle UNROLLS the training in SQL and replays centroid
     training, assignment, probing, and re-rank — the trained model
     itself is value-checked cross-engine. One iteration here keeps the
     per-round attestation cheap; the oracle builder unrolls any count."""
-    from ..operators.similarity import ivf_topk_cosine_trained
-
     emb = load(spark, sf_dir, "embeddings")
-    return ivf_topk_cosine_trained(
+    return ivf_topk_cosine(
         emb.filter(F.col("vec_id") < 5), emb, k=5, n_centroids=16, n_probe=4,
         n_iterations=1,
     ).orderBy("query_id", "rnk")

@@ -700,7 +700,6 @@ def test_ivf_trained_centroids_recall(spark, sf_dir):
     queries either way; a collapse would signal broken training)."""
     from airflow_scraping_etl_tutorial_spark.operators.similarity import (
         ivf_topk_cosine,
-        ivf_topk_cosine_trained,
     )
     from airflow_scraping_etl_tutorial_spark.sources.tables import load
 
@@ -714,7 +713,7 @@ def test_ivf_trained_centroids_recall(spark, sf_dir):
 
     plain = recall(ivf_topk_cosine(queries, emb, k=5, n_centroids=16, n_probe=4))
     trained = recall(
-        ivf_topk_cosine_trained(queries, emb, k=5, n_centroids=16, n_probe=4, n_iterations=2)
+        ivf_topk_cosine(queries, emb, k=5, n_centroids=16, n_probe=4, n_iterations=2)
     )
     assert trained >= 0.4, f"trained recall collapsed: {trained}"
     assert trained >= plain - 0.15, f"trained {trained} far below plain {plain}"
@@ -859,6 +858,7 @@ def test_kmeans_converged_recovers_planted_clusters(spark):
         cosine,
         kmeans_centroids,
         kmeans_centroids_converged,
+        kmeans_training_trajectory,
     )
 
     # Two tight clusters around orthogonal directions in 4-dim.
@@ -882,6 +882,32 @@ def test_kmeans_converged_recovers_planted_clusters(spark):
     fixed_set = {tuple(round(x, 9) for x in r["c_emb"]) for r in fixed.collect()}
     conv_set = {tuple(round(x, 9) for x in r["c_emb"]) for r in cents.collect()}
     assert fixed_set == conv_set
+
+    from decimal import ROUND_HALF_UP, Decimal
+
+    # One Lloyd loop behind all three trainers: the fixed-count model
+    # IS the capped convergence run's model, and each trajectory row is
+    # the live count and rounded max move between consecutive models.
+    def model(frame):
+        return {r["centroid_id"]: tuple(r["c_emb"]) for r in frame.collect()}
+
+    models = [model(kmeans_centroids(df, n_centroids=2, n_iterations=n)) for n in (0, 1, 2)]
+    for n in (1, 2):
+        capped, ran = kmeans_centroids_converged(
+            df, n_centroids=2, tol=0.0, max_iterations=n
+        )
+        assert ran == n and model(capped) == models[n]
+    audit = {
+        r.iteration: (r.n_live, r.max_move)
+        for r in kmeans_training_trajectory(df, n_centroids=2, n_iterations=2).collect()
+    }
+    for it in (1, 2):
+        prev, cur = models[it - 1], models[it]
+        live = set(prev) & set(cur)
+        move = max(abs(a - b) for c in live for a, b in zip(cur[c], prev[c]))
+        # Spark's round(double, 6) is HALF_UP on the double's decimal repr
+        rounded = float(Decimal(repr(move)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        assert audit[it] == (len(live), rounded)
     # and assignments split the two planted groups
     assigned = (
         df.crossJoin(F.broadcast(cents))

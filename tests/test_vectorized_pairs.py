@@ -81,6 +81,52 @@ def test_bucket_keys_degenerate_rows_bucket_zero(spark):
     assert got[4] == 31
 
 
+def test_dense_rows_validity_rule():
+    """The one row rule of the three kernels, without Spark: a row is
+    scored iff it is non-NULL, has length dim and no NULL element; a
+    NaN element is a value, not a NULL, and stays in the matrix."""
+    import numpy as np
+    import pyarrow as pa
+
+    from airflow_scraping_etl_tutorial_spark.operators.similarity import _dense_rows
+
+    nan = float("nan")
+    arr = pa.array(
+        [
+            [1.0, 2.0, 3.0],
+            None,  # NULL vector
+            [1.0, None, 3.0],  # NULL element
+            [nan, 5.0, 6.0],  # NaN element: kept
+            [1.0, 2.0],  # ragged
+            [7.0, 8.0, 9.0],
+        ],
+        type=pa.list_(pa.float32()),
+    )
+    ok, V = _dense_rows(arr, 3)
+    assert ok.tolist() == [True, False, False, True, False, True]
+    assert V.dtype == np.float64 and V.shape == (3, 3)
+    assert V[0].tolist() == [1.0, 2.0, 3.0] and V[2].tolist() == [7.0, 8.0, 9.0]
+    assert math.isnan(V[1, 0]) and V[1, 1:].tolist() == [5.0, 6.0]
+
+    # a slice reads the same rows as the whole array
+    ok_s, V_s = _dense_rows(arr.slice(3, 3), 3)
+    assert ok_s.tolist() == [True, False, True]
+    assert np.array_equal(V_s, V[1:], equal_nan=True)
+
+    # dim inferred from the first non-NULL row (here length 2)
+    ok2, V2 = _dense_rows(pa.array([None, [1.0, 2.0], [3.0, 4.0, 5.0], [6.0, 7.0]]))
+    assert ok2.tolist() == [False, True, False, True]
+    assert V2.tolist() == [[1.0, 2.0], [6.0, 7.0]]
+
+    # all-invalid batch and empty batch: nothing scored, a (0, dim) matrix
+    ok3, V3 = _dense_rows(pa.array([None, [1.0, None]], type=pa.list_(pa.float64())), 2)
+    assert ok3.tolist() == [False, False] and V3.shape == (0, 2)
+    ok4, V4 = _dense_rows(pa.array([], type=pa.list_(pa.float64())), 4)
+    assert ok4.tolist() == [] and V4.shape == (0, 4)
+    ok5, V5 = _dense_rows(pa.array([None, None], type=pa.list_(pa.float64())))
+    assert ok5.tolist() == [False, False] and V5.shape[0] == 0
+
+
 def _cells(spark, emb):
     """Cell frame in the q154 shape (cid, vec_id, _e, _n)."""
     return emb.select(

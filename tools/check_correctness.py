@@ -220,11 +220,12 @@ def main() -> int:
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
+            print(f"FAIL {name}: spark error: {e} (spark {time.time() - t0:.1f}s)")
             n_fail += 1
             continue
+        spark_s = time.time() - t0
         if spec.oracle is None:
-            print(f"rows-only {name}: {len(srows)} rows ({time.time() - t0:.1f}s)")
+            print(f"rows-only {name}: {len(srows)} rows (spark {spark_s:.1f}s)")
             n_rows_only += 1
             continue
         if n_since_recycle >= 15:
@@ -238,6 +239,11 @@ def main() -> int:
         # a GC pause — a persistent failure still FAILs.
         orows = None
         retried = False
+        t1 = time.time()
+
+        def took() -> str:
+            return f"(spark {spark_s:.1f}s, duckdb {time.time() - t1:.1f}s)"
+
         for attempt in (1, 2):
             try:
                 rel = con.sql(spec.oracle)
@@ -270,14 +276,15 @@ def main() -> int:
                         retried = True
                         break
                     except Exception as e2:  # noqa: BLE001
-                        print(f"FAIL {name}: duckdb error (subprocess): {e2}")
+                        print(f"FAIL {name}: duckdb error (subprocess): {e2} {took()}")
                         n_fail += 1
                         break
-                print(f"FAIL {name}: duckdb error: {e}")
+                print(f"FAIL {name}: duckdb error: {e} {took()}")
                 n_fail += 1
                 break
         if orows is None:
             continue
+        timing = took()
 
         problems = []
         # The driver's comparator does NOT share this script's numeric
@@ -328,11 +335,11 @@ def main() -> int:
                 else:
                     problems.append("value diff (row sets differ)")
         if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}")
+            print(f"FAIL {name}: {'; '.join(problems)} {timing}")
             n_fail += 1
         else:
             note = " [oracle retried]" if retried else ""
-            print(f"ok   {name}: {len(srows)} rows ({time.time() - t0:.1f}s){note}")
+            print(f"ok   {name}: {len(srows)} rows {timing}{note}")
             n_pass += 1
         # Drain every persisted intermediate Spark tracks (minhash
         # signatures, sketch counters, frame digests, ...) AND the RDD
