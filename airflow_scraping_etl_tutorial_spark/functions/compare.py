@@ -10,8 +10,8 @@ partitioning (observed: q01 revenue 102470172.545 rounding to .55 vs
                                         a binary double is never exactly
                                         at a 1e-7 tie, so no tie-breaks)
   sum:       exact decimal arithmetic  (associative, order-free)
-  output:    ROUND(dec, scale) -> double  (same exact decimal -> same
-                                        double in every engine)
+  output:    ROUND(dec, 2) -> double  (same exact decimal -> same
+                                    double in every engine)
 
 Averages divide the exact decimal sum (as double) by the exact count —
 one deterministic double division instead of an order-dependent mean.
@@ -20,8 +20,8 @@ Integer-valued doubles (quantities, counts) don't need this: their sums
 are exact in double up to 2^53. Moment aggregates (stddev/corr) can't
 be decimal-summed; they keep documented last-ulp risk.
 
-The oracle-side SQL twins are `ORACLE_SUM` / `ORACLE_MEAN` format
-strings so catalog entries stay textually in lockstep.
+The oracle-side SQL twin of the mean is the `ORACLE_MEAN` format
+string, so catalog entries stay textually in lockstep.
 """
 
 from __future__ import annotations
@@ -32,29 +32,30 @@ from pyspark.sql import functions as F
 DEC = "decimal(18,6)"
 
 
-def money_sum(col: Column, scale: int = 2) -> Column:
-    """Order-independent SUM of a real-valued double column."""
-    return F.round(F.sum(col.cast(DEC)), scale).cast("double")
+def money_sum(col: Column) -> Column:
+    """Order-independent SUM of a real-valued double column, rounded
+    to cents."""
+    return F.round(F.sum(col.cast(DEC)), 2).cast("double")
 
 
-def money_mean(col: Column, scale: int = 6) -> Column:
-    """Order-independent mean, rounded HALF-UP at `scale` via EXACT
-    decimal arithmetic end to end: with m = SUM(dec)·10^scale (an
+def money_mean(col: Column) -> Column:
+    """Order-independent mean, rounded HALF-UP at 6 decimals via EXACT
+    decimal arithmetic end to end: with m = SUM(dec)·10^6 (an
     exact integral decimal) and n = COUNT, the half-up quotient is
         q = (m - m%n)/n  +  (1 if 2·(m%n) >= n else 0)
     — modulo, subtraction, and the exact-multiple division are all
     exact in DECIMAL(38,_) in both engines, so no doubles exist before
-    the final q/10^scale. This replaces the earlier
+    the final q/10^6. This replaces the earlier
     FLOOR(double(m)/double(n) + 0.5) form whose CAST(m AS BIGINT)
     silently wrapped once a group's decimal sum exceeded ~9.2e12 at
     scale 6 (int64 ceiling / 10^6) — Spark's non-ANSI cast nulls/wraps
     where DuckDB's errors, so the engines failed DIFFERENTLY beyond
     the tested fixtures (round-6 ADVICE). The exact form's only bound
-    is DECIMAL(38) itself (~3.2e25 at scale 6 after the 10^scale
+    is DECIMAL(38) itself (~3.2e25 at scale 6 after the 10^6
     shift). Nonnegative domains only (the previous ROUND(sum/count)
     form hit a .5 midpoint at sf0.1 where Spark rounds half-up and
     DuckDB half-to-even: q138's 1545.7828125 → 813 vs 812)."""
-    pow10 = 10**scale
+    pow10 = 10**6
     m = F.sum(col.cast(DEC)) * pow10  # integral value, decimal(38,6)
     n = F.count(col).cast("decimal(38,0)")
     r = m % n
@@ -87,9 +88,8 @@ def det_half_up(col: Column) -> Column:
     )
 
 
-# DuckDB twins (format with the expression and scale).
-ORACLE_SUM = "CAST(ROUND(SUM(CAST(({expr}) AS DECIMAL(18,6))), {scale}) AS DOUBLE)"
-# money_mean's twin: the same exact half-up integer quotient, in
+# money_mean's DuckDB twin (format with the expression, the count
+# argument and pow10): the same exact half-up integer quotient, in
 # DuckDB's exact int128 (HUGEINT) arithmetic — m//n is truncation,
 # equal to floor on the nonnegative domain, +1 when 2·(m%n) >= n.
 # No doubles before the final division, no int64 ceiling (the earlier

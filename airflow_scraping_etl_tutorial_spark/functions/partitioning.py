@@ -1,4 +1,4 @@
-"""Partition-shape helpers.
+"""The partition-shape helper, `fan_out`.
 
 Spark parallelism is bounded by input partition count. A small parquet
 file (or a handful of large row groups) arrives as 1-2 partitions, so a
@@ -6,6 +6,8 @@ CPU-heavy map stage (shingling/hashing/vector math) runs on 1-2 cores no
 matter how many the cluster has. At 100 TB inputs arrive already split
 into thousands of scan tasks and fan_out is a no-op; it exists for the
 small-input regime where compute-per-row, not data volume, dominates.
+Its target is always the session's default parallelism (one partition
+per core); no caller needs another.
 """
 
 from __future__ import annotations
@@ -13,11 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    by: str | None = None,
-) -> DataFrame:
+def fan_out(df: DataFrame, by: str | None = None) -> DataFrame:
     """Repartition IF the input's file-scan split count is below the
     session's default parallelism (i.e. cores would sit idle). The
     extra shuffle moves each row once — worth it exactly when
@@ -45,7 +43,7 @@ def fan_out(
     starved one. Non-file inputs (memory relations in tests) report
     zero files and always fan out, which is the safe direction for a
     compute-heavy consumer."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if len(df.inputFiles()) < target:
         if by is not None:
             return df.repartition(target, by)

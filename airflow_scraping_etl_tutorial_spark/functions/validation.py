@@ -31,15 +31,15 @@ def _summary(name: str, n_violations: Column) -> list[Column]:
     ]
 
 
-def check_not_null(df: DataFrame, cols: list[str], name: str | None = None) -> DataFrame:
+def check_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
     """No NULLs in the given columns."""
     pred = reduce(lambda a, c: a | F.col(c).isNull(), cols, F.lit(False))
     return df.agg(
-        *_summary(name or f"not_null({','.join(cols)})", F.sum(F.when(pred, 1).otherwise(0)))
+        *_summary(f"not_null({','.join(cols)})", F.sum(F.when(pred, 1).otherwise(0)))
     )
 
 
-def check_unique(df: DataFrame, cols: list[str], name: str | None = None) -> DataFrame:
+def check_unique(df: DataFrame, cols: list[str]) -> DataFrame:
     """The given columns form a unique key (PK check)."""
     dupes = (
         df.groupBy(*cols)
@@ -47,31 +47,25 @@ def check_unique(df: DataFrame, cols: list[str], name: str | None = None) -> Dat
         .filter(F.col("n") > 1)
         .agg(F.coalesce(F.sum(F.col("n") - 1), F.lit(0)).alias("extra"))
     )
-    return dupes.select(*_summary(name or f"unique({','.join(cols)})", F.col("extra")))
+    return dupes.select(*_summary(f"unique({','.join(cols)})", F.col("extra")))
 
 
 def check_referential(
-    child: DataFrame,
-    child_key: str,
-    parent: DataFrame,
-    parent_key: str,
-    name: str | None = None,
+    child: DataFrame, child_key: str, parent: DataFrame, parent_key: str
 ) -> DataFrame:
     """Every child FK exists in the parent (orphan check = anti-join)."""
     orphans = child.join(
         parent.select(F.col(parent_key).alias(child_key)), child_key, "left_anti"
     )
     return orphans.agg(
-        *_summary(name or f"fk({child_key}->{parent_key})", F.count(F.lit(1)))
+        *_summary(f"fk({child_key}->{parent_key})", F.count(F.lit(1)))
     )
 
 
-def check_range(
-    df: DataFrame, col: str, lo: float, hi: float, name: str | None = None
-) -> DataFrame:
+def check_range(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
     """Values fall inside [lo, hi]."""
     bad = F.sum(F.when(~F.col(col).between(lo, hi), 1).otherwise(0))
-    return df.agg(*_summary(name or f"range({col},[{lo},{hi}])", F.coalesce(bad, F.lit(0))))
+    return df.agg(*_summary(f"range({col},[{lo},{hi}])", F.coalesce(bad, F.lit(0))))
 
 
 def run_checks(checks: list[DataFrame]) -> DataFrame:

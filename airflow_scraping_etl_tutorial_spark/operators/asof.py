@@ -23,14 +23,10 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_value_cols: tuple[str, ...] = (),
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Left rows enriched with ``asof_ts`` (+ ``asof_<col>`` for each
-    requested right value column) from the latest right row with
-    right.ts <= left.ts, per ``on`` key.
+    """Left rows enriched with ``asof_ts``, the ``ts`` of the latest
+    right row with right.ts <= left.ts, per ``on`` key.
 
     At equal timestamps the right row sorts first, so an exactly-
     simultaneous right row IS visible to the left row. ``tiebreak``
@@ -38,20 +34,19 @@ def asof_join(
     deterministic.
     """
     left_cols = list(left.columns)
-    reserved = {"_ts", "_side", "_right_ts"} | {f"_r_{c}" for c in right_value_cols}
+    reserved = {"_ts", "_side", "_right_ts"}
     if reserved & set(left_cols):
         raise ValueError(f"left columns collide with reserved names: {reserved}")
 
     r = right.select(
         F.col(on),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),  # right sorts before left at equal ts
-        F.col(right_ts).alias("_right_ts"),
-        *[F.col(c).alias(f"_r_{c}") for c in right_value_cols],
+        F.col("ts").alias("_right_ts"),
     )
     lt = left.select(
         *left_cols,
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"),
     )
     merged = r.unionByName(lt, allowMissingColumns=True)
@@ -64,11 +59,5 @@ def asof_join(
     enriched = merged.select(
         "*",
         F.last("_right_ts", ignorenulls=True).over(w).alias("asof_ts"),
-        *[
-            F.last(f"_r_{c}", ignorenulls=True).over(w).alias(f"asof_{c}")
-            for c in right_value_cols
-        ],
     )
-    return enriched.filter(F.col("_side") == 1).select(
-        *left_cols, "asof_ts", *[f"asof_{c}" for c in right_value_cols]
-    )
+    return enriched.filter(F.col("_side") == 1).select(*left_cols, "asof_ts")

@@ -31,6 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Alternation budget of connected_components. 64 covers any realistic
+# input: a path graph (worst measured case) needs ~21 alternations at
+# 10^6-node diameter, and the round count grows sub-linearly in
+# log(diameter).
+_MAX_ITERATIONS = 64
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """For every node u: connect each STRICTLY LARGER neighbor to the
@@ -83,26 +89,20 @@ def _edge_sets_differ(a: DataFrame, b: DataFrame) -> bool:
     return len(diff.collect()) > 0
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_id_a",
-    dst: str = "doc_id_b",
-    max_iterations: int = 64,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Alternate large-star / small-star to a fixed point: every vertex
-    ends with the MIN vertex id of its component. Returns
-    (vertex_id, component_id) for every vertex that appears in `edges`
-    (self-loop-only vertices included, as singleton components).
+    ends with the MIN vertex id of its component. `edges` holds
+    (doc_id_a, doc_id_b) pairs. Returns (vertex_id, component_id) for
+    every vertex that appears in `edges` (self-loop-only vertices
+    included, as singleton components).
 
     Convergence = the stored edge set is exactly unchanged by a full
     alternation (at the fixed point E is a forest of min-rooted stars,
-    which IS the component assignment). Raises if max_iterations is
-    exhausted first — an under-merged labeling must never be returned
-    silently. The default of 64 covers any realistic input: a path
-    graph (worst measured case) needs ~21 alternations at 10^6-node
-    diameter, and the round count grows sub-linearly in log(diameter).
+    which IS the component assignment). Raises if `_MAX_ITERATIONS`
+    alternations are exhausted first — an under-merged labeling must
+    never be returned silently.
     """
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    raw = edges.select(F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b"))
     # vertices come from the UNFILTERED edge list so a vertex that
     # appears only in self-loops still gets its singleton row
     vertices = (
@@ -121,7 +121,7 @@ def connected_components(
         .localCheckpoint()
     )
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(_MAX_ITERATIONS):
         nxt = _small_star(_large_star(e)).localCheckpoint()
         if not _edge_sets_differ(nxt, e):
             e = nxt
@@ -131,7 +131,7 @@ def connected_components(
     if not converged:
         raise ValueError(
             "connected_components did not reach the star fixed point "
-            f"within max_iterations={max_iterations}; raise the budget "
+            f"within {_MAX_ITERATIONS} alternations; raise the budget "
             "(rounds grow ~log^2 in component size, so this indicates "
             "a pathological input, not normal data growth)"
         )
@@ -147,9 +147,7 @@ def connected_components(
     )
 
 
-def dedup_keep_canonical(
-    docs: DataFrame, near_dup_pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_keep_canonical(docs: DataFrame, near_dup_pairs: DataFrame) -> DataFrame:
     """End-to-end near-dup dedup: cluster the pair graph, keep the
     min-id document per cluster, pass through all unpaired documents.
 
@@ -167,6 +165,6 @@ def dedup_keep_canonical(
     """
     comp = connected_components(near_dup_pairs)
     joined = docs.join(
-        comp.withColumnRenamed("vertex_id", id_col), id_col, "left"
-    ).withColumn("component_id", F.coalesce("component_id", F.col(id_col)))
-    return joined.withColumn("is_canonical", F.col(id_col) == F.col("component_id"))
+        comp.withColumnRenamed("vertex_id", "doc_id"), "doc_id", "left"
+    ).withColumn("component_id", F.coalesce("component_id", F.col("doc_id")))
+    return joined.withColumn("is_canonical", F.col("doc_id") == F.col("component_id"))

@@ -34,12 +34,18 @@ from ..functions.partitioning import fan_out
 from .text import let, tokens
 
 
-def exact_dedup(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup by content hash: (md5(key), representative id, copy
-    count). The groupBy key is the 32-hex digest, so the shuffle carries
-    ~40 bytes/row regardless of document size."""
-    return df.groupBy(F.md5(F.col(key)).alias(f"{key}_md5")).agg(
-        F.min(id_col).alias(f"keep_{id_col}"),
+# The catalog's shingle-based operators all use 3-word shingles, and
+# every MinHash signature has 8 hashes; the oracle SQL replays both.
+_N_HASHES = 8
+_SHINGLE_SIZE = 3
+
+
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact dedup by content hash: (md5(text), representative doc_id,
+    copy count). The groupBy key is the 32-hex digest, so the shuffle
+    carries ~40 bytes/row regardless of document size."""
+    return df.groupBy(F.md5(F.col("text")).alias("text_md5")).agg(
+        F.min("doc_id").alias("keep_doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
 
@@ -125,43 +131,37 @@ def _minhash_cols(xs: Column, vs: Column, n_hashes: int) -> list[Column]:
     ]
 
 
-def shingle_words(
-    df: DataFrame, shingle_size: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, xs, vs): per-shingle 60-bit word pairs from one md5 pass.
+def shingle_words(df: DataFrame, shingle_size: int) -> DataFrame:
+    """(doc_id, xs, vs): per-shingle 60-bit word pairs from one md5 pass.
 
     Two-step projection on purpose: materializing the md5 array as its
     own column keeps Catalyst from re-inlining the shingle pipeline
     into each derived expression (CollapseProject skips expensive
     multiply-referenced expressions) — measured ~17x at sf0.1."""
     pre = fan_out(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(
             word_shingles(F.col("text"), shingle_size), lambda s: F.md5(s)
         ).alias("m"),
     )
     return pre.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(F.col("m"), lambda m: _hex60(m, 1)).alias("xs"),
         F.transform(F.col("m"), lambda m: _hex60(m, 17)).alias("vs"),
     )
 
 
-def minhash_signatures(
-    df: DataFrame, n_hashes: int = 8, shingle_size: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document MinHash signature (mh_0..mh_{n-1}). Pure map work;
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """Per-document MinHash signature (mh_0..mh_7). Pure map work;
     every value is reproducible in the DuckDB oracle."""
-    pre = shingle_words(df, shingle_size, id_col)
+    pre = shingle_words(df, _SHINGLE_SIZE)
     return pre.select(
-        F.col(id_col), *_minhash_cols(F.col("xs"), F.col("vs"), n_hashes)
+        F.col("doc_id"), *_minhash_cols(F.col("xs"), F.col("vs"), _N_HASHES)
     )
 
 
-def minhash_signature_table(
-    df: DataFrame, n_hashes: int = 8, shingle_size: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, shingles, mh_0..mh_{n-1}): the shareable signature table.
+def minhash_signature_table(df: DataFrame) -> DataFrame:
+    """(doc_id, shingles, mh_0..mh_7): the shareable signature table.
 
     Build once, persist, and pass to several `minhash_near_duplicates`
     calls via ``signatures=`` to band the SAME signatures differently
@@ -170,49 +170,36 @@ def minhash_signature_table(
     b x r sweep must not pay it per setting. The caller owns the
     persist/unpersist lifecycle: unpersist once every consumer has run
     or has been localCheckpointed."""
-    pre = shingle_words(df, shingle_size, id_col)
+    pre = shingle_words(df, _SHINGLE_SIZE)
     return pre.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("xs").alias("shingles"),
-        *_minhash_cols(F.col("xs"), F.col("vs"), n_hashes),
+        *_minhash_cols(F.col("xs"), F.col("vs"), _N_HASHES),
     )
 
 
 def minhash_near_duplicates(
     df: DataFrame,
-    n_hashes: int = 8,
     bands: int = 4,
-    shingle_size: int = 3,
     jaccard_threshold: float = 0.5,
-    id_col: str = "doc_id",
-    max_bucket_size: int | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
 
     Stages (the MMDS banding scheme):
-      1. signature: n_hashes MinHashes per doc (map-only);
-      2. banding: r = n_hashes/bands rows per band -> band bucket key =
+      1. signature: 8 MinHashes per doc (map-only);
+      2. banding: r = 8/bands rows per band -> band bucket key =
          xxhash64(band_idx, mh_i..mh_j); explode to (band, bucket, id);
       3. candidate pairs: self-join on (band, bucket), id_a < id_b,
          distinct — cost O(sum over buckets of bucket^2), never O(n^2);
       4. verify: exact Jaccard on the candidates' shingle sets only.
 
     Probability a pair with true Jaccard s becomes a candidate:
-    1 - (1 - s^r)^bands — tune (n_hashes, bands) for the recall target.
-
-    max_bucket_size is the 10^9-doc hot-bucket cap (SCALE.md): buckets
-    above the cap are dropped BEFORE the self-join, bounding the worst
-    bucket's quadratic term. A boilerplate-heavy corpus can put
-    millions of docs in one band bucket; capping trades a little recall
-    (a pair in a dropped bucket is still found through any of its
-    other bands) for a hard ceiling on join cost. The bucket-size
-    aggregation collapses map-side — one extra cheap shuffle of
-    (band, bucket, count) rows.
+    1 - (1 - s^r)^bands — tune bands for the recall target.
     """
-    if n_hashes % bands:
-        raise ValueError("bands must divide n_hashes")
-    r = n_hashes // bands
+    if _N_HASHES % bands:
+        raise ValueError(f"bands must divide the {_N_HASHES} hashes")
+    r = _N_HASHES // bands
 
     # Two-step projection (see shingle_words) + persist: the LSH
     # self-join and the two shingle-set lookups would otherwise recompute
@@ -225,7 +212,7 @@ def minhash_near_duplicates(
     # the form for plans that must free the table at a point of their
     # own (after an eager localCheckpoint of the pairs, say).
     sig = (
-        minhash_signature_table(df, n_hashes, shingle_size, id_col).persist()
+        minhash_signature_table(df).persist()
         if signatures is None
         else signatures
     )
@@ -237,16 +224,8 @@ def minhash_near_duplicates(
         ]
     )
     buckets = sig.select(
-        F.col(id_col), F.posexplode(band_keys).alias("band", "bucket")
+        F.col("doc_id"), F.posexplode(band_keys).alias("band", "bucket")
     )
-    if max_bucket_size is not None:
-        ok_buckets = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        buckets = buckets.join(ok_buckets, ["band", "bucket"], "left_semi")
 
     left = buckets.alias("a")
     right = buckets.alias("b")
@@ -255,17 +234,17 @@ def minhash_near_duplicates(
             right,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_id_a"),
-            F.col(f"b.{id_col}").alias("doc_id_b"),
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
         )
         .distinct()
     )
 
-    sh_a = sig.select(F.col(id_col).alias("doc_id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sig.select(F.col(id_col).alias("doc_id_b"), F.col("shingles").alias("sh_b"))
+    sh_a = sig.select(F.col("doc_id").alias("doc_id_a"), F.col("shingles").alias("sh_a"))
+    sh_b = sig.select(F.col("doc_id").alias("doc_id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     out = (
@@ -281,49 +260,51 @@ def minhash_near_duplicates(
     return out
 
 
-def simhash(df: DataFrame, n_bits: int = 60, id_col: str = "doc_id") -> DataFrame:
+# SimHash fingerprint width (see simhash).
+_N_BITS = 60
+
+
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash fingerprint: md5-derived 60-bit per-token hash, bitwise
     vote, sign -> fingerprint bit. Near-dups have low Hamming distance.
 
-    n_bits=60 keeps the reassembled fingerprint positive in a signed
-    long AND matches the 15-hex-char word DuckDB can reproduce, so the
+    60 bits keep the reassembled fingerprint positive in a signed
+    long AND match the 15-hex-char word DuckDB can reproduce, so the
     fingerprint VALUES sit under the oracle hash gate. The bit votes are
-    n_bits aggregate expressions over the exploded token stream —
+    60 aggregate expressions over the exploded token stream —
     partial aggregation collapses them map-side, so the shuffle carries
-    n_bits longs per doc, not per token.
+    60 longs per doc, not per token.
     """
     tok = (
         fan_out(df)
-        .select(F.col(id_col), F.explode(tokens(F.col("text"))).alias("tok"))
+        .select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
         .withColumn("h", _hex60(F.md5("tok"), 1))
     )
     votes = [
         F.sum(
             (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1)
         ).alias(f"v_{b}")
-        for b in range(n_bits)
+        for b in range(_N_BITS)
     ]
-    agg = tok.groupBy(id_col).agg(*votes, F.count(F.lit(1)).alias("n_tokens"))
+    agg = tok.groupBy("doc_id").agg(*votes, F.count(F.lit(1)).alias("n_tokens"))
     fp = None
-    for b in range(n_bits):
+    for b in range(_N_BITS):
         bit = F.when(F.col(f"v_{b}") > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
         term = F.shiftleft(bit, b)
         fp = term if fp is None else fp + term
-    return agg.select(F.col(id_col), fp.alias("simhash"), "n_tokens")
+    return agg.select(F.col("doc_id"), fp.alias("simhash"), "n_tokens")
 
 
-def simhash_near_duplicates(
-    df: DataFrame, max_hamming: int = 3, n_bits: int = 60, id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs via block candidate generation: split the
     fingerprint into (max_hamming+1) blocks — any pair within the Hamming
     radius shares at least one identical block (pigeonhole), so the
     self-join is on block values, never all-pairs."""
-    fps = simhash(df, n_bits=n_bits, id_col=id_col)
+    fps = simhash(df)
     n_blocks = max_hamming + 1
-    width = n_bits // n_blocks
+    width = _N_BITS // n_blocks
     blocks = F.array(
         *[
             F.shiftright(F.col("simhash"), i * width).bitwiseAND(
@@ -333,7 +314,7 @@ def simhash_near_duplicates(
         ]
     )
     keyed = fps.select(
-        F.col(id_col), F.col("simhash"), F.posexplode(blocks).alias("blk", "blk_val")
+        F.col("doc_id"), F.col("simhash"), F.posexplode(blocks).alias("blk", "blk_val")
     )
     a, b = keyed.alias("a"), keyed.alias("b")
     cand = (
@@ -341,11 +322,11 @@ def simhash_near_duplicates(
             b,
             (F.col("a.blk") == F.col("b.blk"))
             & (F.col("a.blk_val") == F.col("b.blk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_id_a"),
-            F.col(f"b.{id_col}").alias("doc_id_b"),
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
             F.col("a.simhash").alias("fp_a"),
             F.col("b.simhash").alias("fp_b"),
         )
@@ -357,28 +338,14 @@ def simhash_near_duplicates(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    shingle_size: int = 3,
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard for every pair sharing >= 1 (indexed)
-    shingle.
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Exact 3-gram Jaccard for every pair sharing >= 1 shingle.
 
     Candidate generation is an inverted-index self-join: explode
-    distinct shingles to (shingle, id), join on shingle — pairs with
-    zero overlap never materialize.
-
-    max_shingle_df is the stop-shingle cap (SCALE.md's 10^9-doc path,
-    now implemented): shingles whose document frequency exceeds the cap
-    are dropped FROM THE INDEX ONLY — a boilerplate shingle appearing
-    in 10^6 docs would otherwise contribute a 10^12-pair bucket. The
-    reported Jaccard stays EXACT (the verify stage intersects the full
-    shingle arrays); pruning only loses pairs whose every shared
-    shingle is hot — by construction pairs of near-identical boilerplate,
-    the pairs a dedup pass cares least about. Cost of the cap: one
-    map-side-combined (shingle, df) aggregation.
+    distinct shingles to (shingle, doc_id), join on shingle — pairs
+    with zero overlap never materialize. The index join counts the
+    common shingles itself, so no second pass over the shingle arrays
+    is needed.
     """
     # persist: BOTH sides of the inverted-index self-join read the
     # shingle sets — without it the shingling map runs twice. Freed by
@@ -390,80 +357,31 @@ def ngram_jaccard_pairs(
     # exchanges of the pair set at any scale — are gone. jaccard is
     # computed from the same three integers, so values are unchanged.
     sh = fan_out(df).select(
-        F.col(id_col), shingle_hashes(F.col("text"), shingle_size).alias("shingles")
+        F.col("doc_id"), shingle_hashes(F.col("text"), _SHINGLE_SIZE).alias("shingles")
     ).persist()
     inv = sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("shingles").alias("_n"),
         F.explode("shingles").alias("shingle"),
     )
-    if max_shingle_df is not None:
-        cold = (
-            inv.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_shingle_df)
-            .select("shingle")
-        )
-        inv = inv.join(cold, "shingle", "left_semi")
     a, b = inv.alias("a"), inv.alias("b")
-    if max_shingle_df is None:
-        # Exact path: count common shingles straight off the index join;
-        # the pair's set sizes come along as MIN over the group.
-        common = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("doc_id_a"),
-                F.col(f"b.{id_col}").alias("doc_id_b"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_common"),
-                F.min("a._n").alias("n_a"),
-                F.min("b._n").alias("n_b"),
-            )
+    common = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-    else:
-        # Pruned path: the index yields CANDIDATES only (hot shingles
-        # are missing from it, so its counts would undercount); the
-        # exact intersection comes from the full shingle arrays, whose
-        # fetch joins also carry the sizes.
-        cand = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("doc_id_a"),
-                F.col(f"b.{id_col}").alias("doc_id_b"),
-            )
-            .distinct()
+        .groupBy(
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
         )
-        arr_a = sh.select(
-            F.col(id_col).alias("doc_id_a"),
-            F.col("shingles").alias("_sa"),
-            F.size("shingles").alias("n_a"),
+        .agg(
+            F.count(F.lit(1)).alias("n_common"),
+            F.min("a._n").alias("n_a"),
+            F.min("b._n").alias("n_b"),
         )
-        arr_b = sh.select(
-            F.col(id_col).alias("doc_id_b"),
-            F.col("shingles").alias("_sb"),
-            F.size("shingles").alias("n_b"),
-        )
-        common = (
-            cand.join(arr_a, "doc_id_a")
-            .join(arr_b, "doc_id_b")
-            .select(
-                "doc_id_a",
-                "doc_id_b",
-                F.size(F.array_intersect("_sa", "_sb")).alias("n_common"),
-                "n_a",
-                "n_b",
-            )
-        )
-    out = common.select(
+    )
+    return common.select(
         "doc_id_a",
         "doc_id_b",
         F.round(
@@ -472,18 +390,11 @@ def ngram_jaccard_pairs(
             6,
         ).alias("jaccard"),
     )
-    return out
 
 
-def decontaminate(
-    corpus: DataFrame,
-    eval_df: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus documents that share at
-    least one k-word shingle with any document of a held-out eval set
+    least one 3-word shingle with any document of a held-out eval set
     (the train/test-overlap scrub every pretraining corpus build runs
     before training).
 
@@ -496,34 +407,30 @@ def decontaminate(
     itself never shuffles, and the shuffled/broadcast payload is 8-byte
     hashes, never text.
 
-    Returns (id_col, n_shared_ngrams, min_eval_doc) for contaminated
+    Returns (doc_id, n_shared_ngrams, min_eval_doc) for contaminated
     corpus docs only.
     """
 
-    def shingle_hashes(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            F.explode(word_shingles(F.col(text_col), k)).alias("_s"),
-        ).select(F.col(id_col), _hex60(F.md5("_s"), 1).alias("_h"))
-
+    # Explode the shingles, then hash them: hashing inside the explode
+    # (as in shingle_hashes) gives Catalyst a different plan.
+    shingle = F.explode(word_shingles(F.col("text"), _SHINGLE_SIZE)).alias("_s")
+    h = _hex60(F.md5("_s"), 1).alias("_h")
     eval_hashes = (
-        shingle_hashes(eval_df)
+        eval_df.select("doc_id", shingle)
+        .select("doc_id", h)
         .groupBy("_h")
-        .agg(F.min(id_col).alias("_min_eval_doc"))
+        .agg(F.min("doc_id").alias("_min_eval_doc"))
     )
-    hits = shingle_hashes(corpus).join(F.broadcast(eval_hashes), "_h")
-    return hits.groupBy(id_col).agg(
+    hits = corpus.select("doc_id", shingle).select("doc_id", h).join(
+        F.broadcast(eval_hashes), "_h"
+    )
+    return hits.groupBy("doc_id").agg(
         F.count_distinct("_h").alias("n_shared_ngrams"),
         F.min("_min_eval_doc").alias("min_eval_doc"),
     )
 
 
-def block_dedup_stats(
-    df: DataFrame,
-    block_words: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def block_dedup_stats(df: DataFrame, block_words: int = 16) -> DataFrame:
     """Block-level dedup audit — the C4/Dolma LINE-dedup pass for flat
     word streams: split each document into fixed `block_words`-word
     blocks, mark every block occurrence a duplicate unless it is the
@@ -549,16 +456,16 @@ def block_dedup_stats(
             ),
         )
 
-    blocks = let(tokens(F.col(text_col)), blocks_of)
-    e = df.select(id_col, F.posexplode(blocks).alias("block_idx", "block"))
+    blocks = let(tokens(F.col("text")), blocks_of)
+    e = df.select("doc_id", F.posexplode(blocks).alias("block_idx", "block"))
     ranked = e.select(
-        id_col,
+        "doc_id",
         F.row_number()
-        .over(W.partitionBy(F.md5("block")).orderBy(id_col, "block_idx"))
+        .over(W.partitionBy(F.md5("block")).orderBy("doc_id", "block_idx"))
         .alias("rn"),
     )
     dup = F.sum(F.when(F.col("rn") > 1, 1).otherwise(0))
-    return ranked.groupBy(id_col).agg(
+    return ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
         dup.cast("bigint").alias("n_dup_blocks"),
         F.round(dup.cast("double") / F.count(F.lit(1)), 6).alias("dup_block_frac"),

@@ -18,8 +18,7 @@ Spark shape:
   bitmap as (word_idx, bits) rows. Only set words materialize, so a
   sparse filter costs O(set bits), not O(m).
 - probe: explode the k positions per candidate, key-equality join
-  against the bitmap (broadcast when it fits — the expected case; a
-  plain shuffled equi-join otherwise, still never all-pairs), then one
+  against the broadcast bitmap (never all-pairs), then one
   groupBy(key) checking all k bits hit.
 
 Bit layout: 60 bits per word (word_idx = pos div 60, bit = pos % 60) so
@@ -51,16 +50,12 @@ def _positions(digest: Column, m_bits: int, k_hashes: int) -> list[Column]:
     return [(_mix60(x, v, j) % F.lit(m_bits)) for j in range(k_hashes)]
 
 
-def bloom_bitmap(
-    df: DataFrame,
-    key_col: str = "text",
-    m_bits: int = 65536,
-    k_hashes: int = 4,
-) -> DataFrame:
-    """Build the bitmap: (word_idx BIGINT, bits BIGINT) with one row per
-    60-bit word that has at least one set bit. The shuffle carries
-    (word_idx, mask) int64 pairs — never the keys themselves."""
-    digest = F.md5(F.col(key_col))
+def bloom_bitmap(df: DataFrame, m_bits: int = 65536, k_hashes: int = 4) -> DataFrame:
+    """Build the bitmap of the `text` keys: (word_idx BIGINT, bits
+    BIGINT) with one row per 60-bit word that has at least one set bit.
+    The shuffle carries (word_idx, mask) int64 pairs — never the keys
+    themselves."""
+    digest = F.md5(F.col("text"))
     pos = F.explode(F.array(*_positions(digest, m_bits, k_hashes))).alias("pos")
     return (
         df.select(pos)
@@ -76,34 +71,26 @@ def bloom_bitmap(
 
 
 def bloom_probe(
-    probe: DataFrame,
-    bitmap: DataFrame,
-    key_col: str = "text",
-    id_col: str = "doc_id",
-    m_bits: int = 65536,
-    k_hashes: int = 4,
-    broadcast_bitmap: bool = True,
+    probe: DataFrame, bitmap: DataFrame, m_bits: int = 65536, k_hashes: int = 4
 ) -> DataFrame:
-    """Probe keys against a bitmap: (id_col, bloom_hit) where bloom_hit
-    is 1 iff ALL k bits are set (possible member) and 0 otherwise
-    (definitely absent). One explode, one key-equality join, one
-    groupBy(id) — the join is broadcast by default (the bitmap is the
-    small, bounded side); pass broadcast_bitmap=False to let the
-    planner shuffle it when m is sized beyond broadcast range."""
-    digest = F.md5(F.col(key_col))
+    """Probe the `text` keys against a bitmap: (doc_id, bloom_hit) where
+    bloom_hit is 1 iff ALL k bits are set (possible member) and 0
+    otherwise (definitely absent). One explode, one key-equality join,
+    one groupBy(doc_id) — the join is broadcast (the bitmap is the
+    small, bounded side)."""
+    digest = F.md5(F.col("text"))
     pos = F.explode(F.array(*_positions(digest, m_bits, k_hashes))).alias("pos")
-    probes = probe.select(F.col(id_col), pos).select(
-        id_col,
+    probes = probe.select(F.col("doc_id"), pos).select(
+        "doc_id",
         F.expr(f"pos div {WORD_BITS}").cast("bigint").alias("word_idx"),
         (F.col("pos") % WORD_BITS).cast("int").alias("bit"),
     )
-    right = F.broadcast(bitmap) if broadcast_bitmap else bitmap
     hit = F.when(
         F.expr("shiftright(bits, bit)").bitwiseAND(F.lit(1)) == 1, 1
     ).otherwise(0)
     return (
-        probes.join(right, "word_idx", "left")
-        .select(id_col, F.coalesce(hit, F.lit(0)).alias("_hit"))
-        .groupBy(id_col)
+        probes.join(F.broadcast(bitmap), "word_idx", "left")
+        .select("doc_id", F.coalesce(hit, F.lit(0)).alias("_hit"))
+        .groupBy("doc_id")
         .agg(F.min("_hit").cast("int").alias("bloom_hit"))
     )

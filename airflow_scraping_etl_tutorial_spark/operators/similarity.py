@@ -9,7 +9,7 @@ What the module holds, one of each:
   key; same-bucket vectors are candidates. Turns n-vs-n search into
   O(sum(bucket^2)) — the 100 TB path.
 - IVF search (`ivf_topk_cosine`): Voronoi cells around k-means
-  centroids, queries probe their n_probe nearest cells.
+  centroids, queries probe their 4 nearest cells.
 - deterministic k-means: one Lloyd loop (`_lloyd_models`) behind
   `kmeans_centroids`, `kmeans_training_trajectory` and
   `kmeans_centroids_converged`.
@@ -41,6 +41,10 @@ from pyspark.sql import Window as W
 from pyspark.sql import types as T
 
 from ..functions.partitioning import fan_out
+
+# Width of the fixture's embeddings: the LSH hyperplanes and the oracle
+# SQL of the vector queries are built for vectors of this length.
+EMBED_DIM = 64
 
 
 def as_double(vec: Column) -> Column:
@@ -104,7 +108,6 @@ def assign_argmax_cosine(
     df: DataFrame,
     vec_col: str,
     cents: DataFrame,
-    out_cid: str = "centroid_id",
 ) -> DataFrame:
     """Map-side argmax-cosine assignment against a model-sized
     centroid set — no (n x m) row explosion, no hash exchange, no
@@ -144,7 +147,7 @@ def assign_argmax_cosine(
     if (
         isinstance(vec_type, T.ArrayType)
         and isinstance(vec_type.elementType, (T.DoubleType, T.FloatType))
-        and out_cid not in df.columns
+        and "centroid_id" not in df.columns
         and _arrow_passable(df.schema)
     ):
         # as_double here = the packed form's as_double: a float32
@@ -152,7 +155,7 @@ def assign_argmax_cosine(
         model = [
             (r["cid"], None if r["ce"] is None else list(r["ce"]))
             for r in cents.select(
-                F.col(out_cid).cast("long").alias("cid"),
+                F.col("centroid_id").cast("long").alias("cid"),
                 as_double(F.col("c_emb")).alias("ce"),
             ).collect()
         ]
@@ -168,12 +171,12 @@ def assign_argmax_cosine(
             and len({len(ce) for _, ce in model}) == 1
         ):
             model.sort(key=lambda t: t[0])
-            return _assign_argmax_cosine_arrow(df, vec_col, model, out_cid)
+            return _assign_argmax_cosine_arrow(df, vec_col, model)
     packed = cents.agg(
         F.array_sort(
             F.collect_list(
                 F.struct(
-                    F.col(out_cid).cast("long").alias("cid"),
+                    F.col("centroid_id").cast("long").alias("cid"),
                     as_double(F.col("c_emb")).alias("ce"),
                 )
             )
@@ -221,7 +224,7 @@ def assign_argmax_cosine(
         df.crossJoin(F.broadcast(packed))
         .withColumn("_best", best)
         .withColumn(
-            out_cid,
+            "centroid_id",
             F.when(
                 F.col("_best.cid").isNull(), F.element_at("_cl", 1)["cid"]
             ).otherwise(F.col("_best.cid")),
@@ -263,7 +266,6 @@ def _assign_argmax_cosine_arrow(
     df: DataFrame,
     vec_col: str,
     model: list[tuple[int, list[float]]],
-    out_cid: str,
 ) -> DataFrame:
     """Arrow-vectorized body of `assign_argmax_cosine` (guide §4.2):
     one mapInArrow pass appends the argmax cid to each input batch.
@@ -303,7 +305,7 @@ def _assign_argmax_cosine_arrow(
     m, dim = C.shape
     vec_idx = df.columns.index(vec_col)
     out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_cid, T.LongType())]
+        list(df.schema.fields) + [T.StructField("centroid_id", T.LongType())]
     )
     smallest = int(cids[0])
 
@@ -338,7 +340,7 @@ def _assign_argmax_cosine_arrow(
                         best_j = np.where(take, j, best_j)
                 out[ok] = cids[best_j]
             yield batch.append_column(
-                pa.field(out_cid, pa.int64()), pa.array(out, type=pa.int64())
+                pa.field("centroid_id", pa.int64()), pa.array(out, type=pa.int64())
             )
 
     return df.mapInArrow(assign_batches, out_schema)
@@ -362,9 +364,7 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _rerank(
-    cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int, id_col: str
-) -> DataFrame:
+def _rerank(cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Exact cosine re-rank of ANN candidate pairs (query_id,
     neighbor_id): self-pairs and repeats dropped, then each pair scored
     against the broadcast query vectors and the corpus vectors."""
@@ -373,8 +373,8 @@ def _rerank(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"))
     scored = (
         pairs.join(F.broadcast(q), "query_id")
         .join(c, "neighbor_id")
@@ -383,19 +383,17 @@ def _rerank(
     return _top_k(scored, k)
 
 
-def brute_force_topk_cosine(
-    queries: DataFrame, corpus: DataFrame, k: int = 5, id_col: str = "vec_id"
-) -> DataFrame:
+def brute_force_topk_cosine(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The query side is broadcast (small by construction); the corpus
     streams through map tasks, and `_top_k` ranks each query's scores.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col("embedding").alias("q_emb")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     c = fan_out(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col("embedding").alias("c_emb")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
     # r14: an Arrow-kernel rewrite of this O(|q| x n) scoring stage was
     # built and MEASURED WORSE at sf0.1 (interleaved A/B x5: join form
@@ -415,13 +413,14 @@ def brute_force_topk_cosine(
     return _top_k(scored, k)
 
 
-def _deterministic_planes(n_planes: int, dim: int) -> list[list[float]]:
-    """Pseudo-random unit-free hyperplanes derived from md5 — identical
-    on every run/machine (no RNG state, driver computes constants once)."""
+def _deterministic_planes(n_planes: int) -> list[list[float]]:
+    """Pseudo-random unit-free hyperplanes of EMBED_DIM components,
+    derived from md5 — identical on every run/machine (no RNG state,
+    driver computes constants once)."""
     planes = []
     for p in range(n_planes):
         row = []
-        for i in range(dim):
+        for i in range(EMBED_DIM):
             digest = hashlib.md5(f"plane:{p}:{i}".encode()).digest()
             (u,) = struct.unpack(">I", digest[:4])
             row.append((u / 2**32) * 2.0 - 1.0)
@@ -429,9 +428,7 @@ def _deterministic_planes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def bucket_keys(
-    emb: DataFrame, n_planes: int = 16, dim: int = 64, id_col: str = "vec_id"
-) -> DataFrame:
+def bucket_keys(emb: DataFrame, n_planes: int = 16) -> DataFrame:
     """Sign-random-projection bucket key per vector: an n_planes-bit int
     (sign of the dot product with each deterministic hyperplane).
     Map-only — no shuffle; the joins downstream are where data moves.
@@ -446,7 +443,7 @@ def bucket_keys(
     on fixture + edge rows).
 
     Degenerate rows keep the fold's semantics exactly (pytest-pinned):
-    under zip_with a NULL vector, a NULL element, or a length != dim
+    under zip_with a NULL vector, a NULL element, or a length != EMBED_DIM
     yields a NULL dot (NULL dominates the fold), so every plane bit is
     0 and the bucket is 0 — `_dense_rows` leaves those rows out. A NaN
     ELEMENT, by contrast, makes every dot NaN, and Spark's comparison
@@ -455,15 +452,15 @@ def bucket_keys(
     import numpy as np
     import pyarrow as pa
 
-    planes = np.array(_deterministic_planes(n_planes, dim), dtype=np.float64)
+    planes = np.array(_deterministic_planes(n_planes), dtype=np.float64)
 
     def score(batches):
         for batch in batches:
-            ok, E = _dense_rows(batch.column(1), dim)
+            ok, E = _dense_rows(batch.column(1), EMBED_DIM)
             vb = np.zeros(len(E), dtype=np.int64)
             for p in range(n_planes):
                 acc = np.zeros(len(E), dtype=np.float64)
-                for i in range(dim):
+                for i in range(EMBED_DIM):
                     # left fold: mul then add, the dot() IEEE order
                     acc = acc + E[:, i] * planes[p, i]
                 # Spark orders NaN above every double: NaN dot -> bit 1
@@ -472,29 +469,27 @@ def bucket_keys(
             buckets[ok] = vb
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), pa.array(buckets, type=pa.int64())],
-                names=[id_col, "bucket"],
+                names=["vec_id", "bucket"],
             )
 
     schema = T.StructType(
         [
-            T.StructField(id_col, emb.schema[id_col].dataType),
+            T.StructField("vec_id", emb.schema["vec_id"].dataType),
             T.StructField("bucket", T.LongType()),
         ]
     )
-    return fan_out(emb).select(id_col, "embedding").mapInArrow(score, schema)
+    return fan_out(emb).select("vec_id", "embedding").mapInArrow(score, schema)
 
 
-def lsh_bucket_candidates(
-    emb: DataFrame, n_planes: int = 16, dim: int = 64, id_col: str = "vec_id"
-) -> DataFrame:
-    """bucket_keys + per-bucket population (the reporting form: lets a
-    caller inspect the candidate-set size the bucket join would
+def lsh_bucket_candidates(emb: DataFrame) -> DataFrame:
+    """16-plane bucket_keys + per-bucket population (the reporting form:
+    lets a caller inspect the candidate-set size the bucket join would
     produce). Internal consumers use bucket_keys directly and skip the
     window shuffle this count costs."""
-    keyed = bucket_keys(emb, n_planes, dim, id_col)
+    keyed = bucket_keys(emb)
     w = W.partitionBy("bucket")
     return keyed.select(
-        id_col, "bucket", F.count(F.lit(1)).over(w).alias("bucket_size")
+        "vec_id", "bucket", F.count(F.lit(1)).over(w).alias("bucket_size")
     )
 
 
@@ -503,8 +498,6 @@ def lsh_topk_cosine(
     corpus: DataFrame,
     k: int = 5,
     n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
     multi_probe: bool = False,
 ) -> DataFrame:
     """ANN top-k: LSH bucket join for candidates, exact cosine re-rank.
@@ -517,26 +510,24 @@ def lsh_topk_cosine(
     recovers exactly those borderline misses at (n_planes+1)x the
     candidate lookups, corpus state unchanged).
     """
-    qb = bucket_keys(queries, n_planes, dim, id_col).select(
-        F.col(id_col).alias("query_id"), "bucket"
+    qb = bucket_keys(queries, n_planes).select(
+        F.col("vec_id").alias("query_id"), "bucket"
     )
     if multi_probe:
         probes = F.array(
             F.col("bucket"), *[F.col("bucket").bitwiseXOR(1 << p) for p in range(n_planes)]
         )
         qb = qb.select("query_id", F.explode(probes).alias("bucket"))
-    cb = bucket_keys(corpus, n_planes, dim, id_col).select(
-        F.col(id_col).alias("neighbor_id"), "bucket"
+    cb = bucket_keys(corpus, n_planes).select(
+        F.col("vec_id").alias("neighbor_id"), "bucket"
     )
-    return _rerank(qb.join(cb, "bucket"), queries, corpus, k, id_col)
+    return _rerank(qb.join(cb, "bucket"), queries, corpus, k)
 
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
     n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the vector twin of MinHash
     text dedup): LSH buckets generate candidates, exact cosine keeps
@@ -571,16 +562,16 @@ def embedding_near_dup_pairs(
     # in a k-vector bucket pays its norm k-1 times).
     dbl = as_double(F.col("embedding"))
     b = (
-        bucket_keys(emb, n_planes, dim, id_col)
+        bucket_keys(emb, n_planes)
         .join(
             emb.select(
-                F.col(id_col),
+                F.col("vec_id"),
                 dbl.alias("_emb"),
                 F.sqrt(dot(dbl, dbl)).alias("_norm"),
             ),
-            id_col,
+            "vec_id",
         )
-        .select(F.col(id_col).alias("_id"), "bucket", "_emb", "_norm")
+        .select(F.col("vec_id").alias("_id"), "bucket", "_emb", "_norm")
     )
     pairs = within_cell_near_pairs(
         b,
@@ -602,21 +593,16 @@ def embedding_near_dup_pairs(
 
 
 def ivf_topk_cosine(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    n_iterations: int = 0,
+    queries: DataFrame, corpus: DataFrame, n_iterations: int = 0
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: partition the corpus into Voronoi cells
-    around centroids; queries search only their n_probe nearest cells.
+    """IVF (inverted-file) ANN top-5: partition the corpus into 16
+    Voronoi cells around centroids; queries search only their 4
+    nearest cells.
 
-    The centroids are `kmeans_centroids(corpus, n_centroids,
-    n_iterations)`. With the default n_iterations=0 they are its
-    deterministic init sample (the n_centroids vectors with the
-    smallest md5(id) — a hash-ordered top-k, so md5 shuffles the ids
+    The centroids are `kmeans_centroids(corpus, 16, n_iterations)`.
+    With the default n_iterations=0 they are its deterministic init
+    sample (the 16 vectors with the smallest md5(id) — a hash-ordered
+    top-k, so md5 shuffles the ids
     uniformly and TakeOrderedAndProject picks the sample with
     per-partition partial top-k: no global sort, no count(), no driver
     action; md5 is cross-engine, so the oracle selects the same
@@ -628,23 +614,23 @@ def ivf_topk_cosine(
     localCheckpointed, so its two consumers below ship the model
     instead of re-running the Lloyd lineage.
     Scale: corpus assignment is a broadcast-centroid map stage; the
-    search join touches n_probe/n_centroids of the corpus per query.
+    search join touches 4/16 of the corpus per query.
     """
-    centroids = kmeans_centroids(corpus, n_centroids, n_iterations, id_col)
+    centroids = kmeans_centroids(corpus, 16, n_iterations)
     # corpus side: map-side argmax, no (n x m) shuffle. The float32
     # embeddings are pre-cast to double ONCE per row (r14, guide §1.2),
     # so the per-centroid dots skip the m identity casts — same ops
     # applied once, bit-identical scores
     corpus_cells = assign_argmax_cosine(
-        fan_out(corpus).select(id_col, as_double(F.col("embedding")).alias("_ed")),
+        fan_out(corpus).select("vec_id", as_double(F.col("embedding")).alias("_ed")),
         "_ed",
         centroids,
-    ).select(F.col(id_col).alias("neighbor_id"), "centroid_id")
+    ).select(F.col("vec_id").alias("neighbor_id"), "centroid_id")
     scored = (
-        queries.select(id_col, "embedding")
+        queries.select("vec_id", "embedding")
         .crossJoin(F.broadcast(centroids))
         .select(
-            F.col(id_col).alias("query_id"),
+            F.col("vec_id").alias("query_id"),
             F.col("centroid_id"),
             cosine(F.col("embedding"), F.col("c_emb")).alias("c_cos"),
         )
@@ -652,13 +638,13 @@ def ivf_topk_cosine(
     w = W.partitionBy("query_id").orderBy(F.desc("c_cos"), F.asc("centroid_id"))
     q_cells = (
         scored.withColumn("_cr", F.row_number().over(w))
-        .filter(F.col("_cr") <= n_probe)
+        .filter(F.col("_cr") <= 4)
         .select("query_id", "centroid_id")
     )
-    return _rerank(q_cells.join(corpus_cells, "centroid_id"), queries, corpus, k, id_col)
+    return _rerank(q_cells.join(corpus_cells, "centroid_id"), queries, corpus, 5)
 
 
-def _lloyd_models(corpus: DataFrame, n_centroids: int, id_col: str):
+def _lloyd_models(corpus: DataFrame, n_centroids: int):
     """The one Lloyd loop: yields the init model, then the model after
     each Lloyd iteration, without end.
 
@@ -673,9 +659,9 @@ def _lloyd_models(corpus: DataFrame, n_centroids: int, id_col: str):
 
     Models are (centroid_id, c_emb: array<double>)."""
     model = (
-        corpus.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        corpus.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(n_centroids)
-        .select(F.col(id_col).alias("centroid_id"), as_double(F.col("embedding")).alias("c_emb"))
+        .select(F.col("vec_id").alias("centroid_id"), as_double(F.col("embedding")).alias("c_emb"))
     )
     yield model
     vecs = fan_out(corpus).select(as_double(F.col("embedding")).alias("_e"))
@@ -702,7 +688,6 @@ def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
     n_iterations: int = 2,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Spherical-k-means-style centroid training, fully deterministic:
 
@@ -723,7 +708,7 @@ def kmeans_centroids(
     vectors drop out (standard Lloyd behavior, mirrored by the oracle).
     Returns (centroid_id, c_emb: array<double>).
     """
-    return next(islice(_lloyd_models(corpus, n_centroids, id_col), n_iterations, None))
+    return next(islice(_lloyd_models(corpus, n_centroids), n_iterations, None))
 
 
 def _lloyd_step(vecs: DataFrame, cents: DataFrame) -> DataFrame:
@@ -760,7 +745,6 @@ def kmeans_training_trajectory(
     corpus: DataFrame,
     n_centroids: int = 8,
     n_iterations: int = 2,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Per-iteration k-means convergence audit: for each Lloyd
     iteration, the number of live centroids (clusters that won >= 1
@@ -777,7 +761,7 @@ def kmeans_training_trajectory(
     whole trajectory sits under the value-hash gate.
 
     Returns (iteration int, n_live bigint, max_move double round 6)."""
-    models = islice(_lloyd_models(corpus, n_centroids, id_col), n_iterations + 1)
+    models = islice(_lloyd_models(corpus, n_centroids), n_iterations + 1)
     return reduce(
         DataFrame.unionByName,
         [
@@ -796,7 +780,6 @@ def kmeans_centroids_converged(
     n_centroids: int = 16,
     tol: float = 1e-6,
     max_iterations: int = 20,
-    id_col: str = "vec_id",
 ) -> tuple[DataFrame, int]:
     """Lloyd training run to CONVERGENCE: iterate the `_lloyd_models`
     loop until the largest per-component centroid movement drops below
@@ -813,7 +796,7 @@ def kmeans_centroids_converged(
     and accept a driver round-trip per iteration.
 
     Returns (centroids DataFrame, iterations actually run)."""
-    models = _lloyd_models(corpus, n_centroids, id_col)
+    models = _lloyd_models(corpus, n_centroids)
     cents = next(models)
     for it in range(1, max_iterations + 1):
         prev, cents = cents, next(models)
@@ -823,6 +806,11 @@ def kmeans_centroids_converged(
     return cents, max_iterations
 
 
+# Row-stripe height of the within_cell_near_pairs Gram matrix: bounds a
+# kernel call's memory at _BLOCK_ROWS x cell doubles.
+_BLOCK_ROWS = 4096
+
+
 def within_cell_near_pairs(
     cells: DataFrame,
     cos_guard: float,
@@ -830,7 +818,6 @@ def within_cell_near_pairs(
     cell_col: str = "cid",
     vec_col: str = "_e",
     norm_col: str = "_n",
-    block_rows: int = 4096,
 ) -> DataFrame:
     """All ordered within-cell pairs (id_a < id_b) whose precomputed-norm
     cosine EXCEEDS `cos_guard`, scored by an Arrow-vectorized NumPy
@@ -874,10 +861,10 @@ def within_cell_near_pairs(
 
     Scale: cells arrive via a groupBy(cell) applyInArrow — the
     quadratic term stays bounded per cell exactly as in the self-join
-    form, and the Gram matrix is computed in `block_rows`-row stripes
-    so memory is O(block_rows x cell), never O(cell^2). One cell must
+    form, and the Gram matrix is computed in `_BLOCK_ROWS`-row stripes
+    so memory is O(_BLOCK_ROWS x cell), never O(cell^2). One cell must
     fit a worker's memory as (n x dim) doubles — the SemDeDup cell-size
-    cap (q68 hot-bucket doctrine) is what bounds n at corpus scale, for
+    cap (SCALE.md hot-bucket doctrine) is what bounds n at corpus scale, for
     this kernel and the self-join form alike.
     """
     import numpy as np
@@ -894,8 +881,8 @@ def within_cell_near_pairs(
         E, ids, norms = E[order], ids[order], norms[order]
         n = len(ids)
         out_a, out_b, out_c = [], [], []
-        for lo in range(0, n, block_rows):
-            hi = min(lo + block_rows, n)
+        for lo in range(0, n, _BLOCK_ROWS):
+            hi = min(lo + _BLOCK_ROWS, n)
             acc = np.zeros((hi - lo, n), dtype=np.float64)
             for k in range(E.shape[1]):
                 # left fold: mul then add, same IEEE sequence as dot()

@@ -25,27 +25,17 @@ def salted_join(
     fact_key: str,
     dim_key: str,
     n_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the fact side salted across n_salts sub-keys.
+    """Inner equi-join with the fact side salted across n_salts sub-keys.
 
     The salt is derived from a hash of the full fact row's key plus
     monotonic id — deterministic per run, uniform across tasks. Result
     set is identical to the unsalted join (verified by the oracle-checked
     catalog entry q26).
 
-    Only fact-preserving join types are legal: the dim side is
-    replicated n_salts times, so right/full outer joins would surface
-    every unmatched dim row n_salts times.
+    Inner only: the dim side is replicated n_salts times, so an outer
+    join would surface every unmatched dim row n_salts times.
     """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi",
-               "left_anti", "leftanti", "semi", "anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports fact-preserving joins only {sorted(allowed)}, "
-            f"got how={how!r}: the replicated dim side would duplicate "
-            f"unmatched dim rows n_salts times under right/full outer"
-        )
     salted_fact = fact.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(fact_key), F.monotonically_increasing_id()), F.lit(n_salts))
     )
@@ -55,6 +45,5 @@ def salted_join(
         replicated_dim,
         (salted_fact[fact_key] == replicated_dim[dim_key])
         & (salted_fact["_salt"] == replicated_dim["_salt"]),
-        how,
     )
     return joined.drop("_salt")

@@ -86,7 +86,7 @@ def quality_score(text: Column) -> Column:
     return F.round((len_ok + stop_ev + tok_ok + alpha_ratio) / 4.0, 6)
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: score the text against each language's
     stopword profile, take the argmax (ties -> lexicographically first
     language; no evidence at all -> 'und').
@@ -94,7 +94,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     Implemented as one wide codegen expression per language — a 100 TB
     corpus pays ~|langs| array scans per row and zero shuffles.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     scores = {lang: stopword_ratio(text, lang) for lang in sorted(STOPWORDS)}
     best = F.greatest(*scores.values())
     pred = F.lit("und")
@@ -114,20 +114,14 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    k: int = 8,
-    window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken's
     MOSS scheme — the rolling-hash fingerprint family): hash every
-    k-char gram with the cross-engine 60-bit md5-derived hash, then
-    keep the MINIMUM hash of each window of `window` consecutive gram
-    hashes. Guarantee: any shared substring of length >= k + window - 1
+    k = 8-char gram with the cross-engine 60-bit md5-derived hash, then
+    keep the MINIMUM hash of each window of 4 consecutive gram
+    hashes. Guarantee: any shared substring of length >= k + 4 - 1
     contributes at least one shared fingerprint, while storage shrinks
-    ~1/window vs all grams — overlap/plagiarism detection joins docs on
+    ~1/4 vs all grams — overlap/plagiarism detection joins docs on
     the exploded fingerprints instead of comparing texts.
 
     Pure codegen expressions — per-row map work, no shuffle, no UDF.
@@ -140,9 +134,11 @@ def winnowing_fingerprints(
     its own column so the window-min transform doesn't re-inline (and
     re-md5) it per window (HOF lambdas don't CSE — see NOTES.md).
 
-    Returns (id, fingerprint: long) — one row per distinct fingerprint.
+    Returns (doc_id, fingerprint: long) — one row per distinct
+    fingerprint.
     """
-    text = F.col(text_col)
+    k, window = 8, 4
+    text = F.col("text")
     n = F.length(text)
     n_grams = n - k + 1
     gram_hashes = F.when(
@@ -154,7 +150,7 @@ def winnowing_fingerprints(
             ).cast("long"),
         ),
     ).otherwise(F.array().cast("array<long>"))
-    pre = df.select(F.col(id_col), gram_hashes.alias("_gh"))
+    pre = df.select(F.col("doc_id"), gram_hashes.alias("_gh"))
     n_windows = F.size("_gh") - window + 1
     mins = F.when(
         n_windows >= 1,
@@ -164,7 +160,7 @@ def winnowing_fingerprints(
         ),
     ).otherwise(F.array().cast("array<long>"))
     return pre.select(
-        F.col(id_col), F.explode(F.array_distinct(mins)).alias("fingerprint")
+        F.col("doc_id"), F.explode(F.array_distinct(mins)).alias("fingerprint")
     )
 
 
@@ -203,9 +199,7 @@ def repetition_stats(text: Column) -> dict[str, Column]:
     }
 
 
-def adjacent_pair_counts(
-    df: DataFrame, text_col: str = "text", top_n: int | None = None
-) -> DataFrame:
+def adjacent_pair_counts(df: DataFrame, top_n: int | None = None) -> DataFrame:
     """Corpus-wide adjacent-token-pair frequencies — the counting pass
     a BPE tokenizer trainer loops (count pairs, merge the winner,
     repeat). Returns (pair, pair_count) ordered by (count DESC, pair),
@@ -217,7 +211,7 @@ def adjacent_pair_counts(
     TakeOrderedAndProject — per-partition partial top-k, no global
     sort."""
     pairs = let(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda words: F.when(
             F.size(words) >= 2,
             F.transform(

@@ -42,16 +42,16 @@ class ChunkDocument:
             yield (i // chunk_size, " ".join(piece), len(piece))
 
 
-def chunk_documents(docs: DataFrame, chunk_size: int = 32) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Apply the chunking UDTF via LATERAL join: every doc expands to
-    its chunks, keyed by (doc_id, chunk_no)."""
+    its 32-token chunks, keyed by (doc_id, chunk_no)."""
     docs.createOrReplaceTempView("_docs_to_chunk")
     docs.sparkSession.udtf.register("chunk_document", ChunkDocument)
     return docs.sparkSession.sql(
-        f"""
+        """
         SELECT d.doc_id, c.chunk_no, c.chunk, c.n_tokens
         FROM _docs_to_chunk d,
-             LATERAL chunk_document(d.text, {int(chunk_size)}) c
+             LATERAL chunk_document(d.text, 32) c
         """
     )
 

@@ -34,6 +34,7 @@ from ..operators.dedup import (
     simhash,
 )
 from ..operators.similarity import (
+    EMBED_DIM,
     brute_force_topk_cosine,
     embedding_near_dup_pairs,
     ivf_topk_cosine,
@@ -110,33 +111,35 @@ def _sql_minhash_sig_cte(n_hashes: int) -> str:
 """
 
 
-def _sql_band_condition(n_hashes: int, bands: int, a: str = "a", b: str = "b") -> str:
-    """OR-of-band-tuple-equalities — the oracle form of the LSH bucket
-    join (equal band tuples <=> equal xxhash64 bucket keys, modulo a
-    ~2^-64 collision the exact-Jaccard verify absorbs)."""
+def _sql_band_condition(n_hashes: int, bands: int) -> str:
+    """OR-of-band-tuple-equalities between signature rows `a` and `b` —
+    the oracle form of the LSH bucket join (equal band tuples <=> equal
+    xxhash64 bucket keys, modulo a ~2^-64 collision the exact-Jaccard
+    verify absorbs)."""
     r = n_hashes // bands
     bands_sql = []
     for band in range(bands):
         eqs = " AND ".join(
-            f"{a}.mh_{band * r + i} = {b}.mh_{band * r + i}" for i in range(r)
+            f"a.mh_{band * r + i} = b.mh_{band * r + i}" for i in range(r)
         )
         bands_sql.append(f"({eqs})")
     return "(" + " OR ".join(bands_sql) + ")"
 
 
-def _sql_minhash_pairs(jaccard_threshold: float, n_hashes: int = 8, bands: int = 4) -> str:
+def _sql_minhash_pairs(jaccard_threshold: float) -> str:
     """CTE chain sh -> hx -> cand -> pairs: the full MinHash+LSH
-    near-dup pipeline (band candidates + exact-Jaccard verify) in
-    DuckDB. Callers append their own final SELECT over `pairs`."""
+    near-dup pipeline (8 hashes in 4 bands, band candidates +
+    exact-Jaccard verify) in DuckDB. Callers append their own final
+    SELECT over `pairs`."""
     return f"""
     sh AS ({_SQL_SHINGLES3}),
-    hx AS ({_sql_minhash_sig_cte(n_hashes)}),
+    hx AS ({_sql_minhash_sig_cte(8)}),
     cand AS (
       SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
              LEN(LIST_INTERSECT(a.xs, b.xs)) AS n_common,
              LEN(a.xs) AS n_a, LEN(b.xs) AS n_b
       FROM hx a JOIN hx b
-        ON a.doc_id < b.doc_id AND {_sql_band_condition(n_hashes, bands)}
+        ON a.doc_id < b.doc_id AND {_sql_band_condition(8, 4)}
     ),
     pairs AS (
       SELECT doc_id_a, doc_id_b,
@@ -148,7 +151,7 @@ def _sql_minhash_pairs(jaccard_threshold: float, n_hashes: int = 8, bands: int =
 """
 
 
-def _sql_dot(x: str, y: str, dim: int = 64) -> str:
+def _sql_dot(x: str, y: str, dim: int = EMBED_DIM) -> str:
     """Explicit left-associated dot product — same accumulation order
     as Spark's aggregate() fold (bit-identical doubles), ~10x faster in
     DuckDB than a LIST_TRANSFORM(RANGE) lambda."""
@@ -158,7 +161,7 @@ def _sql_dot(x: str, y: str, dim: int = 64) -> str:
     ) + ")"
 
 
-def _sql_cosine(a: str, b: str, dim: int = 64) -> str:
+def _sql_cosine(a: str, b: str, dim: int = EMBED_DIM) -> str:
     """DuckDB twin of operators.similarity.cosine (same multiply/
     accumulate order => bit-identical doubles, proven by q71/q74)."""
     return (
@@ -167,9 +170,9 @@ def _sql_cosine(a: str, b: str, dim: int = 64) -> str:
     )
 
 
-def _sql_srp_bucket(n_planes: int, emb: str = "embedding", dim: int = 64) -> str:
-    """Sign-random-projection bucket key with the SAME md5-derived
-    hyperplane constants the Spark operator embeds as literals
+def _sql_srp_bucket(n_planes: int) -> str:
+    """Sign-random-projection bucket key of `embedding` with the SAME
+    md5-derived hyperplane constants the Spark operator embeds as literals
     (operators/similarity.py::_deterministic_planes).
 
     The dot product is an EXPLICIT left-associated term chain
@@ -180,9 +183,9 @@ def _sql_srp_bucket(n_planes: int, emb: str = "embedding", dim: int = 64) -> str
     from ..operators.similarity import _deterministic_planes
 
     terms = []
-    for p, plane in enumerate(_deterministic_planes(n_planes, dim)):
+    for p, plane in enumerate(_deterministic_planes(n_planes)):
         dot = " + ".join(
-            f"CAST({emb}[{i + 1}] AS DOUBLE) * {w!r}" for i, w in enumerate(plane)
+            f"CAST(embedding[{i + 1}] AS DOUBLE) * {w!r}" for i, w in enumerate(plane)
         )
         terms.append(f"(CASE WHEN {dot} > 0 THEN 1 ELSE 0 END) * {1 << p}")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
@@ -213,7 +216,7 @@ def q60_dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     full document body, so the exchange carries ~32B+8B per row no matter
     how large the documents are. This is why we hash first and never
     shuffle raw text."""
-    return exact_dedup(load(spark, sf_dir, "documents"), key="text").orderBy("text_md5")
+    return exact_dedup(load(spark, sf_dir, "documents")).orderBy("text_md5")
 
 
 @query(
@@ -368,7 +371,7 @@ def q65_language_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (single double division — bit-exact cross-engine), so prediction,
     score, and tie-breaks are all value-checked."""
     d = load(spark, sf_dir, "documents")
-    return language_id(d, text_col="text").orderBy("doc_id")
+    return language_id(d).orderBy("doc_id")
 
 
 @query(
@@ -427,9 +430,7 @@ def q67_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduced by the DuckDB oracle, so the signatures themselves sit
     under the hash gate. Scale: shingling + hashing is per-row map
     work; no shuffle until the band-bucket join in q68."""
-    return minhash_signatures(
-        load(spark, sf_dir, "documents"), n_hashes=8, shingle_size=3
-    ).orderBy("doc_id")
+    return minhash_signatures(load(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 @query(
@@ -452,11 +453,7 @@ def q68_minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sum(bucket^2)) not O(n^2); band count / rows-per-band tune the
     recall-cost tradeoff exactly as in the MMDS formulation."""
     return minhash_near_duplicates(
-        load(spark, sf_dir, "documents"),
-        n_hashes=8,
-        bands=4,
-        shingle_size=3,
-        jaccard_threshold=0.5,
+        load(spark, sf_dir, "documents"), bands=4, jaccard_threshold=0.5
     ).orderBy("doc_id_a", "doc_id_b")
 
 
@@ -522,7 +519,7 @@ def q70_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates). Candidate generation here is an inverted-index join on
     shared shingles: only pairs sharing >= 1 shingle are scored."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    return ngram_jaccard_pairs(docs, shingle_size=3).orderBy("doc_id_a", "doc_id_b")
+    return ngram_jaccard_pairs(docs).orderBy("doc_id_a", "doc_id_b")
 
 
 # ---------------------------------------------------------------------------
@@ -581,9 +578,7 @@ def q72_lsh_bucket_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot product), so the bucketing itself is value-checked. At scale
     the candidate join replaces the O(n^2) crossJoin with
     O(sum(bucket^2))."""
-    return lsh_bucket_candidates(load(spark, sf_dir, "embeddings"), n_planes=16).orderBy(
-        "vec_id"
-    )
+    return lsh_bucket_candidates(load(spark, sf_dir, "embeddings")).orderBy("vec_id")
 
 
 @query(
@@ -747,9 +742,9 @@ def q76_ivf_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid selection, Voronoi assignment, n_probe cell search, and
     the exact re-rank end to end."""
     emb = load(spark, sf_dir, "embeddings")
-    return ivf_topk_cosine(
-        emb.filter(F.col("vec_id") < 5), emb, k=5, n_centroids=16, n_probe=4
-    ).orderBy("query_id", "rnk")
+    return ivf_topk_cosine(emb.filter(F.col("vec_id") < 5), emb).orderBy(
+        "query_id", "rnk"
+    )
 
 
 @query(
@@ -878,7 +873,7 @@ def q79_udtf_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.udx import chunk_documents
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    return chunk_documents(docs, chunk_size=32).orderBy("doc_id", "chunk_no")
+    return chunk_documents(docs).orderBy("doc_id", "chunk_no")
 
 
 @query(
@@ -1297,14 +1292,9 @@ def q95_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rnk")
 
 
-def _sql_kmeans_ivf_oracle(
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    k: int = 5,
-    dim: int = 64,
-    n_iterations: int = 2,
-) -> str:
-    """Unrolled n-iteration Lloyd + IVF search, DuckDB-side twin of
+def _sql_kmeans_ivf_oracle(n_iterations: int = 2) -> str:
+    """Unrolled n-iteration Lloyd + IVF search (16 centroids, 4 probed
+    cells, top 5), DuckDB-side twin of
     operators.similarity.kmeans_centroids / ivf_topk_cosine(n_iterations=N).
     Component means use the decimal-exact pattern, assignments the same
     left-associated cosine chains — every intermediate double matches
@@ -1312,16 +1302,16 @@ def _sql_kmeans_ivf_oracle(
     means = ", ".join(
         f"CAST(SUM(CAST(CAST(embedding[{i + 1}] AS DOUBLE) AS DECIMAL(18,6)))"
         f" AS DOUBLE) / COUNT(*) AS c_{i}"
-        for i in range(dim)
+        for i in range(EMBED_DIM)
     )
     dot_ec = " + ".join(
-        f"CAST(e.embedding[{i + 1}] AS DOUBLE) * m.c_{i}" for i in range(dim)
+        f"CAST(e.embedding[{i + 1}] AS DOUBLE) * m.c_{i}" for i in range(EMBED_DIM)
     )
     norm_e = " + ".join(
         f"CAST(e.embedding[{i + 1}] AS DOUBLE) * CAST(e.embedding[{i + 1}] AS DOUBLE)"
-        for i in range(dim)
+        for i in range(EMBED_DIM)
     )
-    norm_c = " + ".join(f"m.c_{i} * m.c_{i}" for i in range(dim))
+    norm_c = " + ".join(f"m.c_{i} * m.c_{i}" for i in range(EMBED_DIM))
     cos_cols = f"(({dot_ec}) / (SQRT({norm_e}) * SQRT({norm_c})))"
     # One (a_i, m_i) CTE pair per Lloyd iteration; iteration 1 assigns
     # against the raw cent0 sample, later ones against the previous
@@ -1350,7 +1340,7 @@ def _sql_kmeans_ivf_oracle(
     return f"""
     WITH cent0 AS (
       SELECT vec_id AS cid, embedding AS ce FROM embeddings
-      ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
+      ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
     ),
     {lloyd_sql},
     corpus_assign AS (
@@ -1366,7 +1356,7 @@ def _sql_kmeans_ivf_oracle(
                ORDER BY {cos_cols} DESC, m.cid) AS rn
       FROM embeddings e CROSS JOIN {final} m WHERE e.vec_id < 5
     ),
-    q_cells AS (SELECT query_id, cid FROM q_assign WHERE rn <= {n_probe}),
+    q_cells AS (SELECT query_id, cid FROM q_assign WHERE rn <= 4),
     cand AS (
       SELECT DISTINCT q.query_id, cc.neighbor_id
       FROM q_cells q JOIN corpus_cells cc USING (cid)
@@ -1386,7 +1376,7 @@ def _sql_kmeans_ivf_oracle(
       FROM scored
     )
     SELECT query_id, neighbor_id, cosine, rnk
-    FROM ranked WHERE rnk <= {k} ORDER BY query_id, rnk
+    FROM ranked WHERE rnk <= 5 ORDER BY query_id, rnk
     """
 
 
@@ -1411,8 +1401,7 @@ def q96_ivf_kmeans_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round attestation cheap; the oracle builder unrolls any count."""
     emb = load(spark, sf_dir, "embeddings")
     return ivf_topk_cosine(
-        emb.filter(F.col("vec_id") < 5), emb, k=5, n_centroids=16, n_probe=4,
-        n_iterations=1,
+        emb.filter(F.col("vec_id") < 5), emb, n_iterations=1
     ).orderBy("query_id", "rnk")
 
 
@@ -1450,7 +1439,7 @@ def q97_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import winnowing_fingerprints
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return winnowing_fingerprints(docs, k=8, window=4).orderBy(
+    return winnowing_fingerprints(docs).orderBy(
         "doc_id", "fingerprint"
     )
 
@@ -1739,7 +1728,7 @@ def q103_decontamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> Data
     eval_docs = d.filter(gate < 16)
     corpus = d.filter(gate >= 16)
     return (
-        decontaminate(corpus, eval_docs, k=3)
+        decontaminate(corpus, eval_docs)
         .select(
             "doc_id",
             F.col("n_shared_ngrams").cast("bigint").alias("n_shared_ngrams"),

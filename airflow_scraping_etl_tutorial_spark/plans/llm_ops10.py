@@ -157,7 +157,7 @@ _MRL_DIM = 16
       SELECT q.qid, e.vec_id,
              ROW_NUMBER() OVER (
                PARTITION BY q.qid
-               ORDER BY {_sql_cosine('e.embedding', 'q.qe', 64)} DESC, e.vec_id)
+               ORDER BY {_sql_cosine('e.embedding', 'q.qe')} DESC, e.vec_id)
                AS rn
       FROM embeddings e JOIN q ON e.vec_id <> q.qid
     ),

@@ -29,6 +29,7 @@ from ..operators.dedup import (
     simhash_near_duplicates,
 )
 from ..operators.similarity import (
+    EMBED_DIM,
     as_double,
     assign_argmax_cosine,
     cosine,
@@ -45,7 +46,7 @@ from .registry import query
 # ---------------------------------------------------------------------------
 
 
-def _sql_kmeans_converged_oracle(n_centroids: int = 8, dim: int = 64) -> str:
+def _sql_kmeans_converged_oracle() -> str:
     """DuckDB twin of q258: replay the md5 init sample, two decimal-
     exact Lloyd steps (tol=0.0 forces the converged API to run exactly
     max_iterations — movement is never < 0.0), then the final argmax-
@@ -53,23 +54,23 @@ def _sql_kmeans_converged_oracle(n_centroids: int = 8, dim: int = 64) -> str:
     means = ", ".join(
         f"CAST(SUM(CAST(CAST(embedding[{i + 1}] AS DOUBLE) AS DECIMAL(18,6)))"
         f" AS DOUBLE) / COUNT(*) AS c_{i}"
-        for i in range(dim)
+        for i in range(EMBED_DIM)
     )
     dot_ec = " + ".join(
-        f"CAST(e.embedding[{i + 1}] AS DOUBLE) * m.c_{i}" for i in range(dim)
+        f"CAST(e.embedding[{i + 1}] AS DOUBLE) * m.c_{i}" for i in range(EMBED_DIM)
     )
     norm_e = " + ".join(
         f"CAST(e.embedding[{i + 1}] AS DOUBLE) * CAST(e.embedding[{i + 1}] AS DOUBLE)"
-        for i in range(dim)
+        for i in range(EMBED_DIM)
     )
-    norm_c = " + ".join(f"m.c_{i} * m.c_{i}" for i in range(dim))
+    norm_c = " + ".join(f"m.c_{i} * m.c_{i}" for i in range(EMBED_DIM))
     cos_m = f"(({dot_ec}) / (SQRT({norm_e}) * SQRT({norm_c})))"
     from .llm_ops import _sql_cosine
 
     return f"""
     WITH cent0 AS (
       SELECT vec_id AS cid, embedding AS ce FROM embeddings
-      ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
+      ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
     ),
     a1 AS (
       SELECT e.vec_id, e.embedding, c.cid,
@@ -520,7 +521,7 @@ def q263_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q264_detector_agreement",
     oracle=f"""
     WITH {_sql_minhash_pairs(0.5)},
-    {_sql_simhash_pairs_cte(3)},
+    {_sql_simhash_pairs_cte()},
     m AS (SELECT doc_id_a, doc_id_b FROM pairs),
     s AS (SELECT doc_id_a, doc_id_b FROM spairs),
     nm AS (SELECT COUNT(*) AS n FROM m),

@@ -339,10 +339,8 @@ def q269_incremental_signature_maintenance(
     # the from-scratch signature table feeds the reuse anti-join, the
     # equality audit, AND the final count — persist it (8 int64 + id
     # per doc) so the text scan + shingle + hash lineage runs once
-    full_sigs = minhash_signatures(docs, n_hashes=8).persist()
-    recomputed = minhash_signatures(
-        docs.join(F.broadcast(changed_ids), "doc_id"), n_hashes=8
-    )
+    full_sigs = minhash_signatures(docs).persist()
+    recomputed = minhash_signatures(docs.join(F.broadcast(changed_ids), "doc_id"))
     reused = full_sigs.join(F.broadcast(changed_ids), "doc_id", "left_anti")
     incr = recomputed.unionByName(reused)
     n_mismatch = (

@@ -21,7 +21,7 @@ from ..operators.dedup import (
     shingle_hashes,
     simhash_near_duplicates,
 )
-from ..operators.similarity import as_double, kmeans_training_trajectory
+from ..operators.similarity import EMBED_DIM, as_double, kmeans_training_trajectory
 from ..operators.text import adjacent_pair_counts, tokens
 from ..sources.tables import load
 from .llm_ops import _SQL_SHINGLES3, _sql_cosine, _sql_hex60
@@ -240,7 +240,7 @@ def q126_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sql_kmeans_trajectory_oracle(n_centroids: int = 8, dim: int = 64) -> str:
+def _sql_kmeans_trajectory_oracle() -> str:
     """DuckDB twin of kmeans_training_trajectory (2 iterations):
     replays init sample, both Lloyd steps' decimal-exact means, and the
     per-iteration max-abs-component movement.
@@ -256,25 +256,25 @@ def _sql_kmeans_trajectory_oracle(n_centroids: int = 8, dim: int = 64) -> str:
     means = ", ".join(
         f"CAST(SUM(CAST(CAST(embedding[{i + 1}] AS DOUBLE) AS DECIMAL(18,6)))"
         f" AS DOUBLE) / COUNT(*) AS c_{i}"
-        for i in range(dim)
+        for i in range(EMBED_DIM)
     )
     dot_ec = " + ".join(
-        f"CAST(e.embedding[{i + 1}] AS DOUBLE) * m.c_{i}" for i in range(dim)
+        f"CAST(e.embedding[{i + 1}] AS DOUBLE) * m.c_{i}" for i in range(EMBED_DIM)
     )
     norm_e = " + ".join(
         f"CAST(e.embedding[{i + 1}] AS DOUBLE) * CAST(e.embedding[{i + 1}] AS DOUBLE)"
-        for i in range(dim)
+        for i in range(EMBED_DIM)
     )
-    norm_c = " + ".join(f"m.c_{i} * m.c_{i}" for i in range(dim))
+    norm_c = " + ".join(f"m.c_{i} * m.c_{i}" for i in range(EMBED_DIM))
     cos_m = f"(({dot_ec}) / (SQRT({norm_e}) * SQRT({norm_c})))"
     mv1_terms = ", ".join(
-        f"ABS(m.c_{i} - CAST(o.ce[{i + 1}] AS DOUBLE))" for i in range(dim)
+        f"ABS(m.c_{i} - CAST(o.ce[{i + 1}] AS DOUBLE))" for i in range(EMBED_DIM)
     )
-    mv2_terms = ", ".join(f"ABS(n.c_{i} - o.c_{i})" for i in range(dim))
+    mv2_terms = ", ".join(f"ABS(n.c_{i} - o.c_{i})" for i in range(EMBED_DIM))
     return f"""
     WITH cent0 AS (
       SELECT vec_id AS cid, embedding AS ce FROM embeddings
-      ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
+      ORDER BY MD5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
     ),
     a1 AS (
       SELECT e.vec_id,
@@ -397,13 +397,14 @@ def q128_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sql_simhash_pairs_cte(max_hamming: int = 3, n_bits: int = 60) -> str:
+def _sql_simhash_pairs_cte() -> str:
     """CTE chain st -> sv -> sfps -> scand -> spairs: the SimHash
-    near-dup pipeline (token bit-votes, fingerprints, pigeonhole
-    block candidates, exact Hamming verify) in DuckDB. Callers append
+    near-dup pipeline (60-bit token bit-votes, fingerprints, pigeonhole
+    block candidates, exact Hamming verify at radius 3) in DuckDB. Callers append
     their own final SELECT over `spairs` (doc_id_a, doc_id_b,
     hamming). CTE names are prefixed `s` so the chain composes with
     _sql_minhash_pairs' sh/hx/cand/pairs in one WITH (q264)."""
+    max_hamming, n_bits = 3, 60
     n_blocks = max_hamming + 1
     width = n_bits // n_blocks
     mask = (1 << width) - 1
@@ -437,12 +438,12 @@ def _sql_simhash_pairs_cte(max_hamming: int = 3, n_bits: int = 60) -> str:
 """
 
 
-def _sql_simhash_pairs_oracle(max_hamming: int = 3, n_bits: int = 60) -> str:
+def _sql_simhash_pairs_oracle() -> str:
     """DuckDB twin of dedup.simhash_near_duplicates: replay q69's
     fingerprints, the pigeonhole block self-join, and the Hamming
     verify."""
     return f"""
-    WITH {_sql_simhash_pairs_cte(max_hamming, n_bits)}
+    WITH {_sql_simhash_pairs_cte()}
     SELECT doc_id_a, doc_id_b, hamming
     FROM spairs ORDER BY doc_id_a, doc_id_b
     """

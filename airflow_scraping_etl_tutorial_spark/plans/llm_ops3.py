@@ -178,7 +178,7 @@ def q143_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys). Single-probe gives each vector exactly one bucket, so the
     # bucket join cannot duplicate a (query, neighbor) pair — no
     # distinct needed (multi-probe would need one; see lsh_topk_cosine).
-    keyed = bucket_keys(emb, n_planes=8, dim=64)
+    keyed = bucket_keys(emb, n_planes=8)
     qb = keyed.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "bucket"
     )

@@ -100,8 +100,8 @@ def q337_dup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     join fans out each edge to its candidate wedges keyed on the
     shared vertex, so cost is sum over vertices of deg^2 on the
     ALREADY-SPARSE verified dup graph (bucketed LSH keeps it sparse
-    by construction; the q68 max_bucket_size cap bounds any hot
-    vertex). Nodes with degree < 2 are excluded (a triangle needs
+    by construction; a hot-bucket cap (SCALE.md) would bound any
+    hot vertex). Nodes with degree < 2 are excluded (a triangle needs
     two incident edges)."""
     docs = load(spark, sf_dir, "documents")
     # localCheckpoint (disk-backed lineage truncation) instead of

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.partitioning import fan_out
 from ..operators.dedup import minhash_near_duplicates, shingle_hashes
 from ..operators.similarity import (
+    EMBED_DIM,
     as_double,
     assign_argmax_cosine,
     dot,
@@ -50,7 +51,7 @@ from .registry import query
 # ---------------------------------------------------------------------------
 
 
-def _sql_lloyd1_vec_cte(n_centroids: int, dim: int = 64) -> str:
+def _sql_lloyd1_vec_cte(n_centroids: int) -> str:
     """cent0 -> a1 -> m1 CTE chain: one deterministic Lloyd iteration
     (md5-ordered init, argmax-cosine assignment, decimal-exact component
     means) with the trained centroids reassembled as a LIST so callers
@@ -73,7 +74,7 @@ def _sql_lloyd1_vec_cte(n_centroids: int, dim: int = 64) -> str:
              CAST(SUM(CAST(CAST(e.embedding[i] AS DOUBLE) AS DECIMAL(18,6)))
                   AS DOUBLE) / COUNT(*) AS mean_i
       FROM a1 a JOIN embeddings e ON e.vec_id = a.vec_id,
-           (SELECT UNNEST(RANGE(1, {dim + 1})) AS i) r
+           (SELECT UNNEST(RANGE(1, {EMBED_DIM + 1})) AS i) r
       WHERE a.rn = 1
       GROUP BY 1, 2
     ),
@@ -115,8 +116,8 @@ def q154_semdedup_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cosine >= tau — keep-first-occurrence, the deterministic form
     of the paper's one-per-epsilon-ball rule. Pairwise cosine runs only
     WITHIN clusters, which is the whole point at 100 TB: the quadratic
-    term is bounded per cell (cap cell size with the q68 hot-bucket
-    doctrine when a cluster collapses), and the clustering stage is one
+    term is bounded per cell (cap cell size with the SCALE.md
+    hot-bucket doctrine when a cluster collapses), and the clustering stage is one
     broadcast of 8 centroids + a map-side argmax.
 
     Returns per-cluster dedup pressure: (centroid_id, n_vecs,
@@ -1458,7 +1459,7 @@ def q174_winnowing_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators.text import winnowing_fingerprints
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    fps = winnowing_fingerprints(docs, k=8, window=4)
+    fps = winnowing_fingerprints(docs)
     sf = (
         fps.join(docs.select("doc_id", "source"), "doc_id")
         .select("source", "fingerprint")

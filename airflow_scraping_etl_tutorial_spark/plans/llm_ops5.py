@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..operators.asof import asof_join
 from ..operators.cluster import connected_components, dedup_keep_canonical
 from ..operators.dedup import minhash_near_duplicates
+from ..operators.similarity import EMBED_DIM
 from ..operators.text import tokens
 from ..sources.tables import load
 from .llm_ops import _sql_minhash_pairs
@@ -650,9 +651,7 @@ def q191_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     signups = e.filter(F.col("event_type") == "signup").select("user_id", "ts")
-    joined = asof_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="ts"
-    )
+    joined = asof_join(purchases, signups, on="user_id")
     match_class = (
         F.when(F.col("asof_ts").isNull(), "no_signup")
         .when(
@@ -992,7 +991,7 @@ def q196_hapax_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sql_power_iteration_oracle(dim: int = 64) -> str:
+def _sql_power_iteration_oracle() -> str:
     """DuckDB twin of the two-step power iteration: left-associated
     component sums for the seed dot, decimal-exact matrix-vector
     accumulations across rows, and the _sql_dot chains for everything
@@ -1000,7 +999,7 @@ def _sql_power_iteration_oracle(dim: int = 64) -> str:
     from .llm_ops import _sql_dot
 
     seed_dot = "(" + " + ".join(
-        f"CAST(embedding[{i}] AS DOUBLE)" for i in range(1, dim + 1)
+        f"CAST(embedding[{i}] AS DOUBLE)" for i in range(1, EMBED_DIM + 1)
     ) + ")"
     return f"""
     WITH d0 AS (
@@ -1010,31 +1009,31 @@ def _sql_power_iteration_oracle(dim: int = 64) -> str:
       SELECT i AS pos,
              CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) * d0
                   AS DECIMAL(28,10))) AS DOUBLE) AS w
-      FROM d0, (SELECT UNNEST(RANGE(1, {dim + 1})) AS i) r GROUP BY i
+      FROM d0, (SELECT UNNEST(RANGE(1, {EMBED_DIM + 1})) AS i) r GROUP BY i
     ),
     w1 AS (SELECT LIST(w ORDER BY pos) AS v1 FROM c1),
     d1 AS (
-      SELECT e.embedding, {_sql_dot('e.embedding', 'w.v1', dim)} AS d1
+      SELECT e.embedding, {_sql_dot('e.embedding', 'w.v1')} AS d1
       FROM embeddings e CROSS JOIN w1 w
     ),
     c2 AS (
       SELECT i AS pos,
              CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) * d1
                   AS DECIMAL(38,8))) AS DOUBLE) AS w
-      FROM d1, (SELECT UNNEST(RANGE(1, {dim + 1})) AS i) r GROUP BY i
+      FROM d1, (SELECT UNNEST(RANGE(1, {EMBED_DIM + 1})) AS i) r GROUP BY i
     ),
     w2 AS (SELECT LIST(w ORDER BY pos) AS v2 FROM c2),
     tr AS (
-      SELECT CAST(SUM(CAST({_sql_dot('embedding', 'embedding', dim)}
+      SELECT CAST(SUM(CAST({_sql_dot('embedding', 'embedding')}
                   AS DECIMAL(18,8))) AS DOUBLE) AS trace
       FROM embeddings
     )
-    SELECT ROUND(({_sql_dot('b.v2', 'a.v1', dim)} / {_sql_dot('a.v1', 'a.v1', dim)})
+    SELECT ROUND(({_sql_dot('b.v2', 'a.v1')} / {_sql_dot('a.v1', 'a.v1')})
                  / t.trace, 6) AS top_eigen_share,
-           ROUND(b.v2[1] / SQRT({_sql_dot('b.v2', 'b.v2', dim)}), 6) AS comp_1,
-           ROUND(b.v2[2] / SQRT({_sql_dot('b.v2', 'b.v2', dim)}), 6) AS comp_2,
-           ROUND(b.v2[3] / SQRT({_sql_dot('b.v2', 'b.v2', dim)}), 6) AS comp_3,
-           ROUND(b.v2[4] / SQRT({_sql_dot('b.v2', 'b.v2', dim)}), 6) AS comp_4
+           ROUND(b.v2[1] / SQRT({_sql_dot('b.v2', 'b.v2')}), 6) AS comp_1,
+           ROUND(b.v2[2] / SQRT({_sql_dot('b.v2', 'b.v2')}), 6) AS comp_2,
+           ROUND(b.v2[3] / SQRT({_sql_dot('b.v2', 'b.v2')}), 6) AS comp_3,
+           ROUND(b.v2[4] / SQRT({_sql_dot('b.v2', 'b.v2')}), 6) AS comp_4
     FROM w1 a CROSS JOIN w2 b CROSS JOIN tr t
     """
 

@@ -345,10 +345,8 @@ def q208_bloom_incremental_screen(spark: SparkSession, sf_dir: str) -> DataFrame
     base = docs.select("doc_id", "text", gate.alias("gate"))
     old = base.filter(F.col("gate") >= 16)
     new = base.filter(F.col("gate") < 16)
-    bm = bloom_bitmap(old, key_col="text", m_bits=_BLOOM_M, k_hashes=_BLOOM_K)
-    hits = bloom_probe(
-        new, bm, key_col="text", id_col="doc_id", m_bits=_BLOOM_M, k_hashes=_BLOOM_K
-    )
+    bm = bloom_bitmap(old, m_bits=_BLOOM_M, k_hashes=_BLOOM_K)
+    hits = bloom_probe(new, bm, m_bits=_BLOOM_M, k_hashes=_BLOOM_K)
     old_dg = old.select(F.md5("text").alias("dg")).distinct().withColumn(
         "_dup", F.lit(1)
     )
@@ -418,13 +416,9 @@ def q209_minhash_param_sensitivity(spark: SparkSession, sf_dir: str) -> DataFram
     from ..operators.dedup import minhash_signature_table
 
     docs = load(spark, sf_dir, "documents")
-    sig = minhash_signature_table(docs, n_hashes=8).persist()
-    c4 = minhash_near_duplicates(
-        docs, n_hashes=8, bands=4, jaccard_threshold=0.0, signatures=sig
-    )
-    c2 = minhash_near_duplicates(
-        docs, n_hashes=8, bands=2, jaccard_threshold=0.0, signatures=sig
-    )
+    sig = minhash_signature_table(docs).persist()
+    c4 = minhash_near_duplicates(docs, bands=4, jaccard_threshold=0.0, signatures=sig)
+    c2 = minhash_near_duplicates(docs, bands=2, jaccard_threshold=0.0, signatures=sig)
     a4 = c4.agg(
         F.count(F.lit(1)).alias("n_cand_4band"),
         F.sum(F.when(F.col("jaccard") >= 0.5, 1).otherwise(0)).alias(

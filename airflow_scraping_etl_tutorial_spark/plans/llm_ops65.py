@@ -69,8 +69,8 @@ _KEY_CAP = 2048  # bounded deterministic slice of the dense orderkey space
 _CENTS = "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 
-def _cents(col: str = "o_totalprice") -> Column:
-    return (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
+def _cents() -> Column:
+    return (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
 
 
 def _comma_grouped(col: Column) -> Column:

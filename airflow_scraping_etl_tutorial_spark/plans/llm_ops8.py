@@ -101,7 +101,8 @@ def q225_prefix_filter_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-keyed window; the candidate join's cost is sum of
     prefix-token bucket^2 — and because prefixes keep the RAREST
     tokens, hot tokens (stopwords) never enter the index, the same
-    economics `max_shingle_df` buys q70 but guarantee-preserving.
+    economics a stop-shingle cap (SCALE.md) buys but
+    guarantee-preserving.
     Verification touches candidates only."""
     docs = load(spark, sf_dir, "documents")
     # tp feeds the df table, the rank join, and the verify sets; pref

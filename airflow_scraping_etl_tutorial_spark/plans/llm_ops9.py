@@ -362,8 +362,8 @@ def q237_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: candidates come from an inverted shingle-hash index with a
     document-frequency cap (df <= 100) so hot boilerplate shingles
-    never fan out (the q70 `max_shingle_df` economics — a pair sharing
-    ONLY hot shingles is missed, documented trade); verification
+    never fan out (the stop-shingle economics of SCALE.md — a pair
+    sharing ONLY hot shingles is missed, documented trade); verification
     intersects 60-bit hash sets, never text, and only candidate pairs
     reach it. Only 8-byte hashes + ids shuffle."""
     docs = load(spark, sf_dir, "documents")
@@ -789,7 +789,7 @@ def q242_item_cooccurrence_affinity(spark: SparkSession, sf_dir: str) -> DataFra
     user (a bot touching everything) dominates cost — the cap drops
     users with more than 64 distinct items from BOTH the pair join
     and the reach denominators (consistent economics, same role as
-    q68's max_bucket_size). Distinct (user, item) collapses first;
+    SCALE.md's hot-bucket cap). Distinct (user, item) collapses first;
     only ids shuffle; TakeOrderedAndProject caps output."""
     ev = load(spark, sf_dir, "events")
     ui = (

@@ -238,8 +238,6 @@ def q84_asof_join_purchase_signup(spark: SparkSession, sf_dir: str) -> DataFrame
         purchases,
         signups.drop("event_id"),
         on="user_id",
-        left_ts="ts",
-        right_ts="ts",
         tiebreak="event_id",
     )
     return joined.select(

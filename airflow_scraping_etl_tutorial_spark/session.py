@@ -34,7 +34,6 @@ def get_spark(
     app_name: str = "airflow_scraping_etl_tutorial_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config.
 
@@ -93,8 +92,6 @@ def get_spark(
     extra_jars = os.environ.get("SPARK_GRAFT_EXTRA_JARS")
     if extra_jars:
         builder = builder.config("spark.jars", extra_jars)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -28,13 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# dims scale with SF but region/nation are constant; customer/supplier/
-# part stay well under executor memory until extreme SFs — AQE demotes
-# the hint if runtime stats disagree).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-
 def ensure_session_defaults(spark: SparkSession) -> None:
     """Pin the runtime-settable confs every catalog query depends on.
 

@@ -82,11 +82,12 @@ def payloads_to_df(spark: SparkSession, payloads: Iterable[dict]) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(rows, columns=PAYLOAD_SCHEMA.fieldNames()), PAYLOAD_SCHEMA)
 
 
-def _http_get_json(url: str, timeout: float = 30.0) -> dict:
-    """Fetch one JSON document (stdlib only; no extra deps)."""
+def _http_get_json(url: str) -> dict:
+    """Fetch one JSON document (stdlib only; no extra deps), giving up
+    after 30 s."""
     from urllib.request import urlopen  # deferred: the golden path never needs it
 
-    with urlopen(url, timeout=timeout) as resp:  # noqa: S310 (scheme checked in _parse_options)
+    with urlopen(url, timeout=30.0) as resp:  # noqa: S310 (scheme checked in _parse_options)
         return json.loads(resp.read().decode("utf-8"))
 
 

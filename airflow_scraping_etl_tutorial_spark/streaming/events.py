@@ -105,12 +105,12 @@ def _window_totals() -> list:
     ]
 
 
-def hourly_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling 1-hour windows per event type: the
-    aggregate of q80_events_hourly_tumbling, and the same plan run
+def hourly_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour windows per event type under a 2-hour watermark:
+    the aggregate of q80_events_hourly_tumbling, and the same plan run
     incrementally on a stream."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(*_window_totals())
         .select(
@@ -137,11 +137,12 @@ def daily_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked sliding windows (1 h length, 30 min slide): the
-    aggregate of q81_events_sliding_window, batch or stream."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding windows (1 h length, 30 min slide) under a 2-hour
+    watermark: the aggregate of q81_events_sliding_window, batch or
+    stream."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(*_window_totals())
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")

@@ -5,6 +5,7 @@ uses exactly those numbers."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import sys
@@ -263,3 +264,18 @@ def test_pre_r05_rounds_excluded():
     refs = _reference_timings(REPO)
     only_early = early - late
     assert not (set(refs) & only_early)
+
+
+def test_headline_matches_perfbench_copy():
+    """bench.py and perfbench/common.py each hold the headline tuple;
+    the two copies must name the same queries in the same order. The
+    perfbench copy is read as source, without importing perfbench."""
+    with open(os.path.join(REPO, "perfbench", "common.py")) as f:
+        tree = ast.parse(f.read())
+    (perfbench_headline,) = [
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "HEADLINE" for t in node.targets)
+    ]
+    assert tuple(HEADLINE) == perfbench_headline

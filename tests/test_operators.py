@@ -99,7 +99,7 @@ def test_ngram_jaccard_exact_value(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, text="a b c d e"), Row(doc_id=2, text="a b c d f")]
     )
-    rows = ngram_jaccard_pairs(df, shingle_size=3).collect()
+    rows = ngram_jaccard_pairs(df).collect()
     assert len(rows) == 1
     assert rows[0].jaccard == 0.5  # 2 common / 4 union
 
@@ -218,7 +218,7 @@ def test_ivf_topk_recall_vs_exact(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = brute_force_topk_cosine(queries, emb, k=5).collect()
-    approx = ivf_topk_cosine(queries, emb, k=5, n_centroids=16, n_probe=4).collect()
+    approx = ivf_topk_cosine(queries, emb).collect()
     exact_set = {(r.query_id, r.neighbor_id) for r in exact}
     approx_set = {(r.query_id, r.neighbor_id) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
@@ -236,7 +236,7 @@ def test_udtf_chunking_expansion(spark):
     df = spark.createDataFrame(
         [Row(doc_id=1, text=" ".join(f"w{i}" for i in range(70)))]
     )
-    chunks = chunk_documents(df, chunk_size=32).collect()
+    chunks = chunk_documents(df).collect()
     assert [(c.chunk_no, c.n_tokens) for c in chunks] == [(0, 32), (1, 32), (2, 6)]
     assert chunks[0].chunk.startswith("w0 ") and chunks[2].chunk.endswith("w69")
 
@@ -516,20 +516,6 @@ def test_scalar_pandas_udf_and_grouped_map(spark):
     assert z[4] == z[5] == 0.0  # zero-variance group -> 0, not NaN
 
 
-def test_salted_join_rejects_dim_preserving_how(spark):
-    """right/full outer would surface unmatched dim rows n_salts times."""
-    import pytest
-
-    from airflow_scraping_etl_tutorial_spark.operators.skew import salted_join
-
-    fact = spark.range(10).withColumnRenamed("id", "k")
-    dim = spark.range(5).withColumnRenamed("id", "k2")
-    with pytest.raises(ValueError, match="fact-preserving"):
-        salted_join(fact, dim, "k", "k2", how="full_outer")
-    with pytest.raises(ValueError, match="fact-preserving"):
-        salted_join(fact, dim, "k", "k2", how="right")
-
-
 def test_release_session_intermediates_survives_chaining(spark, docs):
     """The realistic caller chains .orderBy/.select on the operator's
     return value and never holds the persisted signature table — the
@@ -633,66 +619,6 @@ def test_release_session_checkpoints_protect_scopes_the_sweep(spark):
     assert release_session_checkpoints(spark) == 0
 
 
-def test_ngram_jaccard_stop_shingle_pruning(spark, docs):
-    """Stop-shingle cap drops hot shingles from the INDEX only: the
-    near-dup pair is still found through its cold shared shingles and
-    its jaccard stays exact (verified against the unpruned run)."""
-    exact = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard for r in ngram_jaccard_pairs(docs).collect()
-    }
-    # cap = 2: shingles shared by docs 1+2+3 (df=3) leave the index;
-    # the 1-2 and 1-3 pairs survive via rarer shingles of the pair itself
-    pruned = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, max_shingle_df=2).collect()
-    }
-    assert pruned[(1, 2)] == exact[(1, 2)] == 1.0  # jaccard exact, not index-count
-    for pair, j in pruned.items():
-        assert j == exact[pair]
-
-
-def test_ngram_jaccard_pruning_drops_hot_only_pairs(spark):
-    """A pair whose EVERY shared shingle is hot disappears under the
-    cap (the documented recall trade); pairs with any cold shared
-    shingle survive."""
-    boiler = "same legal boilerplate header text always present here"
-    rows = [Row(doc_id=i, text=boiler) for i in range(1, 5)]  # 4 identical docs
-    rows.append(Row(doc_id=9, text="unique body alpha beta gamma delta epsilon zeta"))
-    rows.append(Row(doc_id=10, text="unique body alpha beta gamma delta epsilon eta"))
-    df = spark.createDataFrame(rows)
-    pruned = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in ngram_jaccard_pairs(df, max_shingle_df=3).collect()
-    }
-    assert (9, 10) in pruned          # cold-shingle pair survives
-    assert (1, 2) not in pruned       # boilerplate-only pair pruned (df=4 > 3)
-
-
-def test_minhash_hot_bucket_cap(spark):
-    """max_bucket_size bounds the band-bucket self-join; pairs in a
-    dropped bucket are only lost if NO other band holds them under the
-    cap. Identical docs collide in every band, so capping below the
-    clique size removes them; distinct near-dups under the cap stay."""
-    boiler = "same legal boilerplate header text always present here today"
-    rows = [Row(doc_id=i, text=boiler) for i in range(1, 6)]  # 5-doc clique
-    base = "the quick brown fox jumps over the lazy dog near the river"
-    rows.append(Row(doc_id=21, text=base))
-    rows.append(Row(doc_id=22, text=base))
-    df = spark.createDataFrame(rows)
-    uncapped = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in minhash_near_duplicates(df, jaccard_threshold=0.5).collect()
-    }
-    capped = {
-        (r.doc_id_a, r.doc_id_b)
-        for r in minhash_near_duplicates(
-            df, jaccard_threshold=0.5, max_bucket_size=2
-        ).collect()
-    }
-    assert (21, 22) in capped                     # 2-doc bucket under cap
-    assert (1, 2) in uncapped and (1, 2) not in capped  # 5-doc clique capped
-
-
 def test_ivf_trained_centroids_recall(spark, sf_dir):
     """Trained (2-iteration Lloyd) centroids keep recall in the same
     band as the raw hash-sample centroids at the same n_probe (Lloyd
@@ -711,9 +637,9 @@ def test_ivf_trained_centroids_recall(spark, sf_dir):
         got = {(r.query_id, r.neighbor_id) for r in df.collect()}
         return len(exact & got) / len(exact)
 
-    plain = recall(ivf_topk_cosine(queries, emb, k=5, n_centroids=16, n_probe=4))
+    plain = recall(ivf_topk_cosine(queries, emb))
     trained = recall(
-        ivf_topk_cosine(queries, emb, k=5, n_centroids=16, n_probe=4, n_iterations=2)
+        ivf_topk_cosine(queries, emb, n_iterations=2)
     )
     assert trained >= 0.4, f"trained recall collapsed: {trained}"
     assert trained >= plain - 0.15, f"trained {trained} far below plain {plain}"
@@ -784,7 +710,7 @@ def test_winnowing_shared_substring_guarantee(spark):
             Row(doc_id=3, text="entirely unrelated content with zero overlap"),
         ]
     )
-    fps = winnowing_fingerprints(df, k=8, window=4).collect()
+    fps = winnowing_fingerprints(df).collect()
     by_doc = {}
     for r in fps:
         by_doc.setdefault(r.doc_id, set()).add(r.fingerprint)
@@ -809,7 +735,7 @@ def test_decontaminate_flags_only_overlapping_docs(spark):
             Row(doc_id=3, text="quick brown"),
         ]
     )
-    out = {r["doc_id"]: r for r in decontaminate(corpus, eval_df, k=3).collect()}
+    out = {r["doc_id"]: r for r in decontaminate(corpus, eval_df).collect()}
     assert set(out) == {1}
     assert out[1]["n_shared_ngrams"] == 2
     assert out[1]["min_eval_doc"] == 900

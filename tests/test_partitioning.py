@@ -14,8 +14,6 @@ from pyspark.sql import Row
 
 from airflow_scraping_etl_tutorial_spark.functions.partitioning import fan_out
 
-SF_DIR = "/root/testdata/sf0.001"
-
 
 def test_fan_out_memory_relation_reaches_default_parallelism(spark):
     """A memory relation reports zero input files and must always fan
@@ -35,14 +33,13 @@ def test_fan_out_preserves_row_multiset(spark):
     assert got == Counter({(1, 7): 5, (2, 9): 3})
 
 
-def test_fan_out_noop_when_splits_already_sufficient(spark):
-    """A file-backed input whose split count already meets the target
-    is returned UNTOUCHED (same object — no redundant shuffle)."""
-    df = spark.read.parquet(f"{SF_DIR}/region.parquet")
-    assert len(df.inputFiles()) >= 1
-    assert fan_out(df, min_partitions=1) is df
-
-
-def test_fan_out_explicit_target_overrides_parallelism(spark):
-    df = spark.createDataFrame([Row(v=i) for i in range(10)])
-    assert fan_out(df, min_partitions=4).rdd.getNumPartitions() == 4
+def test_fan_out_noop_when_splits_already_sufficient(spark, tmp_path):
+    """A file-backed input with one file per core already meets the
+    target and is returned UNTOUCHED (same object — no redundant
+    shuffle)."""
+    cores = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "split")
+    spark.range(10 * cores).repartition(cores).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == cores
+    assert fan_out(df) is df

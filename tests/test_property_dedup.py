@@ -36,7 +36,7 @@ def test_ngram_jaccard_matches_python_reference(spark, texts):
     )
     got = {
         (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, shingle_size=3).collect()
+        for r in ngram_jaccard_pairs(df).collect()
     }
     for a in range(len(texts)):
         for b in range(a + 1, len(texts)):

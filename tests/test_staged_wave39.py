@@ -120,7 +120,7 @@ def test_embedding_decontamination_python_replay(spark, duck):
         _deterministic_planes,
     )
 
-    planes = _deterministic_planes(6, 64)
+    planes = _deterministic_planes(6)
     rows = duck.sql("SELECT vec_id, embedding FROM embeddings").fetchall()
     by_bucket: dict[int, dict[int, list]] = {}
     test_ids = set()

@@ -25,8 +25,8 @@ def _kv(spark, texts):
 def test_bloom_no_false_negatives(spark):
     """Every inserted key must probe as a hit — the Bloom guarantee."""
     corpus = _kv(spark, [f"document number {i} body" for i in range(200)])
-    bm = bloom_bitmap(corpus, key_col="text")
-    hits = bloom_probe(corpus, bm, key_col="text")
+    bm = bloom_bitmap(corpus)
+    hits = bloom_probe(corpus, bm)
     assert hits.count() == 200
     assert hits.agg(F.min("bloom_hit")).collect()[0][0] == 1
 
@@ -37,8 +37,8 @@ def test_bloom_screens_out_most_absent_keys(spark):
     so 500 absent probes should all miss at this size."""
     corpus = _kv(spark, [f"stored {i}" for i in range(200)])
     absent = _kv(spark, [f"novel {i}" for i in range(500)])
-    bm = bloom_bitmap(corpus, key_col="text")
-    hits = bloom_probe(absent, bm, key_col="text")
+    bm = bloom_bitmap(corpus)
+    hits = bloom_probe(absent, bm)
     assert hits.agg(F.sum("bloom_hit")).collect()[0][0] == 0
 
 
@@ -46,8 +46,8 @@ def test_bloom_bitmap_deterministic_and_bounded(spark):
     """The bitmap is a pure function of the key set and never exceeds
     ceil(m/60) words, regardless of input partitioning."""
     texts = [f"doc {i}" for i in range(64)]
-    a = bloom_bitmap(_kv(spark, texts), key_col="text").collect()
-    b = bloom_bitmap(_kv(spark, texts).repartition(7), key_col="text").collect()
+    a = bloom_bitmap(_kv(spark, texts)).collect()
+    b = bloom_bitmap(_kv(spark, texts).repartition(7)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) <= 65536 // 60 + 1
     assert all(row.bits != 0 for row in a)

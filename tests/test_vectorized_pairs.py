@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airflow_scraping_etl_tutorial_spark.operators.similarity import (
+    EMBED_DIM,
     as_double,
     bucket_keys,
     dot,
@@ -29,12 +30,12 @@ from airflow_scraping_etl_tutorial_spark.sources.tables import load
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _hof_bucket_keys(emb, n_planes, dim, id_col="vec_id"):
+def _hof_bucket_keys(emb, n_planes, id_col="vec_id"):
     """The pre-r14 zip_with/aggregate form, verbatim."""
     pre = emb.select(F.col(id_col), as_double(F.col("embedding")).alias("_e"))
     v = F.col("_e")
     bucket = None
-    for p, plane in enumerate(_deterministic_planes(n_planes, dim)):
+    for p, plane in enumerate(_deterministic_planes(n_planes)):
         plane_col = F.array(*[F.lit(w) for w in plane])
         bit = F.when(dot(v, plane_col) > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
@@ -46,8 +47,8 @@ def _hof_bucket_keys(emb, n_planes, dim, id_col="vec_id"):
 
 def test_bucket_keys_matches_hof_fold_on_fixture(spark):
     emb = load(spark, SF_DIR, "embeddings")
-    got = {r["vec_id"]: r["bucket"] for r in bucket_keys(emb, 6, 64).collect()}
-    want = {r["vec_id"]: r["bucket"] for r in _hof_bucket_keys(emb, 6, 64).collect()}
+    got = {r["vec_id"]: r["bucket"] for r in bucket_keys(emb, 6).collect()}
+    want = {r["vec_id"]: r["bucket"] for r in _hof_bucket_keys(emb, 6).collect()}
     assert got == want and len(got) > 0
 
 
@@ -55,24 +56,24 @@ def test_bucket_keys_degenerate_rows_bucket_zero(spark):
     """NULL vector, ragged length, NULL element, NaN element all yield a
     NULL/NaN dot under the fold -> every plane bit 0 -> bucket 0; a
     well-formed row keeps its computed bucket."""
-    dim = 4
     schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
             T.StructField("embedding", T.ArrayType(T.FloatType(), True), True),
         ]
     )
+    base = [1.0, 2.0, 3.0, 4.0] * (EMBED_DIM // 4)
     rows = [
-        Row(vec_id=0, embedding=[1.0, 2.0, 3.0, 4.0]),
+        Row(vec_id=0, embedding=base),
         Row(vec_id=1, embedding=None),
-        Row(vec_id=2, embedding=[1.0, 2.0]),  # ragged
-        Row(vec_id=3, embedding=[1.0, None, 3.0, 4.0]),  # NULL element
-        Row(vec_id=4, embedding=[1.0, float("nan"), 3.0, 4.0]),  # NaN
-        Row(vec_id=5, embedding=[0.0, 0.0, 0.0, 0.0]),  # zero vector
+        Row(vec_id=2, embedding=base[:2]),  # ragged
+        Row(vec_id=3, embedding=[1.0, None] + base[2:]),  # NULL element
+        Row(vec_id=4, embedding=[1.0, float("nan")] + base[2:]),  # NaN
+        Row(vec_id=5, embedding=[0.0] * EMBED_DIM),  # zero vector
     ]
     df = spark.createDataFrame(rows, schema)
-    got = {r["vec_id"]: r["bucket"] for r in bucket_keys(df, 5, dim).collect()}
-    want = {r["vec_id"]: r["bucket"] for r in _hof_bucket_keys(df, 5, dim).collect()}
+    got = {r["vec_id"]: r["bucket"] for r in bucket_keys(df, 5).collect()}
+    want = {r["vec_id"]: r["bucket"] for r in _hof_bucket_keys(df, 5).collect()}
     assert got == want
     # NULL vector / ragged / NULL element -> NULL dot -> bucket 0;
     # NaN element -> NaN dot, and Spark orders NaN above every double,
