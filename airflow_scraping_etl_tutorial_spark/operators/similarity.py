@@ -602,9 +602,8 @@ def ivf_topk_cosine(
     The centroids are `kmeans_centroids(corpus, 16, n_iterations)`.
     With the default n_iterations=0 they are its deterministic init
     sample (the 16 vectors with the smallest md5(id) — a hash-ordered
-    top-k, so md5 shuffles the ids
-    uniformly and TakeOrderedAndProject picks the sample with
-    per-partition partial top-k: no global sort, no count(), no driver
+    top-k, so md5 shuffles the ids uniformly and TakeOrderedAndProject
+    picks the sample with per-partition partial top-k: no global sort, no count(), no driver
     action; md5 is cross-engine, so the oracle selects the same
     centroids). With n_iterations >= 1 they are Lloyd-trained: on
     clustered corpora training is what makes IVF competitive (cells

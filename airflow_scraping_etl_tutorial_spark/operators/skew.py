@@ -33,8 +33,8 @@ def salted_join(
     set is identical to the unsalted join (verified by the oracle-checked
     catalog entry q26).
 
-    Inner only: the dim side is replicated n_salts times, so an outer
-    join would surface every unmatched dim row n_salts times.
+    Inner only: the dim side is replicated n_salts times, so a right or
+    full outer join would surface every unmatched dim row n_salts times.
     """
     salted_fact = fact.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(fact_key), F.monotonically_increasing_id()), F.lit(n_salts))

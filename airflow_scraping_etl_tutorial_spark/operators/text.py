@@ -118,10 +118,10 @@ def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken's
     MOSS scheme — the rolling-hash fingerprint family): hash every
     k = 8-char gram with the cross-engine 60-bit md5-derived hash, then
-    keep the MINIMUM hash of each window of 4 consecutive gram
-    hashes. Guarantee: any shared substring of length >= k + 4 - 1
-    contributes at least one shared fingerprint, while storage shrinks
-    ~1/4 vs all grams — overlap/plagiarism detection joins docs on
+    keep the MINIMUM hash of each window of 4 consecutive gram hashes.
+    Guarantee: any shared substring of length >= 8 + 4 - 1 contributes
+    at least one shared fingerprint, while storage shrinks ~1/4 vs all
+    grams — overlap/plagiarism detection joins docs on
     the exploded fingerprints instead of comparing texts.
 
     Pure codegen expressions — per-row map work, no shuffle, no UDF.
